@@ -17,20 +17,27 @@ object Charts {
   private val Black = 0
   private val Gray = 128
 
+  /** A white raster with the 1-px gray axes on the left and bottom —
+    * all an empty chart draws.
+    */
+  private def axes(width: Int, height: Int): Array[Int] = {
+    val raster = Array.fill(height * width)(White)
+    for (y <- 0 until height) raster(y * width) = Gray
+    for (x <- 0 until width) raster((height - 1) * width + x) = Gray
+    raster
+  }
+
   /** Vertical bar chart. Bars fill proportionally to value / max;
     * 1-px gray axis on the left and bottom, 2-px gap between bars.
+    * No values (a month without sales) draws the axes alone.
     */
   def barChart(
       values: Seq[(String, Double)],
       width: Int = 320,
       height: Int = 200): Array[Byte] = {
-    require(values.nonEmpty, "empty chart")
-    val max = math.max(values.map(_._2).max, 1e-9)
-    val n = values.length
-    val raster = Array.fill(height * width)(White)
-    // axes
-    for (y <- 0 until height) raster(y * width) = Gray
-    for (x <- 0 until width) raster((height - 1) * width + x) = Gray
+    val raster = axes(width, height)
+    val max = math.max(values.map(_._2).maxOption.getOrElse(0.0), 1e-9)
+    val n = math.max(values.length, 1)
     val plotW = width - 2
     val barW = math.max(1, plotW / n - 2)
     values.zipWithIndex.foreach { case ((_, v), i) =>
@@ -44,17 +51,16 @@ object Charts {
     ImageCodec.encodeGrayPng(width, height, (x, y) => raster(y * width + x))
   }
 
-  /** Line chart (poly-line of equally spaced points, min-max scaled). */
+  /** Line chart (poly-line of equally spaced points, min-max scaled).
+    * No values draws the axes alone.
+    */
   def lineChart(
       values: Seq[Double],
       width: Int = 320,
       height: Int = 200): Array[Byte] = {
-    require(values.nonEmpty, "empty chart")
-    val lo = values.min
-    val hi = math.max(values.max, lo + 1e-9)
-    val raster = Array.fill(height * width)(White)
-    for (y <- 0 until height) raster(y * width) = Gray
-    for (x <- 0 until width) raster((height - 1) * width + x) = Gray
+    val raster = axes(width, height)
+    val lo = values.minOption.getOrElse(0.0)
+    val hi = math.max(values.maxOption.getOrElse(0.0), lo + 1e-9)
     def yOf(v: Double): Int =
       1 + math.round((1.0 - (v - lo) / (hi - lo)) * (height - 3)).toInt
     def xOf(i: Int): Int =

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Checkpoints, GlobalRank}
 
@@ -68,6 +69,17 @@ import graft.operators.{Checkpoints, GlobalRank}
   * (t15/t17). At 100 TB the retained levels are lake writes the job
   * pays once per round anyway; in local mode they are the per-round
   * checkpoints kept alive for the descent.
+  *
+  * DRIVER PATH of [[removeDuplicatedSpans]]: a corpus whose driver
+  * footprint ([[driverFootprint]]: 20 bytes per position for five
+  * primitive `int` arrays, plus 5 bytes per UTF-8 text byte for the
+  * collected and cleaned strings) fits one eighth of
+  * `spark.driver.maxResultSize` (capped by the driver heap) is collected
+  * once and deduped in memory — counting-sort prefix doubling, Kasai's
+  * LCP, a sweep of both copies' covered intervals — instead of paying
+  * several Spark jobs per doubling round and descent level. Same rows,
+  * same schema, same codepoint semantics as the distributed build,
+  * which stays the path above the bound.
   */
 object SuffixArray {
 
@@ -487,9 +499,18 @@ object SuffixArray {
     // BEFORE materializing the addressing, so the addressing itself can
     // be checkpointed at the derived width — the ×100 OOM was the
     // 32-way DESERIALIZED unroll of this very frame, ahead of any join
-    val est = docs
-      .agg((coalesce(sum(length(col(textCol)).cast("long")), lit(0L)) +
-        count(lit(1))).as("n")).head().getLong(0)
+    val est = docs.agg(positionCount(textCol)).head().getLong(0)
+    buildIndexOfSize(docs, idCol, textCol, est, maxRounds, retainLevels, levelStore)
+  }
+
+  /** Codepoints plus one SEP per document: the corpus string's length. */
+  private def positionCount(textCol: String): Column =
+    (coalesce(sum(length(col(textCol)).cast("long")), lit(0L)) + count(lit(1))).as("n")
+
+  /** [[buildIndex]] past its size job, for callers that measured `est`. */
+  private def buildIndexOfSize(docs: DataFrame, idCol: String, textCol: String,
+                               est: Long, maxRounds: Int, retainLevels: Boolean,
+                               levelStore: Option[String]): Index = {
     val (addr0, _, total) =
       checkpointAddr(addressed(docs, idCol, textCol), est)
     val addr = persistAddr(addr0, levelStore)
@@ -783,14 +804,243 @@ object SuffixArray {
     * (untouched docs keep their text; fully-covered docs come back
     * empty, not null). Per-document windows (few spans per doc) do the
     * segment complement — partition-parallel, never global.
+    *
+    * One size job measures the corpus (positions and UTF-8 bytes). When
+    * its [[driverFootprint]] — 20 bytes per position plus 5 per text
+    * byte — fits [[driverBudget]] (one eighth of
+    * `spark.driver.maxResultSize`, capped by the driver heap), the
+    * documents are collected once and deduped on the driver
+    * ([[driverRemoveSpans]]): bit-identical rows and schema from two
+    * Spark jobs. Above the bound the distributed build runs,
+    * reusing the measured size. Both jobs, and the distributed build,
+    * carry a job description naming this operator, the path, the
+    * measured bytes and the bound.
     */
   def removeDuplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                            minLen: Long, maxRounds: Int = 40): DataFrame = {
-    val ix = buildIndex(docs, idCol, textCol, maxRounds, retainLevels = true)
-    removeSpansFromLcp(docs, idCol, textCol, lcpAdjacent(ix),
-      ix.addr.filter(col("code") =!= ix.sepCode)
-        .select(col(idCol), col("pos"), col("gid")),
-      minLen, rankParts(ix.addr, ix.total))
+                            minLen: Long, maxRounds: Int = 40): DataFrame =
+    removeDuplicatedSpansWithin(docs, idCol, textCol, minLen, maxRounds,
+      driverBudget(docs.sparkSession))._1
+
+  /** Driver bytes per corpus position of [[driverRemoveSpans]]: at most
+    * five `int` arrays live at once (codes, suffix array, ranks, scratch
+    * and sort buckets while sorting; four for the LCP and the cover).
+    */
+  private val DriverBytesPerPosition = 20L
+
+  /** Driver bytes per UTF-8 text byte: the collected result as shipped
+    * (1), decoded into JVM strings (≤ 2) and the cleaned output (≤ 2).
+    */
+  private val DriverBytesPerTextByte = 5L
+
+  private[text] def driverFootprint(positions: Long, textBytes: Long): Long =
+    DriverBytesPerPosition * positions + DriverBytesPerTextByte * textBytes
+
+  /** One eighth of `spark.driver.maxResultSize` (0 = unlimited), capped
+    * by the driver heap the arrays live in.
+    */
+  private def driverBudget(spark: SparkSession): Long = {
+    val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val heap = Runtime.getRuntime.maxMemory
+    (if (cap > 0L) math.min(cap, heap) else heap) / 8L
+  }
+
+  /** [[removeDuplicatedSpans]] against an explicit byte `budget` — the
+    * seam specs use to force either path. Returns the result and the
+    * path that produced it (`"driver"` or `"distributed"`).
+    */
+  private[text] def removeDuplicatedSpansWithin(
+      docs: DataFrame, idCol: String, textCol: String, minLen: Long,
+      maxRounds: Int, budget: Long): (DataFrame, String) = {
+    val sc = docs.sparkSession.sparkContext
+    val op = "SuffixArray.removeDuplicatedSpans"
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription(s"$op: size job, bound=$budget B")
+      val size = docs.agg(positionCount(textCol),
+        coalesce(sum(octet_length(col(textCol)).cast("long")), lit(0L))).head()
+      val positions = size.getLong(0)
+      val bytes = driverFootprint(positions, size.getLong(1))
+      // The driver build runs to convergence; take it only where the
+      // doubling's round cap cannot stop the distributed build short.
+      val converges = maxRounds >= 62 || (1L << maxRounds) >= positions
+      def label(path: String): Unit =
+        sc.setJobDescription(s"$op: path=$path bytes=$bytes bound=$budget B")
+      val onDriver =
+        if (bytes <= budget && positions < Int.MaxValue && converges) {
+          label("driver")
+          driverRemoveSpans(docs, idCol, textCol, minLen)
+        } else None
+      onDriver.map(df => (df, "driver")).getOrElse {
+        label("distributed")
+        val ix = buildIndexOfSize(docs, idCol, textCol, positions, maxRounds,
+          retainLevels = true, levelStore = None)
+        (removeSpansFromLcp(docs, idCol, textCol, lcpAdjacent(ix),
+          ix.addr.filter(col("code") =!= ix.sepCode)
+            .select(col(idCol), col("pos"), col("gid")),
+          minLen, rankParts(ix.addr, ix.total)), "distributed")
+      }
+    } finally sc.setJobDescription(prevDesc)
+  }
+
+  /** The in-memory twin of the distributed chain: collect `(id, text)`
+    * once, lay out the SEP-joined codepoint string in id order (trailing
+    * SEP included), build its suffix array and Kasai LCP, mark both
+    * copies of every adjacent pair with LCP ≥ `minLen`, and cut each
+    * document's covered codepoints. None when the ids are not a key
+    * (null or repeated after the long cast): the distributed addressing
+    * defines that case, so it keeps it.
+    */
+  private def driverRemoveSpans(docs: DataFrame, idCol: String, textCol: String,
+                                minLen: Long): Option[DataFrame] = {
+    val picked = docs.select(col(idCol), col(textCol))
+    val schema = StructType(Seq(picked.schema.head,
+      StructField("clean_text", StringType, picked.schema(1).nullable),
+      StructField("n_removed", LongType, nullable = false)))
+    val rows = docs.select(col(idCol), col(idCol).cast("long"), col(textCol)).collect()
+    if (rows.exists(_.isNullAt(1))) return None
+    val sorted = rows.sortBy(_.getLong(1))
+    if (sorted.indices.drop(1).exists(i => sorted(i).getLong(1) == sorted(i - 1).getLong(1)))
+      return None
+    val texts = sorted.map(r => if (r.isNullAt(2)) "" else r.getString(2))
+    val s = new Array[Int](texts.iterator.map(t => t.codePointCount(0, t.length) + 1).sum)
+    var g = 0
+    texts.foreach { t =>
+      t.codePoints().forEach { c => s(g) = c; g += 1 }
+      s(g) = Sep
+      g += 1
+    }
+    val reach = coverReach(s, minLen)
+    // One sweep in gid order: a position is covered while it lies below
+    // the furthest end of any interval starting at or before it.
+    g = 0
+    var cur = 0
+    val out = new java.util.ArrayList[Row](sorted.length)
+    sorted.indices.foreach { d =>
+      val t = texts(d)
+      val kept = new java.lang.StringBuilder(t.length)
+      var removed = 0L
+      t.codePoints().forEach { c =>
+        cur = math.max(cur, reach(g))
+        if (g < cur) removed += 1L else kept.appendCodePoint(c)
+        g += 1
+      }
+      cur = math.max(cur, reach(g))
+      g += 1
+      out.add(Row(sorted(d).get(0),
+        if (removed == 0L) sorted(d).get(2) else kept.toString, removed))
+    }
+    Some(docs.sparkSession.createDataFrame(out, schema))
+  }
+
+  /** For each position of `s`, the furthest exclusive end of a duplicated
+    * interval starting there (0 = none): both copies `[p, p + lcp)` of
+    * every suffix-array-adjacent pair with LCP ≥ `minLen`. Overwrites
+    * `s` with dense codes.
+    */
+  private def coverReach(s: Array[Int], minLen: Long): Array[Int] = {
+    val n = s.length
+    val sa = suffixArrayOf(s)
+    // inverse permutation, then Kasai: lcp(r) = LCP(sa(r - 1), sa(r))
+    val rank = new Array[Int](n)
+    var i = 0
+    while (i < n) { rank(sa(i)) = i; i += 1 }
+    val lcp = new Array[Int](n)
+    var h = 0
+    i = 0
+    while (i < n) {
+      val r = rank(i)
+      if (r > 0) {
+        val j = sa(r - 1)
+        while (i + h < n && j + h < n && s(i + h) == s(j + h)) h += 1
+        lcp(r) = h
+        if (h > 0) h -= 1
+      } else h = 0
+      i += 1
+    }
+    val reach = rank // no longer needed
+    java.util.Arrays.fill(reach, 0)
+    var r = 1
+    while (r < n) {
+      val l = lcp(r)
+      if (l >= minLen) {
+        val a = sa(r - 1)
+        val b = sa(r)
+        reach(a) = math.max(reach(a), a + l)
+        reach(b) = math.max(reach(b), b + l)
+      }
+      r += 1
+    }
+    reach
+  }
+
+  /** Suffix array of `s` by prefix doubling with counting sorts,
+    * O(n log n) over primitive arrays; a suffix that is a prefix of
+    * another sorts first. Rewrites `s` to dense codes (order and
+    * equality preserved).
+    */
+  private def suffixArrayOf(s: Array[Int]): Array[Int] = {
+    val n = s.length
+    var rk = new Array[Int](n)
+    var tmp = new Array[Int](n)
+    // dense codes: rank of each code among the distinct codes
+    System.arraycopy(s, 0, tmp, 0, n)
+    java.util.Arrays.sort(tmp)
+    var sigma = 0
+    var i = 0
+    while (i < n) {
+      if (i == 0 || tmp(i) != tmp(i - 1)) { tmp(sigma) = tmp(i); sigma += 1 }
+      i += 1
+    }
+    i = 0
+    while (i < n) { s(i) = java.util.Arrays.binarySearch(tmp, 0, sigma, s(i)); i += 1 }
+    val sa = new Array[Int](n)
+    val cnt = new Array[Int](math.max(n, sigma) + 1)
+    i = 0
+    while (i < n) { cnt(s(i)) += 1; rk(i) = s(i); i += 1 }
+    i = 1
+    while (i < cnt.length) { cnt(i) += cnt(i - 1); i += 1 }
+    i = n - 1
+    while (i >= 0) { cnt(s(i)) -= 1; sa(cnt(s(i))) = i; i -= 1 }
+    var classes = sigma
+    var k = 1
+    while (classes < n && k < n) {
+      // order by the second key (rank at +k, missing first) ...
+      var p = 0
+      i = n - k
+      while (i < n) { tmp(p) = i; p += 1; i += 1 }
+      i = 0
+      while (i < n) { if (sa(i) >= k) { tmp(p) = sa(i) - k; p += 1 }; i += 1 }
+      // ... then stably by the first
+      java.util.Arrays.fill(cnt, 0, classes, 0)
+      i = 0
+      while (i < n) { cnt(rk(i)) += 1; i += 1 }
+      i = 1
+      while (i < classes) { cnt(i) += cnt(i - 1); i += 1 }
+      i = n - 1
+      while (i >= 0) {
+        val j = tmp(i)
+        cnt(rk(j)) -= 1
+        sa(cnt(rk(j))) = j
+        i -= 1
+      }
+      // re-rank by the (first, second) pair
+      tmp(sa(0)) = 0
+      var c = 0
+      i = 1
+      while (i < n) {
+        val a = sa(i - 1)
+        val b = sa(i)
+        val a2 = if (a + k < n) rk(a + k) else -1
+        val b2 = if (b + k < n) rk(b + k) else -1
+        if (rk(a) != rk(b) || a2 != b2) c += 1
+        tmp(b) = c
+        i += 1
+      }
+      val t = rk; rk = tmp; tmp = t
+      classes = c + 1
+      k <<= 1
+    }
+    sa
   }
 
   /** TOKEN-SPACE exact-substring dedup — the composition Lee et al.

@@ -8,11 +8,11 @@ import org.apache.spark.sql.SparkSession
   * same table/posify/memo warm-up, count() action), so a change's
   * before/after is attributable to the gate and not to harness drift.
   *
-  * The job count matters on this host class: SpanAB measured
-  * 0.095–0.15 s of fixed per-job cost, so a memo-served gate's warm
-  * wall is ~njobs × that — job-count reduction IS the optimization
-  * lever for the multi-action chains (and fewer barriers is the same
-  * win on a cluster).
+  * The job count matters on this host class: the round-17 t15/sa4 drift
+  * attribution (PLANS.md) measured 0.095–0.15 s of fixed per-job cost,
+  * so a memo-served gate's warm wall is ~njobs × that — job-count
+  * reduction IS the optimization lever for the multi-action chains
+  * (and fewer barriers is the same win on a cluster).
   *
   * Usage: runMain graft.tools.GateProfile <sfDir> <reps> <gate> [gate ...]
   *        (gate "top30" = the 30 most expensive gates of BENCH_sf01_r17)

@@ -233,6 +233,27 @@ class PipelineSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("monthlyReport on a month with no sales writes the report and axes-only charts") {
+    val body = s"""{"receipts":[${receiptJson("r1", "2025-07-02T10:00:00Z", "Burger", 100.0)}]}"""
+    val (server, port) = startStub(Map(None -> body))
+    try {
+      val cfg = config(port)
+      new graft.pos.StateStore(cfg.statePath).commit(Some("2025-07-01T00:00:00.000Z"))
+      assert(Pipeline.dailyRun(spark, cfg))
+      // August has no rows in the lake: the report renders, the charts
+      // render their axes alone instead of throwing
+      val md = Pipeline.monthlyReport(spark, cfg, "2025-08", "2025-07")
+      assert(md.contains("# Monthly Report — 2025-08"))
+      assert(Files.exists(cfg.reportDir.resolve("monthly_2025-08.md")))
+      Seq("top_products_2025-08.png", "daily_revenue_2025-08.png").foreach { name =>
+        val png = Files.readAllBytes(cfg.reportDir.resolve(name))
+        val Some((h, px)) = graft.multimodal.ImageCodec.decodePng(png)
+        assert(px.forall(p => (p & 0xff) == 255 || (p & 0xff) == 128),
+          s"$name draws more than its axes (${h.width}x${h.height})")
+      }
+    } finally server.stop(0)
+  }
+
   test("S3: HTTP 402 tolerated as empty batch; no state advance") {
     val (server, port) = startStub(Map.empty, receipts402 = true)
     try {

@@ -40,6 +40,28 @@ class ChartsSpec extends SparkSpec {
     assert(img.getWidth === 61 && img.getHeight === 41)
   }
 
+  private def sha256(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  test("non-empty charts keep their exact bytes") {
+    val bar = Charts.barChart(Seq("Burger" -> 12.0, "Fries" -> 7.5, "Soda" -> 3.0))
+    val line = Charts.lineChart(Seq(120.0, 80.5, 95.25, 140.0))
+    assert(sha256(bar) == "f44729315cfbc64041a9920a403a6c5e4e6b072d40e7ae9bdbace7bdaf42d43a", "bar chart bytes changed")
+    assert(sha256(line) == "6896f12ff908fc38321370049d6e7fcfc13d1db41d7ff6662e6389d7a94d5332", "line chart bytes changed")
+  }
+
+  test("empty charts render the axes alone") {
+    Seq(Charts.barChart(Seq.empty, 60, 50), Charts.lineChart(Seq.empty, 60, 50)).foreach { png =>
+      val (w, h, px) = raster(png)
+      assert(w === 60 && h === 50)
+      for (y <- 0 until h; x <- 0 until w) {
+        val axis = x == 0 || y == h - 1
+        assert((px(y * w + x) & 0xff) == (if (axis) 128 else 255), s"pixel ($x, $y)")
+      }
+    }
+  }
+
   test("writeMonthlyCharts: renders decodable PNGs from the lake") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

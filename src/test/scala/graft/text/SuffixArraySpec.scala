@@ -132,6 +132,56 @@ class SuffixArraySpec extends SparkSpec {
     assert(got.exists(_._4 >= 10L)) // the duplicated doc really produces long LCPs
   }
 
+  /** Brute span cut: covered gids = union of [gid, gid + lcp) for both
+    * sides of every adjacent pair with lcp >= L; each document keeps
+    * its uncovered codepoints. Null text stays null and is never cut.
+    */
+  private def bruteCut(docs: Seq[(Long, String)], L: Long): Seq[(Long, String, Long)] = {
+    val covered = scala.collection.mutable.Set[Long]()
+    bruteLcp(docs.map { case (id, t) => (id, Option(t).getOrElse("")) })
+      .foreach { case (_, g1, g2, lcp) =>
+        if (lcp >= L) {
+          (g1 until g1 + lcp).foreach(covered += _)
+          (g2 until g2 + lcp).foreach(covered += _)
+        }
+      }
+    var gid = 1L
+    docs.sortBy(_._1).map { case (id, t) =>
+      val tc = Option(t).getOrElse("").codePoints().toArray
+      val kept = tc.zipWithIndex.collect {
+        case (c, i) if !covered.contains(gid + i) => c
+      }
+      val removed = tc.length - kept.length
+      gid += tc.length + 1
+      (id, if (removed == 0) t else new String(kept.flatMap(Character.toChars)),
+        removed.toLong)
+    }
+  }
+
+  /** Runs span removal at `budget`; returns its rows (by id), schema
+    * and the path that ran.
+    */
+  private def cutAt(df: org.apache.spark.sql.DataFrame, L: Long, budget: Long) = {
+    val (out, path) = SuffixArray.removeDuplicatedSpansWithin(
+      df, "doc_id", "text", L, maxRounds = 40, budget = budget)
+    (out.orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq, out.schema, path)
+  }
+
+  /** Both paths — driver (unbounded budget) and distributed (negative
+    * budget) — equal the brute cut and each other, schema included.
+    */
+  private def assertBothPaths(docs: Seq[(Long, String)], L: Long): Seq[(Long, String, Long)] = {
+    val df = docs.toDF("doc_id", "text")
+    val (viaDriver, driverSchema, p1) = cutAt(df, L, Long.MaxValue)
+    val (viaSpark, sparkSchema, p2) = cutAt(df, L, -1L)
+    assert(p1 == "driver" && p2 == "distributed")
+    val expected = bruteCut(docs, L)
+    assert(viaDriver == expected, "driver path diverged from the brute cut")
+    assert(viaSpark == expected, "distributed path diverged from the brute cut")
+    assert(driverSchema == sparkSchema, "paths disagree on the schema")
+    expected
+  }
+
   test("removeDuplicatedSpans cuts exactly the union of >=L duplicated intervals") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over it"),
@@ -139,38 +189,85 @@ class SuffixArraySpec extends SparkSpec {
       (2L, "completely unique text !!"),
       (3L, "the quick brown fox jumps over it")) // full duplicate of 0
     val L = 12L
-    // brute: covered gids = union of [gid, gid+lcp) for both sides of
-    // every adjacent pair with lcp >= L
-    val sep = new String(Character.toChars(SuffixArray.Sep))
-    val s = docs.sortBy(_._1).map(_._2).mkString("", sep, sep)
-    val cps = s.codePoints().toArray
-    val covered = scala.collection.mutable.Set[Long]()
-    bruteLcp(docs).foreach { case (_, g1, g2, lcp) =>
-      if (lcp >= L) {
-        (g1 until g1 + lcp).foreach(covered += _)
-        (g2 until g2 + lcp).foreach(covered += _)
-      }
-    }
-    val expected = {
-      var gid = 1L
-      docs.map { case (id, t) =>
-        val tc = t.codePoints().toArray
-        val kept = tc.zipWithIndex.collect {
-          case (c, i) if !covered.contains(gid + i) => c
-        }
-        val clean = new String(kept.flatMap(Character.toChars))
-        val removed = tc.length - kept.length
-        gid += tc.length + 1
-        (id, clean, removed.toLong)
-      }
-    }
-    val got = SuffixArray.removeDuplicatedSpans(
+    val got = assertBothPaths(docs, L)
+    // the public entry takes the driver path at this size
+    assert(SuffixArray.removeDuplicatedSpans(
       docs.toDF("doc_id", "text"), "doc_id", "text", minLen = L)
-      .orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq
-    assert(got == expected)
+      .orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq == got)
     // all three classes live: untouched, partially cut, (near-)fully cut
     assert(got.exists(_._3 == 0L) && got.exists(r => r._3 > 0L && r._2.nonEmpty))
-    assert(expected.map(_._3).sum > 0)
+    assert(got.map(_._3).sum > 0)
+  }
+
+  test("span removal switches paths exactly at the driver byte budget") {
+    val docs = Seq(
+      (0L, "the cat sat on the mat, the cat sat on it"),
+      (1L, "a cat sat on a mat — the cat sat on it"),
+      (2L, "naïve café 😀 unrelated"), (3L, "the cat sat on the mat, the cat"))
+    val df = docs.toDF("doc_id", "text")
+    val positions = docs.map(d => d._2.codePointCount(0, d._2.length) + 1L).sum
+    val bytes = docs.map(_._2.getBytes("UTF-8").length.toLong).sum
+    val bound = SuffixArray.driverFootprint(positions, bytes)
+    val (atBound, atSchema, p1) = cutAt(df, 8L, bound)
+    val (over, overSchema, p2) = cutAt(df, 8L, bound - 1L)
+    assert(p1 == "driver", "a corpus of exactly the budget runs on the driver")
+    assert(p2 == "distributed", "one byte over the budget runs distributed")
+    val expected = bruteCut(docs, 8L)
+    assert(atBound == expected && over == expected)
+    assert(atSchema == overSchema)
+    assert(expected.exists(_._3 > 0L))
+  }
+
+  test("span removal on degenerate inputs: both paths agree with the brute cut") {
+    val L = 6L
+    // empty frame
+    assert(assertBothPaths(Seq.empty, L).isEmpty)
+    // all-null text: null stays null, nothing removed
+    assert(assertBothPaths(Seq((0L, null), (1L, null)), L)
+      .forall(r => r._2 == null && r._3 == 0L))
+    // all-empty text
+    assert(assertBothPaths(Seq((0L, ""), (1L, ""), (2L, "")), L)
+      .forall(r => r._2 == "" && r._3 == 0L))
+    // a single document with an internal repeat
+    assert(assertBothPaths(Seq((7L, "abcdefg abcdefg")), L).head._3 > 0L)
+    // one hot text x 50: every copy is covered entirely
+    val hot = (0L until 50L).map(i => (i, "the same hot text"))
+    assert(assertBothPaths(hot, L).forall(r => r._2 == "" && r._3 == 17L))
+    // non-BMP codepoints count one position each
+    val emoji = assertBothPaths(
+      Seq((0L, "x😀😁😂😃😄😅y"), (1L, "z😀😁😂😃😄😅w")), L)
+    assert(emoji.map(_._2) == Seq("xy", "zw") && emoji.forall(_._3 == 6L))
+    // a repeat that only reaches L by running across a SEP fence
+    val fence = assertBothPaths(
+      Seq((0L, "p abcd"), (1L, "efg q"), (2L, "r abcd"), (3L, "efg s")), 10L)
+    assert(fence.map(_._2) == Seq("p", "q", "r", "s"))
+  }
+
+  test("span removal labels its jobs with the path and restores the description") {
+    // repartitioned: a local relation would collect without a job
+    val docs = Seq((0L, "labelled labelled text"), (1L, "labelled labelled text"))
+      .toDF("doc_id", "text").repartition(2)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("outer")
+    try {
+      SuffixArray.removeDuplicatedSpans(docs, "doc_id", "text", 8L)
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+      val deadline = System.nanoTime() + 10000000000L
+      def labelled = seen.toArray.map(_.toString)
+        .exists(_.startsWith("SuffixArray.removeDuplicatedSpans: path=driver bytes="))
+      while (!labelled && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(labelled, s"no driver-path job description among ${seen.toArray.toSeq}")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("token-space prefixGroups equals the brute window census over code sequences") {
