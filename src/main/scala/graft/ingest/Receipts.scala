@@ -43,11 +43,6 @@ object Receipts {
   def newerThan(receipts: DataFrame, lastTimestamp: String): DataFrame =
     receipts.filter(col("created_at").isNotNull && col("created_at") > lit(lastTimestamp))
 
-  /** K6 — the watermark to commit: max(updated_at) of the batch. */
-  def maxUpdatedAt(receipts: DataFrame): Option[String] =
-    receipts.agg(max(col("updated_at"))).collect().headOption
-      .flatMap(r => Option(r.getString(0)))
-
   /** S5 — raw JSON file source (a saved array of receipt documents). */
   def fromRawFile(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", value = true).schema(Schemas.rawReceipt).json(path)

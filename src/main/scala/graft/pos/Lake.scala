@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *     dedup + rewrite with dynamic partition overwrite.
   *
   * At scale: `partitionBy(year, month)` gives writers one directory per
-  * month; per-month file count follows the shuffle partitioning, so a
-  * repartition on the partition keys precedes the write to avoid the
-  * many-small-files explosion (each of N tasks writing M months).
+  * month, and each write task opens one file per month it touches.
+  * [[writeFull]] and [[compactTo]] read many partitions that each span
+  * many months, so they repartition on the partition keys first to
+  * avoid the many-small-files explosion (each of N tasks writing M
+  * months). [[appendIncrement]] takes its input's partitioning as it is.
   */
 object Lake {
 
@@ -30,17 +32,17 @@ object Lake {
 
   private def prepared(df: DataFrame): DataFrame = {
     val cols = Schemas.curatedColumns.map(col) ++ Schemas.partitionKeys.map(col)
-    withPartitionKeys(df)
-      .select(cols: _*)
-      // One writer task per month-partition (reference writes one
-      // data.parquet per month, load.py:99-103); at 100 TB this becomes
-      // repartition(year, month, <salt>) to bound file size instead.
-      .repartition(col("year"), col("month"))
+    withPartitionKeys(df).select(cols: _*)
   }
 
   /** K4 — schema-enforced full write, one directory per month. */
   def writeFull(df: DataFrame, root: String): Unit =
-    prepared(df).write
+    prepared(df)
+      // One writer task per month-partition (reference writes one
+      // data.parquet per month, load.py:99-103); at 100 TB this becomes
+      // repartition(year, month, <salt>) to bound file size instead.
+      .repartition(col("year"), col("month"))
+      .write
       .partitionBy(Schemas.partitionKeys: _*)
       .mode("overwrite")
       .parquet(root)
@@ -48,6 +50,12 @@ object Lake {
   /** K5(a) — append-only incremental: writes ONLY the new rows
     * (reference `load.py:223` writes `monthly_data_to_add`, not the
     * merged frame); the lake stays at-least-once and V1 dedups on read.
+    *
+    * No exchange: the daily batch is one page body, which parses into
+    * one partition, so a day adds one file per touched month in a
+    * single job; a shuffle on the partition keys would add a stage and
+    * a job to every day for the same layout. A caller appending a frame
+    * of many partitions should repartition it by month first.
     */
   def appendIncrement(newRows: DataFrame, root: String): Unit =
     prepared(newRows).write
@@ -84,12 +92,12 @@ object Lake {
     */
   def latestWatermark(spark: SparkSession, root: String): Option[String] = {
     val lake = read(spark, root)
-    // Partition columns may read back as int (type inference) — work
-    // with whatever type the catalog inferred.
+    // [[read]] pins year/month to strings, so "07" sorts and matches as
+    // the directory name the writer produced.
     val latest = lake.select(col("year"), col("month")).distinct()
       .orderBy(col("year").desc, col("month").desc).limit(1).collect()
     latest.headOption.map { r =>
-      lake.filter(col("year") === r.get(0) && col("month") === r.get(1))
+      lake.filter(col("year") === r.getString(0) && col("month") === r.getString(1))
         .agg(date_format(max(col("shifted_time")), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
         .collect().head.getString(0)
     }

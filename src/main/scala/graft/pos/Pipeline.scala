@@ -1,8 +1,11 @@
 package graft.pos
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import graft.ingest.{PosApiClient, Receipts}
 
 /** End-to-end pipeline orchestration — the six `main.py` step verbs
@@ -30,9 +33,18 @@ object Pipeline {
       .json(dir.resolve(s"receipts_$tag").toString)
 
   /** Entry 1 — daily incremental ETL (reference `main.py:24-75`):
-    * state read → incremental fetch → watermark filter → empty
-    * short-circuit → transform → append-only lake write → state commit
-    * (only after a successful write; at-least-once + read-side dedup).
+    * state read → incremental fetch → watermark filter → transform →
+    * append-only lake write → state commit (only after a successful
+    * write; at-least-once + read-side dedup).
+    *
+    * The append is the run's only Spark job: an [[Observation]] on the
+    * filtered receipts (not line items — a receipt with no line items
+    * still counts and still moves the watermark) takes the batch's row
+    * count and `max(updated_at)` while the write runs. A batch with no
+    * new receipts appends no rows and commits nothing. A failed append
+    * throws before the observation is read; an observation that does
+    * not arrive within [[observationWait]] throws too, so in both cases
+    * the watermark stays and the next run re-fetches the batch.
     */
   def dailyRun(spark: SparkSession, cfg: Config): Boolean = {
     val store = new StateStore(cfg.statePath)
@@ -42,21 +54,35 @@ object Pipeline {
     api.fetchIncremental(lastTs) match {
       case None => false // 402: treat as empty batch
       case Some(body) =>
+        val batch = new Observation()
         val fresh = Receipts.newerThan(Receipts.fromPages(spark, Seq(body)), lastTs)
-        // One driver-side action decides the short-circuit; cache so the
-        // transform reuses the parsed batch instead of re-parsing.
-        fresh.cache()
-        try {
-          if (fresh.isEmpty) false
-          else {
-            val curated = Transform.run(fresh)
-            Lake.appendIncrement(curated, cfg.lakeRoot)
-            store.commit(Receipts.maxUpdatedAt(fresh))
-            true
+          .observe(batch, count(lit(1)).as("rows"), max(col("updated_at")).as("wm"))
+        val sc = spark.sparkContext
+        val prevDesc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"Pipeline.dailyRun: append ${cfg.lakeRoot}")
+        try Lake.appendIncrement(Transform.run(fresh), cfg.lakeRoot)
+        finally sc.setJobDescription(prevDesc)
+        // Observed metrics reach the driver through the listener bus,
+        // after the write has returned.
+        val seen =
+          try Await.result(batch.future, observationWait)
+          catch {
+            case _: TimeoutException => throw new TimeoutException(
+              s"Pipeline.dailyRun: batch observation not delivered within $observationWait " +
+                s"of the append to ${cfg.lakeRoot}; watermark not committed")
           }
-        } finally fresh.unpersist()
+        // An empty row means the observed node never ran: the planner
+        // proved the batch empty (AQE does so below an exchange).
+        if (seen.length == 0 || seen.getAs[Long]("rows") == 0L) false
+        else {
+          store.commit(Option(seen.getAs[String]("wm")))
+          true
+        }
     }
   }
+
+  /** Bound on the wait for [[dailyRun]]'s batch observation. */
+  val observationWait: FiniteDuration = 60.seconds
 
   /** Entry — full historical extract to the raw zone (reference
     * `main.py:96-110`): paginated backfill, saved raw, no transform.

@@ -5,6 +5,7 @@ import graft.SparkSpec
 import graft.pos.{Analytics, Lake, Pipeline}
 import java.net.InetSocketAddress
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** S1–S4 + full daily_run end-to-end against a local HTTP stub of the
   * POS API (pagination, cursor, 402, watermark advance, at-least-once
@@ -230,6 +231,120 @@ class PipelineSpec extends SparkSpec {
       val monthly = Pipeline.monthlyReport(spark, cfg, "2025-07", "2025-06")
       assert(monthly.contains("(new)")) // no prior month → pct renders (new)
       assert(monthly.contains("Burger"))
+    } finally server.stop(0)
+  }
+
+  /** Every parquet file under the lake, relative path → bytes. */
+  private def parquetFiles(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    val s = Files.walk(base)
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  test("daily_run over a two-month batch is one Spark job writing one file per month") {
+    val body =
+      s"""{"receipts":[${receiptJson("r1", "2025-07-15T10:00:00Z", "Burger", 100.0)},
+         |${receiptJson("r2", "2025-08-02T11:00:00Z", "Fries", 50.0)},
+         |${receiptJson("r3", "2025-08-03T12:00:00Z", "Tacos", 70.0)}]}"""
+        .stripMargin.replaceAll("\n", "")
+    val (server, port) = startStub(Map(None -> body))
+    val sc = spark.sparkContext
+    val group = "dailyRun-one-job"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (ours(e.properties)) started.add(e.properties.getProperty("spark.job.description"))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    try {
+      val cfg = config(port)
+      new graft.pos.StateStore(cfg.statePath).commit(Some("2025-07-01T00:00:00.000Z"))
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "outer")
+      assert(Pipeline.dailyRun(spark, cfg))
+      assert(sc.getLocalProperty("spark.job.description") === "outer") // restored
+      val deadline = System.nanoTime() + 10000000000L
+      while (started.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(500) // a second job would have been queued by now
+      assert(started.toArray.toSeq === Seq(s"Pipeline.dailyRun: append ${cfg.lakeRoot}"))
+      val files = parquetFiles(cfg.lakeRoot).keys.toSeq
+      assert(files.map(f => f.substring(0, f.lastIndexOf('/'))).sorted ===
+        Seq("year=2025/month=07", "year=2025/month=08"))
+      assert(new graft.pos.StateStore(cfg.statePath).readLastTimestamp()
+        === "2025-08-03T12:00:00Z")
+      assert(Lake.read(spark, cfg.lakeRoot).count() === 3)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      server.stop(0)
+    }
+  }
+
+  test("daily_run over a stale-only or empty batch leaves the lake files and the state file as they were") {
+    val first = s"""{"receipts":[${receiptJson("r1", "2025-07-02T10:00:00Z", "Burger", 100.0)}]}"""
+    // r0 is older than the watermark, r1 sits exactly on it
+    val stale =
+      s"""{"receipts":[${receiptJson("r0", "2025-07-01T09:00:00Z", "Fries", 50.0)},
+         |${receiptJson("r1", "2025-07-02T10:00:00Z", "Burger", 100.0)}]}"""
+        .stripMargin.replaceAll("\n", "")
+    val (server, port) = startStub(Map(None -> first))
+    val cfg = config(port)
+    new graft.pos.StateStore(cfg.statePath).commit(Some("2025-07-01T00:00:00.000Z"))
+    try assert(Pipeline.dailyRun(spark, cfg)) finally server.stop(0)
+    Seq(stale, """{"receipts":[]}""").foreach { body =>
+      val (s2, p2) = startStub(Map(None -> body))
+      try {
+        val lakeBefore = parquetFiles(cfg.lakeRoot)
+        val stateBefore = Files.readAllBytes(cfg.statePath).toSeq
+        assert(Pipeline.dailyRun(spark, cfg.copy(baseUrl = s"http://localhost:$p2")) === false)
+        assert(parquetFiles(cfg.lakeRoot) === lakeBefore, body)
+        assert(Files.readAllBytes(cfg.statePath).toSeq === stateBefore, body)
+      } finally s2.stop(0)
+    }
+  }
+
+  test("daily_run: a receipt without line items still advances the watermark") {
+    val bare = receiptJson("r2", "2025-07-03T11:00:00Z", "Fries", 50.0)
+      .replaceAll(""""line_items":\[.*\]\}$""", """"line_items":[]}""")
+    assert(bare.endsWith(""""line_items":[]}"""))
+    val body =
+      s"""{"receipts":[${receiptJson("r1", "2025-07-02T10:00:00Z", "Burger", 100.0)},$bare]}"""
+    val (server, port) = startStub(Map(None -> body))
+    try {
+      val cfg = config(port)
+      new graft.pos.StateStore(cfg.statePath).commit(Some("2025-07-01T00:00:00.000Z"))
+      assert(Pipeline.dailyRun(spark, cfg))
+      assert(new graft.pos.StateStore(cfg.statePath).readLastTimestamp()
+        === "2025-07-03T11:00:00Z")
+      assert(Lake.read(spark, cfg.lakeRoot).count() === 1) // r2 has no line to land
+    } finally server.stop(0)
+  }
+
+  test("daily_run: a failing append propagates and leaves the state file unchanged") {
+    val body = s"""{"receipts":[${receiptJson("r1", "2025-07-02T10:00:00Z", "Burger", 100.0)}]}"""
+    val (server, port) = startStub(Map(None -> body))
+    try {
+      val base = config(port)
+      val notADir = Files.createTempFile("lake", ".file")
+      Files.writeString(notADir, "not a lake")
+      val cfg = base.copy(lakeRoot = notADir.toString)
+      new graft.pos.StateStore(cfg.statePath).commit(Some("2025-07-01T00:00:00.000Z"))
+      val stateBefore = Files.readAllBytes(cfg.statePath).toSeq
+      val t0 = System.nanoTime()
+      val err = intercept[Exception](Pipeline.dailyRun(spark, cfg))
+      val waited = (System.nanoTime() - t0) / 1e9
+      // the append's own error, thrown before the observation wait
+      assert(!err.isInstanceOf[java.util.concurrent.TimeoutException], err)
+      assert(waited < Pipeline.observationWait.toSeconds / 2.0, s"took $waited s")
+      assert(Files.readAllBytes(cfg.statePath).toSeq === stateBefore)
+      assert(Files.readString(notADir) === "not a lake")
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") === null)
     } finally server.stop(0)
   }
 
