@@ -8,56 +8,40 @@ import org.apache.spark.sql.functions._
   * dedup CLUSTERS, so a corpus keeps one canonical document per
   * component (component id = min doc id).
   *
-  * Algorithm: iterative min-label propagation. Each round every vertex
-  * takes the min label among itself and its neighbors; convergence in
-  * `diameter(component)` rounds. Near-dup components are overwhelmingly
-  * tiny and shallow (pairs→triangles→small cliques), so 2–4 rounds
-  * finish real corpora; `maxIter` bounds pathological chains. Each
-  * round is one shuffle (join + groupBy on the edge key); lineage is
-  * truncated per round with an eager localCheckpoint, so plans stay
-  * flat at any iteration count. For graphs with genuinely deep
-  * components at 100 TB, swap the propagation loop for the
-  * large-star/small-star contraction (O(log n) rounds) — same driver
-  * loop, different round body.
+  * Near-dup components are overwhelmingly tiny and shallow
+  * (pairs→triangles→small cliques), so a bounded edge list is labelled
+  * on the driver with union-find. Larger edge lists run the
+  * large-star/small-star contraction (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC '14): O(log n) rounds on
+  * any graph, including deep components (long reply chains, web
+  * graphs), with lineage truncated per round by an eager
+  * localCheckpoint so plans stay flat at any iteration count.
   */
 object Components {
 
   /** Edge sets at most this large are labelled ON THE DRIVER with one
     * bounded collect + union-find (exactly the min-reachable-id labels
-    * both distributed forms converge to) instead of an iterated
+    * the contraction converges to) instead of an iterated
     * checkpoint-per-round loop — near-dup components are tiny, and the
     * loop's wall at bench scale is pure per-round scheduler cost
-    * (optimization r17, guide §1.2/§8 "decide with small rows"). Edge
-    * lists beyond the bound keep the distributed algorithms untouched;
-    * the bound caps driver memory at ~2 longs × this many rows.
-    * Overridable (system property first, then env) so specs can force
-    * either path.
+    * (optimization r17, guide §1.2/§8 "decide with small rows"). The
+    * bound caps driver memory at ~2 longs × this many rows.
     */
-  private[dedup] def driverComponentsMax: Long =
-    sys.props.get("spark.graft.cc.driverMax")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val driverComponentsMax = 65536L
 
-  /** Min-reachable-id labels of a BOUNDED edge list, union-find on the
-    * driver; None when the edge set exceeds [[driverComponentsMax]]
-    * (the `limit(bound + 1)` probe returns every edge when it fits, and
-    * detects overflow without a count when it does not — one job either
-    * way). Only edge-participating vertices appear; singletons label
+  /** Min-reachable-id labels `(__ccv, __cclabel)` of a BOUNDED edge
+    * list, union-find on the driver; None when the edge set exceeds
+    * `max`. Only edge-participating vertices appear; singletons label
     * themselves downstream.
     */
-  private def driverLabels(pairs: DataFrame, aCol: String, bCol: String)
-      : Option[DataFrame] = {
-    val thr = driverComponentsMax
-    if (thr <= 0L) return None
-    // Null endpoints are dropped HERE, matching the distributed paths:
-    // propagation's inner joins never see a null neighbor, so the
-    // driver twin must not NPE on one (or let it become a label).
-    val rows = pairs
+  private def driverLabels(pairs: DataFrame, aCol: String, bCol: String,
+                           max: Long): Option[DataFrame] = {
+    // Null endpoints are dropped HERE, matching the contraction's
+    // self-loop filter (a null never compares unequal), so the driver
+    // twin must not NPE on one (or let it become a label).
+    graft.operators.Scans.collectAtMost(pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .limit(math.min(thr + 1L, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > thr) None
-    else {
+      .filter(col("a").isNotNull && col("b").isNotNull), max).map { rows =>
       val parent = scala.collection.mutable.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -79,16 +63,18 @@ object Components {
       val verts = rows.flatMap(e => Seq(e.getLong(0), e.getLong(1))).distinct
       val spark = pairs.sparkSession
       import spark.implicits._
-      Some(broadcast(
-        verts.toSeq.map(v => (v, find(v))).toDF("__ccv", "__cclabel")))
+      broadcast(verts.toSeq.map(v => (v, find(v))).toDF("__ccv", "__cclabel"))
     }
   }
 
   /** Label every vertex with the minimum vertex id reachable from it.
+    * Output: `idCol` in its input type, `component` as long.
     *
     * @param vertices one row per vertex (singletons allowed — they keep
     *                 their own id as component)
     * @param pairs    undirected edges (each pair listed once)
+    * @param maxIter  contraction rounds before the fallback gives up
+    *                 with an error (never reached on the driver path)
     */
   def connectedComponents(
       vertices: DataFrame,
@@ -96,70 +82,40 @@ object Components {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 20): DataFrame = {
-    driverLabels(pairs, aCol, bCol).foreach { lab =>
-      return vertices
-        .join(lab, col(idCol).cast("long") === col("__ccv"), "left")
-        .select(col(idCol),
-          coalesce(col("__cclabel"), col(idCol).cast("long")).as("component"))
-    }
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint(true) // reused every round; sever source lineage
-    var labels = vertices.select(col(idCol).as("v"), col(idCol).cast("long").as("label"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("v"))
-        .groupBy(col("src")).agg(min(col("label")).as("nmin"))
-      val stepped = labels.join(neighborMin, labels("v") === neighborMin("src"), "left")
-        .select(
-          labels("v"),
-          labels("label").as("old"),
-          least(labels("label"), coalesce(col("nmin"), labels("label"))).as("label"))
-        .localCheckpoint(true)
-      changed = stepped.filter(col("label") =!= col("old")).count()
-      labels = stepped.select(col("v"), col("label"))
-      iter += 1
-    }
-    // Unconverged labels are WRONG labels (a component deeper than
-    // maxIter hops still carries split ids) — fail loudly rather than
-    // hand back plausible-looking cluster ids.
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing): the graph has components deeper than " +
-          s"$maxIter hops — raise maxIter or use Components.largeSmallStar " +
-          "(O(log n) rounds on any graph)")
-    labels.select(col("v").as(idCol), col("label").as("component"))
+      maxIter: Int = 20): DataFrame =
+    connectedComponentsWithin(vertices, idCol, pairs, aCol, bCol, maxIter,
+      driverComponentsMax)
+
+  /** [[connectedComponents]] with the driver bound passed in, so specs
+    * can run either path on the same input.
+    */
+  private[dedup] def connectedComponentsWithin(
+      vertices: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxIter: Int,
+      driverMax: Long): DataFrame = {
+    val labels = driverLabels(pairs, aCol, bCol, driverMax)
+      .getOrElse(starLabels(pairs, aCol, bCol, maxIter))
+    vertices
+      .join(labels, col(idCol).cast("long") === col("__ccv"), "left")
+      .select(col(idCol),
+        coalesce(col("__cclabel"), col(idCol).cast("long")).as("component"))
   }
 
-  /** Large-star / small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC '14): alternate the two
-    * star operations on the EDGE LIST until fixpoint — O(log n) rounds
-    * on any graph, vs diameter rounds for [[connectedComponents]]'
-    * label propagation. Use this form when components can be deep
-    * (long reply chains, web graphs); both return identical labels.
+  /** Large-star / small-star contraction: alternate the two star
+    * operations on the EDGE LIST until fixpoint, then read
+    * `(__ccv, __cclabel)` off the resulting stars.
     *
     *  - large-star(u): every neighbor v > u re-points to m =
     *    min(N(u) ∪ u)
     *  - small-star(u): every neighbor v ≤ u (and u itself) re-points
     *    to the same m
     */
-  def largeSmallStar(
-      vertices: DataFrame,
-      idCol: String,
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 30): DataFrame = {
-    driverLabels(pairs, aCol, bCol).foreach { lab =>
-      return vertices.select(col(idCol).cast("long").as("v"))
-        .join(lab, col("v") === col("__ccv"), "left")
-        .select(col("v").as(idCol),
-          coalesce(col("__cclabel"), col("v")).as("component"))
-    }
+  private def starLabels(pairs: DataFrame, aCol: String, bCol: String,
+                         maxIter: Int): DataFrame = {
     var edges = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -170,7 +126,7 @@ object Components {
     // checksum — one aggregation job per round, carried across rounds,
     // vs the two full exceptAll comparison jobs this replaces. XOR (not
     // sum) because it is order-independent AND cannot overflow under
-    // ANSI arithmetic. The label-propagation property test still proves
+    // ANSI arithmetic. The union-find property test still proves
     // end-to-end equality.
     def stats(df: DataFrame): (Long, Long) = {
       val r = df.agg(
@@ -205,19 +161,17 @@ object Components {
       edges = small
       iter += 1
     }
+    // Unconverged labels are WRONG labels (split ids inside one
+    // component) — fail loudly rather than hand back plausible-looking
+    // cluster ids.
     if (changed)
       throw new IllegalStateException(
-        s"largeSmallStar did not reach a fixpoint in $maxIter rounds — " +
+        s"connectedComponents did not reach a fixpoint in $maxIter rounds — " +
           "raise maxIter (rounds needed grow with log of the largest component)")
     // Fixpoint edges form stars (child → root). Any vertex not in the
     // edge list is its own component.
-    val roots = edges.select(col("a").as("v"), col("b").as("label"))
-      .union(edges.select(col("b").as("v"), col("b").as("label")))
-      .groupBy(col("v")).agg(min(col("label")).as("label"))
-    vertices.select(col(idCol).cast("long").as("v"))
-      .join(roots, Seq("v"), "left")
-      .select(
-        col("v").as(idCol),
-        coalesce(col("label"), col("v")).as("component"))
+    edges.select(col("a").as("__ccv"), col("b").as("__cclabel"))
+      .union(edges.select(col("b").as("__ccv"), col("b").as("__cclabel")))
+      .groupBy(col("__ccv")).agg(min(col("__cclabel")).as("__cclabel"))
   }
 }

@@ -27,12 +27,9 @@ import org.apache.spark.sql.functions._
 object GlobalRank {
 
   /** Driver bound for the size-gated one-collect finish on the
-    * ONE-SHOT rank/prefix-sum shapes (optimization r18). 0 disables.
+    * ONE-SHOT rank/prefix-sum shapes (optimization r18).
     */
-  private[operators] def driverFinishMax: Long =
-    sys.props.get("spark.graft.rank.driverMax")
-      .orElse(sys.env.get("SPARK_GRAFT_RANK_DRIVER_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val driverFinishMax = 65536L
 
   /** Shared two-pass core: range-partition + sort on `ord`, checkpoint
     * the run, collect one `agg` row per partition, broadcast the
@@ -44,7 +41,7 @@ object GlobalRank {
     * every round's staging run stays in storage memory until GC.
     */
   private def prefixed(df: DataFrame, nParts: Int, agg: Column,
-                       ord: Seq[Column], zero: Long = 0L,
+                       ord: Seq[Column],
                        combine: (Long, Long) => Long = _ + _,
                        extra: Option[Column] = None)
       : (DataFrame, Long, Checkpoints.Token, Long) = {
@@ -61,20 +58,23 @@ object GlobalRank {
     val aggs = Seq(agg.as("n")) ++ extra.map(_.cast("long").as("x"))
     val collected = parted.groupBy(col("__pid")).agg(aggs.head, aggs.tail: _*)
       .collect()
-    val sizes = collected.map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val sizes = collected
+      .map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .sortBy(_._1)
     val extraTotal =
       if (extra.isEmpty) 0L
       else collected.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum
     // Exclusive prefix under `combine` (sum for ranks/running sums,
-    // max for running maxima).
-    val offsets = sizes.scanLeft((0, zero)) { case ((_, acc), (pid, n)) =>
-      (pid, combine(acc, n))
-    }.init.zip(sizes).map { case ((_, off), (pid, _)) => (pid, off) }
+    // max for running maxima) with SQL's null skipping: a partition
+    // whose aggregate is null leaves the prefix as it was, and `__off`
+    // is null until some earlier partition carried a value.
+    val prefix = sizes.scanLeft(Option.empty[Long]) { case (acc, (_, n)) =>
+      (acc ++ n).reduceOption(combine)
+    }
     val spark = df.sparkSession
     import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__off"))
-    (parted.join(offDf, Seq("__pid")),
-      sizes.map(_._2).foldLeft(zero)(combine), token, extraTotal)
+    val offDf = broadcast(sizes.map(_._1).zip(prefix.init).toSeq.toDF("__pid", "__off"))
+    (parted.join(offDf, Seq("__pid")), prefix.last.getOrElse(0L), token, extraTotal)
   }
 
   /** [[withGlobalRankCounted]] plus the staged run's checkpoint token
@@ -88,7 +88,8 @@ object GlobalRank {
     // Pass 2: parallel per-partition rank + broadcast offset.
     val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
     (run
-      .withColumn(rankCol, (col("__off") + row_number().over(w)).cast("long"))
+      .withColumn(rankCol,
+        (coalesce(col("__off"), lit(0L)) + row_number().over(w)).cast("long"))
       .drop("__pid", "__off"), total, token)
   }
 
@@ -109,14 +110,17 @@ object GlobalRank {
     * form. Iterated callers keep the Tracked/Agg variants unchanged.
     */
   def withGlobalRankCounted(df: DataFrame, rankCol: String, nParts: Int,
-                            ord: Column*): (DataFrame, Long) = {
-    val max = driverFinishMax
-    if (max <= 0L) {
-      val (ranked, total, _) = withGlobalRankTracked(df, rankCol, nParts, ord: _*)
-      return (ranked, total)
-    }
+                            ord: Column*): (DataFrame, Long) =
+    rankCountedWithin(driverFinishMax, df, rankCol, nParts, ord: _*)
+
+  /** [[withGlobalRankCounted]] with the driver bound passed in, so
+    * specs can run either finish on the same input.
+    */
+  private[operators] def rankCountedWithin(driverMax: Long, df: DataFrame,
+                                           rankCol: String, nParts: Int,
+                                           ord: Column*): (DataFrame, Long) = {
     val (mat, token, n) = Checkpoints.eagerCounted(df)
-    if (n > max) {
+    if (n > driverMax) {
       val (ranked, total, _) = withGlobalRankTracked(mat, rankCol, nParts, ord: _*)
       token.free() // the partitioned run's own eager checkpoint stands
       (ranked, total)
@@ -144,8 +148,13 @@ object GlobalRank {
     * rank: no single-partition window. `ord` must be total.
     */
   def withGlobalNtile(df: DataFrame, ntileCol: String, n: Int, nParts: Int,
-                      ord: Column*): DataFrame = {
-    val (ranked, total) = withGlobalRankCounted(df, "__grk", nParts, ord: _*)
+                      ord: Column*): DataFrame =
+    ntileWithin(driverFinishMax, df, ntileCol, n, nParts, ord: _*)
+
+  /** [[withGlobalNtile]] with the rank's driver bound passed in. */
+  private[operators] def ntileWithin(driverMax: Long, df: DataFrame, ntileCol: String,
+                                     n: Int, nParts: Int, ord: Column*): DataFrame = {
+    val (ranked, total) = rankCountedWithin(driverMax, df, "__grk", nParts, ord: _*)
     val base = total / n
     val rem = total % n
     val cut = rem * (base + 1) // ranks <= cut fall in the wide buckets
@@ -167,10 +176,15 @@ object GlobalRank {
     * partition running sums.
     */
   def withGlobalPrefixSum(df: DataFrame, sumCol: String, value: Column,
-                          nParts: Int, ord: Column*): DataFrame = {
-    val max = driverFinishMax
-    if (max <= 0L)
-      return withGlobalPrefixSumTracked(df, sumCol, value, nParts, ord: _*)._1
+                          nParts: Int, ord: Column*): DataFrame =
+    prefixSumWithin(driverFinishMax, df, sumCol, value, nParts, ord: _*)
+
+  /** [[withGlobalPrefixSum]] with the driver bound passed in, so specs
+    * can run either finish on the same input.
+    */
+  private[operators] def prefixSumWithin(driverMax: Long, df: DataFrame, sumCol: String,
+                                         value: Column, nParts: Int,
+                                         ord: Column*): DataFrame = {
     // Same size-gated driver finish as [[withGlobalRankCounted]] (the
     // value expression is materialized as a column before the staging
     // checkpoint so the driver pass reads it positionally). Running-sum
@@ -178,7 +192,7 @@ object GlobalRank {
     // first non-null value, then the sum of non-nulls so far.
     val (mat, token, n) =
       Checkpoints.eagerCounted(df.withColumn("__grk_v", value.cast("long")))
-    if (n > max) {
+    if (n > driverMax) {
       val out =
         withGlobalPrefixSumTracked(mat.drop("__grk_v"), sumCol, value, nParts, ord: _*)._1
       token.free() // the partitioned run's own eager checkpoint stands
@@ -208,13 +222,25 @@ object GlobalRank {
   def withGlobalPrefixSumTracked(df: DataFrame, sumCol: String, value: Column,
                                  nParts: Int, ord: Column*)
       : (DataFrame, Checkpoints.Token) = {
-    val (run, _, token, _) = prefixed(df, nParts,
-      coalesce(sum(value.cast("long")), lit(0L)), ord)
+    val (run, _, token, _) = prefixed(df, nParts, sum(value.cast("long")), ord)
+    (runningSum(run, sumCol, value, ord), token)
+  }
+
+  /** Pass 2 of the prefix sums: each row's within-partition running sum
+    * plus the earlier partitions' offset. Null until the first non-null
+    * value in global order, then the sum of non-nulls so far — the
+    * window form's semantics, also across a partition whose value
+    * prefix is all null.
+    */
+  private def runningSum(run: DataFrame, sumCol: String, value: Column,
+                         ord: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    (run
-      .withColumn(sumCol, (col("__off") + sum(value.cast("long")).over(w)).cast("long"))
-      .drop("__pid", "__off"), token)
+    run
+      .withColumn("__psum", sum(value.cast("long")).over(w))
+      .withColumn(sumCol,
+        coalesce(col("__off") + col("__psum"), col("__off"), col("__psum")).cast("long"))
+      .drop("__pid", "__off", "__psum")
   }
 
   /** [[withGlobalPrefixSumTracked]] plus a SECOND driver-side statistic
@@ -226,13 +252,9 @@ object GlobalRank {
   def withGlobalPrefixSumAgg(df: DataFrame, sumCol: String, value: Column,
                              nParts: Int, extra: Column, ord: Column*)
       : (DataFrame, Long, Checkpoints.Token) = {
-    val (run, _, token, x) = prefixed(df, nParts,
-      coalesce(sum(value.cast("long")), lit(0L)), ord, extra = Some(extra))
-    val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    (run
-      .withColumn(sumCol, (col("__off") + sum(value.cast("long")).over(w)).cast("long"))
-      .drop("__pid", "__off"), x, token)
+    val (run, _, token, x) = prefixed(df, nParts, sum(value.cast("long")), ord,
+      extra = Some(extra))
+    (runningSum(run, sumCol, value, ord), x, token)
   }
 
   /** Add `maxCol` — the running max of `value` over STRICTLY PRECEDING
@@ -245,17 +267,15 @@ object GlobalRank {
     */
   def withGlobalPrefixMaxExcl(df: DataFrame, maxCol: String, value: Column,
                               nParts: Int, ord: Column*): DataFrame = {
-    val (run, _, _, _) = prefixed(df, nParts,
-      coalesce(max(value.cast("long")), lit(Long.MinValue)), ord,
-      zero = Long.MinValue, combine = math.max)
+    val (run, _, _, _) = prefixed(df, nParts, max(value.cast("long")), ord,
+      combine = math.max)
     val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
+    // greatest skips nulls: null only when neither this partition's
+    // preceding rows nor any earlier partition carried a value
     run
       .withColumn("__pmax", max(value.cast("long")).over(w))
-      .withColumn(maxCol, greatest(coalesce(col("__pmax"), lit(Long.MinValue)),
-        col("__off")))
-      .withColumn(maxCol,
-        when(col(maxCol) === Long.MinValue, lit(null)).otherwise(col(maxCol)))
+      .withColumn(maxCol, greatest(col("__pmax"), col("__off")))
       .drop("__pid", "__off", "__pmax")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Scan-parallelism guard for COMPUTE-AMPLIFICATION sites (optimization
   * r17; guide §2.5 input skew / §1.2 algorithm shape).
@@ -53,4 +53,16 @@ object Scans {
     df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
   } catch { case scala.util.control.NonFatal(_) => false })
+
+  /** Every row of `df` when it has at most `max` rows, else None: one
+    * `limit(max + 1)` job detects overflow without a count. The probe
+    * behind each driver-or-distributed switch; `max <= 0` answers None
+    * without running a job.
+    */
+  def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] =
+    if (max <= 0L) None
+    else {
+      val rows = df.limit(math.min(max + 1L, Int.MaxValue.toLong).toInt).collect()
+      if (rows.length > max) None else Some(rows)
+    }
 }

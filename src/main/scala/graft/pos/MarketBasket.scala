@@ -42,20 +42,14 @@ object MarketBasket {
   /** Item domains over this bound (bit-per-item in one Long) always run
     * FPGrowth.
     */
-  private[pos] def maskItemsMax: Int =
-    sys.props.get("spark.graft.basket.maskItemsMax")
-      .orElse(sys.env.get("SPARK_GRAFT_BASKET_MASK_ITEMS_MAX"))
-      .map(_.toInt).getOrElse(48)
+  private val maskItemsMax = 48
 
   /** Distinct-mask histograms over this many rows (collected to the
     * driver: 16 bytes/row — the codebook-collect class) fall back to
     * FPGrowth. At 100 TB a wide domain's histogram blows this probe and
     * the distributed path runs untouched.
     */
-  private[pos] def maskHistogramMax: Int =
-    sys.props.get("spark.graft.basket.maskHistogramMax")
-      .orElse(sys.env.get("SPARK_GRAFT_BASKET_MASK_HISTOGRAM_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
+  private val maskHistogramMax = 1 << 20
 
   /** Association rules with mlxtend's column contract:
     * antecedents, consequents, support (joint), confidence, lift —
@@ -76,7 +70,14 @@ object MarketBasket {
     * consequent (array<string>), support, confidence, lift — FPGrowth's
     * schema; unordered.
     */
-  def rulesFromBaskets(b: DataFrame, minSupport: Double, minLift: Double): DataFrame = {
+  def rulesFromBaskets(b: DataFrame, minSupport: Double, minLift: Double): DataFrame =
+    rulesWithin(b, minSupport, minLift, maskItemsMax, maskHistogramMax)
+
+  /** [[rulesFromBaskets]] with the driver path's two bounds passed in,
+    * so specs can run either path on the same baskets.
+    */
+  private[pos] def rulesWithin(b: DataFrame, minSupport: Double, minLift: Double,
+                               itemsMax: Int, histogramMax: Int): DataFrame = {
     val spark = b.sparkSession
     // ONE bounded probe decides the path AND feeds it: the distinct
     // sorted-itemset histogram (map-side-combinable count; a sorted
@@ -84,15 +85,13 @@ object MarketBasket {
     // is its driver-side union — no separate item pass. Over either
     // bound, fall back to FPGrowth (the probe's one pass is the price
     // of admission; the histogram shuffle is distinct-set-bounded).
-    val hist = b.select(sort_array(col("items")).as("key"))
-      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-      .limit(maskHistogramMax + 1)
-      .collect().map(r => (r.getSeq[String](0), r.getLong(1)))
-    val domain: Array[String] =
-      if (hist.length > maskHistogramMax) Array.empty
-      else hist.iterator.flatMap(_._1).toArray.distinct.sorted
-    if (hist.length <= maskHistogramMax && domain.nonEmpty &&
-        domain.length <= maskItemsMax) {
+    val hist = graft.operators.Scans.collectAtMost(
+      b.select(sort_array(col("items")).as("key"))
+        .groupBy(col("key")).agg(count(lit(1)).as("cnt")), histogramMax)
+      .map(_.map(r => (r.getSeq[String](0), r.getLong(1))))
+      .getOrElse(Array.empty)
+    val domain = hist.iterator.flatMap(_._1).toArray.distinct.sorted
+    if (domain.nonEmpty && domain.length <= itemsMax) {
       val bitOf = domain.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
       val masks = hist.map { case (key, cnt) =>
         (key.foldLeft(0L)((m, it) => m | bitOf(it)), cnt)

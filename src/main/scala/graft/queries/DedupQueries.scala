@@ -431,7 +431,7 @@ object DedupQueries {
   /** Near-dup CLUSTERS: connected components over the m2 LSH candidate
     * pairs (component = min reachable doc_id; singletons keep their own
     * id). The oracle computes the exact transitive closure with a
-    * recursive CTE — so the iterative min-propagation's fixpoint is
+    * recursive CTE — so the component labels are
     * hash-verified against true reachability, not just spec-pinned.
     */
   val neardupComponents = Query(
@@ -481,7 +481,7 @@ object DedupQueries {
   /** m8 — the END-TO-END near-dedup composition under one hash: MinHash
     * signatures → banded LSH candidates → connected components →
     * keep-canonical-per-cluster (the min-id doc, which IS the
-    * component label under min-label propagation) → the SURVIVING
+    * component label) → the SURVIVING
     * corpus. This is the composition README documents as the intended
     * corpus-dedup pipeline; m1/m2/m5 pin its stages, this pins the
     * composed result: one row per surviving document with its cluster

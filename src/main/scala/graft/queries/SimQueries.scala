@@ -2215,10 +2215,11 @@ object SimQueries {
     val pairs = g
       .filter(col("mutual") === 1L && col("cosine") >= 0.3 && col("qid") < col("bid"))
       .select(col("qid").as("id_a"), col("bid").as("id_b"))
-    // learned lists chain long paths at sf0.1 (>20 hops) — use the
-    // O(log n) large-small-star contraction, not min-propagation
+    // learned lists chain long paths at sf0.1 (>20 hops): the
+    // contraction's O(log n) rounds, with its 30-round budget
     graft.dedup.Components
-      .largeSmallStar(emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+      .connectedComponents(emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b",
+        maxIter = 30)
       .orderBy(col("vec_id"))
   }
 
@@ -2306,7 +2307,8 @@ object SimQueries {
       .filter(col("mutual") === 1L && col("cosine") >= 0.3 && col("qid") < col("bid"))
       .select(col("qid").as("id_a"), col("bid").as("id_b"))
     graft.dedup.Components
-      .largeSmallStar(emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+      .connectedComponents(emb.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b",
+        maxIter = 30)
       .orderBy(col("vec_id"))
   }
 
@@ -3001,7 +3003,7 @@ object SimQueries {
     * (measured recall@5 0.00 on the 100-query panel — the cliques
     * disconnect the graph) while select-neighbors keeps one in-class
     * edge and spends the rest cross-class (recall 0.896 at the same
-    * serve cost; DiverseProbe is the A/B). All derivation arithmetic
+    * serve cost; the A/B is recorded in PLANS.md). All derivation arithmetic
     * is IEEE double with one final cast to float, the expression tree
     * mirrored exactly in SQL, so both engines index the identical
     * corpus. The oracle replays candidate generation, the greedy
@@ -3021,8 +3023,8 @@ object SimQueries {
 
   /** Spark side of the derived fan corpus (vec_id, label, embedding —
     * 8·min(bases,250) rows). Kept in lockstep with
-    * [[derivedFanCorpusSql]]; [[graft.tools.DiverseProbe]] A/Bs both
-    * graph arms over the same derivation.
+    * [[derivedFanCorpusSql]]; PLANS.md records the A/B of both graph
+    * arms over the same derivation.
     */
   private[graft] def derivedFanCorpus(emb: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

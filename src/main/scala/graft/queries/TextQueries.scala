@@ -568,38 +568,16 @@ object TextQueries {
     * range of a span is [s, e + k - 1]. Ranges of distinct islands are
     * disjoint with at least one kept char between them (islands break on
     * gap > k). Shared by t15 (reports spans) and t17 (removes them).
-    */
-  /** Toggle-free form: recompute-both-sides (for the over-cap memo path,
-    * where nothing would ever unpersist a cached stream).
+    *
+    * The gram explosion is derived TWICE (once for the map-side count,
+    * once for the semi-join probe): recomputing a narrow derivation
+    * beats persisting a corpus-sized intermediate.
     */
   private def spansDf(
-      spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    spansDfWithHandle(spark, d, allowCache = false)._1
-
-  /** As [[spansDf]], but also returns the cached gram stream (when
-    * `spark.graft.spans.cacheGrams` is true) so the caller can
-    * unpersist it after the span table is materialized.
-    *
-    * The toggle is the escape hatch PLANS.md names for count-then-mark's
-    * one cost: the gram explosion is derived TWICE (once for the
-    * map-side count, once for the semi-join probe) because recomputing
-    * a narrow derivation normally beats persisting a corpus-sized
-    * intermediate. Where storage headroom exists, caching the stream
-    * once halves the map CPU at identical shuffle volume (the count's
-    * partials and the probe's doc_id-window shuffle are unchanged —
-    * only the second scan+md5 derivation disappears). A plain persist,
-    * deliberately NOT a repartition: a gram-keyed exchange would
-    * re-introduce the corpus-sized shuffle count-then-mark exists to
-    * avoid.
-    */
-  private def spansDfWithHandle(
-      spark: org.apache.spark.sql.SparkSession,
-      d: String,
-      allowCache: Boolean = true)
-      : (org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame]) = {
+      spark: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val k = spanK
-    def gramsDerivation = documents(spark, d)
+    def grams = documents(spark, d)
       .filter(length($"text") >= k)
       .select($"doc_id", explode(transform(
         sequence(lit(1L), length($"text").cast("long") - lit(k - 1)),
@@ -608,14 +586,6 @@ object TextQueries {
           conv(substring(md5($"text".substr(i.cast("int"), lit(k))), 1, 15), 16, 10)
             .cast("long").as("g")))).as("pg"))
       .select($"doc_id", $"pg.pos".as("pos"), $"pg.g".as("g"))
-    val cacheGrams = allowCache &&
-      spark.conf.getOption("spark.graft.spans.cacheGrams").exists(_.toBoolean)
-    val handle =
-      if (cacheGrams)
-        Some(gramsDerivation.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else None
-    def grams = handle.getOrElse(gramsDerivation)
     // Count-then-mark: the aggregate is map-side combined (hot grams
     // cost one partial per task), the semi-join probe streams — no
     // collect_list roster, so per-task memory is flat in gram
@@ -625,14 +595,13 @@ object TextQueries {
     val dup = grams.join(dupg, Seq("g"), "left_semi")
       .select($"doc_id", $"pos")
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
-    val spans = dup
+    dup
       .withColumn("prev", lag($"pos", 1).over(w))
       .withColumn("brk", when($"prev".isNull || $"pos" - $"prev" > k, 1).otherwise(0))
       .withColumn("island", sum($"brk").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy($"doc_id", $"island")
       .agg(min($"pos").as("s"), max($"pos").as("e"), count(lit(1)).as("ng"))
-    (spans, handle)
   }
 
   /** Battery-shared span index (the posify/pqMemo pattern): t15 reports
@@ -660,10 +629,8 @@ object TextQueries {
     // corpus regenerated in place within one JVM must not serve stale
     // spans — the same staleness Bucketing.suffix exists to prevent.
     spanMemo.getOrElseUpdate(s"$d|${graft.operators.Bucketing.suffix(spark, d)}", {
-      val (df, handle) = spansDfWithHandle(spark, d)
-      val rows = try df.take(spanMemoCap + 1).toSeq
-      finally handle.foreach(_.unpersist(false))
-      if (rows.length > spanMemoCap) None else Some((df.schema, rows))
+      val df = spansDf(spark, d)
+      graft.operators.Scans.collectAtMost(df, spanMemoCap).map(rows => (df.schema, rows.toSeq))
     }) match {
       case Some((schema, rows)) =>
         import scala.jdk.CollectionConverters._

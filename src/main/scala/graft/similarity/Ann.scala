@@ -541,13 +541,8 @@ object Ann {
     * bounded-probe discipline as `Components.driverComponentsMax` and
     * `SuffixArray.driverRankMax`, so a corpus-sized query set degrades
     * to distributed execution instead of OOMing the driver.
-    * Overridable (system property first, then env) so specs can force
-    * either path.
     */
-  private[similarity] def driverQueryMax: Long =
-    sys.props.get("spark.graft.ann.driverQueryMax")
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_DRIVER_QUERY_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val driverQueryMax = 65536L
 
   /** Corpora at most this many rows additionally serve the driver walk
     * from an IN-MEMORY vector map (a graph-ANN index shard's working
@@ -555,18 +550,19 @@ object Ann {
     * instead of two broadcast-join scan jobs. Bounds driver memory at
     * ~(dim × 8 B) × this many vectors.
     */
-  private[similarity] def driverCorpusMax: Long =
-    sys.props.get("spark.graft.ann.driverCorpusMax")
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_DRIVER_CORPUS_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val driverCorpusMax = 65536L
 
   /** Edge tables at most this many DIRECTED rows join the in-memory
     * shard (~16 B per edge, ×2 when symmetrized driver-side).
     */
-  private[similarity] def driverEdgeMax: Long =
-    sys.props.get("spark.graft.ann.driverEdgeMax")
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_DRIVER_EDGE_MAX"))
-      .map(_.toLong).getOrElse(1048576L)
+  private val driverEdgeMax = 1048576L
+
+  /** The beam walk's three driver bounds; specs pass smaller ones to
+    * run the per-hop scan tier or the distributed loop on small input.
+    */
+  private[similarity] final case class WalkBounds(query: Long = driverQueryMax,
+                                                  corpus: Long = driverCorpusMax,
+                                                  edges: Long = driverEdgeMax)
 
   /** The walk's exact score: double cosine (left-to-right fold — the
     * [[graft.functions.CosineSimilarity]] loop) rounded with Spark's
@@ -614,7 +610,25 @@ object Ann {
       k: Int,
       presymmetrized: Boolean = false,
       entryPairs: DataFrame = null,
-      excludeSelf: Boolean = true): DataFrame = {
+      excludeSelf: Boolean = true): DataFrame =
+    beamSearchKnnWithin(graph, corpus, queries, idCol, vecCol, entries, beamWidth,
+      hops, k, presymmetrized, entryPairs, excludeSelf, WalkBounds())
+
+  /** [[beamSearchKnn]] with the walk's driver bounds passed in. */
+  private[similarity] def beamSearchKnnWithin(
+      graph: DataFrame,
+      corpus: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      entries: DataFrame,
+      beamWidth: Int,
+      hops: Int,
+      k: Int,
+      presymmetrized: Boolean,
+      entryPairs: DataFrame,
+      excludeSelf: Boolean,
+      bounds: WalkBounds): DataFrame = {
     require((entries != null) ^ (entryPairs != null),
       "beamSearchKnn: pass exactly one of entries (global start set) / " +
         "entryPairs (per-query seeds)")
@@ -631,16 +645,12 @@ object Ann {
     }
     // Bounded probe of the query batch (one job): every driver-held
     // structure is |queries|-proportional, so the batch size is the
-    // budget to guard. limit(max + 1) detects overflow without a count.
-    val qMax = driverQueryMax
-    val qProbe: Option[Array[org.apache.spark.sql.Row]] =
-      if (!integralIds || qMax <= 0L) None
-      else {
-        val rows = queries
-          .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))
-          .limit(math.min(qMax + 1L, Int.MaxValue.toLong).toInt).collect()
-        if (rows.length > qMax) None else Some(rows)
-      }
+    // budget to guard.
+    val qProbe =
+      if (!integralIds) None
+      else graft.operators.Scans.collectAtMost(
+        queries.select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv")),
+        bounds.query)
     if (qProbe.isEmpty)
       return beamSearchKnnDistributed(graph, corpus, queries, idCol, vecCol,
         entries, beamWidth, hops, k, presymmetrized, entryPairs, excludeSelf)
@@ -666,37 +676,22 @@ object Ann {
     // order, same HALF_UP rounding; spec-pinned in BeamSearchSpec).
     // Oversized corpora/edge tables keep the r17 per-hop broadcast-join
     // scan jobs below, bit-identical either way.
-    val memCorpus: Option[Map[Long, Array[Double]]] = {
-      val cMax = driverCorpusMax
-      if (cMax <= 0L) None
-      else {
-        val rows = base.limit(math.min(cMax + 1L, Int.MaxValue.toLong).toInt).collect()
-        if (rows.length > cMax) None
-        else Some(rows.iterator.flatMap { r =>
+    val memCorpus: Option[Map[Long, Array[Double]]] =
+      graft.operators.Scans.collectAtMost(base, bounds.corpus).map { rows =>
+        rows.iterator.flatMap { r =>
           Option(vecToDouble(r.get(1))).map(v => r.getLong(0) -> v)
-        }.toMap)
+        }.toMap
       }
-    }
     val memAdj: Option[Map[Long, Array[Long]]] =
       if (memCorpus.isEmpty) None
-      else {
-        val eMax = driverEdgeMax
-        if (eMax <= 0L) None
-        else {
-          val rows = fwd
-            .limit(math.min(eMax + 1L, Int.MaxValue.toLong).toInt).collect()
-          if (rows.length > eMax) None
-          else {
-            val set = scala.collection.mutable.HashSet[(Long, Long)]()
-            rows.foreach { r =>
-              val (s, d) = (r.getLong(0), r.getLong(1))
-              set += ((s, d))
-              if (!presymmetrized) set += ((d, s))
-            }
-            Some(set.toArray.groupBy(_._1).map { case (s, es) =>
-              s -> es.map(_._2) })
-          }
+      else graft.operators.Scans.collectAtMost(fwd, bounds.edges).map { rows =>
+        val set = scala.collection.mutable.HashSet[(Long, Long)]()
+        rows.foreach { r =>
+          val (s, d) = (r.getLong(0), r.getLong(1))
+          set += ((s, d))
+          if (!presymmetrized) set += ((d, s))
         }
+        set.toArray.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
       }
     val (edges, edgeTok) =
       if (memAdj.isDefined || presymmetrized)

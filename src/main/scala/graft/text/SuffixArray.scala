@@ -122,13 +122,15 @@ object SuffixArray {
     * distinct pairs ON THE DRIVER (one bounded collect — the same class
     * as the alphabet table) instead of the two-pass range partition;
     * the value bounds driver memory at ~3 longs × this many rows.
-    * Overridable (system property first, then env) so specs can force
-    * either path and scale probes can tune it.
     */
-  private[text] def driverRankMax: Long =
-    sys.props.get("spark.graft.sa.driverRankMax")
-      .orElse(sys.env.get("SPARK_GRAFT_SA_DRIVER_RANK_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val driverRankMax = 65536L
+
+  /** The doubling loop's two driver bounds ([[driverRankMax]],
+    * [[bigramInitMax]]); specs pass smaller ones to run the
+    * distributed rank or the single-code init on small input.
+    */
+  private[text] final case class DriverBounds(rank: Long = driverRankMax,
+                                              bigramInit: Long = bigramInitMax)
 
   /** `(doc_id, pos, code)` — 1-based CODEPOINT positions (never UTF-16
     * units: surrogate pairs are one position, matching DuckDB / SQL
@@ -225,13 +227,9 @@ object SuffixArray {
     * THE DRIVER (the same bounded class as the alphabet table),
     * letting the doubling START at m = 2 and skip its most expensive
     * round — round 1 runs over EVERY position, before freezing has
-    * anything to freeze. Overridable (system property first, then env)
-    * so specs can force either init and scale probes can tune it.
+    * anything to freeze.
     */
-  private[text] def bigramInitMax: Long =
-    sys.props.get("spark.graft.sa.bigramInitMax")
-      .orElse(sys.env.get("SPARK_GRAFT_SA_BIGRAM_INIT_MAX"))
-      .map(_.toLong).getOrElse(65536L)
+  private val bigramInitMax = 65536L
 
   /** Competition ranks at m = 2, computed from driver-ranked DISTINCT
     * BIGRAMS (optimization r18; guide §1.2 "remove unnecessary
@@ -248,15 +246,12 @@ object SuffixArray {
     * retained-level builds — derived from the SAME bigram rows, no
     * extra job, and the shift-join checkpoint token the CALLER frees
     * once its own full-frame checkpoint lands); None when the distinct
-    * bigrams exceed [[bigramInitMax]] (fall back to the single-code
-    * init).
+    * bigrams exceed `bigramMax` (fall back to the single-code init).
     */
-  private def initialRanks2(addr: DataFrame, scaleUp: Boolean, bp: Int)
+  private def initialRanks2(addr: DataFrame, scaleUp: Boolean, bp: Int, bigramMax: Long)
       : Option[(DataFrame, Long, DataFrame, Checkpoints.Token)] = {
     val spark = addr.sparkSession
     import spark.implicits._
-    val thr = bigramInitMax
-    if (thr <= 0L) return None
     def wide(df: DataFrame): DataFrame =
       if (scaleUp) df.repartition(bp, col("gid")) else df
     val withNext = wide(addr.select(col("gid"), col("code")))
@@ -268,9 +263,11 @@ object SuffixArray {
     // Checkpoint: consumed by the bigram count AND the rank join-back —
     // an unsevered lineage would run the shift join twice.
     val (pairs, tokP) = Checkpoints.eager(withNext, diskOnly = scaleUp)
-    val counts = pairs.groupBy(col("code"), col("code2")).agg(count(lit(1)).as("c"))
-      .limit(math.min(thr + 1L, Int.MaxValue.toLong).toInt).collect()
-    if (counts.length > thr) { tokP.free(); return None }
+    val counts = graft.operators.Scans.collectAtMost(
+      pairs.groupBy(col("code"), col("code2")).agg(count(lit(1)).as("c")), bigramMax) match {
+      case Some(rows) => rows
+      case None => tokP.free(); return None
+    }
     val rows = counts.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
     var acc = 1L
@@ -299,7 +296,8 @@ object SuffixArray {
     */
   private def doubling(addr: DataFrame, total: Long, maxM: Long,
                        maxRounds: Int, retainLevels: Boolean,
-                       levelStore: Option[String] = None)
+                       levelStore: Option[String] = None,
+                       bounds: DriverBounds = DriverBounds())
       : (DataFrame, Seq[(Long, DataFrame)]) = {
     val spark = addr.sparkSession
     val bp = derivedBuildParts(parts(addr), total)
@@ -313,7 +311,8 @@ object SuffixArray {
     // maxM == 1 callers need the single-code ranks as their RESULT, so
     // they keep the m = 1 init.
     val big =
-      if (maxM >= 2L && maxRounds >= 1) initialRanks2(addr, scaleUp, bp) else None
+      if (maxM >= 2L && maxRounds >= 1) initialRanks2(addr, scaleUp, bp, bounds.bigramInit)
+      else None
     val (init, nActive0, lvl1Opt, tokInit) = big match {
       case Some((i, a, l, t)) => (i, a, Some(l), t)
       case None =>
@@ -393,7 +392,7 @@ object SuffixArray {
       val d = pairs.groupBy(col("r1"), col("r2")).agg(count(lit(1)).as("c"))
       // Re-rank the distinct live pairs, SIZE-ADAPTIVELY (optimization
       // r17, guide §1.2/§8 "decide with small rows"): a round whose
-      // DISTINCT-pair relation fits `driverRankMax` ranks it ON THE
+      // DISTINCT-pair relation fits `bounds.rank` ranks it ON THE
       // DRIVER — one |D|-row collect (the same bounded class as the
       // alphabet table [[initialRanks]] already collects), exact
       // integer arithmetic, broadcast back as a local relation —
@@ -410,14 +409,9 @@ object SuffixArray {
       // overflowing probe costs one extra map-side-combined aggregation
       // of the round's pairs. Both paths compute the identical
       // competition ranks (spec-pinned equality in SuffixArraySpec).
-      val dProbe: Option[Array[org.apache.spark.sql.Row]] =
-        if (nActive > driverRankMax * 64L) None
-        else {
-          val got = d
-            .limit(math.min(driverRankMax + 1L, Int.MaxValue.toLong).toInt)
-            .collect()
-          if (got.length > driverRankMax) None else Some(got)
-        }
+      val dProbe =
+        if (nActive > bounds.rank * 64L) None
+        else graft.operators.Scans.collectAtMost(d, bounds.rank)
       val (rankedPairs, act, tokG) =
         if (dProbe.isDefined) {
           val rows = dProbe.get
@@ -474,11 +468,6 @@ object SuffixArray {
       tokP.free(); tokG.free(); tokF.free()
       full = nextFull
       tokF = tokF2
-      // Freezing-decay trace (SPARK_GRAFT_SA_DEBUG=1): the per-round
-      // live population IS the next round's pair/rank/join-back volume
-      // — the probe's decay evidence.
-      if (sys.env.contains("SPARK_GRAFT_SA_DEBUG"))
-        println(s"""{"sa_round":$rounds,"step":$step,"live_next":$nActive,"total":$total}""")
       m *= 2
       rounds += 1
       snapLevel(m)
@@ -494,13 +483,22 @@ object SuffixArray {
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
                  maxRounds: Int = 40, retainLevels: Boolean = false,
-                 levelStore: Option[String] = None): Index = {
+                 levelStore: Option[String] = None): Index =
+    buildIndexWithin(docs, idCol, textCol, maxRounds, retainLevels, levelStore,
+      DriverBounds())
+
+  /** [[buildIndex]] with the doubling loop's driver bounds passed in. */
+  private[text] def buildIndexWithin(docs: DataFrame, idCol: String, textCol: String,
+                                     maxRounds: Int, retainLevels: Boolean,
+                                     levelStore: Option[String],
+                                     bounds: DriverBounds): Index = {
     // cheap position-count estimate (codepoints + one SEP per doc)
     // BEFORE materializing the addressing, so the addressing itself can
     // be checkpointed at the derived width — the ×100 OOM was the
     // 32-way DESERIALIZED unroll of this very frame, ahead of any join
     val est = docs.agg(positionCount(textCol)).head().getLong(0)
-    buildIndexOfSize(docs, idCol, textCol, est, maxRounds, retainLevels, levelStore)
+    buildIndexOfSize(docs, idCol, textCol, est, maxRounds, retainLevels, levelStore,
+      bounds)
   }
 
   /** Codepoints plus one SEP per document: the corpus string's length. */
@@ -510,12 +508,13 @@ object SuffixArray {
   /** [[buildIndex]] past its size job, for callers that measured `est`. */
   private def buildIndexOfSize(docs: DataFrame, idCol: String, textCol: String,
                                est: Long, maxRounds: Int, retainLevels: Boolean,
-                               levelStore: Option[String]): Index = {
+                               levelStore: Option[String],
+                               bounds: DriverBounds = DriverBounds()): Index = {
     val (addr0, _, total) =
       checkpointAddr(addressed(docs, idCol, textCol), est)
     val addr = persistAddr(addr0, levelStore)
     val (full, levels) =
-      doubling(addr, total, Long.MaxValue, maxRounds, retainLevels, levelStore)
+      doubling(addr, total, Long.MaxValue, maxRounds, retainLevels, levelStore, bounds)
     Index(addr, full, levels, total, idCol, Sep.toLong, levelStore)
   }
 

@@ -35,13 +35,14 @@ class DedupPropertySpec extends SparkSpec {
       val expected = (0 until n.toInt).map(v => v.toLong -> find(v).toLong).toMap
       val vs = (0L until n).toDF("id")
       val es = if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else edges.toDF("a", "b")
-      val got = Components.connectedComponents(vs, "id", es, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expected)
-      // the O(log n) contraction must agree with label propagation
-      val got2 = Components.largeSmallStar(vs, "id", es, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got2 === expected, "largeSmallStar diverged from union-find")
+      // at most 60 edges: the default bound takes the driver path, a
+      // zero bound the distributed contraction
+      for ((bound, path) <- Seq((65536L, "driver"), (0L, "contraction"))) {
+        val got = Components.connectedComponentsWithin(vs, "id", es, "a", "b",
+          maxIter = 20, driverMax = bound)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got === expected, s"$path path diverged from union-find")
+      }
     }
   }
 
@@ -109,10 +110,13 @@ class DedupPropertySpec extends SparkSpec {
   test("largeSmallStar: deep chain resolves (the case that costs label propagation)") {
     val n = 200
     val chain = (0L until n - 1).map(i => (i, i + 1))
-    val got = Components.largeSmallStar(
-      (0L until n).toDF("id"), "id", chain.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(1)).distinct
-    assert(got === Array(0L), "one component rooted at 0")
+    for (bound <- Seq(65536L, 0L)) {
+      val got = Components.connectedComponentsWithin(
+        (0L until n).toDF("id"), "id", chain.toDF("a", "b"), "a", "b",
+        maxIter = 30, driverMax = bound)
+        .collect().map(r => r.getLong(1)).distinct
+      assert(got === Array(0L), s"one component rooted at 0 (driver bound $bound)")
+    }
   }
 
   test("chunk property: stripping the overlap reassembles the token stream") {

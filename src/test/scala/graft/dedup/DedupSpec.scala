@@ -224,54 +224,62 @@ class DedupSpec extends SparkSpec {
   }
 
   test("Components: non-convergence fails loudly instead of returning wrong labels") {
-    // A 6-deep chain cannot converge in 2 label-propagation rounds; the
-    // old behavior silently returned split component ids. The loud
-    // error lives on the DISTRIBUTED path — force it (the driver
-    // union-find path always converges, by construction).
+    // A 6-deep chain cannot reach the contraction's fixpoint in one
+    // round; unconverged labels would be split component ids. The loud
+    // error lives on the DISTRIBUTED path — force it with a zero driver
+    // bound (the driver union-find path always converges, by
+    // construction).
     val vertices = (0L to 6L).toDF("id")
     val chain = (0L until 6L).map(i => (i, i + 1)).toDF("a", "b")
-    val prev = sys.props.put("spark.graft.cc.driverMax", "0")
-    try {
-      val ex = intercept[IllegalStateException] {
-        Components.connectedComponents(vertices, "id", chain, "a", "b", maxIter = 2)
-      }
-      assert(ex.getMessage.contains("largeSmallStar")) // points at the deep-graph path
-      val ex2 = intercept[IllegalStateException] {
-        Components.largeSmallStar(vertices, "id", chain, "a", "b", maxIter = 1)
-      }
-      assert(ex2.getMessage.contains("fixpoint"))
-      // And the same graph converges fine with the default budget.
-      val ok = Components.connectedComponents(vertices, "id", chain, "a", "b")
-        .collect().map(r => r.getLong(1)).distinct
-      assert(ok.toSeq === Seq(0L))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("spark.graft.cc.driverMax", v)
-        case None => sys.props.remove("spark.graft.cc.driverMax")
-      }
+    val ex = intercept[IllegalStateException] {
+      Components.connectedComponentsWithin(vertices, "id", chain, "a", "b",
+        maxIter = 1, driverMax = 0L)
     }
+    assert(ex.getMessage.contains("fixpoint"))
+    // And the same graph converges fine with the default budget.
+    val ok = Components.connectedComponents(vertices, "id", chain, "a", "b")
+      .collect().map(r => r.getLong(1)).distinct
+    assert(ok.toSeq === Seq(0L))
   }
 
   test("Components: driver union-find path equals the distributed paths exactly") {
     val vertices = (0L to 9L).toDF("id")
     val pairs = Seq((1L, 0L), (1L, 2L), (3L, 2L), (5L, 6L), (8L, 7L), (9L, 7L))
       .toDF("a", "b")
-    def run() = (
-      Components.connectedComponents(vertices, "id", pairs, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      Components.largeSmallStar(vertices, "id", pairs, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val (ccDriver, lssDriver) = run()
-    val prev = sys.props.put("spark.graft.cc.driverMax", "0")
-    val (ccDist, lssDist) = try run() finally {
-      prev match {
-        case Some(v) => sys.props.put("spark.graft.cc.driverMax", v)
-        case None => sys.props.remove("spark.graft.cc.driverMax")
-      }
+    val driver = Components.connectedComponents(vertices, "id", pairs, "a", "b")
+    val dist = Components.connectedComponentsWithin(vertices, "id", pairs, "a", "b",
+      maxIter = 20, driverMax = 0L)
+    // same schema on both paths: the id column keeps its type, component is long
+    assert(driver.schema === dist.schema)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(driver) === labels(dist), "driver path diverged from the contraction")
+  }
+
+  test("Components: the driver bound switches paths exactly at the edge count") {
+    // Int ids: the output keeps the input id type on both paths.
+    val vertices = (0 to 11).toDF("id")
+    val pairs = Seq((1, 0), (1, 2), (3, 2), (4, 3), (6, 5), (9, 8), (10, 9), (11, 8))
+      .toDF("a", "b")
+    val edges = pairs.count()
+    def run(bound: Long) = {
+      val df = Components.connectedComponentsWithin(vertices, "id", pairs, "a", "b",
+        maxIter = 20, driverMax = bound)
+      // only the contraction reads checkpointed rounds
+      val contracted = df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r
+      }.nonEmpty
+      (df.schema, df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap, contracted)
     }
-    assert(ccDriver === ccDist, "driver path diverged from label propagation")
-    assert(lssDriver === lssDist, "driver path diverged from large-small-star")
-    assert(ccDriver === lssDriver)
+    val (atSchema, atBound, atContracted) = run(edges)
+    val (overSchema, overBound, overContracted) = run(edges - 1)
+    assert(!atContracted && overContracted,
+      "bound = edge count must take the driver path, one less the contraction")
+    assert(atBound === overBound)
+    assert(atSchema === overSchema)
+    assert(atSchema("id").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(atBound === Map(0 -> 0L, 1 -> 0L, 2 -> 0L, 3 -> 0L, 4 -> 0L, 5 -> 5L, 6 -> 5L,
+      7 -> 7L, 8 -> 8L, 9 -> 8L, 10 -> 8L, 11 -> 8L))
   }
 
   test("TextOps.chunk: windows, overlap carry, and tail sizes") {

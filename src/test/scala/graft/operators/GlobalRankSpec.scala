@@ -54,61 +54,59 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
-  /** Run `body` with the r18 driver finish disabled so the two-pass
-    * shape stays spec-covered now that small inputs take the driver
-    * path by default.
-    */
-  private def forcedTwoPass[A](body: => A): A = {
-    val saved = sys.props.get("spark.graft.rank.driverMax")
-    sys.props("spark.graft.rank.driverMax") = "0"
-    try body
-    finally saved match {
-      case Some(v) => sys.props("spark.graft.rank.driverMax") = v
-      case None => sys.props.remove("spark.graft.rank.driverMax")
-    }
-  }
-
   test("driver finish ≡ two-pass ≡ window on rank, ntile and prefix sum") {
     val df = (1L to 400L)
       .map(i => (i, if (i % 5 == 0) s"k$i" else "hot", i % 11 + 1))
       .toDF("id", "key", "v")
-    def rank() = GlobalRank.withGlobalRank(df, "rk", 13, col("key"), col("id"))
-      .orderBy(col("id")).select(col("id"), col("rk"))
-      .as[(Long, Long)].collect().toSeq
-    def nt() = GlobalRank.withGlobalNtile(df, "b", 7, 13, col("key"), col("id"))
-      .orderBy(col("id")).select(col("id"), col("b"))
-      .as[(Long, Long)].collect().toSeq
-    def ps() = GlobalRank.withGlobalPrefixSum(df, "cum", col("v"), 13,
+    // a driver bound at the row count takes the driver finish, one less
+    // the two-pass
+    def rank(bound: Long) =
+      GlobalRank.rankCountedWithin(bound, df, "rk", 13, col("key"), col("id"))._1
+        .orderBy(col("id")).select(col("id"), col("rk"))
+        .as[(Long, Long)].collect().toSeq
+    def nt(bound: Long) =
+      GlobalRank.ntileWithin(bound, df, "b", 7, 13, col("key"), col("id"))
+        .orderBy(col("id")).select(col("id"), col("b"))
+        .as[(Long, Long)].collect().toSeq
+    def ps(bound: Long) = GlobalRank.prefixSumWithin(bound, df, "cum", col("v"), 13,
       col("key").desc, col("id"))
       .orderBy(col("id")).select(col("id"), col("cum"))
       .as[(Long, Long)].collect().toSeq
-    val (dR, dN, dP) = (rank(), nt(), ps())
-    val (tR, tN, tP) = forcedTwoPass((rank(), nt(), ps()))
+    val (dR, dN, dP) = (rank(400L), nt(400L), ps(400L))
+    val (tR, tN, tP) = (rank(399L), nt(399L), ps(399L))
     assert(dR == tR && dN == tN && dP == tP)
+    assert(dR == GlobalRank.withGlobalRank(df, "rk", 13, col("key"), col("id"))
+      .orderBy(col("id")).select(col("id"), col("rk")).as[(Long, Long)].collect().toSeq)
   }
 
   test("driver prefix sum keeps the window form's null semantics (null until first value)") {
-    val df = Seq((1L, null.asInstanceOf[java.lang.Long]),
-      (2L, null.asInstanceOf[java.lang.Long]),
-      (3L, java.lang.Long.valueOf(5L)), (4L, null.asInstanceOf[java.lang.Long]),
-      (5L, java.lang.Long.valueOf(2L))).toDF("id", "v")
-    def run() = GlobalRank.withGlobalPrefixSum(df, "cum", col("v"), 4, col("id"))
-      .orderBy(col("id")).select(col("id"), col("cum"))
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1))).toSeq
-    val want = df.withColumn("cum", sum(col("v")).over(
-      Window.orderBy(col("id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .orderBy(col("id")).select(col("id"), col("cum"))
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1))).toSeq
-    assert(run() == want)
-    // NOT asserted for the forced two-pass: the two-pass shape has a
-    // pre-existing null quirk (a partition whose value prefix is all
-    // null yields null even when EARLIER partitions carried values —
-    // `__off + null` is null), so it can diverge from the window form
-    // on nullable values. No caller passes a nullable value column
-    // (counts, +1 lengths, 0/1 flags), so the divergence is
-    // unobservable by gates; the driver finish implements the window
-    // form, which both shapes equal on non-null values (test above).
+    def nullable(v: Option[Long]) = v.map(java.lang.Long.valueOf).orNull
+    def check(df: org.apache.spark.sql.DataFrame, nParts: Int): Unit = {
+      def rows(out: org.apache.spark.sql.DataFrame) =
+        out.orderBy(col("id")).select(col("id"), col("cum"))
+          .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1))).toSeq
+      val want = rows(df.withColumn("cum", sum(col("v")).over(
+        Window.orderBy(col("id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+      val n = df.count()
+      assert(rows(GlobalRank.prefixSumWithin(n, df, "cum", col("v"), nParts, col("id"))) == want,
+        "driver finish")
+      assert(rows(GlobalRank.prefixSumWithin(n - 1, df, "cum", col("v"), nParts, col("id"))) ==
+        want, "two-pass")
+    }
+    check(Seq[(Long, Option[Long])]((1L, None), (2L, None), (3L, Some(5L)), (4L, None),
+      (5L, Some(2L))).map { case (i, v) => (i, nullable(v)) }.toDF("id", "v"), nParts = 4)
+    // Null-headed partitions after valued ones: ids 11–30 carry no
+    // value, so at ~10 rows per range partition some partition starts
+    // inside that run after earlier partitions summed values; its rows
+    // must carry the running sum so far, not null. The last input also
+    // leads with nulls, which stay null on both finishes.
+    check((1L to 40L).map { i =>
+      (i, nullable(if (i > 10 && i <= 30) None else Some(i)))
+    }.toDF("id", "v"), nParts = 4)
+    check((1L to 40L).map { i =>
+      (i, nullable(if (i <= 15 || (i > 20 && i <= 35)) None else Some(i)))
+    }.toDF("id", "v"), nParts = 4)
   }
 
   test("two-pass prefix sum equals the single-window running sum under skewed duplicates") {

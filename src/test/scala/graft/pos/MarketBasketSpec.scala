@@ -42,33 +42,16 @@ class MarketBasketSpec extends SparkSpec {
     val driver = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
     assert(driver.nonEmpty, "corpus must generate rules for the pin to bite")
     assert(driver.exists(_._1.contains(",")), "need a multi-item antecedent in play")
-    val saved = sys.props.get("spark.graft.basket.maskItemsMax")
-    try {
-      sys.props("spark.graft.basket.maskItemsMax") = "1" // force FPGrowth
-      val fp = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
-      assert(driver == fp)
-    } finally {
-      saved match {
-        case Some(v) => sys.props("spark.graft.basket.maskItemsMax") = v
-        case None => sys.props.remove("spark.graft.basket.maskItemsMax")
-      }
-    }
+    val fp = canon(MarketBasket.rulesWithin(b, minSupport = 0.02, minLift = 0.5,
+      itemsMax = 1, histogramMax = 1 << 20)) // force FPGrowth
+    assert(driver == fp)
   }
 
   test("histogram bound forces the FPGrowth fallback (results unchanged)") {
     val b = MarketBasket.baskets(basketDf)
-    val saved = sys.props.get("spark.graft.basket.maskHistogramMax")
-    try {
-      sys.props("spark.graft.basket.maskHistogramMax") = "3" // blow the probe
-      val fb = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
-      sys.props.remove("spark.graft.basket.maskHistogramMax")
-      val dr = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
-      assert(fb == dr)
-    } finally {
-      saved match {
-        case Some(v) => sys.props("spark.graft.basket.maskHistogramMax") = v
-        case None => sys.props.remove("spark.graft.basket.maskHistogramMax")
-      }
-    }
+    val fb = canon(MarketBasket.rulesWithin(b, minSupport = 0.02, minLift = 0.5,
+      itemsMax = 48, histogramMax = 3)) // blow the probe
+    val dr = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
+    assert(fb == dr)
   }
 }

@@ -101,8 +101,8 @@ class BeamSearchSpec extends SparkSpec {
   }
 
   test("driver-frontier walk equals the distributed fallback (both seeding modes)") {
-    // the r18 size guard: batches over spark.graft.ann.driverQueryMax
-    // route to the distributed per-hop loop — force each path on the
+    // the r18 size guard: batches over the driver query bound route to
+    // the distributed per-hop loop — force each path on the
     // SAME inputs and require identical output, entries and entryPairs
     // modes, excludeSelf both ways, dangling edges included
     val n = 24
@@ -113,22 +113,19 @@ class BeamSearchSpec extends SparkSpec {
     val g = chainEdges(n).unionByName(Seq((23L, 99L)).toDF("qid", "bid"))
     val pairs = Seq((0L, 23L), (1L, 11L), (2L, 23L), (2L, 11L),
       (7777L, 3L)).toDF("qid", "bid") // 7777 has no query vector: dropped
-    def run(excl: Boolean, perQuery: Boolean) =
-      Ann.beamSearchKnn(g, corpus, queries, "vec_id", "embedding",
+    def run(excl: Boolean, perQuery: Boolean, bounds: Ann.WalkBounds) =
+      Ann.beamSearchKnnWithin(g, corpus, queries, "vec_id", "embedding",
         entries = if (perQuery) null else Seq(23L, 11L).toDF("bid"),
-        beamWidth = 4, hops = 6, k = 3,
-        entryPairs = if (perQuery) pairs else null, excludeSelf = excl)
+        beamWidth = 4, hops = 6, k = 3, presymmetrized = false,
+        entryPairs = if (perQuery) pairs else null, excludeSelf = excl, bounds)
         .orderBy($"qid", $"rank").collect().toSeq
-    def forcing(prop: String)(body: => Seq[org.apache.spark.sql.Row]) =
-      try { System.setProperty(prop, "0"); body }
-      finally System.clearProperty(prop)
     for (excl <- Seq(true, false); perQuery <- Seq(true, false)) {
-      val memShard = run(excl, perQuery)
+      val memShard = run(excl, perQuery, Ann.WalkBounds())
       // per-hop broadcast-scan tier (corpus too big for the in-memory
       // shard, query batch still driver-held)
-      val scanHops = forcing("spark.graft.ann.driverCorpusMax")(run(excl, perQuery))
+      val scanHops = run(excl, perQuery, Ann.WalkBounds(corpus = 0L))
       // fully distributed tier (query batch too big for the driver)
-      val dist = forcing("spark.graft.ann.driverQueryMax")(run(excl, perQuery))
+      val dist = run(excl, perQuery, Ann.WalkBounds(query = 0L))
       assert(memShard == scanHops, s"mem vs scan: excl=$excl perQuery=$perQuery")
       assert(memShard == dist, s"mem vs distributed: excl=$excl perQuery=$perQuery")
     }

@@ -41,9 +41,15 @@ class SuffixArraySpec extends SparkSpec {
   }
 
   private def spark2(docs: Seq[(Long, String)]) =
-    SuffixArray.build(docs.toDF("doc_id", "text"), "doc_id", "text")
-      .orderBy($"doc_id", $"pos")
-      .as[(Long, Long, Long, Long)].collect().toSeq
+    sortedSa(SuffixArray.build(docs.toDF("doc_id", "text"), "doc_id", "text"))
+
+  /** [[spark2]] with the doubling loop's driver bounds passed in. */
+  private def spark2Within(docs: Seq[(Long, String)], bounds: SuffixArray.DriverBounds) =
+    sortedSa(SuffixArray.saOf(SuffixArray.buildIndexWithin(docs.toDF("doc_id", "text"),
+      "doc_id", "text", maxRounds = 40, retainLevels = false, levelStore = None, bounds)))
+
+  private def sortedSa(sa: org.apache.spark.sql.DataFrame) =
+    sa.orderBy($"doc_id", $"pos").as[(Long, Long, Long, Long)].collect().toSeq
 
   test("suffix array equals the literal suffix sort (plain text across fences)") {
     val docs = Seq((0L, "banana"), (1L, "bandana"), (2L, "an"))
@@ -462,17 +468,9 @@ class SuffixArraySpec extends SparkSpec {
     val docs = Seq((0L, "banana bandana ana"), (1L, "banana bandana ana"),
       (2L, "cabana banana"), (3L, "tail piece"))
     val viaDriver = spark2(docs)
-    val prev = sys.props.put("spark.graft.sa.driverRankMax", "0")
-    try {
-      val viaTwoPass = spark2(docs)
-      assert(viaDriver == viaTwoPass,
-        "driver-rank path diverged from the distributed two-pass")
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("spark.graft.sa.driverRankMax", v)
-        case None => sys.props.remove("spark.graft.sa.driverRankMax")
-      }
-    }
+    val viaTwoPass = spark2Within(docs, SuffixArray.DriverBounds(rank = 0L))
+    assert(viaDriver == viaTwoPass,
+      "driver-rank path diverged from the distributed two-pass")
     assert(viaDriver == bruteSa(docs).sortBy(r => (r._1, r._2)))
   }
 
@@ -482,25 +480,19 @@ class SuffixArraySpec extends SparkSpec {
     // ranks, retained levels (via the LCP chain) and spans must match.
     val docs = Seq((0L, "banana bandana ana"), (1L, "banana bandana ana"),
       (2L, "cabana banana"), (3L, "tail piece"))
-    def lcpChain(): Seq[(Long, Long, Long, Long)] = {
+    def lcpChain(bounds: SuffixArray.DriverBounds): Seq[(Long, Long, Long, Long)] = {
       val df = docs.toDF("doc_id", "text")
-      val ix = SuffixArray.buildIndex(df, "doc_id", "text", retainLevels = true)
+      val ix = SuffixArray.buildIndexWithin(df, "doc_id", "text", maxRounds = 40,
+        retainLevels = true, levelStore = None, bounds)
       SuffixArray.lcpAdjacent(ix)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq.sortBy(_._1)
     }
-    val viaBigram = (spark2(docs), lcpChain())
-    val prev = sys.props.put("spark.graft.sa.bigramInitMax", "0")
-    try {
-      val viaSingle = (spark2(docs), lcpChain())
-      assert(viaBigram == viaSingle,
-        "bigram-init path diverged from the single-code init")
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("spark.graft.sa.bigramInitMax", v)
-        case None => sys.props.remove("spark.graft.sa.bigramInitMax")
-      }
-    }
+    val viaBigram = (spark2(docs), lcpChain(SuffixArray.DriverBounds()))
+    val single = SuffixArray.DriverBounds(bigramInit = 0L)
+    val viaSingle = (spark2Within(docs, single), lcpChain(single))
+    assert(viaBigram == viaSingle,
+      "bigram-init path diverged from the single-code init")
     assert(viaBigram._1 == bruteSa(docs).sortBy(r => (r._1, r._2)))
   }
 

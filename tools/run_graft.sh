@@ -14,6 +14,5 @@ done
 exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Dspark.graft.spans.cacheGrams="${SPARK_GRAFT_CACHE_GRAMS:-false}" \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
