@@ -310,15 +310,14 @@ object Analytics {
     * partition-pruned scan of (report month, comparison month) then V1
     * (reference `monthly_report.py:21-91`).
     */
-  def twoMonthDedupRead(lake: DataFrame, reportMonth: String, comparisonMonth: String): DataFrame = {
-    def ym(m: String): (String, String) = {
-      val Array(y, mo) = m.split("-"); (y, mo)
-    }
-    val (y1, m1) = ym(reportMonth)
-    val (y2, m2) = ym(comparisonMonth)
-    val pruned = lake.filter(
-      (col("year") === y1 && col("month") === m1) ||
-        (col("year") === y2 && col("month") === m2))
-    dedupLatest(pruned)
+  def twoMonthDedupRead(lake: DataFrame, reportMonth: String, comparisonMonth: String): DataFrame =
+    dedupLatest(lake.filter(inMonth(reportMonth) || inMonth(comparisonMonth)))
+
+  /** True on the lake rows of the `yyyy-MM` partition `m` — a predicate
+    * on the partition keys, so a lake scan prunes to that month.
+    */
+  private[pos] def inMonth(m: String): Column = {
+    val Array(y, mo) = m.split("-")
+    col("year") === y && col("month") === mo
   }
 }

@@ -9,7 +9,10 @@ import graft.multimodal.ImageCodec
   * pure-JVM rasterization of the report relations into grayscale PNG
   * bar/line charts. Rendering is driver-side over already-aggregated
   * report rows (tens of values — same shape as the reference, where
-  * matplotlib draws the final aggregates, never raw data).
+  * matplotlib draws the final aggregates, never raw data). The monthly
+  * report's driver path aggregates both series from its own lake read
+  * ([[Reports.monthlyWithCharts]]); [[writeMonthlyCharts]] reads the
+  * lake itself and is its over-budget path.
   */
 object Charts {
 
@@ -81,6 +84,9 @@ object Charts {
 
   /** Render the monthly report's chart set from the lake (the K10
     * relations: top products bar, daily revenue line) into `outDir`.
+    * Distributed: two jobs over the report month's partition, deduped
+    * with the V1 window over that month alone. A day whose prices are
+    * all null draws as 0.
     */
   def writeMonthlyCharts(
       spark: org.apache.spark.sql.SparkSession,
@@ -88,17 +94,30 @@ object Charts {
       reportMonth: String,
       outDir: String): Seq[String] = {
     import org.apache.spark.sql.functions._
-    val Array(y, m) = reportMonth.split("-")
-    val rows = Lake.read(spark, lakeRoot)
-      .filter(col("year") === y && col("month") === m)
-    val deduped = Analytics.dedupLatest(rows)
+    val deduped = Analytics.dedupLatest(
+      Lake.read(spark, lakeRoot).filter(Analytics.inMonth(reportMonth)))
     val topProducts = deduped.groupBy(col("item_name"))
       .agg(count(lit(1)).as("n")).orderBy(col("n").desc, col("item_name"))
-      .limit(10).collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toSeq
+      .limit(TopItems).collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toSeq
     val daily = deduped
       .groupBy(to_date(col("shifted_time")).as("d"))
       .agg(sum(col("price")).as("rev")).orderBy(col("d"))
-      .collect().map(_.getDouble(1)).toSeq
+      .collect().map(r => if (r.isNullAt(1)) 0.0 else r.getDouble(1)).toSeq
+    writeMonthly(reportMonth, outDir, topProducts, daily)
+  }
+
+  /** Bars on the top-products chart. */
+  private[pos] val TopItems = 10
+
+  /** Write the monthly chart pair for `reportMonth` from its two series:
+    * the top items with their line counts, and each day's revenue in
+    * date order.
+    */
+  private[pos] def writeMonthly(
+      reportMonth: String,
+      outDir: String,
+      topProducts: Seq[(String, Double)],
+      daily: Seq[Double]): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     def write(name: String, bytes: Array[Byte]): String = {
       val p = java.nio.file.Paths.get(outDir, name)

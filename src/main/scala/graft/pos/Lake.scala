@@ -30,8 +30,14 @@ object Lake {
     df.withColumn("year", date_format(col("shifted_time"), "yyyy"))
       .withColumn("month", date_format(col("shifted_time"), "MM"))
 
+  /** The curated columns, each cast to its [[Schemas.curated]] type (a
+    * no-op on a correctly typed frame; a null-typed or int-typed column
+    * would otherwise land in parquet as BOOLEAN or INT32 and break every
+    * later read of the lake), then the partition keys.
+    */
   private def prepared(df: DataFrame): DataFrame = {
-    val cols = Schemas.curatedColumns.map(col) ++ Schemas.partitionKeys.map(col)
+    val cols = Schemas.curated.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
+      Schemas.partitionKeys.map(col)
     withPartitionKeys(df).select(cols: _*)
   }
 

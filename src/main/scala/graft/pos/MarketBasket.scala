@@ -51,19 +51,30 @@ object MarketBasket {
     */
   private val maskHistogramMax = 1 << 20
 
+  /** [[rules]]' thresholds unless the caller names others. */
+  private[pos] val DefaultMinSupport = 0.01
+  private[pos] val DefaultMinLift = 0.5
+
   /** Association rules with mlxtend's column contract:
     * antecedents, consequents, support (joint), confidence, lift —
-    * sorted by lift desc.
+    * sorted by lift desc. Equal lifts (A→B and B→A tie) order by the
+    * sorted antecedents, then the sorted consequents, so a top-N is the
+    * same on every run.
     */
-  def rules(df: DataFrame, minSupport: Double = 0.01, minLift: Double = 0.5): DataFrame =
-    rulesFromBaskets(baskets(df), minSupport, minLift)
+  def rules(df: DataFrame, minSupport: Double = DefaultMinSupport,
+            minLift: Double = DefaultMinLift): DataFrame =
+    byLift(rulesFromBaskets(baskets(df), minSupport, minLift))
+
+  /** A [[rulesFromBaskets]] frame in [[rules]]' columns and order. */
+  private[pos] def byLift(rules: DataFrame): DataFrame =
+    rules
       .select(
         col("antecedent").as("antecedents"),
         col("consequent").as("consequents"),
         col("support"),
         col("confidence"),
         col("lift"))
-      .orderBy(col("lift").desc)
+      .orderBy(col("lift").desc, array_sort(col("antecedents")), array_sort(col("consequents")))
 
   /** Association rules (single consequent, lift ≥ `minLift`) from a
     * basket relation with an `items` array column. Columns: antecedent,
@@ -90,14 +101,7 @@ object MarketBasket {
         .groupBy(col("key")).agg(count(lit(1)).as("cnt")), histogramMax)
       .map(_.map(r => (r.getSeq[String](0), r.getLong(1))))
       .getOrElse(Array.empty)
-    val domain = hist.iterator.flatMap(_._1).toArray.distinct.sorted
-    if (domain.nonEmpty && domain.length <= itemsMax) {
-      val bitOf = domain.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
-      val masks = hist.map { case (key, cnt) =>
-        (key.foldLeft(0L)((m, it) => m | bitOf(it)), cnt)
-      }
-      driverRules(spark, domain, masks, minSupport, minLift)
-    } else {
+    histogramRules(spark, hist, minSupport, minLift, itemsMax).getOrElse {
       val fp = new FPGrowth()
         .setItemsCol("items")
         .setMinSupport(minSupport)
@@ -114,6 +118,25 @@ object MarketBasket {
           .select(col("antecedent"), col("consequent"),
             col("support"), col("confidence"), col("lift"))
       } finally bc.unpersist()
+    }
+  }
+
+  /** Rules from a basket histogram (each distinct item set, once, with
+    * the number of baskets holding exactly it) by [[driverRules]], or
+    * None when the histogram is empty or its item domain is over
+    * `itemsMax`.
+    */
+  private[pos] def histogramRules(spark: SparkSession, hist: Array[(Seq[String], Long)],
+                                  minSupport: Double, minLift: Double,
+                                  itemsMax: Int = maskItemsMax): Option[DataFrame] = {
+    val domain = hist.iterator.flatMap(_._1).toArray.distinct.sorted
+    if (domain.isEmpty || domain.length > itemsMax) None
+    else {
+      val bitOf = domain.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
+      val masks = hist.map { case (key, cnt) =>
+        (key.foldLeft(0L)((m, it) => m | bitOf(it)), cnt)
+      }
+      Some(driverRules(spark, domain, masks, minSupport, minLift))
     }
   }
 

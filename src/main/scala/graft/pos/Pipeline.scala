@@ -110,13 +110,14 @@ object Pipeline {
   }
 
   /** Entry 2 — monthly report (reference `main.py:133-134`): markdown
-    * plus the K10 chart PNGs next to it.
+    * plus the K10 chart PNGs next to it, both from one lake read when the
+    * two months fit the driver budget ([[Reports.monthlyWithCharts]]).
     */
   def monthlyReport(spark: SparkSession, cfg: Config, reportMonth: String,
       comparisonMonth: String): String = {
-    val md = Reports.monthly(spark, cfg.lakeRoot, reportMonth, comparisonMonth)
+    val md = Reports.monthlyWithCharts(spark, cfg.lakeRoot, reportMonth, comparisonMonth,
+      cfg.reportDir.toString)
     writeReport(cfg, s"monthly_$reportMonth.md", md)
-    Charts.writeMonthlyCharts(spark, cfg.lakeRoot, reportMonth, cfg.reportDir.toString)
     md
   }
 

@@ -136,4 +136,11 @@ object Transform {
       .na.fill("Unknown", Seq("item_name"))
       .withColumn("day_of_week", date_format(col("datetime"), "EEEE"))
       .withColumn("hour_of_day", hour(col("datetime")))
+
+  /** The rows [[cleanForReporting]] keeps, as a predicate: a `datetime`
+    * that casts to a timestamp and a `receipt_number`. For readers that
+    * must also see the rows it drops.
+    */
+  private[pos] def reportingKept: Column =
+    expr("try_cast(datetime AS TIMESTAMP)").isNotNull && col("receipt_number").isNotNull
 }

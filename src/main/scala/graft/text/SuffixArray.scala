@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.{Checkpoints, GlobalRank}
+import graft.operators.{Checkpoints, GlobalRank, Scans}
 
 /** DISTRIBUTED SUFFIX ARRAY by prefix doubling — the data structure
   * behind exact-substring deduplication (Lee et al. 2022, "Deduplicating
@@ -806,7 +806,7 @@ object SuffixArray {
     *
     * One size job measures the corpus (positions and UTF-8 bytes). When
     * its [[driverFootprint]] — 20 bytes per position plus 5 per text
-    * byte — fits [[driverBudget]] (one eighth of
+    * byte — fits [[Scans.driverBudget]] (one eighth of
     * `spark.driver.maxResultSize`, capped by the driver heap), the
     * documents are collected once and deduped on the driver
     * ([[driverRemoveSpans]]): bit-identical rows and schema from two
@@ -818,7 +818,7 @@ object SuffixArray {
   def removeDuplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                             minLen: Long, maxRounds: Int = 40): DataFrame =
     removeDuplicatedSpansWithin(docs, idCol, textCol, minLen, maxRounds,
-      driverBudget(docs.sparkSession))._1
+      Scans.driverBudget(docs.sparkSession))._1
 
   /** Driver bytes per corpus position of [[driverRemoveSpans]]: at most
     * five `int` arrays live at once (codes, suffix array, ranks, scratch
@@ -833,15 +833,6 @@ object SuffixArray {
 
   private[text] def driverFootprint(positions: Long, textBytes: Long): Long =
     DriverBytesPerPosition * positions + DriverBytesPerTextByte * textBytes
-
-  /** One eighth of `spark.driver.maxResultSize` (0 = unlimited), capped
-    * by the driver heap the arrays live in.
-    */
-  private def driverBudget(spark: SparkSession): Long = {
-    val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    val heap = Runtime.getRuntime.maxMemory
-    (if (cap > 0L) math.min(cap, heap) else heap) / 8L
-  }
 
   /** [[removeDuplicatedSpans]] against an explicit byte `budget` — the
     * seam specs use to force either path. Returns the result and the

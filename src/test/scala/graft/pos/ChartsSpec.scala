@@ -88,4 +88,34 @@ class ChartsSpec extends SparkSpec {
       assert(ImageCodec.decodePng(bytes).isDefined, s"$f not a decodable PNG")
     }
   }
+
+  test("writeMonthlyCharts: a day whose prices are all null draws as 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("charts_null").toString
+    val rows = Seq[(String, java.sql.Timestamp, String, java.lang.Double)](
+      ("r1", java.sql.Timestamp.valueOf("2025-07-01 10:00:00"), "Burger", 100.0),
+      ("r2", java.sql.Timestamp.valueOf("2025-07-02 11:00:00"), "Tea", null),
+      ("r3", java.sql.Timestamp.valueOf("2025-07-03 12:00:00"), "Fries", 50.0)
+    ).toDF("receipt_number", "shifted_time", "item_name", "price")
+      .withColumn("total_money", $"price")
+      .withColumn("modifiers", lit(null).cast("string"))
+      .withColumn("datetime", $"shifted_time")
+      .withColumn("date", lit("x")).withColumn("time", lit("x"))
+      .withColumn("order_type", lit("Mesa"))
+      .withColumn("cost", lit(1.0))
+      .withColumn("payment_type", lit("CASH"))
+      .withColumn("minutes_past_midnight", lit(0L))
+      .withColumn("time_slot", lit("00:00-01:00"))
+    Lake.writeFull(rows, s"$dir/lake")
+    val want = Charts.lineChart(Seq(100.0, 0.0, 50.0)).toSeq
+    val daily = Charts.writeMonthlyCharts(spark, s"$dir/lake", "2025-07", s"$dir/charts")
+      .find(_.contains("daily_revenue")).get
+    assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(daily)).toSeq == want)
+    // the driver path of the monthly report draws the same series
+    Reports.monthlyWithin(spark, s"$dir/lake", "2025-07", "2025-06", Some(s"$dir/driver"),
+      Long.MaxValue)
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/driver/daily_revenue_2025-07.png")).toSeq == want)
+  }
 }

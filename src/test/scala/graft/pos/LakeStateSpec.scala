@@ -47,6 +47,24 @@ class LakeStateSpec extends SparkSpec {
     assert(Lake.read(spark, target).count() === 2)
   }
 
+  test("K4/K5: lake writes cast each column to its curated type") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("lake_types").toString
+    // modifiers null-typed (lands as BOOLEAN uncast), price int-typed
+    val loose = toDF(Seq(curatedRow("r1", ts("2025-07-01 10:00:00"), "Burger", 100.0)))
+      .withColumn("modifiers", lit(null))
+      .withColumn("price", lit(100))
+    Lake.writeFull(loose, root)
+    Lake.appendIncrement(loose.withColumn("receipt_number", lit("r2")), root)
+    val atRest = spark.read.parquet(root).schema
+    Schemas.curated.fields.foreach { f =>
+      assert(atRest(f.name).dataType === f.dataType, f.name)
+    }
+    assert(Lake.read(spark, root).select(sum(col("price"))).head().getDouble(0) === 200.0)
+    // the monthly report reads modifiers: it fails on a BOOLEAN column
+    assert(Reports.monthly(spark, root, "2025-07", "2025-06").contains("| Receipts | 2 |"))
+  }
+
   test("P19: two-month read prunes partitions then dedups") {
     val root = Files.createTempDirectory("lake2").toString
     Lake.writeFull(toDF(Seq(

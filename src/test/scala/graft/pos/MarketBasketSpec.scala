@@ -54,4 +54,19 @@ class MarketBasketSpec extends SparkSpec {
     val dr = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
     assert(fb == dr)
   }
+
+  test("rules: equal lifts order by antecedents then consequents on every run") {
+    // every pair of the three items co-occurs alike, so the six pair
+    // rules and the triple's three rules each share one lift
+    val df = Seq("r1", "r2", "r3").flatMap(r => Seq("c", "a", "b").map(i => (r, i)))
+      .toDF("receipt_number", "item_name").repartition(3)
+    def top(): Seq[(Seq[String], Seq[String], Double)] =
+      MarketBasket.rules(df, minSupport = 0.1, minLift = 0.5).limit(5).collect()
+        .map(r => (r.getSeq[String](0), r.getSeq[String](1), r.getDouble(4))).toSeq
+    val first = top()
+    assert(first.map(_._3).distinct.size === 1, "the fixture must tie on lift")
+    val key = first.map(t => (t._1.sorted.mkString(","), t._2.sorted.mkString(",")))
+    assert(key === key.sorted)
+    (1 to 3).foreach(_ => assert(top() === first))
+  }
 }
