@@ -23,8 +23,9 @@ import scala.collection.mutable
   * domain is bounded (brands, categories, languages); for unbounded
   * domains use the sketch-based `freqItems`/`r7` path instead.
   *
-  * WHEN TO USE — measured, not assumed (`tools/TopKBench`): in BATCH
-  * the two-stage form is mildly FASTER (0.7–0.9× here at sf1–sf10)
+  * WHEN TO USE — measured, not assumed (PLANS.md, "Round-3 measured
+  * negative: native top-k aggregate vs window idiom"): in BATCH the
+  * two-stage form is mildly FASTER (0.7–0.9× here at sf1–sf10)
   * because the first codegen'd HashAggregate outruns this interpreted
   * update loop and the second shuffle only carries distinct (g, v)
   * rows. Use `top_k_count` where the window idiom cannot go at all:

@@ -77,20 +77,19 @@ object GlobalRank {
     (parted.join(offDf, Seq("__pid")), prefix.last.getOrElse(0L), token, extraTotal)
   }
 
-  /** [[withGlobalRankCounted]] plus the staged run's checkpoint token
-    * — for iterated callers that must free each round's staging blocks
-    * (free AFTER the consumer of the ranked frame materializes).
+  /** The two-pass rank: [[rankCountedWithin]]'s finish over the driver
+    * bound. The staged run is left to the ContextCleaner.
     */
-  def withGlobalRankTracked(df: DataFrame, rankCol: String, nParts: Int,
-                            ord: Column*): (DataFrame, Long, Checkpoints.Token) = {
-    val (run, total, token, _) =
+  private def twoPassRank(df: DataFrame, rankCol: String, nParts: Int,
+                          ord: Column*): (DataFrame, Long) = {
+    val (run, total, _, _) =
       prefixed(df, nParts, coalesce(count(lit(1)), lit(0L)), ord)
     // Pass 2: parallel per-partition rank + broadcast offset.
     val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
     (run
       .withColumn(rankCol,
         (coalesce(col("__off"), lit(0L)) + row_number().over(w)).cast("long"))
-      .drop("__pid", "__off"), total, token)
+      .drop("__pid", "__off"), total)
   }
 
   /** Add `rankCol` (1-based global rank under `ord`) to `df`, and
@@ -107,7 +106,7 @@ object GlobalRank {
     * collected in `ord` order (TakeOrderedAndProject: per-partition
     * top-k — no range sampler, no offsets pass, no window) and ranked
     * in one driver pass; `GlobalRankSpec` pins both paths ≡ the window
-    * form. Iterated callers keep the Tracked/Agg variants unchanged.
+    * form. Iterated callers keep `withGlobalPrefixSumTracked`/`Agg`.
     */
   def withGlobalRankCounted(df: DataFrame, rankCol: String, nParts: Int,
                             ord: Column*): (DataFrame, Long) =
@@ -121,9 +120,9 @@ object GlobalRank {
                                            ord: Column*): (DataFrame, Long) = {
     val (mat, token, n) = Checkpoints.eagerCounted(df)
     if (n > driverMax) {
-      val (ranked, total, _) = withGlobalRankTracked(mat, rankCol, nParts, ord: _*)
+      val ranked = twoPassRank(mat, rankCol, nParts, ord: _*)
       token.free() // the partitioned run's own eager checkpoint stands
-      (ranked, total)
+      ranked
     } else {
       val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
       token.free()

@@ -116,21 +116,12 @@ object Lake {
   /** K5(b) — compaction: rewrite only the months present in the source,
     * deduplicated, via dynamic partition overwrite.
     */
-  def compactTo(spark: SparkSession, sourceRoot: String, targetRoot: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      Analytics.dedupLatest(read(spark, sourceRoot))
-        .repartition(col("year"), col("month"))
-        .write
-        .partitionBy(Schemas.partitionKeys: _*)
-        .mode("overwrite")
-        .parquet(targetRoot)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+  def compactTo(spark: SparkSession, sourceRoot: String, targetRoot: String): Unit =
+    Analytics.dedupLatest(read(spark, sourceRoot))
+      .repartition(col("year"), col("month"))
+      .write
+      .partitionBy(Schemas.partitionKeys: _*)
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(targetRoot)
 }

@@ -449,9 +449,9 @@ object PosQueries {
     // The reference's dedup is tie-arbitrary (SURVEY §7.4.4); the gate
     // query pins ties with explicit deterministic tiebreakers. The agg
     // form (max_by, map-side combinable) replaces the ROW_NUMBER
-    // window: winners are identical under this total order
-    // (DedupBench asserts it; 1.9× faster at sf1), so the ROW_NUMBER
-    // oracle SQL is unchanged.
+    // window: winners are identical under this total order (PLANS.md,
+    // "Round-2 plan rewrites": winner_diff=0, 16.33 s → 5.27 s at sf1),
+    // so the ROW_NUMBER oracle SQL is unchanged.
     dedupMonthly(posify(spark, d))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.Exprs._
+import scala.concurrent.{Await, Future, TimeoutException}
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** Similarity-search + market-basket battery.
   *
@@ -15,6 +17,24 @@ import graft.functions.Exprs._
   * never flip a rank between engines.
   */
 object SimQueries {
+
+  /** Bound on the wait for each concurrent leg of a gate (e12, e14,
+    * e16, e22). The slowest of those gates, e22, takes 10.5 s at sf1
+    * (`BENCH_sf1_r17.json`), so this leaves over 100× headroom for ×10
+    * and ×100 runs.
+    */
+  private val legWait: FiniteDuration = 30.minutes
+
+  /** The result of `gate`'s concurrent `leg`, waiting at most `bound`
+    * (specs pass a short one).
+    */
+  private[queries] def awaitLeg[T](gate: String, leg: String, f: Future[T],
+                                   bound: FiniteDuration = legWait): T =
+    try Await.result(f, bound)
+    catch {
+      case _: TimeoutException => throw new TimeoutException(
+        s"SimQueries.$gate: leg $leg not finished within $bound")
+    }
 
   private val knnOracle =
     """WITH q AS (
@@ -548,8 +568,9 @@ object SimQueries {
     * 200-query panel have their EXACT integer-L2 top-1 inside the ADC
     * top-5 — and emits a bound flag; the oracle asserts the constant 1
     * (the r6/r7 sketch pattern). Panel widened 20→200 in round 9 (±2σ
-    * on the bar tightens from ±22% to ±7%); RecallProbe measures the
-    * full-train flat-ADC config at 152–178/200 across the three scales
+    * on the bar tightens from ±22% to ±7%); the full-train flat-ADC
+    * config measured 152–178/200 across the three scales (PLANS.md,
+    * "Round-9 recall bars on the 200-query panels")
     * (the 152 is sf0.1, where 2000 corpus vectors stretch the 512-code
     * budget hardest), so the ≥ 140/200 bar (the old 14/20 fraction)
     * holds with a ≥ 12-hit measured margin. The exact baseline is the
@@ -658,8 +679,9 @@ object SimQueries {
     * it, and recall@5 against the exact int8-L2 top-1 must clear the
     * bar. This pins the 100 TB training path — bounded-sample fit plus
     * narrow-map encode — to a measured quality floor, not just a
-    * determinism check. 200-query panel (round 9); RecallProbe measures
-    * 152–172/200 across the scales, so the ≥ 120/200 bar (the old
+    * determinism check. 200-query panel (round 9); it measured
+    * 152–172/200 across the scales (PLANS.md, "Round-9 recall bars on
+    * the 200-query panels"), so the ≥ 120/200 bar (the old
     * 12/20 fraction) holds with a ≥ 32-hit margin — and sits within 26
     * hits of e9's full-train codebook, which is the sampling claim.
     */
@@ -688,9 +710,10 @@ object SimQueries {
     * codebook (e11's 200-vector fit, shared via the memo) + IVF-pruned
     * ADC (e10's composition), recall@5 vs the exact int8-L2 top-1 at
     * two probe widths, on the 200-query panel (round 9). Pins the
-    * textbook IVF trade with measured margins (RecallProbe, all three
-    * scales): nprobe=2 prunes to ~20% of the corpus and recalls only
-    * 49–60/200 — the dataset's coarse lists are label clusters, not
+    * textbook IVF trade with measured margins (PLANS.md, "Round-9
+    * recall bars on the 200-query panels", all three scales): nprobe=2
+    * prunes to ~20% of the corpus and recalls only 49–60/200 — the
+    * dataset's coarse lists are label clusters, not
     * geometric ones, so aggressive pruning loses true neighbors —
     * while nprobe=8 recovers 139–154/200. The gate asserts BOTH the
     * nprobe=8 floor (≥ 120/200, the old 12/20 fraction, ≥ 19-hit
@@ -729,13 +752,11 @@ object SimQueries {
       // materialize the shared code cache once, then run the two
       // independent probe widths as concurrent jobs (guide §2.6)
       codes.count()
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val h2F = Future(hitsAt(2).as[Long].head())
       val h8F = Future(hitsAt(8).as[Long].head())
-      val h2 = Await.result(h2F, Duration.Inf)
-      val h8 = Await.result(h8F, Duration.Inf)
+      val h2 = awaitLeg("e12", "nprobe=2", h2F)
+      val h8 = awaitLeg("e12", "nprobe=8", h8F)
       codes.unpersist()
       spark.range(1).select(
         lit(nq).as("n_queries"),
@@ -1308,9 +1329,10 @@ object SimQueries {
     * (dense from 0 at every scale, so the panel is deterministic and
     * scale-stable) — widened from 20 in round 9 so the recall floor is
     * statistically meaningful: at 55% true recall the ±2σ band on 200
-    * draws is ±7%, vs ±22% on 20. RecallProbe-measured on the 200-wide
-    * panel (all three scales): nprobe=1 recalls 48–62/200 (an eighth
-    * of the corpus), nprobe=6 recovers 144–164/200 (72–82%) — matching
+    * draws is ±7%, vs ±22% on 20. Measured on the 200-wide panel (all
+    * three scales; PLANS.md, "Round-9 recall bars on the 200-query
+    * panels"): nprobe=1 recalls 48–62/200 (an eighth of the corpus),
+    * nprobe=6 recovers 144–164/200 (72–82%) — matching
     * the LABEL-list curve at equal prune fraction, which is the
     * load-bearing fact: the lists a 100 TB unlabeled corpus can
     * actually build lose nothing vs the ground-truth lists e12
@@ -1351,13 +1373,11 @@ object SimQueries {
       // materialize the shared caches once, then run the two
       // independent probe widths as concurrent jobs (guide §2.6)
       corpus.count(); codes.count()
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val h1F = Future(hitsAt(1).as[Long].head())
       val h6F = Future(hitsAt(6).as[Long].head())
-      val h1 = Await.result(h1F, Duration.Inf)
-      val h6 = Await.result(h6F, Duration.Inf)
+      val h1 = awaitLeg("e14", "nprobe=1", h1F)
+      val h6 = awaitLeg("e14", "nprobe=6", h6F)
       corpus.unpersist(); codes.unpersist()
       spark.range(1).select(
         lit(nq).as("n_queries"),
@@ -1403,7 +1423,8 @@ object SimQueries {
     * codewords at offset 254 / scale 10^5 (overflow-safe: worst-case
     * ADC sum ~10^17), per-(query, probed-list) LUT because the query's
     * residual depends on the list being probed. Hash-oracled: DuckDB
-    * replays the full chain. RecallProbe measures the payoff at sf0.1
+    * replays the full chain. The payoff measured at sf0.1 (PLANS.md,
+    * "Round-9 recall bars on the 200-query panels", round-7 rows)
     * (the one test scale with meaningful list populations): recall@5
     * 11→13 (nprobe=4), 12→15 (6), 14→18 (8), 15→20 (10) vs the flat
     * codebook — the ≥2-hit gain residual encoding exists to buy.
@@ -1478,8 +1499,6 @@ object SimQueries {
       // independent read-only evaluations — run them as concurrent
       // Spark jobs (guide §2.6: back-fill the tail) instead of three
       // serialized actions; each leg's own plan is unchanged.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val flat8F = Future {
         exactTop1.join(
@@ -1495,9 +1514,9 @@ object SimQueries {
       rcodes.count()
       val r2F = Future(residualHits(2))
       val r8F = Future(residualHits(8))
-      val flat8 = Await.result(flat8F, Duration.Inf)
-      val r2 = Await.result(r2F, Duration.Inf)
-      val r8 = Await.result(r8F, Duration.Inf)
+      val flat8 = awaitLeg("e16", "flat nprobe=8", flat8F)
+      val r2 = awaitLeg("e16", "residual nprobe=2", r2F)
+      val r8 = awaitLeg("e16", "residual nprobe=8", r8F)
       rcodes.unpersist()
       spark.range(1).select(
         lit(nq).as("n_queries"),
@@ -1580,13 +1599,13 @@ object SimQueries {
   /** e19b — the k-NN graph over LEARNED lists: e19's exact chain with
     * the coarse lists swapped from the `label` column to the
     * unsupervised k-means build (sign-hash init + 2 Lloyd rounds —
-    * e13's no-label recipe, the [[sharedUnsupLists]] memo). Round-10's
-    * `KnnGraphProbe` measured learned lists at ≈2× the recall of label
-    * lists for equal probe cost; this gate pins that documented
-    * composition instead of leaving it probe-only. The oracle replays
-    * k-means → probes → candidate ranking → the reverse-edge join, so
-    * the hash pins every edge, rank, 6-dp cosine and mutuality bit of
-    * the production (unsupervised) graph build.
+    * e13's no-label recipe, the [[sharedUnsupLists]] memo). PLANS.md
+    * "Round-10 kNN-graph recall curve" measured learned lists at ≈2×
+    * the recall of label lists for equal probe cost; this gate pins
+    * that documented composition instead of leaving it probe-only.
+    * The oracle replays k-means → probes → candidate ranking → the
+    * reverse-edge join, so the hash pins every edge, rank, 6-dp cosine
+    * and mutuality bit of the production (unsupervised) graph build.
     */
   val knnGraphLearnedGate = Query(
     "e19b_knn_graph_learned", {
@@ -1766,8 +1785,8 @@ object SimQueries {
     * post-rebalance assignment. Scale shape: the split set is
     * broadcast and every join is keyed on the split list id — the
     * pass shuffles O(over-full lists), not O(index);
-    * `RebalanceStress` measures bounded max-list-size under ×10
-    * drift.
+    * PLANS.md "Round-11 IVF list rebalance (e20) + ×10 drift stress"
+    * measured max list size bounded in ≤ 3 passes under ×10 drift.
     */
   val ivfRebalance = Query(
     "e20_ivf_rebalance",
@@ -2468,8 +2487,9 @@ object SimQueries {
     // recall@5 sagging 0.92 → 0.86 with one entry per list and
     // recovering to 1.00 with two (entries_2 sweep, PLANS.md
     // round-16) — the cheapest rung of the entry ladder. NOTE the
-    // round-17 200-query panels (GraphRecall200) showed that 10-query
-    // reading was panel-resolution luck: on 1 000 hit slots flat-2
+    // round-17 200-query panels (PLANS.md, "Round-17 graph-tier recall
+    // on 200-query panels") showed that 10-query reading was
+    // panel-resolution luck: on 1 000 hit slots flat-2
     // serving reads 0.87/0.39/0.22 at ×1/×10/×100 while the e22 rep
     // ladder holds 0.96/1.00/1.00 — the gate keeps this convention
     // because its hash prices exactly this walk, but the ladder is
@@ -2645,9 +2665,10 @@ object SimQueries {
     * e21's degree-16 label-list graph SYMMETRIZED AT BUILD TIME
     * ([[graft.similarity.Ann.symmetrize]]) plus the per-list entry
     * points, persisted once per corpus — the e17 packed-index
-    * discipline applied to the graph tier. ExtensionProbe at ×10
-    * measured build 27–50 s vs search 7.2 s: a server pays the build
-    * once, never per query batch, so pricing it inside the serving
+    * discipline applied to the graph tier. At ×10 the build measured
+    * 27–50 s vs search 7.2 s (PLANS.md, "Round-15 (extension) ×10
+    * stress rows"): a server pays the build once, never per query
+    * batch, so pricing it inside the serving
     * gate hides the number the tier exists for.
     */
   private val servingGraphMemo = scala.collection.concurrent.TrieMap[String, String]()
@@ -2714,12 +2735,13 @@ object SimQueries {
     * is FIXED at 3 in the gate (a static oracle cannot unroll a
     * data-dependent layer count); the operator takes it as a parameter.
     */
-  // Upper-walk width/depth are ef-style knobs: the round-16 HnswSweep
-  // (PLANS.md) measured recall@5 at ×10 corpora of 0.36/0.66/0.78/1.00
-  // for beamUpper 2/4/8/16 — narrow upper beams strand the descent in
-  // local minima of the short-edge kNN graph exactly as an HNSW with
-  // efSearch≈2 would; 16 is the smallest swept width that recovers
-  // 1.00 (real HNSW deployments run efSearch 50–400).
+  // Upper-walk width/depth are ef-style knobs: the round-16 sweep
+  // (PLANS.md, "Round-16 hierarchical ANN (e22)") measured recall@5
+  // at ×10 corpora of 0.36/0.66/0.78/1.00 for beamUpper 2/4/8/16 —
+  // narrow upper beams strand the descent in local minima of the
+  // short-edge kNN graph exactly as an HNSW with efSearch≈2 would; 16
+  // is the smallest swept width that recovers 1.00 (real HNSW
+  // deployments run efSearch 50–400).
   private val hnswLayers = 3
   private val hnswKUpper = 8
   private val hnswBeamUpper = 16
@@ -2865,8 +2887,6 @@ object SimQueries {
     // cores at bench scale — build them as concurrent Spark jobs (guide
     // §2.6 "overlap independent jobs": FIFO back-fill; results are the
     // checkpointed tables either way, bit-identical).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val upperF = (hnswLayers to 1 by -1).map { lyr =>
       Future {
@@ -2886,8 +2906,10 @@ object SimQueries {
           graft.similarity.Ann.knnGraph(
             reps, "vec_id", "embedding", "label", k = 16, nprobe = graphNprobe)))._1
     }
-    val uppers = upperF.map(Await.result(_, Duration.Inf))
-    val edges0 = Await.result(edges0F, Duration.Inf)
+    val uppers = upperF.zip(hnswLayers to 1 by -1).map { case (f, lyr) =>
+      awaitLeg("e22", s"layer-$lyr graph", f)
+    }
+    val edges0 = awaitLeg("e22", "layer-0 graph", edges0F)
     val corpus = emb.select($"vec_id", $"embedding")
     val panel = corpus.filter($"vec_id" < 10)
     val topEntries = ranks.filter($"hrank" <= 2).select($"vec_id".as("bid"))
@@ -3338,8 +3360,6 @@ object SimQueries {
     * bench.
     */
   def warmMemos(spark: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     def guarded(name: String)(build: => Any): Future[Unit] = Future {
       try { build; () }

@@ -1109,8 +1109,9 @@ object Ann {
     * Why this exists (and the measured case got STRONGER in round 17:
     * on 200-query/1 000-slot panels the flat-entry arm reads
     * 0.87/0.39/0.22 recall at ×1/×10/×100 while this ladder holds
-    * 0.96/1.00/1.00 — GraphRecall200, PLANS.md round-17; the r16
-    * "flat recovers 1.00 at ×10" reading was 50-slot panel luck):
+    * 0.96/1.00/1.00 — PLANS.md, "Round-17 graph-tier recall on
+    * 200-query panels"; the r16 "flat recovers 1.00 at ×10" reading
+    * was 50-slot panel luck):
     * the flat convention starts every query at 2 ids PER COARSE LIST,
     * so hop 0 rescores |q|·2·lists candidates — and the list count
     * grows with the corpus (×100 corpora = 1 000 lists = 2 000 entry

@@ -73,18 +73,11 @@ object Scd2Stream {
     if (fresh.isEmpty) return
     val merged = Scd2.applyChanges(
       hist.drop("kb"), fresh, key, timeMicros, tiebreaker, attrs)
-    val prev = ss.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      withBucket(merged, key, nBuckets)
-        .repartition(col("kb"))
-        .write.partitionBy("kb").mode("overwrite").parquet(historyRoot)
-    } finally {
-      prev match {
-        case Some(v) => ss.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => ss.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    withBucket(merged, key, nBuckets)
+      .repartition(col("kb"))
+      .write.partitionBy("kb").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(historyRoot)
   }
 
   /** Maintain the SCD2 history from a streaming change log. AvailableNow

@@ -148,31 +148,22 @@ object StreamingIngest {
               .localCheckpoint(true)
             batch.unionByName(existing)
           }
-        val prev = ss.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          // Deterministic tiebreakers (same as the P19 read-side dedup):
-          // two rows tying on (receipt_number, item_name, shifted_time) —
-          // e.g. a correction re-sent with the same timestamp — would
-          // otherwise get an arbitrary winner, breaking the
-          // byte-identical-replay contract across Spark versions. The
-          // agg form pre-reduces duplicates map-side before the
-          // exchange — the right shape when a batch replays old months.
-          graft.pos.Analytics.dedupLatestAgg(
-            combined,
-            Seq(col("price"), coalesce(col("modifiers"), lit(""))))
-            .repartition(col("year"), col("month"))
-            .write
-            .partitionBy(graft.pos.Schemas.partitionKeys: _*)
-            .mode("overwrite")
-            .parquet(lakeRoot)
-        } finally {
-          prev match {
-            case Some(v) => ss.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => ss.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
-        ()
+        // Deterministic tiebreakers (same as the P19 read-side dedup):
+        // two rows tying on (receipt_number, item_name, shifted_time) —
+        // e.g. a correction re-sent with the same timestamp — would
+        // otherwise get an arbitrary winner, breaking the
+        // byte-identical-replay contract across Spark versions. The
+        // agg form pre-reduces duplicates map-side before the
+        // exchange — the right shape when a batch replays old months.
+        graft.pos.Analytics.dedupLatestAgg(
+          combined,
+          Seq(col("price"), coalesce(col("modifiers"), lit(""))))
+          .repartition(col("year"), col("month"))
+          .write
+          .partitionBy(graft.pos.Schemas.partitionKeys: _*)
+          .mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(lakeRoot)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

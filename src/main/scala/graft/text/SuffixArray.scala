@@ -590,16 +590,6 @@ object SuffixArray {
     Index(addr, full, levels, total, idCol, sepCode, levelStore)
   }
 
-  /** The global addressing of token rows, as [[buildIndexFromRows]]
-    * computes it — public so a resume path can reconstruct (and
-    * backfill into a level store) the addressing of a build whose JVM
-    * is gone: the derivation is deterministic, so the recomputed gids
-    * are bitwise the build's own.
-    */
-  def addressingOfRows(ids: DataFrame, rows: DataFrame, idCol: String,
-                       sepCode: Long): DataFrame =
-    addressedRows(ids, rows, idCol, sepCode)
-
   /** The suffix array: `(doc_id, pos, gid, sa_rank)` for every TEXT
     * position (SEP positions participate in the build — they fence
     * documents — but are filtered from the output). `sa_rank` is the

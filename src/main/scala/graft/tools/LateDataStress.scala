@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.AtomicLong
 /** Out-of-order / late-data stress for the CDC and streaming tiers at a
   * real scale factor (the round-8/9 advice item: these gates had the
   * thinnest perf history). Three legs, each emitting one JSON line per
-  * phase (wall + listener-measured shuffle, the StressBench contract):
+  * phase (wall + listener-measured shuffle):
   *
   *  1. REPEATED out-of-order SCD2 merges: the cdc2 gate proves ONE
   *     any-order merge; a warehouse does them daily. Split the event

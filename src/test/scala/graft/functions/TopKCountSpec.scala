@@ -87,7 +87,8 @@ class TopKCountSpec extends SparkSpec {
     assert(out(1)._2 === Seq(("fries", 2L), ("soda", 1L)))
     // ...and the built-in idiom (count then rank) is REJECTED on streams:
     // chained aggregations are unsupported, which is the reason this
-    // aggregate exists despite the batch form being faster (TopKBench).
+    // aggregate exists despite the batch form being faster (PLANS.md,
+    // "Round-3 measured negative: native top-k aggregate vs window idiom").
     val counts = stream.groupBy(twindow($"t", "1 hour"), $"item").count()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"window").orderBy($"count".desc)

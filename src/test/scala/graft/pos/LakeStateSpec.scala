@@ -47,6 +47,37 @@ class LakeStateSpec extends SparkSpec {
     assert(Lake.read(spark, target).count() === 2)
   }
 
+  test("K5b: compaction overwrites only the source's months and leaves the session conf alone") {
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val source = Files.createTempDirectory("lake_src").toString
+    Lake.writeFull(toDF(Seq(
+      curatedRow("r1", ts("2025-07-01 10:00:00"), "Burger", 100.0),
+      curatedRow("r2", ts("2025-08-02 11:00:00"), "Fries", 50.0))), source)
+    Lake.appendIncrement(
+      toDF(Seq(curatedRow("r1", ts("2025-07-01 12:00:00"), "Burger", 120.0))), source)
+    // The target already holds June, which the source lacks, and a
+    // stale July that compaction must replace.
+    val target = Files.createTempDirectory("lake_tgt").toString
+    Lake.writeFull(toDF(Seq(
+      curatedRow("r0", ts("2025-06-15 09:00:00"), "Soda", 5.0),
+      curatedRow("r9", ts("2025-07-20 09:00:00"), "Stale", 1.0))), target)
+    val june = new java.io.File(s"$target/year=2025/month=06")
+    def listing = june.listFiles().toSeq
+      .map(f => (f.getName, f.length(), f.lastModified())).sortBy(_._1)
+    val juneBefore = listing
+    assert(juneBefore.exists(_._1.endsWith(".parquet")))
+    val modeBefore = spark.conf.getAll.get(modeKey)
+
+    Lake.compactTo(spark, source, target)
+
+    assert(listing === juneBefore) // June's files untouched
+    val rows = Lake.read(spark, target).collect()
+      .map(r => (r.getAs[String]("receipt_number"), r.getAs[Double]("price"))).toSet
+    assert(rows === Set(("r0", 5.0), ("r1", 120.0), ("r2", 50.0)))
+    assert(spark.conf.getAll.get(modeKey) === modeBefore)
+    assert(modeBefore === None)
+  }
+
   test("K4/K5: lake writes cast each column to its curated type") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lake_types").toString
