@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** TWO-PASS distributed global rank — the shape every "one global
   * window" note in this repo (t24's running sum, the t33/t34 ranked
@@ -21,40 +23,51 @@ import org.apache.spark.sql.functions._
   * for that lake write, and it also makes the operator immune to
   * range-sampler nondeterminism across jobs).
   *
+  * Every shape is one aggregate over the same core: a rank is the
+  * running count, a prefix sum the running sum, the exclusive prefix
+  * max the running max one row short. The one-shot shapes (rank, NTILE,
+  * prefix sum) finish on the driver up to [[driverFinishMax]] rows and
+  * fall back to the two-pass at the session's shuffle width; the staged
+  * prefix sum and the prefix max always run the two-pass at the
+  * caller's width.
+  *
   * The order must be TOTAL (pass a tie-breaking id last) or ranks
   * within equal keys are partition-placement-dependent.
   */
 object GlobalRank {
 
   /** Driver bound for the size-gated one-collect finish on the
-    * ONE-SHOT rank/prefix-sum shapes (optimization r18).
+    * ONE-SHOT rank/NTILE/prefix-sum shapes (optimization r18).
     */
   private val driverFinishMax = 65536L
 
-  /** Shared two-pass core: range-partition + sort on `ord`, checkpoint
-    * the run, collect one `agg` row per partition, broadcast the
-    * exclusive prefix of those values, and hand the caller the
-    * checkpointed run with `__pid`/`__off` columns to finish within
-    * partitions in parallel. The returned [[Checkpoints.Token]] frees
-    * the staged run's blocks — hot-loop callers (the suffix-array
-    * doubling rounds) MUST free it once their round materializes, or
-    * every round's staging run stays in storage memory until GC.
+  /** The two-pass core. Pass 1: range-partition + sort on `ord`,
+    * checkpoint the run, collect one `agg` row per partition, and
+    * broadcast the exclusive prefix of those values under `combine`
+    * with SQL's null skipping (a partition whose aggregate is null
+    * leaves the prefix as it was; `__off` is null until some earlier
+    * partition carried a value). Pass 2: `agg` over each partition's
+    * rows up to `frameEnd` (0 the current row, -1 the row before),
+    * merged with the partition's offset by `merge`, in parallel.
+    *
+    * A caller-supplied `extra` per-partition aggregate rides the SAME
+    * collect (summed across partitions) so iterated callers — the
+    * suffix-array doubling rounds need the next live count — never pay
+    * a separate action for a statistic this pass already visits every
+    * row for (optimization r17, guide §1.2). Returns the finished
+    * frame, the prefix over all partitions, the staged run's
+    * [[Checkpoints.Token]] and the `extra` total.
     */
-  private def prefixed(df: DataFrame, nParts: Int, agg: Column,
-                       ord: Seq[Column],
-                       combine: (Long, Long) => Long = _ + _,
-                       extra: Option[Column] = None)
+  private def twoPass(df: DataFrame, outCol: String, nParts: Int, agg: Column,
+                      ord: Seq[Column], frameEnd: Long = Window.currentRow,
+                      merge: (Column, Column) => Column = (off, p) => coalesce(off + p, off, p),
+                      combine: (Long, Long) => Long = _ + _,
+                      extra: Option[Column] = None)
       : (DataFrame, Long, Checkpoints.Token, Long) = {
     val (parted, token) = Checkpoints.eager(df
       .repartitionByRange(nParts, ord: _*)
       .sortWithinPartitions(ord: _*)
       .withColumn("__pid", spark_partition_id()))
-    // Pass 1: per-partition aggregates — |partitions| rows to the
-    // driver. A caller-supplied `extra` per-partition aggregate rides
-    // the SAME collect (summed across partitions) so iterated callers
-    // — the suffix-array doubling rounds need the next live count —
-    // never pay a separate action for a statistic this pass already
-    // visits every row for (optimization r17, guide §1.2).
     val aggs = Seq(agg.as("n")) ++ extra.map(_.cast("long").as("x"))
     val collected = parted.groupBy(col("__pid")).agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -64,96 +77,80 @@ object GlobalRank {
     val extraTotal =
       if (extra.isEmpty) 0L
       else collected.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum
-    // Exclusive prefix under `combine` (sum for ranks/running sums,
-    // max for running maxima) with SQL's null skipping: a partition
-    // whose aggregate is null leaves the prefix as it was, and `__off`
-    // is null until some earlier partition carried a value.
     val prefix = sizes.scanLeft(Option.empty[Long]) { case (acc, (_, n)) =>
       (acc ++ n).reduceOption(combine)
     }
     val spark = df.sparkSession
     import spark.implicits._
     val offDf = broadcast(sizes.map(_._1).zip(prefix.init).toSeq.toDF("__pid", "__off"))
-    (parted.join(offDf, Seq("__pid")), prefix.last.getOrElse(0L), token, extraTotal)
+    val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, frameEnd)
+    (parted.join(offDf, Seq("__pid"))
+      .withColumn(outCol, merge(col("__off"), agg.over(w)).cast("long"))
+      .drop("__pid", "__off"), prefix.last.getOrElse(0L), token, extraTotal)
   }
 
-  /** The two-pass rank: [[rankCountedWithin]]'s finish over the driver
-    * bound. The staged run is left to the ContextCleaner.
+  /** The one-shot shapes: `outCol` is the running count in `ord` order
+    * (the 1-based global rank, non-nullable) when `value` is None, else
+    * the running sum of `value` (nullable: null until the first
+    * non-null value, then the sum of non-nulls so far — the window
+    * form's semantics). Returns the frame and the row count. The driver
+    * bound is passed in so specs can run either finish on one input.
+    *
+    * Size-gated driver finish (optimization r18; guide §1.2/§8): the
+    * relation is materialized once with the value as a column — the
+    * staging write the two-pass pays anyway, and in the over-bound
+    * fallback the range SAMPLER then reads blocks instead of
+    * re-executing the whole upstream plan — and when the materialized
+    * count fits `driverMax`, the run is collected in `ord` order
+    * (TakeOrderedAndProject: per-partition top-k — no range sampler,
+    * no offsets pass, no window) and summed in one driver pass.
     */
-  private def twoPassRank(df: DataFrame, rankCol: String, nParts: Int,
-                          ord: Column*): (DataFrame, Long) = {
-    val (run, total, _, _) =
-      prefixed(df, nParts, coalesce(count(lit(1)), lit(0L)), ord)
-    // Pass 2: parallel per-partition rank + broadcast offset.
-    val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
-    (run
-      .withColumn(rankCol,
-        (coalesce(col("__off"), lit(0L)) + row_number().over(w)).cast("long"))
-      .drop("__pid", "__off"), total)
+  private[operators] def runningWithin(driverMax: Long, df: DataFrame, outCol: String,
+                                       value: Option[Column], ord: Seq[Column])
+      : (DataFrame, Long) = {
+    val (mat, token, n) =
+      Checkpoints.eagerCounted(df.withColumn("__grk_v", value.fold(lit(1L))(_.cast("long"))))
+    val out = if (n > driverMax) {
+      val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
+      val v = col("__grk_v")
+      (if (value.isEmpty) twoPass(mat, outCol, nParts, count(v), ord,
+        merge = (off, p) => coalesce(off, lit(0L)) + p)
+      else twoPass(mat, outCol, nParts, sum(v), ord))._1.drop("__grk_v")
+    } else {
+      val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
+      val vi = mat.schema.fieldIndex("__grk_v")
+      var seen = false
+      var acc = 0L
+      val summed = rows.toSeq.map { r =>
+        if (!r.isNullAt(vi)) { acc += r.getLong(vi); seen = true }
+        Row.fromSeq(r.toSeq.patch(vi, Nil, 1) :+ (if (seen) java.lang.Long.valueOf(acc) else null))
+      }
+      df.sparkSession.createDataFrame(summed.asJava,
+        StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = value.nonEmpty)))
+    }
+    token.free() // the two-pass run's own eager checkpoint stands
+    (out, n)
   }
 
   /** Add `rankCol` (1-based global rank under `ord`) to `df`, and
-    * return the total row count (already known from pass 1 — callers
-    * deriving rank-relative cuts like NTILE need it and should not pay
-    * another corpus action for it). The staging checkpoint is left to
-    * the ContextCleaner (one-shot callers).
-    *
-    * Size-gated driver finish (optimization r18; guide §1.2/§8): the
-    * relation is materialized once — the staging write the two-pass
-    * pays anyway, and in the over-bound fallback the range SAMPLER then
-    * reads blocks instead of re-executing the whole upstream plan — and
-    * when the materialized count fits [[driverFinishMax]], the run is
-    * collected in `ord` order (TakeOrderedAndProject: per-partition
-    * top-k — no range sampler, no offsets pass, no window) and ranked
-    * in one driver pass; `GlobalRankSpec` pins both paths ≡ the window
-    * form. Iterated callers keep `withGlobalPrefixSumTracked`/`Agg`.
+    * return the total row count (callers deriving rank-relative cuts
+    * like NTILE need it and should not pay another corpus action).
     */
-  def withGlobalRankCounted(df: DataFrame, rankCol: String, nParts: Int,
-                            ord: Column*): (DataFrame, Long) =
-    rankCountedWithin(driverFinishMax, df, rankCol, nParts, ord: _*)
-
-  /** [[withGlobalRankCounted]] with the driver bound passed in, so
-    * specs can run either finish on the same input.
-    */
-  private[operators] def rankCountedWithin(driverMax: Long, df: DataFrame,
-                                           rankCol: String, nParts: Int,
-                                           ord: Column*): (DataFrame, Long) = {
-    val (mat, token, n) = Checkpoints.eagerCounted(df)
-    if (n > driverMax) {
-      val ranked = twoPassRank(mat, rankCol, nParts, ord: _*)
-      token.free() // the partitioned run's own eager checkpoint stands
-      ranked
-    } else {
-      val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
-      token.free()
-      val out = rows.iterator.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ java.lang.Long.valueOf(i + 1L))
-      }.toSeq
-      val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
-          org.apache.spark.sql.types.LongType, nullable = false))
-      import scala.jdk.CollectionConverters._
-      (df.sparkSession.createDataFrame(out.asJava, schema), n)
-    }
-  }
-
-  /** Add `rankCol` (1-based global rank under `ord`) to `df`. */
-  def withGlobalRank(df: DataFrame, rankCol: String, nParts: Int,
-                     ord: Column*): DataFrame =
-    withGlobalRankCounted(df, rankCol, nParts, ord: _*)._1
+  def withGlobalRank(df: DataFrame, rankCol: String, ord: Column*): (DataFrame, Long) =
+    runningWithin(driverFinishMax, df, rankCol, None, ord)
 
   /** Add `ntileCol` — exactly SQL `NTILE(n) OVER (ORDER BY ord)` (the
-    * first `total mod n` buckets get the extra row) — via the two-pass
+    * first `total mod n` buckets get the extra row) — via the global
     * rank: no single-partition window. `ord` must be total.
     */
-  def withGlobalNtile(df: DataFrame, ntileCol: String, n: Int, nParts: Int,
-                      ord: Column*): DataFrame =
-    ntileWithin(driverFinishMax, df, ntileCol, n, nParts, ord: _*)
+  def withGlobalNtile(df: DataFrame, ntileCol: String, n: Int, ord: Column*): DataFrame =
+    ntileWithin(driverFinishMax, df, ntileCol, n, ord)
 
   /** [[withGlobalNtile]] with the rank's driver bound passed in. */
   private[operators] def ntileWithin(driverMax: Long, df: DataFrame, ntileCol: String,
-                                     n: Int, nParts: Int, ord: Column*): DataFrame = {
-    val (ranked, total) = rankCountedWithin(driverMax, df, "__grk", nParts, ord: _*)
+                                     n: Int, ord: Seq[Column]): DataFrame = {
+    val (ranked, total) = runningWithin(driverMax, df, "__grk", None, ord)
     val base = total / n
     val rem = total % n
     val cut = rem * (base + 1) // ranks <= cut fall in the wide buckets
@@ -170,111 +167,41 @@ object GlobalRank {
 
   /** Add `sumCol` — the inclusive running sum of `value` in global
     * `ord` order (≡ `SUM(value) OVER (ORDER BY ord)` under a total
-    * order) — with the same two-pass shape: per-partition value totals
-    * to the driver, broadcast exclusive prefix, parallel within-
-    * partition running sums.
+    * order).
     */
   def withGlobalPrefixSum(df: DataFrame, sumCol: String, value: Column,
-                          nParts: Int, ord: Column*): DataFrame =
-    prefixSumWithin(driverFinishMax, df, sumCol, value, nParts, ord: _*)
+                          ord: Column*): DataFrame =
+    runningWithin(driverFinishMax, df, sumCol, Some(value), ord)._1
 
-  /** [[withGlobalPrefixSum]] with the driver bound passed in, so specs
-    * can run either finish on the same input.
+  /** [[withGlobalPrefixSum]] as the pure two-pass at `nParts` range
+    * partitions, plus the total of the optional `extra` per-partition
+    * statistic (0 without one) and the staged run's checkpoint token.
+    * Iterated callers (the suffix-array doubling loop) read their
+    * convergence statistic from `extra` instead of paying one more
+    * full-relation action per round, and MUST free the token once their
+    * round materializes, or every round's staging run stays in storage
+    * memory until GC; one-shot callers leave it to the ContextCleaner.
     */
-  private[operators] def prefixSumWithin(driverMax: Long, df: DataFrame, sumCol: String,
-                                         value: Column, nParts: Int,
-                                         ord: Column*): DataFrame = {
-    // Same size-gated driver finish as [[withGlobalRankCounted]] (the
-    // value expression is materialized as a column before the staging
-    // checkpoint so the driver pass reads it positionally). Running-sum
-    // null semantics replicate the window form exactly: null until the
-    // first non-null value, then the sum of non-nulls so far.
-    val (mat, token, n) =
-      Checkpoints.eagerCounted(df.withColumn("__grk_v", value.cast("long")))
-    if (n > driverMax) {
-      val out =
-        withGlobalPrefixSumTracked(mat.drop("__grk_v"), sumCol, value, nParts, ord: _*)._1
-      token.free() // the partitioned run's own eager checkpoint stands
-      out
-    } else {
-      val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
-      token.free()
-      val vi = mat.schema.fieldIndex("__grk_v")
-      var seen = false
-      var acc = 0L
-      val out = rows.iterator.map { r =>
-        if (!r.isNullAt(vi)) { acc += r.getLong(vi); seen = true }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(vi, Nil, 1) :+
-          (if (seen) java.lang.Long.valueOf(acc) else null))
-      }.toSeq
-      val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
-        org.apache.spark.sql.types.StructField(sumCol,
-          org.apache.spark.sql.types.LongType, nullable = true))
-      import scala.jdk.CollectionConverters._
-      df.sparkSession.createDataFrame(out.asJava, schema)
-    }
-  }
-
-  /** [[withGlobalPrefixSum]] plus the staged run's checkpoint token
-    * (iterated callers free it once their round materializes).
-    */
-  def withGlobalPrefixSumTracked(df: DataFrame, sumCol: String, value: Column,
-                                 nParts: Int, ord: Column*)
-      : (DataFrame, Checkpoints.Token) = {
-    val (run, _, token, _) = prefixed(df, nParts, sum(value.cast("long")), ord)
-    (runningSum(run, sumCol, value, ord), token)
-  }
-
-  /** Pass 2 of the prefix sums: each row's within-partition running sum
-    * plus the earlier partitions' offset. Null until the first non-null
-    * value in global order, then the sum of non-nulls so far — the
-    * window form's semantics, also across a partition whose value
-    * prefix is all null.
-    */
-  private def runningSum(run: DataFrame, sumCol: String, value: Column,
-                         ord: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    run
-      .withColumn("__psum", sum(value.cast("long")).over(w))
-      .withColumn(sumCol,
-        coalesce(col("__off") + col("__psum"), col("__off"), col("__psum")).cast("long"))
-      .drop("__pid", "__off", "__psum")
-  }
-
-  /** [[withGlobalPrefixSumTracked]] plus a SECOND driver-side statistic
-    * computed on the same pass-1 collect: `extra` is aggregated per
-    * partition and summed across partitions. Iterated callers (the
-    * suffix-array doubling loop) read their convergence statistic here
-    * instead of paying one more full-relation action per round.
-    */
-  def withGlobalPrefixSumAgg(df: DataFrame, sumCol: String, value: Column,
-                             nParts: Int, extra: Column, ord: Column*)
+  def withGlobalPrefixSumStaged(df: DataFrame, sumCol: String, value: Column, nParts: Int,
+                                extra: Option[Column], ord: Column*)
       : (DataFrame, Long, Checkpoints.Token) = {
-    val (run, _, token, x) = prefixed(df, nParts, sum(value.cast("long")), ord,
-      extra = Some(extra))
-    (runningSum(run, sumCol, value, ord), x, token)
+    val (out, _, token, x) =
+      twoPass(df, sumCol, nParts, sum(value.cast("long")), ord, extra = extra)
+    (out, x, token)
   }
 
   /** Add `maxCol` — the running max of `value` over STRICTLY PRECEDING
     * rows in global `ord` order (≡ `MAX(value) OVER (ORDER BY ord ROWS
     * BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)`; null on the global
-    * first row) — same two-pass shape. The exclusive form is the one
-    * interval coalescing (gaps-and-islands over sorted spans) needs:
-    * a row starts a new island iff its start exceeds every EARLIER
-    * row's end.
+    * first row) — the two-pass at `nParts` range partitions. The
+    * exclusive form is the one interval coalescing (gaps-and-islands
+    * over sorted spans) needs: a row starts a new island iff its start
+    * exceeds every EARLIER row's end.
     */
   def withGlobalPrefixMaxExcl(df: DataFrame, maxCol: String, value: Column,
-                              nParts: Int, ord: Column*): DataFrame = {
-    val (run, _, _, _) = prefixed(df, nParts, max(value.cast("long")), ord,
-      combine = math.max)
-    val w = Window.partitionBy(col("__pid")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
+                              nParts: Int, ord: Column*): DataFrame =
     // greatest skips nulls: null only when neither this partition's
     // preceding rows nor any earlier partition carried a value
-    run
-      .withColumn("__pmax", max(value.cast("long")).over(w))
-      .withColumn(maxCol, greatest(col("__pmax"), col("__off")))
-      .drop("__pid", "__off", "__pmax")
-  }
+    twoPass(df, maxCol, nParts, max(value.cast("long")), ord, frameEnd = -1L,
+      merge = (off, p) => greatest(p, off), combine = math.max)._1
 }

@@ -31,14 +31,9 @@ object Scans {
     * frames simply never spread — conservative in exactly the safe
     * direction.
     */
-  def spreadSmall(df: DataFrame, key: Column*): DataFrame = {
-    val conf = df.sparkSession.sessionState.conf
-    val small = try {
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(conf.filesMaxPartitionBytes)
-    } catch { case scala.util.control.NonFatal(_) => false }
-    if (small) df.repartition(conf.numShufflePartitions, key: _*) else df
-  }
+  def spreadSmall(df: DataFrame, key: Column*): DataFrame =
+    if (statsBlind(df)) df
+    else df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, key: _*)
 
   /** True when the optimizer can NOT prove `df` small (one scan
     * split): eagerly checkpointed frames (LogicalRDD reports the
@@ -78,6 +73,17 @@ object Scans {
     val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val heap = Runtime.getRuntime.maxMemory
     (if (cap > 0L) math.min(cap, heap) else heap) / 8L
+  }
+
+  /** Runs `body` with a setter for this thread's Spark job description,
+    * then restores the caller's. Operators name their jobs through it
+    * (`<operator>: path=… bound=…`), so an event log ties each job to
+    * the operator and the path that launched it.
+    */
+  def labelled[T](spark: SparkSession)(body: (String => Unit) => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    try body(d => sc.setJobDescription(d)) finally sc.setJobDescription(prev)
   }
 
   /** Characters charged for each string value by [[rowBytes]]: a POS

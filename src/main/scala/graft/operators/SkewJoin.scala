@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation join: salt the skewed (large) side, replicate the
@@ -32,22 +32,4 @@ object SkewJoin {
       "__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-phase (partial → final) aggregation for skewed group keys:
-    * pre-aggregate on (key, salt), then merge per key. For algebraic
-    * aggregates Spark's own map-side combine already does this; the
-    * helper exists for aggregations that must bound per-task state
-    * (e.g. collect_list on a hot key).
-    */
-  def saltedCollectList(
-      df: DataFrame,
-      key: String,
-      valueCol: String,
-      saltSource: Seq[String],
-      saltBuckets: Int): DataFrame =
-    df.withColumn("__salt", pmod(hash(saltSource.map(col): _*), lit(saltBuckets)))
-      .groupBy(col(key), col("__salt"))
-      .agg(collect_list(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(flatten(collect_list(col("__partial"))).as(s"${valueCol}_list"))
 }

@@ -57,11 +57,10 @@ object Pipeline {
         val batch = new Observation()
         val fresh = Receipts.newerThan(Receipts.fromPages(spark, Seq(body)), lastTs)
           .observe(batch, count(lit(1)).as("rows"), max(col("updated_at")).as("wm"))
-        val sc = spark.sparkContext
-        val prevDesc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"Pipeline.dailyRun: append ${cfg.lakeRoot}")
-        try Lake.appendIncrement(Transform.run(fresh), cfg.lakeRoot)
-        finally sc.setJobDescription(prevDesc)
+        graft.operators.Scans.labelled(spark) { label =>
+          label(s"Pipeline.dailyRun: append ${cfg.lakeRoot}")
+          Lake.appendIncrement(Transform.run(fresh), cfg.lakeRoot)
+        }
         // Observed metrics reach the driver through the listener bus,
         // after the write has returned.
         val seen =

@@ -38,15 +38,6 @@ object Reports {
       case _ => "(new)" // reference `monthly_report.py:548-551`
     }
 
-  /** Runs `body` with a setter for this thread's job description, then
-    * restores the caller's.
-    */
-  private def labelled[T](spark: SparkSession)(body: (String => Unit) => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    try body(d => sc.setJobDescription(d)) finally sc.setJobDescription(prev)
-  }
-
   /** The rows of `slice` when `rows × rowBytes(schema)` fits `budget`,
     * from one [[Scans.collectAtMost]] probe of `budget / rowBytes` rows
     * (no size job). Labels the probe, then the path it decides.
@@ -126,7 +117,7 @@ object Reports {
     */
   private[pos] def monthlyWithin(spark: SparkSession, lakeRoot: String, reportMonth: String,
       comparisonMonth: String, chartDir: Option[String], budget: Long): (String, String) =
-    labelled(spark) { label =>
+    Scans.labelled(spark) { label =>
       val slice = monthlySlice(spark, lakeRoot, reportMonth, comparisonMonth)
       collectWithin("Reports.monthly", slice, budget, label) match {
         case Some(rows) =>
@@ -261,7 +252,7 @@ object Reports {
     */
   private[pos] def cumulativeWithin(spark: SparkSession, lakeRoot: String,
       budget: Long): (String, String) =
-    labelled(spark) { label =>
+    Scans.labelled(spark) { label =>
       collectWithin("Reports.cumulative", cumulativeSlice(spark, lakeRoot), budget, label) match {
         case Some(rows) => (cumulativeOnDriver(spark, rows), "driver")
         case None => (cumulativeDistributed(spark, lakeRoot), "distributed")

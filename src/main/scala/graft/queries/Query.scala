@@ -15,6 +15,4 @@ final case class Query(
 object Query {
   def apply(name: String, sql: String)(build: (SparkSession, String) => DataFrame): Query =
     Query(name, build, Some(sql))
-  def rowsOnly(name: String)(build: (SparkSession, String) => DataFrame): Query =
-    Query(name, build, None)
 }

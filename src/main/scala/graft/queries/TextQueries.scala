@@ -1283,8 +1283,8 @@ object TextQueries {
     import spark.implicits._
     val docs = documents(spark, d)
     // The gram explode multiplies per-row work by ~tokens-per-doc inside
-    // what is otherwise a single scan split (JobProfile r18: one 0.76 s
-    // single-task job) — spread the split token arrays first
+    // what is otherwise a single scan split (OPTIMIZATION_r18.md §11:
+    // one 0.76 s single-task job) — spread the split token arrays first
     // (Scans.spreadSmall: no-op at real scale; guide §2.5). Split BELOW
     // the exchange, same CollapseProject trap as NgramLm.contexts.
     def grams(n: Int) = graft.operators.Scans.spreadSmall(
@@ -2131,7 +2131,7 @@ object TextQueries {
     * twin): global 0-based sequence by `doc_id`, `shard = seq % 8`,
     * `pos_in_shard = seq / 8` — t37's layout semantics at ingestion
     * time, where the arrival sequence plays the salted-md5 rank's
-    * role. Rides the two-pass `GlobalRank.withGlobalRankCounted`.
+    * role. Rides [[graft.operators.GlobalRank.withGlobalRank]].
     */
   val shardDealOnline = Query(
     "t38_shard_deal_online",
@@ -2433,7 +2433,7 @@ object TextQueries {
     val trows = enc.select($"doc_id", posexplode($"tokens").as(Seq("pos0", "tok")))
       .select($"doc_id", ($"pos0" + 1L).as("pos"), $"tok")
     val dict = graft.operators.GlobalRank.withGlobalRank(
-      trows.select($"tok").distinct(), "code", nParts = 4, col("tok"))
+      trows.select($"tok").distinct(), "code", col("tok"))._1
     trows.join(dict, Seq("tok")).select($"doc_id", $"pos", $"code")
   }
 
@@ -2906,7 +2906,7 @@ object TextQueries {
       tokenCount($"text").cast("long").as("n_tokens"),
       md5(concat(lit("shard1:"), $"doc_id".cast("string"))).as("ord"))
     graft.operators.GlobalRank
-      .withGlobalRank(ordd, "rk1", nParts = 32, col("ord"), col("doc_id"))
+      .withGlobalRank(ordd, "rk1", col("ord"), col("doc_id"))._1
       .select($"doc_id", $"n_tokens",
         (($"rk1" - 1) % 8).as("shard"),
         (($"rk1" - 1) / 8).cast("long").as("pos_in_shard"))

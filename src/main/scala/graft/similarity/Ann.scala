@@ -1085,8 +1085,8 @@ object Ann {
 
   def hnswRanks(corpus: DataFrame, idCol: String, salt: String = "hnsw"): DataFrame =
     graft.operators.GlobalRank.withGlobalRank(
-      corpus.select(col(idCol), hnswHash(col(idCol), salt).as("__h")), "hrank", 32,
-      col("__h"), col(idCol))
+      corpus.select(col(idCol), hnswHash(col(idCol), salt).as("__h")), "hrank",
+      col("__h"), col(idCol))._1
       .select(col(idCol), col("hrank"))
 
   /** Members of layer `layer` (≥ 1): `max(2, ceil(n / fanout^layer))`. */

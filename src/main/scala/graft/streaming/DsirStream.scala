@@ -44,11 +44,12 @@ import graft.text.NgramLm
   * Budget state is ONE ROW PER BATCH (the batch's ratio-passing token
   * total), partitioned by batch and claimed with INSERT OVERWRITE —
   * byte-idempotent crash replay, and the running cut inside a batch
-  * is the two-pass [[graft.operators.GlobalRank.withGlobalPrefixSum]]
-  * (no single-partition window anywhere). The LM table follows the
-  * [[StateTables]] discipline (partition `batch=0`, idempotent
-  * refreeze, MSCK re-adoption across JVMs), with an `lm` discriminator
-  * column distinguishing target (0) from raw (1).
+  * is [[graft.operators.GlobalRank.withGlobalPrefixSum]] (a driver
+  * finish under its bound, the two-pass over it: no single-partition
+  * window anywhere). The LM table follows the [[StateTables]]
+  * discipline (partition `batch=0`, idempotent refreeze, MSCK
+  * re-adoption across JVMs), with an `lm` discriminator column
+  * distinguishing target (0) from raw (1).
   */
 object DsirStream {
 
@@ -56,9 +57,6 @@ object DsirStream {
     StructField("doc_id", LongType),
     StructField("source", StringType),
     StructField("text", StringType)))
-
-  private def rankParts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Train both LMs on the reference pool (target = `targetSource`
     * slice, raw = the whole pool) and freeze them into `lmTable` under
@@ -125,8 +123,7 @@ object DsirStream {
         (col("score_raw_micro") - col("score_tgt_micro")).cast("long"))
     val pass = scored.filter(col("logratio_micro") >= minLogratioMicro)
     val cum = graft.operators.GlobalRank
-      .withGlobalPrefixSum(pass, "batch_cum", col("n_toks"), rankParts(pass),
-        col("doc_id"))
+      .withGlobalPrefixSum(pass, "batch_cum", col("n_toks"), col("doc_id"))
       .select(col("doc_id"), (col("batch_cum") + baseToks).as("cum_toks"))
     scored
       .join(cum, Seq("doc_id"), "left_outer")

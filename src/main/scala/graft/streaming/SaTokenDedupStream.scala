@@ -141,7 +141,7 @@ object SaTokenDedupStream {
     // token ids by lexicographic rank of the token string (the sa5/sa6
     // dict discipline; sepCode = 0 stays below every rank)
     val dict = graft.operators.GlobalRank.withGlobalRank(
-      trows.select(col("tok")).distinct(), "code", nParts = 4, col("tok"))
+      trows.select(col("tok")).distinct(), "code", col("tok"))._1
     val rows = trows.join(dict, Seq("tok"))
       .select(col("doc_id"), col("pos"), col("code"))
     val kept = SuffixArray.removeDuplicatedTokenSpans(

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * preserves the layout's balance property (shard sizes never differ
   * by more than one, pinned in `ShardStreamSpec`).
   *
-  * The deal rides the same TWO-PASS shape as t37's rank
-  * ([[graft.operators.GlobalRank.withGlobalRankCounted]] within the
+  * The deal rides the same global rank as t37
+  * ([[graft.operators.GlobalRank.withGlobalRank]] within the
   * micro-batch — no single-partition window) plus ONE broadcast base:
   * the global sequence number is `docs dealt in prior batches` +
   * `within-batch rank`, so state is ONE ROW PER BATCH (that batch's
@@ -40,9 +40,6 @@ object ShardStream {
     StructField("source", StringType),
     StructField("text", StringType)))
 
-  private def rankParts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
   /** The one deal definition both twins answer: global 0-based
     * sequence by `doc_id` (arrival) order, `shard = seq % numShards`,
     * `pos_in_shard = seq / numShards`.
@@ -55,7 +52,7 @@ object ShardStream {
     val toks = docs.select(col("doc_id"), col("source"),
       graft.functions.Exprs.tokenCount(col("text")).cast("long").as("n_tokens"))
     val (ranked, total) = graft.operators.GlobalRank
-      .withGlobalRankCounted(toks, "__rk", rankParts(toks), col("doc_id"))
+      .withGlobalRank(toks, "__rk", col("doc_id"))
     val seq = col("__rk") - 1 + baseSeq
     (ranked.select(
       col("doc_id"), col("source"), col("n_tokens"),

@@ -36,13 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object NgramLm {
 
-  /** Range partitions for the two-pass global cuts — the doc-score
-    * relation is doc-granular (tiny vs the corpus), so the session
-    * shuffle-partition count is the right parallelism at every scale.
-    */
-  private def rankParts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
   /** Trained trigram LM: count tables plus corpus scalars. The three
     * DataFrames are vocab-bounded (broadcast-sized by construction).
     */
@@ -266,7 +259,7 @@ object NgramLm {
     // partition + broadcast offsets, `operators/GlobalRank`) — no
     // single-partition window; `NgramLmSpec` pins it ≡ the window form.
     graft.operators.GlobalRank
-      .withGlobalPrefixSum(weighted, "cum_toks", col("n_toks"), rankParts(weighted),
+      .withGlobalPrefixSum(weighted, "cum_toks", col("n_toks"),
         col("logratio_micro").desc, col("doc_id"))
       .withColumn("kept", when(col("cum_toks") <= budgetToks, 1L).otherwise(0L))
   }
@@ -284,7 +277,7 @@ object NgramLm {
     // — exactly NTILE(3) semantics, no single-partition window;
     // `NgramLmSpec` pins it ≡ the window form).
     graft.operators.GlobalRank
-      .withGlobalNtile(perDoc, "ppl_bucket", 3, rankParts(perDoc),
+      .withGlobalNtile(perDoc, "ppl_bucket", 3,
         col("score_micro").cast("double") / col("n_toks"), col("doc_id"))
       .select(
         col("doc_id"), col("n_toks"), col("n_tri"), col("n_bi"), col("n_uni"),

@@ -163,7 +163,7 @@ object SuffixArray {
   /** Global addressing: `(doc_id, pos, gid, code)` for every sequence
     * element plus one SEP row per document at `pos = n + 1` (empty
     * documents still contribute their SEP). Offsets ride
-    * [[graft.operators.GlobalRank.withGlobalPrefixSum]] over the
+    * [[graft.operators.GlobalRank.withGlobalPrefixSumStaged]] over the
     * |docs|-granular length relation.
     */
   private def addressedRows(ids: DataFrame, rows: DataFrame, idCol: String,
@@ -171,14 +171,14 @@ object SuffixArray {
     val lens = ids.select(col(idCol).cast("long"))
       .join(rows.groupBy(col(idCol)).agg(max(col("pos")).as("n")), Seq(idCol), "left_outer")
       .select(col(idCol), coalesce(col("n"), lit(0L)).as("n"))
-    // Tracked = the pure two-pass, NOT the r18 driver finish: the
+    // Staged = the pure two-pass, NOT the r18 driver finish: the
     // local-relation offsets changed broadcast choices deep in the
     // build's join tree (measured +0.4–0.9 s on sa1 — 10+ task-sec
     // broadcast-build jobs appeared); the checkpoint-backed run keeps
     // the build's plan shape. One-shot call: token left to the
     // ContextCleaner, exactly the pre-r18 behavior.
     val offs = GlobalRank
-      .withGlobalPrefixSumTracked(lens, "cum", col("n") + 1, parts(lens), col(idCol))
+      .withGlobalPrefixSumStaged(lens, "cum", col("n") + 1, parts(lens), None, col(idCol))
       ._1
       .select(col(idCol), (col("cum") - col("n") - 1).as("off"), col("n"))
     val text = rows.join(offs.select(col(idCol), col("off")), Seq(idCol))
@@ -440,9 +440,9 @@ object SuffixArray {
           // round's live population (previously a separate |D|-row
           // action), and the ranked-pair relation is consumed exactly
           // once (the join-back), so it needs no checkpoint of its own.
-          val (cum, act0, tok) = GlobalRank.withGlobalPrefixSumAgg(
+          val (cum, act0, tok) = GlobalRank.withGlobalPrefixSumStaged(
             d, "cum", col("c"), np,
-            sum(when(col("c") > 1L, col("c")).otherwise(lit(0L))),
+            Some(sum(when(col("c") > 1L, col("c")).otherwise(lit(0L)))),
             col("r1"), col("r2"))
           // gpair = competition rank of the pair's positions over the
           // live rows; minG = the group's first such rank, so the
@@ -758,8 +758,7 @@ object SuffixArray {
       col("lo"), col("hi"))
     val flagged = pm.withColumn("__st",
       when(col("pmax").isNull || col("lo") > col("pmax"), 1L).otherwise(0L))
-    GlobalRank.withGlobalPrefixSum(flagged, "__isl", col("__st"), np,
-      col("lo"), col("hi"))
+    GlobalRank.withGlobalPrefixSum(flagged, "__isl", col("__st"), col("lo"), col("hi"))
       .groupBy(col("__isl"))
       .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"))
       .drop("__isl")
@@ -831,11 +830,9 @@ object SuffixArray {
   private[text] def removeDuplicatedSpansWithin(
       docs: DataFrame, idCol: String, textCol: String, minLen: Long,
       maxRounds: Int, budget: Long): (DataFrame, String) = {
-    val sc = docs.sparkSession.sparkContext
     val op = "SuffixArray.removeDuplicatedSpans"
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    try {
-      sc.setJobDescription(s"$op: size job, bound=$budget B")
+    Scans.labelled(docs.sparkSession) { describe =>
+      describe(s"$op: size job, bound=$budget B")
       val size = docs.agg(positionCount(textCol),
         coalesce(sum(octet_length(col(textCol)).cast("long")), lit(0L))).head()
       val positions = size.getLong(0)
@@ -843,8 +840,7 @@ object SuffixArray {
       // The driver build runs to convergence; take it only where the
       // doubling's round cap cannot stop the distributed build short.
       val converges = maxRounds >= 62 || (1L << maxRounds) >= positions
-      def label(path: String): Unit =
-        sc.setJobDescription(s"$op: path=$path bytes=$bytes bound=$budget B")
+      def label(path: String): Unit = describe(s"$op: path=$path bytes=$bytes bound=$budget B")
       val onDriver =
         if (bytes <= budget && positions < Int.MaxValue && converges) {
           label("driver")
@@ -859,7 +855,7 @@ object SuffixArray {
             .select(col(idCol), col("pos"), col("gid")),
           minLen, rankParts(ix.addr, ix.total)), "distributed")
       }
-    } finally sc.setJobDescription(prevDesc)
+    }
   }
 
   /** The in-memory twin of the distributed chain: collect `(id, text)`

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Round-17 optimization harness: per-gate wall, Spark JOB count and
@@ -14,8 +16,12 @@ import org.apache.spark.sql.SparkSession
   * reduction IS the optimization lever for the multi-action chains
   * (and fewer barriers is the same win on a cluster).
   *
+  * Each rep first prints one line per Spark job it ran — wall, summed
+  * task time, the job description and the job's stage names — so a
+  * multi-action gate's cost can be pinned to the action that pays it,
+  * then the rep's per-gate JSON line. Rep 0 is the cold run.
+  *
   * Usage: runMain graft.tools.GateProfile <sfDir> <reps> <gate> [gate ...]
-  *        (gate "top30" = the 30 most expensive gates of BENCH_sf01_r17)
   */
 object GateProfile {
   def main(args: Array[String]): Unit = {
@@ -39,15 +45,36 @@ object GateProfile {
     val shufR = new java.util.concurrent.atomic.AtomicLong
     val shufW = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong
+    case class J(start: Long, desc: String, stages: Seq[Int])
+    val live = new ConcurrentHashMap[Int, J]()
+    val stageTask = new ConcurrentHashMap[Int, Long]()
+    val stageName = new ConcurrentHashMap[Int, String]()
+    val jobLines = new ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        live.put(j.jobId, J(System.nanoTime(),
+          Option(j.properties.getProperty("spark.job.description")).getOrElse(""),
+          j.stageIds.map(_.toInt)))
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val m = s.stageInfo.taskMetrics
         if (m != null) {
           shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
           shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           taskMs.addAndGet(m.executorRunTime)
+          stageTask.put(s.stageInfo.stageId, m.executorRunTime)
+        }
+        stageName.put(s.stageInfo.stageId, s.stageInfo.name.takeWhile(_ != '\n').take(80))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        val j = live.remove(e.jobId)
+        if (j != null) {
+          val wall = (System.nanoTime() - j.start) / 1e9
+          val task = j.stages.map(sid => stageTask.getOrDefault(sid, 0L)).sum / 1e3
+          val names = j.stages.flatMap(sid => Option(stageName.get(sid)))
+            .distinct.mkString("; ").replace("\"", "'")
+          jobLines.add(f"""{"job":${e.jobId},"wall":$wall%.3f,"task_sec":$task%.2f,"desc":"${j.desc.replace("\"", "'")}","stages":"$names"}""")
         }
       }
     })
@@ -79,7 +106,7 @@ object GateProfile {
 
     def one(name: String, rep: Int): Unit = {
       val fn = graft.SparkEntry.queries(name)
-      jobs.set(0); shufR.set(0); shufW.set(0); taskMs.set(0)
+      jobs.set(0); shufR.set(0); shufW.set(0); taskMs.set(0); jobLines.clear()
       spark.sparkContext.setJobDescription(s"profile:$name rep=$rep")
       val s = System.nanoTime()
       val n = try fn(spark, sfDir).count()
@@ -87,6 +114,7 @@ object GateProfile {
           System.err.println(s"[profile] $name FAILED: ${e.getMessage}"); -1L }
       val sec = (System.nanoTime() - s) / 1e9
       Thread.sleep(400) // listener drain
+      jobLines.forEach(l => println(l))
       println(f"""{"gate":"$name","rep":$rep,"sec":$sec%.3f,"jobs":${jobs.get},"shuffle_read_mb":${shufR.get / 1e6}%.1f,"shuffle_write_mb":${shufW.get / 1e6}%.1f,"task_sec":${taskMs.get / 1e3}%.1f,"rows":$n}""")
     }
 

@@ -43,12 +43,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object GraftCheckpointShim {
 
-  /** [[localCheckpointFreshStatsTracked]] discarding the RDD id. */
-  def localCheckpointFreshStats(df: DataFrame,
-                                diskOnly: Boolean = false,
-                                keepPartitioning: Boolean = false): DataFrame =
-    localCheckpointFreshStatsTracked(df, diskOnly, keepPartitioning)._1
-
   /** Lazily checkpoint `df` at the RDD level with fresh leaf stats;
     * the caller materializes (first action) and owns the blocks. Also
     * returns the persisted internal RDD's id — the EXACT handle
