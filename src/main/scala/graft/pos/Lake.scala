@@ -1,55 +1,73 @@
 package graft.pos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** K4/K5 — the partitioned parquet lake (reference `etl/load.py:52-224`).
+/** K4/K5 — the partitioned parquet lake (reference `etl/load.py:52-224`),
+  * and the one place that decides how it is laid out on disk: every
+  * writer of the lake, batch or stream, goes through this object.
   *
   * Layout: Hive-style `year=YYYY/month=MM` derived from `shifted_time` —
   * partition pruning makes the monthly report's two-partition read free
-  * (reference relies on Athena for the same).
+  * (reference relies on Athena for the same). Each curated column is
+  * cast to its [[Schemas.curated]] type, and every page is compressed
+  * with [[codec]], set on each writer rather than read from the
+  * session's `spark.sql.parquet.compression.codec`. The reference's
+  * pandas/PyArrow writer uses snappy; zstd stores the same values in
+  * fewer bytes, and parquet records the codec per column chunk, so a
+  * lake whose older files are snappy reads the same.
   *
-  * Write modes mirror the reference exactly (SURVEY §2.2 K5):
+  * The write modes still mirror the reference exactly (SURVEY §2.2 K5);
+  * the codec above is the one part of the layout that does not:
   *   - [[writeFull]]       — K4 full overwrite (historical load).
   *   - [[appendIncrement]] — K5's ACTUAL behavior: append-only new rows,
   *     duplicates tolerated, exactly-once restored read-side by
-  *     [[Analytics.dedupLatest]] (V1).
+  *     [[Analytics.dedupLatest]] (V1). [[appendStream]] is its
+  *     streaming form.
   *   - [[compactTo]]       — K5's INTENDED behavior as a maintenance job:
-  *     dedup + rewrite with dynamic partition overwrite.
+  *     dedup + rewrite with dynamic partition overwrite, through
+  *     [[overwriteMonths]], which the streaming merge shares.
   *
   * At scale: `partitionBy(year, month)` gives writers one directory per
   * month, and each write task opens one file per month it touches.
-  * [[writeFull]] and [[compactTo]] read many partitions that each span
-  * many months, so they repartition on the partition keys first to
-  * avoid the many-small-files explosion (each of N tasks writing M
-  * months). [[appendIncrement]] takes its input's partitioning as it is.
+  * [[writeFull]] and [[overwriteMonths]] write frames of many partitions
+  * that each span many months, so they repartition on the partition
+  * keys first to avoid the many-small-files explosion (each of N tasks
+  * writing M months). [[appendIncrement]] takes its input's
+  * partitioning as it is.
   */
 object Lake {
 
-  def withPartitionKeys(df: DataFrame): DataFrame =
-    df.withColumn("year", date_format(col("shifted_time"), "yyyy"))
-      .withColumn("month", date_format(col("shifted_time"), "MM"))
+  /** Parquet page codec of every lake file. */
+  private val codec = "zstd"
 
-  /** The curated columns, each cast to its [[Schemas.curated]] type (a
-    * no-op on a correctly typed frame; a null-typed or int-typed column
-    * would otherwise land in parquet as BOOLEAN or INT32 and break every
-    * later read of the lake), then the partition keys.
+  /** Each curated column cast to its [[Schemas.curated]] type (a no-op
+    * on a correctly typed frame; a null-typed or int-typed column would
+    * otherwise land in parquet as BOOLEAN or INT32 and break every later
+    * read of the lake), then the partition keys as they are.
     */
-  private def prepared(df: DataFrame): DataFrame = {
-    val cols = Schemas.curated.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
-      Schemas.partitionKeys.map(col)
-    withPartitionKeys(df).select(cols: _*)
-  }
+  private def laidOut(df: DataFrame): DataFrame =
+    df.select(Schemas.curated.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
+      Schemas.partitionKeys.map(col): _*)
+
+  /** Curated rows as the lake stores them: the curated columns, cast,
+    * then `year`/`month` derived from `shifted_time`.
+    */
+  def prepared(df: DataFrame): DataFrame =
+    laidOut(df
+      .withColumn("year", date_format(col("shifted_time"), "yyyy"))
+      .withColumn("month", date_format(col("shifted_time"), "MM")))
+
+  private def writer(rows: DataFrame): DataFrameWriter[Row] =
+    rows.write.partitionBy(Schemas.partitionKeys: _*).option("compression", codec)
 
   /** K4 — schema-enforced full write, one directory per month. */
   def writeFull(df: DataFrame, root: String): Unit =
-    prepared(df)
-      // One writer task per month-partition (reference writes one
-      // data.parquet per month, load.py:99-103); at 100 TB this becomes
-      // repartition(year, month, <salt>) to bound file size instead.
-      .repartition(col("year"), col("month"))
-      .write
-      .partitionBy(Schemas.partitionKeys: _*)
+    // One writer task per month-partition (reference writes one
+    // data.parquet per month, load.py:99-103); at 100 TB this becomes
+    // repartition(year, month, <salt>) to bound file size instead.
+    writer(prepared(df).repartition(col("year"), col("month")))
       .mode("overwrite")
       .parquet(root)
 
@@ -64,9 +82,28 @@ object Lake {
     * of many partitions should repartition it by month first.
     */
   def appendIncrement(newRows: DataFrame, root: String): Unit =
-    prepared(newRows).write
+    writer(prepared(newRows)).mode("append").parquet(root)
+
+  /** K5(a) on a stream: the append sink for curated streaming rows, in
+    * the lake's layout. The caller sets the checkpoint and the trigger
+    * and starts it.
+    */
+  def appendStream(newRows: DataFrame, root: String): DataStreamWriter[Row] =
+    prepared(newRows).writeStream
+      .format("parquet")
+      .option("path", root)
+      .option("compression", codec)
       .partitionBy(Schemas.partitionKeys: _*)
-      .mode("append")
+      .outputMode("append")
+
+  /** Rewrites exactly the months present in `rows` (lake rows, as
+    * [[read]] or [[prepared]] gives them, keys included) via dynamic
+    * partition overwrite; every other month's files stay untouched.
+    */
+  def overwriteMonths(rows: DataFrame, root: String): Unit =
+    writer(laidOut(rows).repartition(col("year"), col("month")))
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(root)
 
   /** Reads with an explicit schema so the Hive partition VALUES stay
@@ -117,11 +154,5 @@ object Lake {
     * deduplicated, via dynamic partition overwrite.
     */
   def compactTo(spark: SparkSession, sourceRoot: String, targetRoot: String): Unit =
-    Analytics.dedupLatest(read(spark, sourceRoot))
-      .repartition(col("year"), col("month"))
-      .write
-      .partitionBy(Schemas.partitionKeys: _*)
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(targetRoot)
+    overwriteMonths(Analytics.dedupLatest(read(spark, sourceRoot)), targetRoot)
 }

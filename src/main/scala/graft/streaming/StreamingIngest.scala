@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.pos.{Schemas, Transform}
+import graft.pos.{Analytics, Lake, Schemas, Transform}
 
 /** §2.12 — the reference's incremental contract re-platformed on
   * Structured Streaming: a replayable raw-zone drop directory (JSONL
@@ -66,15 +66,9 @@ object StreamingIngest {
     val raw = rawStreamWithCorrupt(spark, dropDir)
     val good = Transform.run(
       raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record"))
-      .withColumn("year", date_format(col("shifted_time"), "yyyy"))
-      .withColumn("month", date_format(col("shifted_time"), "MM"))
-    val lakeQ = good.writeStream
-      .format("parquet")
-      .option("path", lakeRoot)
+    val lakeQ = Lake.appendStream(good, lakeRoot)
       .option("checkpointLocation", s"$checkpointRoot/lake")
-      .partitionBy(Schemas.partitionKeys: _*)
       .trigger(Trigger.AvailableNow())
-      .outputMode("append")
       .start()
     // Spark rejects queries referencing ONLY _corrupt_record from a raw
     // JSON source — project a real column alongside it.
@@ -92,26 +86,19 @@ object StreamingIngest {
   }
 
   /** Curated append stream into the partitioned lake: raw → flatten →
-    * homogenize → time slots → partitioned parquet, exactly-once via the
-    * checkpoint (file-source offsets + file-sink log).
+    * homogenize → time slots → the lake's layout ([[Lake.appendStream]]),
+    * exactly-once via the checkpoint (file-source offsets + file-sink
+    * log).
     */
   def toLake(
       spark: SparkSession,
       dropDir: String,
       lakeRoot: String,
-      checkpoint: String): StreamingQuery = {
-    val curated = Transform.run(rawStream(spark, dropDir))
-      .withColumn("year", date_format(col("shifted_time"), "yyyy"))
-      .withColumn("month", date_format(col("shifted_time"), "MM"))
-    curated.writeStream
-      .format("parquet")
-      .option("path", lakeRoot)
+      checkpoint: String): StreamingQuery =
+    Lake.appendStream(Transform.run(rawStream(spark, dropDir)), lakeRoot)
       .option("checkpointLocation", checkpoint)
-      .partitionBy(Schemas.partitionKeys: _*)
       .trigger(Trigger.AvailableNow())
-      .outputMode("append")
       .start()
-  }
 
   /** Continuous merge-upsert into the lake via foreachBatch — the
     * streaming form of the K5(b) compaction: each micro-batch is
@@ -132,9 +119,7 @@ object StreamingIngest {
       lakeRoot: String,
       checkpoint: String,
       maxFilesPerTrigger: Int = 100): StreamingQuery = {
-    val curated = Transform.run(rawStream(spark, dropDir, maxFilesPerTrigger))
-      .withColumn("year", date_format(col("shifted_time"), "yyyy"))
-      .withColumn("month", date_format(col("shifted_time"), "MM"))
+    val curated = Lake.prepared(Transform.run(rawStream(spark, dropDir, maxFilesPerTrigger)))
     curated.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         val ss = batch.sparkSession
@@ -143,7 +128,7 @@ object StreamingIngest {
           if (!lakeExists) batch
           else {
             val affected = batch.select("year", "month").distinct()
-            val existing = graft.pos.Lake.read(ss, lakeRoot)
+            val existing = Lake.read(ss, lakeRoot)
               .join(broadcast(affected), Seq("year", "month"), "left_semi")
               .localCheckpoint(true)
             batch.unionByName(existing)
@@ -155,15 +140,9 @@ object StreamingIngest {
         // byte-identical-replay contract across Spark versions. The
         // agg form pre-reduces duplicates map-side before the
         // exchange — the right shape when a batch replays old months.
-        graft.pos.Analytics.dedupLatestAgg(
-          combined,
-          Seq(col("price"), coalesce(col("modifiers"), lit(""))))
-          .repartition(col("year"), col("month"))
-          .write
-          .partitionBy(graft.pos.Schemas.partitionKeys: _*)
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(lakeRoot)
+        Lake.overwriteMonths(
+          Analytics.dedupLatestAgg(combined, Seq(col("price"), coalesce(col("modifiers"), lit("")))),
+          lakeRoot)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -1,9 +1,17 @@
 package graft.pos
 
 import graft.SparkSpec
-import java.nio.file.Files
+import graft.streaming.{StreamingIngest, StreamingSpec}
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import java.time.Instant
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Lake write/append/dedup/compact + watermark state contract. */
 class LakeStateSpec extends SparkSpec {
@@ -78,8 +86,106 @@ class LakeStateSpec extends SparkSpec {
     assert(modeBefore === None)
   }
 
+  /** One lake per writer of the lake, each written by that writer alone
+    * (compaction's source excepted): the three batch writers and the
+    * three streaming sinks.
+    */
+  private lazy val lakeByWriter: Seq[(String, String)] = {
+    val dir = Files.createTempDirectory("lake_writers")
+    def root(name: String) = dir.resolve(name).toString
+    val rows = toDF(Seq(
+      curatedRow("r1", ts("2025-07-01 10:00:00"), "Burger", 100.0),
+      curatedRow("r2", ts("2025-08-02 11:00:00"), "Fries", 50.0)))
+    Lake.writeFull(rows, root("writeFull"))
+    Lake.appendIncrement(rows, root("appendIncrement"))
+    Lake.compactTo(spark, root("writeFull"), root("compactTo"))
+
+    val drop = dir.resolve("drop"); Files.createDirectories(drop)
+    Files.writeString(drop.resolve("b1.jsonl"), Seq(
+      StreamingSpec.receiptLine("r1", "2025-07-01T10:00:00Z", "Burger", 100.0),
+      StreamingSpec.receiptLine("r2", "2025-08-02T11:00:00Z", "Fries", 50.0)).mkString("", "\n", "\n"))
+    def ckpt(name: String) = dir.resolve(s"ckpt_$name").toString
+    StreamingIngest.toLake(spark, drop.toString, root("toLake"), ckpt("toLake"))
+      .awaitTermination(60000)
+    val (lakeQ, badQ) = StreamingIngest.toLakeWithQuarantine(spark, drop.toString,
+      root("toLakeWithQuarantine"), root("quarantine"), ckpt("toLakeWithQuarantine"))
+    lakeQ.awaitTermination(60000); badQ.awaitTermination(60000)
+    StreamingIngest.toLakeMerged(spark, drop.toString, root("toLakeMerged"), ckpt("toLakeMerged"))
+      .awaitTermination(60000)
+    Seq("writeFull", "appendIncrement", "compactTo", "toLake", "toLakeWithQuarantine",
+      "toLakeMerged").map(w => w -> root(w))
+  }
+
+  private def parquetFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Path.of(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    finally s.close()
+  }
+
+  /** The codec of every column chunk of one parquet file, from its footer. */
+  private def chunkCodecs(file: Path): Seq[CompressionCodecName] = {
+    val in = HadoopInputFile.fromPath(new HPath(file.toUri), spark.sparkContext.hadoopConfiguration)
+    val reader = ParquetFileReader.open(in)
+    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec))
+    finally reader.close()
+  }
+
+  test("K4/K5: every lake writer leaves only zstd column chunks") {
+    lakeByWriter.foreach { case (writer, root) =>
+      val files = parquetFiles(root)
+      assert(files.nonEmpty, writer)
+      files.foreach { f =>
+        val codecs = chunkCodecs(f)
+        assert(codecs.nonEmpty, s"$writer: $f")
+        assert(codecs.toSet === Set(CompressionCodecName.ZSTD), s"$writer: $f")
+      }
+    }
+  }
+
+  test("K4/K5: a lake with snappy history and zstd appends reads as the all-zstd lake") {
+    val history = toDF(Seq(
+      curatedRow("r1", ts("2025-06-10 10:00:00"), "Burger", 100.0),
+      curatedRow("r2", ts("2025-06-20 11:00:00"), "Fries", 50.0),
+      curatedRow("r3", ts("2025-07-01 09:00:00"), "Burger", 90.0),
+      curatedRow("r4", ts("2025-07-02 12:00:00"), "Soda", 20.0)))
+    val days = Seq(
+      toDF(Seq(
+        curatedRow("r3", ts("2025-07-01 13:00:00"), "Burger", 95.0), // a correction
+        curatedRow("r5", ts("2025-07-03 10:00:00"), "Fries", 45.0))),
+      toDF(Seq(
+        curatedRow("r5", ts("2025-07-03 10:00:00"), "Fries", 45.0), // a replayed day
+        curatedRow("r6", ts("2025-07-04 10:00:00"), "Burger", 80.0))))
+    val mixed = Files.createTempDirectory("lake_mixed").toString
+    // The layout writeFull gives, with the codec a lake written before
+    // zstd pages carries.
+    Lake.prepared(history).repartition(col("year"), col("month")).write
+      .partitionBy(Schemas.partitionKeys: _*)
+      .option("compression", "snappy")
+      .mode("overwrite")
+      .parquet(mixed)
+    val zstd = Files.createTempDirectory("lake_zstd").toString
+    Lake.writeFull(history, zstd)
+    days.foreach { d =>
+      Lake.appendIncrement(d, mixed)
+      Lake.appendIncrement(d, zstd)
+    }
+    assert(parquetFiles(mixed).flatMap(chunkCodecs).toSet ===
+      Set(CompressionCodecName.SNAPPY, CompressionCodecName.ZSTD))
+
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    assert(sorted(Lake.dedupView(spark, mixed)) === sorted(Lake.dedupView(spark, zstd)))
+    assert(sorted(Lake.dedupView(spark, mixed)).size === 6)
+    val md = Reports.monthly(spark, mixed, "2025-07", "2025-06")
+    assert(md === Reports.monthly(spark, zstd, "2025-07", "2025-06"))
+    assert(md.contains("| Receipts | 4 |"))
+    val (mixedOut, zstdOut) = (s"$mixed-compacted", s"$zstd-compacted")
+    Lake.compactTo(spark, mixed, mixedOut)
+    Lake.compactTo(spark, zstd, zstdOut)
+    assert(sorted(Lake.read(spark, mixedOut)) === sorted(Lake.read(spark, zstdOut)))
+    assert(Lake.read(spark, mixedOut).count() === 6)
+  }
+
   test("K4/K5: lake writes cast each column to its curated type") {
-    import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lake_types").toString
     // modifiers null-typed (lands as BOOLEAN uncast), price int-typed
     val loose = toDF(Seq(curatedRow("r1", ts("2025-07-01 10:00:00"), "Burger", 100.0)))
@@ -94,6 +200,13 @@ class LakeStateSpec extends SparkSpec {
     assert(Lake.read(spark, root).select(sum(col("price"))).head().getDouble(0) === 200.0)
     // the monthly report reads modifiers: it fails on a BOOLEAN column
     assert(Reports.monthly(spark, root, "2025-07", "2025-06").contains("| Receipts | 2 |"))
+    // the streaming sinks land the curated types too
+    lakeByWriter.filter(_._1.startsWith("toLake")).foreach { case (writer, lake) =>
+      val schema = spark.read.parquet(lake).schema
+      Schemas.curated.fields.foreach { f =>
+        assert(schema(f.name).dataType === f.dataType, s"$writer: ${f.name}")
+      }
+    }
   }
 
   test("P19: two-month read prunes partitions then dedups") {

@@ -9,8 +9,7 @@ import java.nio.file.Files
   */
 class StreamingSpec extends SparkSpec {
 
-  private def receiptLine(num: String, ts: String, item: String, price: Double): String =
-    s"""{"receipt_number":"$num","receipt_date":"$ts","created_at":"$ts","updated_at":"$ts","order":"Mesa 01","payments":[{"type":"CASH"}],"line_items":[{"item_name":"$item","cost":${price / 2},"price":$price,"total_money":$price,"line_modifiers":[]}]}"""
+  import StreamingSpec.receiptLine
 
   test("drop-dir → lake: AvailableNow micro-batch, checkpointed exactly-once, late files picked up") {
     val dir = Files.createTempDirectory("stream")
@@ -176,4 +175,11 @@ class StreamingSpec extends SparkSpec {
     Lake.writeFull(rows, dir)
     assert(Lake.latestWatermark(spark, dir) === Some("2025-08-02T09:30:00.000Z"))
   }
+}
+
+object StreamingSpec {
+
+  /** One raw receipt document as a JSONL line, with one line item. */
+  def receiptLine(num: String, ts: String, item: String, price: Double): String =
+    s"""{"receipt_number":"$num","receipt_date":"$ts","created_at":"$ts","updated_at":"$ts","order":"Mesa 01","payments":[{"type":"CASH"}],"line_items":[{"item_name":"$item","cost":${price / 2},"price":$price,"total_money":$price,"line_modifiers":[]}]}"""
 }
