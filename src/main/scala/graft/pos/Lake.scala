@@ -1,8 +1,12 @@
 package graft.pos
 
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** K4/K5 — the partitioned parquet lake (reference `etl/load.py:52-224`),
   * and the one place that decides how it is laid out on disk: every
@@ -11,15 +15,27 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Layout: Hive-style `year=YYYY/month=MM` derived from `shifted_time` —
   * partition pruning makes the monthly report's two-partition read free
   * (reference relies on Athena for the same). Each curated column is
-  * cast to its [[Schemas.curated]] type, and every page is compressed
-  * with [[codec]], set on each writer rather than read from the
-  * session's `spark.sql.parquet.compression.codec`. The reference's
-  * pandas/PyArrow writer uses snappy; zstd stores the same values in
-  * fewer bytes, and parquet records the codec per column chunk, so a
-  * lake whose older files are snappy reads the same.
+  * cast to its [[Schemas.curated]] type, and every writer carries the
+  * same page layout, [[pageLayout]], set on the writer rather than read
+  * from the session's parquet confs:
+  *   - pages are compressed with zstd;
+  *   - the receipt-level columns ([[Schemas.receiptLevel]]) are
+  *     plain-encoded: they are near-unique per receipt and repeat only
+  *     across one receipt's consecutive line items, runs that zstd packs
+  *     tighter than dictionary indices; the categorical columns keep
+  *     their dictionaries;
+  *   - no min/max column statistics (nor the column index built from
+  *     them) are written: every reader of the lake prunes on the
+  *     `year=/month=` directories, and none filters on a data column
+  *     that row-group statistics could skip.
+  * Page CRCs stay on. The reference's pandas/PyArrow writer uses snappy,
+  * dictionaries on every column and statistics; this layout stores the
+  * same values in fewer bytes, and parquet records codec and encoding
+  * per column chunk, so a lake whose older files carry the reference's
+  * layout reads back the same values.
   *
   * The write modes still mirror the reference exactly (SURVEY §2.2 K5);
-  * the codec above is the one part of the layout that does not:
+  * the page layout above is the one part of the layout that does not:
   *   - [[writeFull]]       — K4 full overwrite (historical load).
   *   - [[appendIncrement]] — K5's ACTUAL behavior: append-only new rows,
   *     duplicates tolerated, exactly-once restored read-side by
@@ -39,8 +55,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object Lake {
 
-  /** Parquet page codec of every lake file. */
-  private val codec = "zstd"
+  /** Parquet writer options of every lake file: zstd pages, no column
+    * statistics, and no dictionary on the receipt-level columns.
+    */
+  private val pageLayout: Map[String, String] = Map(
+    "compression" -> "zstd",
+    "parquet.column.statistics.enabled" -> "false") ++
+    Schemas.receiptLevel.map(c => s"parquet.enable.dictionary#$c" -> "false")
 
   /** Each curated column cast to its [[Schemas.curated]] type (a no-op
     * on a correctly typed frame; a null-typed or int-typed column would
@@ -60,7 +81,7 @@ object Lake {
       .withColumn("month", date_format(col("shifted_time"), "MM")))
 
   private def writer(rows: DataFrame): DataFrameWriter[Row] =
-    rows.write.partitionBy(Schemas.partitionKeys: _*).option("compression", codec)
+    rows.write.partitionBy(Schemas.partitionKeys: _*).options(pageLayout)
 
   /** K4 — schema-enforced full write, one directory per month. */
   def writeFull(df: DataFrame, root: String): Unit =
@@ -90,9 +111,9 @@ object Lake {
     */
   def appendStream(newRows: DataFrame, root: String): DataStreamWriter[Row] =
     prepared(newRows).writeStream
-      .format("parquet")
+      .format(classOf[LakeParquetFormat].getName)
       .option("path", root)
-      .option("compression", codec)
+      .options(pageLayout)
       .partitionBy(Schemas.partitionKeys: _*)
       .outputMode("append")
 
@@ -155,4 +176,23 @@ object Lake {
     */
   def compactTo(spark: SparkSession, sourceRoot: String, targetRoot: String): Unit =
     overwriteMonths(Analytics.dedupLatest(read(spark, sourceRoot)), targetRoot)
+}
+
+/** Parquet that hands its `parquet.*` writer options to parquet-mr.
+  * A batch writer copies its options into the write job's Hadoop conf
+  * itself; Spark's file stream sink builds that conf from the session
+  * alone and reads only `compression` from its options, so
+  * [[Lake.appendStream]] writes through this format to keep the lake's
+  * page layout.
+  */
+private[pos] class LakeParquetFormat extends ParquetFileFormat {
+  override def prepareWrite(
+      spark: SparkSession,
+      job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    // The keys arrive lower-cased; the lake's column names are lower-case.
+    options.foreach { case (k, v) => if (k.startsWith("parquet.")) job.getConfiguration.set(k, v) }
+    super.prepareWrite(spark, job, options, dataSchema)
+  }
 }

@@ -59,6 +59,13 @@ object Schemas {
 
   val curatedColumns: Seq[String] = curated.fieldNames.toSeq
 
+  /** The curated columns that hold one value per receipt (near-unique
+    * across receipts, repeated only on its line items); the lake writes
+    * them without a dictionary ([[Lake]]).
+    */
+  val receiptLevel: Seq[String] = Seq(
+    "receipt_number", "datetime", "date", "time", "shifted_time", "minutes_past_midnight")
+
   /** Hive-style partition keys at rest (reference `load.py:72-94`). */
   val partitionKeys: Seq[String] = Seq("year", "month")
 }

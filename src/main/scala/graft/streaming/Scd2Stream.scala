@@ -45,7 +45,7 @@ object Scd2Stream {
       nBuckets: Int): Unit = {
     val ss = batch.sparkSession
     val logCols = col(key) +: col(timeMicros) +: col(tiebreaker) +: attrs.map(col)
-    if (!new java.io.File(historyRoot).exists()) {
+    if (!StreamingIngest.rootExists(ss, historyRoot)) {
       withBucket(Scd2.fromLog(batch.select(logCols: _*), key, timeMicros, tiebreaker, attrs), key, nBuckets)
         .repartition(col("kb"))
         .write.partitionBy("kb").mode("overwrite").parquet(historyRoot)

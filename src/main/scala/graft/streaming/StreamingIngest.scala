@@ -123,9 +123,8 @@ object StreamingIngest {
     curated.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         val ss = batch.sparkSession
-        val lakeExists = new java.io.File(lakeRoot).exists()
         val combined =
-          if (!lakeExists) batch
+          if (!rootExists(ss, lakeRoot)) batch
           else {
             val affected = batch.select("year", "month").distinct()
             val existing = Lake.read(ss, lakeRoot)
@@ -147,6 +146,17 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
+
+  /** Whether a merging sink's root exists, asked of the root's own
+    * Hadoop `FileSystem`: `java.io.File` sees only bare local paths, so a
+    * `file:`, `s3a:` or `hdfs:` root would read as absent, and the sink
+    * would overwrite every partition its batch touches with the batch
+    * alone. [[toLakeMerged]] and [[Scd2Stream.applyBatch]] share it.
+    */
+  private[streaming] def rootExists(spark: SparkSession, root: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(root)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
   /** In-stream exactly-once variant: drop late duplicate receipts by

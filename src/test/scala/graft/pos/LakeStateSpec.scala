@@ -7,7 +7,7 @@ import java.sql.Timestamp
 import java.time.Instant
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -93,17 +93,27 @@ class LakeStateSpec extends SparkSpec {
   private lazy val lakeByWriter: Seq[(String, String)] = {
     val dir = Files.createTempDirectory("lake_writers")
     def root(name: String) = dir.resolve(name).toString
-    val rows = toDF(Seq(
-      curatedRow("r1", ts("2025-07-01 10:00:00"), "Burger", 100.0),
-      curatedRow("r2", ts("2025-08-02 11:00:00"), "Fries", 50.0)))
+    // Receipts of three line items each, over two months, with
+    // modifiers: under parquet's defaults both the receipt-level and the
+    // categorical columns would then carry a dictionary (parquet drops
+    // one that does not pay for itself, as on a one-row file).
+    val items = Seq("Burger" -> 100.0, "Fries" -> 50.0, "Soda" -> 20.0)
+    val receipts = (1 to 8).map { i =>
+      (s"r$i", f"2025-0${7 + i % 2}-${i}%02dT1${i}:00:00Z")
+    }
+    val rows = toDF(receipts.flatMap { case (r, at) =>
+      val when = Timestamp.from(Instant.parse(at))
+      items.map { case (item, price) => curatedRow(r, when, item, price) }
+    }).withColumn("modifiers", lit("Queso(extra)"))
     Lake.writeFull(rows, root("writeFull"))
-    Lake.appendIncrement(rows, root("appendIncrement"))
+    // One partition, as a daily batch arrives: one file per month.
+    Lake.appendIncrement(rows.coalesce(1), root("appendIncrement"))
     Lake.compactTo(spark, root("writeFull"), root("compactTo"))
 
     val drop = dir.resolve("drop"); Files.createDirectories(drop)
-    Files.writeString(drop.resolve("b1.jsonl"), Seq(
-      StreamingSpec.receiptLine("r1", "2025-07-01T10:00:00Z", "Burger", 100.0),
-      StreamingSpec.receiptLine("r2", "2025-08-02T11:00:00Z", "Fries", 50.0)).mkString("", "\n", "\n"))
+    Files.writeString(drop.resolve("b1.jsonl"), receipts.map { case (r, at) =>
+      StreamingSpec.receiptLineOf(r, at, items, Seq("Queso" -> "extra"))
+    }.mkString("", "\n", "\n"))
     def ckpt(name: String) = dir.resolve(s"ckpt_$name").toString
     StreamingIngest.toLake(spark, drop.toString, root("toLake"), ckpt("toLake"))
       .awaitTermination(60000)
@@ -122,22 +132,46 @@ class LakeStateSpec extends SparkSpec {
     finally s.close()
   }
 
-  /** The codec of every column chunk of one parquet file, from its footer. */
-  private def chunkCodecs(file: Path): Seq[CompressionCodecName] = {
+  /** Every column chunk of one parquet file, from its footer. */
+  private def chunks(file: Path): Seq[ColumnChunkMetaData] = {
     val in = HadoopInputFile.fromPath(new HPath(file.toUri), spark.sparkContext.hadoopConfiguration)
     val reader = ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec))
+    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
     finally reader.close()
   }
+
+  private def hasStatistics(c: ColumnChunkMetaData): Boolean =
+    !c.getStatistics.isEmpty || c.getColumnIndexReference != null
 
   test("K4/K5: every lake writer leaves only zstd column chunks") {
     lakeByWriter.foreach { case (writer, root) =>
       val files = parquetFiles(root)
       assert(files.nonEmpty, writer)
       files.foreach { f =>
-        val codecs = chunkCodecs(f)
+        val codecs = chunks(f).map(_.getCodec)
         assert(codecs.nonEmpty, s"$writer: $f")
         assert(codecs.toSet === Set(CompressionCodecName.ZSTD), s"$writer: $f")
+      }
+    }
+  }
+
+  test("K4/K5: every lake writer leaves no statistics and dictionaries only on categorical columns") {
+    val categorical = Seq("order_type", "item_name", "modifiers", "payment_type", "time_slot")
+    lakeByWriter.foreach { case (writer, root) =>
+      val files = parquetFiles(root)
+      assert(files.nonEmpty, writer)
+      files.foreach { f =>
+        val byColumn = chunks(f).groupBy(_.getPath.toDotString)
+        assert(byColumn.keySet === Schemas.curatedColumns.toSet, s"$writer: $f")
+        byColumn.foreach { case (c, cs) =>
+          assert(!cs.exists(hasStatistics), s"$writer: $c carries statistics in $f")
+        }
+        Schemas.receiptLevel.foreach { c =>
+          assert(!byColumn(c).exists(_.hasDictionaryPage), s"$writer: $c has a dictionary in $f")
+        }
+        categorical.foreach { c =>
+          assert(byColumn(c).forall(_.hasDictionaryPage), s"$writer: $c lost its dictionary in $f")
+        }
       }
     }
   }
@@ -156,11 +190,14 @@ class LakeStateSpec extends SparkSpec {
         curatedRow("r5", ts("2025-07-03 10:00:00"), "Fries", 45.0), // a replayed day
         curatedRow("r6", ts("2025-07-04 10:00:00"), "Burger", 80.0))))
     val mixed = Files.createTempDirectory("lake_mixed").toString
-    // The layout writeFull gives, with the codec a lake written before
-    // zstd pages carries.
+    // The layout writeFull gives, with the pages a lake written before
+    // the current page layout carries: snappy, a dictionary on every
+    // column, statistics on.
     Lake.prepared(history).repartition(col("year"), col("month")).write
       .partitionBy(Schemas.partitionKeys: _*)
       .option("compression", "snappy")
+      .option("parquet.enable.dictionary", "true")
+      .option("parquet.column.statistics.enabled", "true")
       .mode("overwrite")
       .parquet(mixed)
     val zstd = Files.createTempDirectory("lake_zstd").toString
@@ -169,8 +206,13 @@ class LakeStateSpec extends SparkSpec {
       Lake.appendIncrement(d, mixed)
       Lake.appendIncrement(d, zstd)
     }
-    assert(parquetFiles(mixed).flatMap(chunkCodecs).toSet ===
+    val mixedChunks = parquetFiles(mixed).flatMap(chunks)
+    assert(mixedChunks.map(_.getCodec).toSet ===
       Set(CompressionCodecName.SNAPPY, CompressionCodecName.ZSTD))
+    val (oldChunks, newChunks) = mixedChunks.partition(_.getCodec == CompressionCodecName.SNAPPY)
+    assert(oldChunks.filter(c => Seq("receipt_number", "item_name", "price")
+      .contains(c.getPath.toDotString)).forall(hasStatistics))
+    assert(!newChunks.exists(hasStatistics))
 
     def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(sorted(Lake.dedupView(spark, mixed)) === sorted(Lake.dedupView(spark, zstd)))

@@ -94,4 +94,22 @@ class Scd2StreamSpec extends SparkSpec {
       .as[(Long, Long, Double, Long, Option[Long])].collect().toSet
     assert(histRows(hist) == expected)
   }
+
+  test("a file: URI history root keeps the first batch's versions") {
+    val hist = "file:" + Files.createTempDirectory("scd2u").resolve("hist")
+    val first = Seq((1L, 10L, 100L, 1.0), (2L, 10L, 101L, 5.0))
+    val second = Seq((1L, 20L, 102L, 2.0))
+    Seq(first, second).foreach { b =>
+      Scd2Stream.applyBatch(
+        b.toDF("k", "tus", "event_id", "value"), hist,
+        "k", "tus", "event_id", Seq("value"), nBuckets = 4)
+    }
+    val expected = Scd2.fromLog(
+      (first ++ second).toDF("k", "tus", "event_id", "value"),
+      "k", "tus", "event_id", Seq("value"))
+      .select("k", "version", "value", "valid_from", "valid_to")
+      .as[(Long, Long, Double, Long, Option[Long])].collect().toSet
+    assert(expected.size === 3)
+    assert(histRows(hist) === expected)
+  }
 }

@@ -64,6 +64,23 @@ class StreamingSpec extends SparkSpec {
     assert(r1.getAs[Double]("price") === 120.0, "newest row won")
   }
 
+  test("foreachBatch merge-upsert into a file: URI root keeps the month's existing rows") {
+    val dir = Files.createTempDirectory("streamu")
+    val drop = dir.resolve("drop"); Files.createDirectories(drop)
+    val lake = "file:" + dir.resolve("lake")
+    val ckpt = dir.resolve("ckpt").toString
+    Files.writeString(drop.resolve("b1.jsonl"),
+      receiptLine("r1", "2025-07-01T10:00:00Z", "Burger", 100.0) + "\n" +
+        receiptLine("r2", "2025-07-02T11:00:00Z", "Fries", 50.0) + "\n")
+    StreamingIngest.toLakeMerged(spark, drop.toString, lake, ckpt).awaitTermination(60000)
+    // A second batch into the same month merges with, not replaces, it.
+    Files.writeString(drop.resolve("b2.jsonl"),
+      receiptLine("r3", "2025-07-03T12:00:00Z", "Malteada", 60.0) + "\n")
+    StreamingIngest.toLakeMerged(spark, drop.toString, lake, ckpt).awaitTermination(60000)
+    val receipts = Lake.read(spark, lake).collect().map(_.getAs[String]("receipt_number"))
+    assert(receipts.sorted.toSeq === Seq("r1", "r2", "r3"))
+  }
+
   test("crash recovery: kill merge stream mid-run, restart from checkpoint, lake equals batch replay") {
     val dir = Files.createTempDirectory("streamcr")
     val drop = dir.resolve("drop"); Files.createDirectories(drop)
@@ -181,5 +198,20 @@ object StreamingSpec {
 
   /** One raw receipt document as a JSONL line, with one line item. */
   def receiptLine(num: String, ts: String, item: String, price: Double): String =
-    s"""{"receipt_number":"$num","receipt_date":"$ts","created_at":"$ts","updated_at":"$ts","order":"Mesa 01","payments":[{"type":"CASH"}],"line_items":[{"item_name":"$item","cost":${price / 2},"price":$price,"total_money":$price,"line_modifiers":[]}]}"""
+    receiptLineOf(num, ts, Seq(item -> price))
+
+  /** One raw receipt document as a JSONL line, with one line item per
+    * `(item, price)`, each carrying the `(name, option)` modifiers.
+    */
+  def receiptLineOf(
+      num: String,
+      ts: String,
+      items: Seq[(String, Double)],
+      modifiers: Seq[(String, String)] = Nil): String = {
+    val mods = modifiers.map { case (n, o) => s"""{"name":"$n","option":"$o"}""" }.mkString(",")
+    val lineItems = items.map { case (item, price) =>
+      s"""{"item_name":"$item","cost":${price / 2},"price":$price,"total_money":$price,"line_modifiers":[$mods]}"""
+    }.mkString(",")
+    s"""{"receipt_number":"$num","receipt_date":"$ts","created_at":"$ts","updated_at":"$ts","order":"Mesa 01","payments":[{"type":"CASH"}],"line_items":[$lineItems]}"""
+  }
 }
