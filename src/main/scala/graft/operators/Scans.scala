@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{BooleanType, ByteType, DoubleType, FloatType, IntegerType,
-  LongType, ShortType, StringType, StructType}
 
 /** Scan-parallelism guard for COMPUTE-AMPLIFICATION sites (optimization
   * r17; guide §2.5 input skew / §1.2 algorithm shape).
@@ -65,9 +63,9 @@ object Scans {
 
   /** Driver bytes a driver-path finish may hold: one eighth of
     * `spark.driver.maxResultSize` (0 = unlimited), capped by the driver
-    * heap the collected data lives in. The one bound the byte-budgeted
-    * switches (`SuffixArray.removeDuplicatedSpans`, the POS reports)
-    * charge their estimated footprint against.
+    * heap the collected data lives in. The bound the byte-budgeted
+    * switch of `SuffixArray.removeDuplicatedSpans` charges its estimated
+    * footprint against.
     */
   def driverBudget(spark: SparkSession): Long = {
     val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
@@ -85,28 +83,4 @@ object Scans {
     val prev = sc.getLocalProperty("spark.job.description")
     try body(d => sc.setJobDescription(d)) finally sc.setJobDescription(prev)
   }
-
-  /** Characters charged for each string value by [[rowBytes]]: a POS
-    * item name, receipt number or month label is well under it; a combo's
-    * modifier list can run past it.
-    */
-  private val StringChars = 64L
-
-  /** Estimated driver bytes of one collected row of `schema`: the row
-    * object and its value array (32 B + 8 B a field), then per field a
-    * boxed primitive (16 B) or a `String` of [[StringChars]] UTF-16
-    * characters (40 B + 2 B a character); any other type is charged
-    * Spark's `defaultSize` for it plus a 16 B header. An estimate from
-    * the schema alone, so a probe of `budget / rowBytes` rows needs no
-    * size job; it is not a measurement of the data.
-    */
-  def rowBytes(schema: StructType): Long =
-    32L + schema.fields.iterator.map { f =>
-      8L + (f.dataType match {
-        case _: StringType => 40L + 2L * StringChars
-        case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType => 16L
-        case t => 16L + t.defaultSize
-      })
-    }.sum
 }

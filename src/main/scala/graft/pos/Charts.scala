@@ -10,9 +10,8 @@ import graft.multimodal.ImageCodec
   * bar/line charts. Rendering is driver-side over already-aggregated
   * report rows (tens of values — same shape as the reference, where
   * matplotlib draws the final aggregates, never raw data). The monthly
-  * report's driver path aggregates both series from its own lake read
-  * ([[Reports.monthlyWithCharts]]); [[writeMonthlyCharts]] reads the
-  * lake itself and is its over-budget path.
+  * report aggregates both series from its own lake read
+  * ([[Reports.monthlyWithCharts]]) and draws them with [[writeMonthly]].
   */
 object Charts {
 
@@ -80,30 +79,6 @@ object Charts {
       }
     }
     ImageCodec.encodeGrayPng(width, height, (x, y) => raster(y * width + x))
-  }
-
-  /** Render the monthly report's chart set from the lake (the K10
-    * relations: top products bar, daily revenue line) into `outDir`.
-    * Distributed: two jobs over the report month's partition, deduped
-    * with the V1 window over that month alone. A day whose prices are
-    * all null draws as 0.
-    */
-  def writeMonthlyCharts(
-      spark: org.apache.spark.sql.SparkSession,
-      lakeRoot: String,
-      reportMonth: String,
-      outDir: String): Seq[String] = {
-    import org.apache.spark.sql.functions._
-    val deduped = Analytics.dedupLatest(
-      Lake.read(spark, lakeRoot).filter(Analytics.inMonth(reportMonth)))
-    val topProducts = deduped.groupBy(col("item_name"))
-      .agg(count(lit(1)).as("n")).orderBy(col("n").desc, col("item_name"))
-      .limit(TopItems).collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toSeq
-    val daily = deduped
-      .groupBy(to_date(col("shifted_time")).as("d"))
-      .agg(sum(col("price")).as("rev")).orderBy(col("d"))
-      .collect().map(r => if (r.isNullAt(1)) 0.0 else r.getDouble(1)).toSeq
-    writeMonthly(reportMonth, outDir, topProducts, daily)
   }
 
   /** Bars on the top-products chart. */

@@ -109,8 +109,9 @@ object Pipeline {
   }
 
   /** Entry 2 — monthly report (reference `main.py:133-134`): markdown
-    * plus the K10 chart PNGs next to it, both from one lake read when the
-    * two months fit the driver budget ([[Reports.monthlyWithCharts]]).
+    * plus the K10 chart PNGs next to it, both from one lake read whose
+    * per-partition summaries are merged on the driver
+    * ([[Reports.monthlyWithCharts]]).
     */
   def monthlyReport(spark: SparkSession, cfg: Config, reportMonth: String,
       comparisonMonth: String): String = {

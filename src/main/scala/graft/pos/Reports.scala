@@ -1,6 +1,7 @@
 package graft.pos
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import java.math.{BigDecimal => JBigDecimal}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,23 +11,26 @@ import graft.operators.Scans
 /** K8 — Markdown report sinks (reference `monthly_report.py:514-627`,
   * `cumulative_report.py:597-703`).
   *
-  * Each report is one Spark action and a driver finish, as in the
-  * reference (one Athena query, then Pandas). One query reads the lake
-  * slice the report needs and projects it to the columns the report
-  * reads. Every row-level expression stays in that projection:
-  * partition pruning, the V1 window, [[Transform.cleanForReporting]]'s
-  * drops and fills, and `date_format` / `to_date` / `weekday` in the
-  * session time zone. [[Scans.collectAtMost]] collects the slice when
-  * its rows times [[Scans.rowBytes]] fit [[Scans.driverBudget]]; one
-  * pass over the rows on the driver then computes every relation the
-  * report (and the monthly charts) show.
+  * Each report is one Spark query and a driver finish, as in the
+  * reference (one Athena query, then Pandas), on one path at any lake
+  * size. The query reads the lake slice the report needs, hash
+  * partitioned on `receipt_number`, and projects it to the columns the
+  * report reads. Every row-level expression stays in that projection:
+  * partition pruning, the V1 window (whose clustering the receipt
+  * partitioning already satisfies, so the query has one exchange),
+  * [[Transform.cleanForReporting]]'s drops and fills, and
+  * `date_format` / `to_date` / `weekday` in the session time zone.
   *
-  * A slice over the budget takes the distributed path, needed at lake
-  * scale: one Spark aggregate per relation, only the small results
-  * collected. Both paths render through the same templates. A report's
-  * jobs carry the description `Reports.<report>: path=… rows=… bytes=…
-  * bound=… B` (its probe job `Reports.<report>: probe …`), and the
-  * caller's description is restored afterwards.
+  * Each partition then holds whole receipts, and one `mapPartitions`
+  * folds it into a summary: money sums, receipt counts, and counts or
+  * sums keyed by item, day, month or basket set. The driver merges the
+  * summaries by addition and min/max, so its memory grows with those
+  * keys, not with rows, and renders the report (and the monthly
+  * charts). Money is summed exactly ([[JBigDecimal]] of each double) and
+  * turned into a double once, so every partitioning prints the same
+  * figures. A report's jobs carry the description
+  * `Reports.<report>: …`, and the caller's description is restored
+  * afterwards.
   */
 object Reports {
 
@@ -37,23 +41,6 @@ object Reports {
       case Some(p) if p > 0 => f"${(cur - p) / p * 100}%+.1f%%"
       case _ => "(new)" // reference `monthly_report.py:548-551`
     }
-
-  /** The rows of `slice` when `rows × rowBytes(schema)` fits `budget`,
-    * from one [[Scans.collectAtMost]] probe of `budget / rowBytes` rows
-    * (no size job). Labels the probe, then the path it decides.
-    */
-  private def collectWithin(op: String, slice: DataFrame, budget: Long,
-                            label: String => Unit): Option[Array[Row]] = {
-    val width = Scans.rowBytes(slice.schema)
-    val maxRows = math.max(budget, 0L) / width
-    label(s"$op: probe rows<=$maxRows bound=$budget B")
-    val rows = Scans.collectAtMost(slice, maxRows)
-    label(rows match {
-      case Some(r) => s"$op: path=driver rows=${r.length} bytes=${r.length * width} bound=$budget B"
-      case None => s"$op: path=distributed rows>$maxRows bytes>${maxRows * width} bound=$budget B"
-    })
-    rows
-  }
 
   /** Spark's `orderBy(count.desc, name)` for (name, count) pairs: count
     * descending, then name ascending with nulls first, names compared
@@ -81,18 +68,60 @@ object Reports {
     else if (modifiers == null) Nil
     else ComboExplode.parseCombo(modifiers).map(_.itemName)
 
-  /** Revenue (sum of the non-null `total_money`) and distinct receipts. */
-  private final class Totals {
-    var revenue: Option[Double] = None
-    val receipts = mutable.HashSet.empty[String]
-    def add(receipt: String, totalMoney: Option[Double]): Unit = {
-      receipts += receipt
-      totalMoney.foreach(m => revenue = Some(revenue.fold(m)(_ + m)))
-    }
+  /** An exact money sum: the sum of the doubles added, None while none
+    * is. Sums merge in any order to the same value.
+    */
+  private type Sum = Option[JBigDecimal]
+
+  private def plus(a: Sum, b: Sum): Sum = (a ++ b).reduceOption(_ add _)
+
+  private def sumAt(r: Row, i: Int): Sum =
+    if (r.isNullAt(i)) None else Some(new JBigDecimal(r.getDouble(i)))
+
+  private def toDouble(s: Sum): Double = s.fold(0.0)(_.doubleValue)
+
+  private def count[K](m: mutable.Map[K, Long], k: K): Unit = m(k) = m.getOrElse(k, 0L) + 1L
+
+  private def addSum[K](m: mutable.Map[K, Sum], k: K, s: Sum): Unit =
+    m(k) = plus(m.getOrElse(k, None), s)
+
+  private def mergeWith[K, V](a: Map[K, V], b: Map[K, V])(f: (V, V) => V): Map[K, V] =
+    b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.get(k).fold(v)(f(_, v))) }
+
+  /** Revenue (the sum of the non-null `total_money`) and distinct
+    * receipts of one partition's rows, or of merged partitions: each
+    * receipt lies in one partition, so the counts add.
+    */
+  private[pos] final case class Totals(revenue: Sum, receipts: Long) {
+    def merge(o: Totals): Totals = Totals(plus(revenue, o.revenue), receipts + o.receipts)
   }
 
-  private def doubleAt(r: Row, i: Int): Option[Double] =
-    if (r.isNullAt(i)) None else Some(r.getDouble(i))
+  /** [[Totals]] while a partition is folded. */
+  private final class TotalsFold {
+    private var revenue: Sum = None
+    private val receipts = mutable.HashSet.empty[String]
+    def add(receipt: String, totalMoney: Sum): Unit = {
+      receipts += receipt
+      revenue = plus(revenue, totalMoney)
+    }
+    def result: Totals = Totals(revenue, receipts.size.toLong)
+  }
+
+  /** What the monthly report and its charts read of a set of partitions:
+    * both months' [[Totals]], the report month's items sold, and the
+    * charts' line count per item and price sum per day.
+    */
+  private[pos] final case class MonthlySummary(cur: Totals, prev: Totals,
+      sold: Map[Option[String], Long], chartItems: Map[Option[String], Long],
+      dayRevenue: Map[Option[Int], Sum]) {
+    def merge(o: MonthlySummary): MonthlySummary = MonthlySummary(cur.merge(o.cur),
+      prev.merge(o.prev), mergeWith(sold, o.sold)(_ + _),
+      mergeWith(chartItems, o.chartItems)(_ + _), mergeWith(dayRevenue, o.dayRevenue)(plus))
+  }
+
+  private object MonthlySummary {
+    val Empty = MonthlySummary(Totals(None, 0L), Totals(None, 0L), Map.empty, Map.empty, Map.empty)
+  }
 
   /** Monthly two-month comparison report. Reads the lake WITH the V1
     * dedup window (S8 asymmetry: monthly deduped, cumulative raw —
@@ -100,52 +129,48 @@ object Reports {
     */
   def monthly(spark: SparkSession, lakeRoot: String, reportMonth: String,
       comparisonMonth: String): String =
-    monthlyWithin(spark, lakeRoot, reportMonth, comparisonMonth, None,
-      Scans.driverBudget(spark))._1
+    monthlyReport(spark, lakeRoot, reportMonth, comparisonMonth, None)
 
-  /** [[monthly]] plus its K10 charts written to `chartDir`: on the
-    * driver path both come from the one lake read.
+  /** [[monthly]] plus its K10 charts written to `chartDir`, both from
+    * the one lake read.
     */
   private[pos] def monthlyWithCharts(spark: SparkSession, lakeRoot: String,
       reportMonth: String, comparisonMonth: String, chartDir: String): String =
-    monthlyWithin(spark, lakeRoot, reportMonth, comparisonMonth, Some(chartDir),
-      Scans.driverBudget(spark))._1
+    monthlyReport(spark, lakeRoot, reportMonth, comparisonMonth, Some(chartDir))
 
-  /** [[monthlyWithCharts]] against an explicit byte `budget` — the seam
-    * specs use to force either path. Returns the markdown and the path
-    * (`"driver"` or `"distributed"`).
-    */
-  private[pos] def monthlyWithin(spark: SparkSession, lakeRoot: String, reportMonth: String,
-      comparisonMonth: String, chartDir: Option[String], budget: Long): (String, String) =
+  private def monthlyReport(spark: SparkSession, lakeRoot: String, reportMonth: String,
+      comparisonMonth: String, chartDir: Option[String]): String =
     Scans.labelled(spark) { label =>
-      val slice = monthlySlice(spark, lakeRoot, reportMonth, comparisonMonth)
-      collectWithin("Reports.monthly", slice, budget, label) match {
-        case Some(rows) =>
-          (monthlyOnDriver(rows, reportMonth, comparisonMonth, chartDir), "driver")
-        case None =>
-          val md = monthlyDistributed(spark, lakeRoot, reportMonth, comparisonMonth)
-          chartDir.foreach(Charts.writeMonthlyCharts(spark, lakeRoot, reportMonth, _))
-          (md, "distributed")
+      label("Reports.monthly: partition summaries merged on the driver")
+      val s = monthlySummaries(spark, lakeRoot, reportMonth, comparisonMonth).collect()
+        .foldLeft(MonthlySummary.Empty)(_.merge(_))
+      chartDir.foreach { dir =>
+        Charts.writeMonthly(reportMonth, dir,
+          topN(s.chartItems, Charts.TopItems).map { case (n, c) => n -> c.toDouble },
+          s.dayRevenue.toSeq.sortBy(_._1).map(d => toDouble(d._2)))
       }
+      monthlyMarkdown(reportMonth, comparisonMonth, toDouble(s.cur.revenue), s.cur.receipts,
+        toDouble(s.prev.revenue), s.prev.receipts, topN(s.sold, 5))
     }
 
-  /** The monthly report's one query: the two months' partitions, ranked
-    * by the V1 window twice. Over both months it is the report's dedup
+  /** The monthly report's one query: the two months' partitions, hash
+    * partitioned on `receipt_number` and ranked by the V1 window twice.
+    * Over both months it is the report's dedup
     * ([[Analytics.twoMonthDedupRead]]); within each month it is the
-    * charts' ([[Charts.writeMonthlyCharts]]), which differs when the
-    * comparison month is the later one: a key in both months keeps its
-    * report-month row for the charts only. Both windows share one
-    * exchange. `report` marks the deduped rows [[Transform.cleanForReporting]]
-    * keeps, `chart` the report month's deduped rows; rows neither reader
-    * keeps are dropped.
+    * charts', which differs when the comparison month is the later one:
+    * a key in both months keeps its report-month row for the charts
+    * only. Both windows run on the one exchange. `report` marks the
+    * deduped rows [[Transform.cleanForReporting]] keeps, `chart` the
+    * report month's deduped rows; rows neither reader keeps are dropped.
     */
-  private[pos] def monthlySlice(spark: SparkSession, lakeRoot: String, reportMonth: String,
+  private def monthlySlice(spark: SparkSession, lakeRoot: String, reportMonth: String,
       comparisonMonth: String): DataFrame = {
     def newest(within: Column*): Column = row_number().over(
       Window.partitionBy(col("receipt_number") +: col("item_name") +: within: _*)
         .orderBy(col("shifted_time").desc)) === 1
     Lake.read(spark, lakeRoot)
       .filter(Analytics.inMonth(reportMonth) || Analytics.inMonth(comparisonMonth))
+      .repartition(col("receipt_number"))
       .select(
         (newest() && Transform.reportingKept).as("report"),
         (newest(col("year"), col("month")) && Analytics.inMonth(reportMonth)).as("chart"),
@@ -159,72 +184,35 @@ object Reports {
       .filter(col("report") || col("chart"))
   }
 
-  /** The monthly report and its chart series from [[monthlySlice]]'s rows. */
-  private def monthlyOnDriver(rows: Array[Row], reportMonth: String, comparisonMonth: String,
-      chartDir: Option[String]): String = {
-    val cur = new Totals
-    val prev = new Totals
-    val sold = mutable.HashMap.empty[Option[String], Long]
-    val chartItems = mutable.HashMap.empty[Option[String], Long]
-    val dayRevenue = mutable.HashMap.empty[Option[Int], Option[Double]]
-    rows.foreach { r =>
-      if (r.getBoolean(0)) {
-        val ym = r.getString(2)
-        val receipt = r.getString(3)
-        val total = doubleAt(r, 6)
-        if (ym == comparisonMonth) prev.add(receipt, total)
-        if (ym == reportMonth) {
-          cur.add(receipt, total)
-          val item = Option(r.getString(4)).getOrElse("Unknown")
-          explodedNames(item, r.getString(5)).foreach { n =>
-            sold(Some(n)) = sold.getOrElse(Some(n), 0L) + 1L
+  /** [[monthlySlice]] folded into one [[MonthlySummary]] per partition. */
+  private[pos] def monthlySummaries(spark: SparkSession, lakeRoot: String, reportMonth: String,
+      comparisonMonth: String): Dataset[MonthlySummary] =
+    monthlySlice(spark, lakeRoot, reportMonth, comparisonMonth).mapPartitions { rows =>
+      val cur = new TotalsFold
+      val prev = new TotalsFold
+      val sold = mutable.HashMap.empty[Option[String], Long]
+      val chartItems = mutable.HashMap.empty[Option[String], Long]
+      val dayRevenue = mutable.HashMap.empty[Option[Int], Sum]
+      rows.foreach { r =>
+        if (r.getBoolean(0)) {
+          val ym = r.getString(2)
+          val receipt = r.getString(3)
+          val total = sumAt(r, 6)
+          if (ym == comparisonMonth) prev.add(receipt, total)
+          if (ym == reportMonth) {
+            cur.add(receipt, total)
+            val item = Option(r.getString(4)).getOrElse("Unknown")
+            explodedNames(item, r.getString(5)).foreach(n => count(sold, Some(n)))
           }
         }
+        if (r.getBoolean(1)) {
+          count(chartItems, Option(r.getString(4)))
+          addSum(dayRevenue, if (r.isNullAt(8)) None else Some(r.getInt(8)), sumAt(r, 7))
+        }
       }
-      if (r.getBoolean(1)) {
-        val item = Option(r.getString(4))
-        chartItems(item) = chartItems.getOrElse(item, 0L) + 1L
-        val day = if (r.isNullAt(8)) None else Some(r.getInt(8))
-        val price = doubleAt(r, 7)
-        dayRevenue(day) = (dayRevenue.getOrElse(day, None) ++ price).reduceOption(_ + _)
-      }
-    }
-    chartDir.foreach { dir =>
-      Charts.writeMonthly(reportMonth, dir,
-        topN(chartItems, Charts.TopItems).map { case (n, c) => n -> c.toDouble },
-        dayRevenue.toSeq.sortBy(_._1).map(_._2.getOrElse(0.0)))
-    }
-    monthlyMarkdown(reportMonth, comparisonMonth,
-      cur.revenue.getOrElse(0.0), cur.receipts.size.toLong,
-      prev.revenue.getOrElse(0.0), prev.receipts.size.toLong, topN(sold, 5))
-  }
-
-  /** The distributed monthly report: the deduped slice cached, one KPI
-    * job per month and a top-products job.
-    */
-  private def monthlyDistributed(spark: SparkSession, lakeRoot: String, reportMonth: String,
-      comparisonMonth: String): String = {
-    val deduped = Analytics.twoMonthDedupRead(
-      Lake.read(spark, lakeRoot), reportMonth, comparisonMonth)
-    val cleaned = Transform.cleanForReporting(deduped).cache()
-    try {
-      val exploded = ComboExplode.explodeComboItems(cleaned)
-      val monthCol = date_format(col("shifted_time"), "yyyy-MM")
-
-      def kpis(month: String): (Double, Long) = {
-        val r = cleaned.filter(monthCol === month)
-          .agg(sum(col("total_money")), countDistinct(col("receipt_number")))
-          .collect().head
-        (Option(r.get(0)).fold(0.0)(_.toString.toDouble), r.getLong(1))
-      }
-      val (curRev, curN) = kpis(reportMonth)
-      val (prevRev, prevN) = kpis(comparisonMonth)
-
-      val top = Analytics.topProducts(exploded.filter(monthCol === reportMonth), 5).collect()
-        .map(r => (r.getAs[String]("item_name"), r.getAs[Long]("items_sold"))).toSeq
-      monthlyMarkdown(reportMonth, comparisonMonth, curRev, curN, prevRev, prevN, top)
-    } finally cleaned.unpersist()
-  }
+      Iterator.single(MonthlySummary(cur.result, prev.result, sold.toMap, chartItems.toMap,
+        dayRevenue.toMap))
+    }(Encoders.javaSerialization[MonthlySummary])
 
   private def monthlyMarkdown(reportMonth: String, comparisonMonth: String,
       curRev: Double, curN: Long, prevRev: Double, prevN: Long,
@@ -241,123 +229,117 @@ object Reports {
     sb.result()
   }
 
+  /** What the cumulative report reads of a set of partitions. The rows
+    * with a `shifted_time` give the [[Totals]], the revenue per month,
+    * the price sum and receipt count per weekend flag, and the first and
+    * last sale as (`at`, day); every row gives the items sold and the
+    * histogram of basket sets (each receipt's sorted distinct items).
+    */
+  private[pos] final case class CumulativeSummary(all: Totals, months: Map[String, Sum],
+      split: Map[Boolean, (Sum, Long)], first: Option[(Long, String)],
+      last: Option[(Long, String)], sold: Map[Option[String], Long],
+      baskets: Map[Seq[String], Long]) {
+    def merge(o: CumulativeSummary): CumulativeSummary = CumulativeSummary(all.merge(o.all),
+      mergeWith(months, o.months)(plus),
+      mergeWith(split, o.split) { case ((r1, n1), (r2, n2)) => (plus(r1, r2), n1 + n2) },
+      (first ++ o.first).minByOption(_._1), (last ++ o.last).maxByOption(_._1),
+      mergeWith(sold, o.sold)(_ + _), mergeWith(baskets, o.baskets)(_ + _))
+  }
+
+  private object CumulativeSummary {
+    val Empty = CumulativeSummary(Totals(None, 0L), Map.empty, Map.empty, None, None,
+      Map.empty, Map.empty)
+  }
+
   /** Cumulative all-history report. Reads the lake RAW — duplicates
     * included, matching the reference's S7 full scan.
     */
   def cumulative(spark: SparkSession, lakeRoot: String): String =
-    cumulativeWithin(spark, lakeRoot, Scans.driverBudget(spark))._1
-
-  /** [[cumulative]] against an explicit byte `budget`; returns the
-    * markdown and the path taken.
-    */
-  private[pos] def cumulativeWithin(spark: SparkSession, lakeRoot: String,
-      budget: Long): (String, String) =
     Scans.labelled(spark) { label =>
-      collectWithin("Reports.cumulative", cumulativeSlice(spark, lakeRoot), budget, label) match {
-        case Some(rows) => (cumulativeOnDriver(spark, rows), "driver")
-        case None => (cumulativeDistributed(spark, lakeRoot), "distributed")
+      label("Reports.cumulative: partition summaries merged on the driver")
+      val s = cumulativeSummaries(spark, lakeRoot).collect()
+        .foldLeft(CumulativeSummary.Empty)(_.merge(_))
+      val n = s.all.receipts
+      val monthRevenues = s.months.values.flatten
+      val kpis = CumulativeKpis(
+        revenue = toDouble(s.all.revenue),
+        receipts = n,
+        avgReceipt = if (n > 0) toDouble(s.all.revenue) / n else 0.0,
+        avgMonthly = if (monthRevenues.isEmpty) 0.0
+          else monthRevenues.reduce(_ add _).doubleValue / monthRevenues.size,
+        firstDay = s.first.map(_._2).orNull,
+        lastDay = s.last.map(_._2).orNull)
+      val weekdays = s.split.toSeq.sortBy(_._1).map { case (weekend, (rev, receipts)) =>
+        (if (weekend) "Weekend" else "Weekday", toDouble(rev), receipts, toDouble(rev) / receipts)
       }
+      // in one order whatever the partitioning, for FP-Growth's sake
+      val hist = s.baskets.toArray.sortBy(_._1.mkString("\u0000"))
+      val rules =
+        if (hist.isEmpty) Array.empty[Row]
+        else MarketBasket.byLift(MarketBasket.histogramRules(spark, hist,
+            MarketBasket.DefaultMinSupport, MarketBasket.DefaultMinLift).getOrElse {
+          // an item domain too wide for one bitmask: FP-Growth on the baskets
+          import spark.implicits._
+          MarketBasket.rulesFromBaskets(hist.toSeq.flatMap { case (set, k) => Seq.fill(k.toInt)(set) }
+            .toDF("items"), MarketBasket.DefaultMinSupport, MarketBasket.DefaultMinLift)
+        }).limit(5).collect()
+      cumulativeMarkdown(kpis, weekdays, topN(s.sold, 5), rules)
     }
 
-  /** The cumulative report's one query: the cleaned lake, projected to
-    * the columns the report reads; `at` (epoch micros), `day`, `ym` and
-    * `weekend` are null where `shifted_time` is.
+  /** The cumulative report's one query: the cleaned lake, hash
+    * partitioned on `receipt_number` and projected to the columns the
+    * report reads; `at` (epoch micros), `day`, `ym` and `weekend` are
+    * null where `shifted_time` is.
     */
-  private[pos] def cumulativeSlice(spark: SparkSession, lakeRoot: String): DataFrame =
-    Transform.cleanForReporting(Lake.read(spark, lakeRoot)).select(
-      col("receipt_number"),
-      col("item_name"),
-      col("modifiers"),
-      col("total_money"),
-      col("price"),
-      unix_micros(col("shifted_time")).as("at"),
-      date_format(col("shifted_time"), "yyyy-MM-dd").as("day"),
-      date_format(col("shifted_time"), "yyyy-MM").as("ym"),
-      (weekday(col("shifted_time")) >= 4).as("weekend"))
+  private def cumulativeSlice(spark: SparkSession, lakeRoot: String): DataFrame =
+    Transform.cleanForReporting(Lake.read(spark, lakeRoot).repartition(col("receipt_number")))
+      .select(
+        col("receipt_number"),
+        col("item_name"),
+        col("modifiers"),
+        col("total_money"),
+        col("price"),
+        unix_micros(col("shifted_time")).as("at"),
+        date_format(col("shifted_time"), "yyyy-MM-dd").as("day"),
+        date_format(col("shifted_time"), "yyyy-MM").as("ym"),
+        (weekday(col("shifted_time")) >= 4).as("weekend"))
+
+  /** [[cumulativeSlice]] folded into one [[CumulativeSummary]] per partition. */
+  private[pos] def cumulativeSummaries(spark: SparkSession,
+      lakeRoot: String): Dataset[CumulativeSummary] =
+    cumulativeSlice(spark, lakeRoot).mapPartitions { rows =>
+      val all = new TotalsFold
+      val months = mutable.HashMap.empty[String, Sum]
+      val split = mutable.HashMap.empty[Boolean, (Sum, mutable.HashSet[String])]
+      var first: Option[(Long, String)] = None
+      var last: Option[(Long, String)] = None
+      val sold = mutable.HashMap.empty[Option[String], Long]
+      val baskets = mutable.HashMap.empty[String, Set[String]]
+      rows.foreach { r =>
+        val receipt = r.getString(0)
+        val item = r.getString(1)
+        explodedNames(item, r.getString(2)).foreach(n => count(sold, Some(n)))
+        baskets(receipt) = baskets.getOrElse(receipt, Set.empty[String]) + item
+        if (!r.isNullAt(5)) {
+          val total = sumAt(r, 3)
+          all.add(receipt, total)
+          addSum(months, r.getString(7), total)
+          val at = (r.getLong(5), r.getString(6))
+          if (first.forall(at._1 < _._1)) first = Some(at)
+          if (last.forall(at._1 > _._1)) last = Some(at)
+          val (rev, receipts) = split.getOrElse(r.getBoolean(8), (None, mutable.HashSet.empty[String]))
+          split(r.getBoolean(8)) = (plus(rev, sumAt(r, 4)), receipts += receipt)
+        }
+      }
+      val hist = mutable.HashMap.empty[Seq[String], Long]
+      baskets.values.foreach(set => count(hist, set.toSeq.sorted))
+      Iterator.single(CumulativeSummary(all.result, months.toMap,
+        split.view.mapValues { case (rev, receipts) => (rev, receipts.size.toLong) }.toMap,
+        first, last, sold.toMap, hist.toMap))
+    }(Encoders.javaSerialization[CumulativeSummary])
 
   private final case class CumulativeKpis(revenue: Double, receipts: Long, avgReceipt: Double,
       avgMonthly: Double, firstDay: String, lastDay: String)
-
-  /** The cumulative report from [[cumulativeSlice]]'s rows. The KPIs and
-    * the weekday split read the rows with a `shifted_time`
-    * ([[Analytics.cumulativeKpis]], [[Analytics.weekdayVsWeekend]]); the
-    * top products and the basket histogram read every row.
-    */
-  private def cumulativeOnDriver(spark: SparkSession, rows: Array[Row]): String = {
-    val all = new Totals
-    val months = mutable.HashMap.empty[String, Option[Double]]
-    val split = mutable.HashMap.empty[Boolean, (Double, mutable.HashSet[String])]
-    var first: Option[(Long, String)] = None
-    var last: Option[(Long, String)] = None
-    val sold = mutable.HashMap.empty[Option[String], Long]
-    val baskets = mutable.HashMap.empty[String, Set[String]]
-    rows.foreach { r =>
-      val receipt = r.getString(0)
-      val item = r.getString(1)
-      explodedNames(item, r.getString(2)).foreach { n =>
-        sold(Some(n)) = sold.getOrElse(Some(n), 0L) + 1L
-      }
-      baskets(receipt) = baskets.getOrElse(receipt, Set.empty[String]) + item
-      if (!r.isNullAt(5)) {
-        val total = doubleAt(r, 3)
-        all.add(receipt, total)
-        val ym = r.getString(7)
-        months(ym) = (months.getOrElse(ym, None) ++ total).reduceOption(_ + _)
-        val at = (r.getLong(5), r.getString(6))
-        if (first.forall(at._1 < _._1)) first = Some(at)
-        if (last.forall(at._1 > _._1)) last = Some(at)
-        val (rev, receipts) = split.getOrElse(r.getBoolean(8), (0.0, mutable.HashSet.empty[String]))
-        split(r.getBoolean(8)) = (rev + r.getDouble(4), receipts += receipt)
-      }
-    }
-    val n = all.receipts.size.toLong
-    val monthRevenues = months.values.flatten.toSeq
-    val kpis = CumulativeKpis(
-      revenue = all.revenue.getOrElse(0.0),
-      receipts = n,
-      avgReceipt = if (n > 0) all.revenue.fold(0.0)(_ / n) else 0.0,
-      avgMonthly = if (monthRevenues.isEmpty) 0.0 else monthRevenues.sum / monthRevenues.size,
-      firstDay = first.map(_._2).orNull,
-      lastDay = last.map(_._2).orNull)
-    val weekdays = split.toSeq.sortBy(_._1).map { case (weekend, (rev, receipts)) =>
-      (if (weekend) "Weekend" else "Weekday", rev, receipts.size.toLong, rev / receipts.size)
-    }
-    val hist = baskets.values.groupBy(identity).iterator
-      .map { case (set, same) => (set.toSeq, same.size.toLong) }.toArray
-    val rules =
-      if (hist.isEmpty) Array.empty[Row]
-      else MarketBasket.byLift(MarketBasket.histogramRules(spark, hist,
-          MarketBasket.DefaultMinSupport, MarketBasket.DefaultMinLift).getOrElse {
-        // an item domain too wide for one bitmask: FP-Growth on the baskets
-        import spark.implicits._
-        MarketBasket.rulesFromBaskets(hist.toSeq.flatMap { case (set, k) => Seq.fill(k.toInt)(set) }
-          .toDF("items"), MarketBasket.DefaultMinSupport, MarketBasket.DefaultMinLift)
-      }).limit(5).collect()
-    cumulativeMarkdown(kpis, weekdays, topN(sold, 5), rules)
-  }
-
-  /** The distributed cumulative report: the cleaned lake cached, four
-    * relations collected from it.
-    */
-  private def cumulativeDistributed(spark: SparkSession, lakeRoot: String): String = {
-    val cleaned = Transform.cleanForReporting(Lake.read(spark, lakeRoot)).cache()
-    try {
-      val exploded = ComboExplode.explodeComboItems(cleaned)
-      val k = Analytics.cumulativeKpis(cleaned).collect().head
-      val top = Analytics.topProducts(exploded, 5).collect()
-        .map(r => (r.getAs[String]("item_name"), r.getAs[Long]("items_sold"))).toSeq
-      val ww = Analytics.weekdayVsWeekend(cleaned).collect().map { r =>
-        (r.getAs[String]("period_type"), r.getAs[Double]("total_revenue"),
-          r.getAs[Long]("total_receipts"), r.getAs[Double]("avg_sale_per_receipt"))
-      }.toSeq
-      val rules = MarketBasket.rules(cleaned).limit(5).collect()
-      cumulativeMarkdown(
-        CumulativeKpis(k.getAs[Double]("total_revenue"), k.getAs[Long]("total_receipts"),
-          k.getAs[Double]("average_receipt_value"), k.getAs[Double]("average_monthly_revenue"),
-          k.getAs[String]("first_sale_date"), k.getAs[String]("last_sale_date")),
-        ww, top, rules)
-    } finally cleaned.unpersist()
-  }
 
   private def cumulativeMarkdown(k: CumulativeKpis, ww: Seq[(String, Double, Long, Double)],
       top: Seq[(String, Long)], rules: Array[Row]): String = {

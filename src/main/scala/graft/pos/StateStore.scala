@@ -1,6 +1,6 @@
 package graft.pos
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.time.{Instant, LocalDate, ZoneId, ZonedDateTime}
 import java.time.format.DateTimeFormatter
 
@@ -40,12 +40,17 @@ final class StateStore(path: Path, zone: ZoneId = ZoneId.of("America/Mexico_City
       }
 
   /** Commit the new watermark; no-op on an empty batch (reference
-    * `extract.py:233-236`).
+    * `extract.py:233-236`). The file is written beside the state and
+    * moved over it atomically, so a reader (or a crash mid-commit) sees
+    * the old watermark or the new one, never a truncated file; a temp
+    * file an interrupted commit leaves is overwritten by the next one.
     */
   def commit(maxUpdatedAt: Option[String]): Unit =
     maxUpdatedAt.foreach { ts =>
       val json = s"""{\n  "$key": "$ts"\n}"""
       if (path.getParent != null) Files.createDirectories(path.getParent)
-      Files.writeString(path, json)
+      val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+      Files.writeString(tmp, json)
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
 }

@@ -62,7 +62,7 @@ class ChartsSpec extends SparkSpec {
     }
   }
 
-  test("writeMonthlyCharts: renders decodable PNGs from the lake") {
+  test("monthlyWithCharts: renders decodable PNGs from the lake") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("charts").toString
@@ -81,15 +81,16 @@ class ChartsSpec extends SparkSpec {
       .withColumn("minutes_past_midnight", lit(0L))
       .withColumn("time_slot", lit("00:00-01:00"))
     Lake.writeFull(rows, s"$dir/lake")
-    val files = Charts.writeMonthlyCharts(spark, s"$dir/lake", "2025-07", s"$dir/charts")
-    assert(files.length === 2)
+    Reports.monthlyWithCharts(spark, s"$dir/lake", "2025-07", "2025-06", s"$dir/charts")
+    val files = Seq("top_products_2025-07.png", "daily_revenue_2025-07.png")
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/charts")).count() === 2)
     files.foreach { f =>
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "charts", f))
       assert(ImageCodec.decodePng(bytes).isDefined, s"$f not a decodable PNG")
     }
   }
 
-  test("writeMonthlyCharts: a day whose prices are all null draws as 0") {
+  test("monthlyWithCharts: a day whose prices are all null draws as 0") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("charts_null").toString
@@ -109,13 +110,8 @@ class ChartsSpec extends SparkSpec {
       .withColumn("time_slot", lit("00:00-01:00"))
     Lake.writeFull(rows, s"$dir/lake")
     val want = Charts.lineChart(Seq(100.0, 0.0, 50.0)).toSeq
-    val daily = Charts.writeMonthlyCharts(spark, s"$dir/lake", "2025-07", s"$dir/charts")
-      .find(_.contains("daily_revenue")).get
-    assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(daily)).toSeq == want)
-    // the driver path of the monthly report draws the same series
-    Reports.monthlyWithin(spark, s"$dir/lake", "2025-07", "2025-06", Some(s"$dir/driver"),
-      Long.MaxValue)
+    Reports.monthlyWithCharts(spark, s"$dir/lake", "2025-07", "2025-06", s"$dir/charts")
     assert(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/driver/daily_revenue_2025-07.png")).toSeq == want)
+      java.nio.file.Paths.get(s"$dir/charts/daily_revenue_2025-07.png")).toSeq == want)
   }
 }

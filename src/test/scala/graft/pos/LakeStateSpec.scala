@@ -277,4 +277,30 @@ class LakeStateSpec extends SparkSpec {
     Files.writeString(dir.resolve("etl_state.json"), "{ not json")
     assert(store.readLastTimestamp(now) === "2025-07-01T06:00:00.000Z")
   }
+
+  test("S9/K6 state store: commit replaces the file atomically and ignores a stray temp file") {
+    val dir = Files.createTempDirectory("state_atomic")
+    val state = dir.resolve("etl_state.json")
+    val store = new StateStore(state)
+    val now = Instant.parse("2025-07-15T12:00:00Z")
+    def inode: AnyRef = Files.readAttributes(state,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    store.commit(Some("2025-07-20T10:11:12.000Z"))
+    val first = inode
+    store.commit(Some("2025-07-21T00:00:00.000Z"))
+    // a new file moved over the old one, not the old one truncated
+    assert(inode != first)
+    assert(store.readLastTimestamp(now) === "2025-07-21T00:00:00.000Z")
+    assert(Files.readString(state) ===
+      "{\n  \"last_successful_extraction_timestamp\": \"2025-07-21T00:00:00.000Z\"\n}")
+    def names: Set[String] = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(names === Set("etl_state.json"))
+    // a commit interrupted before its move leaves its temp file behind
+    Files.writeString(dir.resolve("etl_state.json.tmp"),
+      "{\n  \"last_successful_extraction_timestamp\": \"2025-08-01T00:00:00.000Z\"\n}")
+    assert(store.readLastTimestamp(now) === "2025-07-21T00:00:00.000Z")
+    store.commit(Some("2025-07-22T00:00:00.000Z"))
+    assert(store.readLastTimestamp(now) === "2025-07-22T00:00:00.000Z")
+    assert(names === Set("etl_state.json"))
+  }
 }
