@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
+
 /** Connected components over a candidate-pair edge list — the step that
   * turns pairwise near-dup evidence (MinHash-LSH / SimHash pairs) into
   * dedup CLUSTERS, so a corpus keeps one canonical document per
@@ -15,7 +17,9 @@ import org.apache.spark.sql.functions._
   * Components in MapReduce and Beyond", SoCC '14): O(log n) rounds on
   * any graph, including deep components (long reply chains, web
   * graphs), with lineage truncated per round by an eager
-  * localCheckpoint so plans stay flat at any iteration count.
+  * [[graft.operators.Checkpoints]] checkpoint (fresh leaf statistics)
+  * so plans stay flat at any iteration count, and each superseded
+  * round's blocks freed.
   */
 object Components {
 
@@ -116,11 +120,10 @@ object Components {
     */
   private def starLabels(pairs: DataFrame, aCol: String, bCol: String,
                          maxIter: Int): DataFrame = {
-    var edges = pairs
+    var (edges, edgesToken) = Checkpoints.eager(pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // Fixpoint test: the round output equals the round input. Both are
     // DISTINCT edge sets, so (count, XOR of 64-bit row hashes) is a set
     // checksum — one aggregation job per round, carried across rounds,
@@ -144,21 +147,24 @@ object Components {
       val large = bi.join(mins, "a")
         .filter(col("b") > col("a"))
         .select(col("b").as("a"), col("m").as("b"))
-      val afterLarge = large.filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
+      val (afterLarge, largeToken) =
+        Checkpoints.eager(large.filter(col("a") =!= col("b")).distinct())
       val bi2 = afterLarge.union(afterLarge.select(col("b").as("a"), col("a").as("b")))
       val le = bi2.filter(col("b") <= col("a"))
       val mins2 = le.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val small = le.join(mins2, "a")
+      val (small, smallToken) = Checkpoints.eager(le.join(mins2, "a")
         .select(col("b").as("x"), col("m"))
         .union(mins2.select(col("a").as("x"), col("m")))
         .filter(col("x") =!= col("m"))
         .select(col("x").as("a"), col("m").as("b"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
+      largeToken.free()
+      edgesToken.free()
       val cur = stats(small)
       changed = cur != prev
       prev = cur
       edges = small
+      edgesToken = smallToken
       iter += 1
     }
     // Unconverged labels are WRONG labels (split ids inside one

@@ -51,6 +51,13 @@ object MarketBasket {
     */
   private val maskHistogramMax = 1 << 20
 
+  /** Itemsets the driver Apriori may hold at once (frequent sets plus
+    * the level being generated). One frequent basket of k items makes
+    * every one of its 2^k subsets frequent, so a 30-item receipt among
+    * fewer than 100 baskets would otherwise fill the heap.
+    */
+  private val driverItemsetsMax = 1 << 20
+
   /** [[rules]]' thresholds unless the caller names others. */
   private[pos] val DefaultMinSupport = 0.01
   private[pos] val DefaultMinLift = 0.5
@@ -166,7 +173,9 @@ object MarketBasket {
       val c = countOf(m)
       if (c >= minCount) { freq(m) = c; true } else false
     }
+    var size = 1
     while (level.nonEmpty) {
+      size += 1
       // Candidates: frequent set + one item, kept only when every
       // one-smaller subset is frequent (anti-monotone prune). Every
       // frequent (p+1)-set has a frequent p-subset, so this generates
@@ -182,7 +191,13 @@ object MarketBasket {
             if ((m & bj) != 0L && !freq.contains(m ^ bj)) ok = false
             j += 1
           }
-          if (ok) cand += m
+          if (ok) {
+            cand += m
+            if (freq.size + cand.size > driverItemsetsMax)
+              throw new IllegalStateException(
+                s"MarketBasket: level $size holds ${cand.size} candidate itemsets on top of " +
+                  s"${freq.size} frequent ones, over the driver bound $driverItemsetsMax")
+          }
         }
       }
       level = cand.toSeq.filter { m =>
@@ -210,17 +225,5 @@ object MarketBasket {
       StructField("lift", DoubleType, nullable = false)))
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Frequent itemsets ≥ min_support (the Apriori half of the contract). */
-  def frequentItemsets(df: DataFrame, minSupport: Double = 0.01): DataFrame = {
-    val b = baskets(df).cache() // count + FPGrowth's two passes
-    val n = b.count()
-    val fp = new FPGrowth().setItemsCol("items").setMinSupport(minSupport)
-    val model = try fp.fit(b) finally b.unpersist() // itemsets live in the model
-    model.freqItemsets
-      .withColumn("support", col("freq") / lit(n.toDouble))
-      .select(col("items"), col("support"), col("freq"))
-      .orderBy(col("support").desc)
   }
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.similarity.{Ann, Pq}
 
@@ -21,7 +21,7 @@ import graft.similarity.{Ann, Pq}
   * from with zero per-query encode work.
   *
   * Idempotence is the SegmentDedupStream contract: each micro-batch
-  * INSERT OVERWRITEs its own `batch=<id>` directory, so a crash-replayed
+  * overwrites its own `batch=<id>` directory, so a crash-replayed
   * batch rewrites byte-identical output instead of duplicating rows.
   * Because the codebook is frozen, encoding is deterministic per vector
   * and the streamed index is row-identical to a batch rebuild over the
@@ -29,18 +29,10 @@ import graft.similarity.{Ann, Pq}
   */
 object AnnIndexStream {
 
-  /** Minimal arriving-embedding schema (extra columns are ignored). */
-  val embSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType))))
-
   /** Lifecycle event schema: `op` is "u" (upsert — `embedding` carries
     * the vector) or "d" (delete — `embedding` is null and ignored).
     */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("op", org.apache.spark.sql.types.StringType)))
+  val eventSchema: StructType = Drops.embeddings.add("op", StringType)
 
   /** Encode + assign + pack one batch of vectors against the frozen
     * codebook and coarse centroids — shared by the stream below and the
@@ -224,21 +216,11 @@ object AnnIndexStream {
       listCents: DataFrame,
       listCol: String,
       dim: Int,
-      m: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, cents, listCents, listCol, dim, m)
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      m: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.embeddings, checkpoint, "parquet") { (batch, batchId) =>
+      packBatch(batch, cents, listCents, listCol, dim, m)
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    }
 
   /** The lifecycle stream: like [[run]] but over [[eventSchema]] drop
     * files (upserts AND deletes). Each micro-batch writes its packed
@@ -255,19 +237,9 @@ object AnnIndexStream {
       listCents: DataFrame,
       listCol: String,
       dim: Int,
-      m: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packEventBatch(batch, cents, listCents, listCol, dim, m)
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      m: Int): StreamingQuery =
+    Drops.start(spark, dropDir, eventSchema, checkpoint, "parquet") { (batch, batchId) =>
+      packEventBatch(batch, cents, listCents, listCol, dim, m)
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    }
 }

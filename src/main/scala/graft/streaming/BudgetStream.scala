@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** ONLINE token-budget admission — the streaming twin of the t25 batch
   * gate: documents arrive as JSONL drops in `doc_id` order and each is
@@ -24,17 +23,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * by that batch — so the state table is tiny forever (domains ×
   * batches), the per-batch base is a partial-agg sum over it, and the
   * within-batch running sum windows only the batch. State is
-  * PARTITIONED BY batch and claimed with INSERT OVERWRITE, so a
+  * PARTITIONED BY batch and claimed by [[StateTables.claim]], so a
   * crash-replayed batch re-derives the identical base (batch < id
   * partitions only) and overwrites its own claim — byte-idempotent,
   * the NearDupStream discipline.
   */
 object BudgetStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("text", StringType)))
 
   private def tokens(text: Column): Column = graft.functions.Exprs.tokenCount(text)
 
@@ -58,19 +52,10 @@ object BudgetStream {
       stateTable: String,
       outDir: String,
       checkpoint: String,
-      budget: Long,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir, budget)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      budget: Long): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.sourcedDocs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir, budget)
+    }
 
   /** One micro-batch: per-domain base from prior batches' state rows,
     * within-batch running sum, admit under budget, claim this batch's
@@ -91,8 +76,7 @@ object BudgetStream {
       .select(col("doc_id"), col("source"), tokens(col("text")).as("n_tokens"))
       .localCheckpoint(true)
 
-    val base = ss.table(stateTable)
-      .where(col("batch") < lit(batchId))
+    val base = StateTables.before(ss, stateTable, batchId)
       .groupBy(col("source"))
       .agg(sum(col("seen_tokens")).as("base_tokens"))
 
@@ -107,12 +91,8 @@ object BudgetStream {
         col("cum_tokens"))
 
     admitted.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    toks.groupBy(col("source"))
-      .agg(sum(col("n_tokens")).cast("long").as("seen_tokens"))
-      .createOrReplaceTempView("__budget_state_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT source, seen_tokens FROM __budget_state_claim""".stripMargin)
+    StateTables.claim(stateTable, batchId, toks.groupBy(col("source"))
+      .agg(sum(col("n_tokens")).cast("long").as("seen_tokens")))
   }
 
   /** Accumulated stream output over all batches. */

@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.MinHashLSH
 import graft.text.QualityModel
@@ -47,16 +46,11 @@ import graft.text.QualityModel
   * state is one row per (quality-passed doc, band), bucketed by band
   * value so the probe join reads state without re-shuffling it;
   * budget state is one row per (domain, batch). Both state tables use
-  * the [[StateTables]] discipline: PARTITIONED BY batch + INSERT
-  * OVERWRITE claims = byte-idempotent crash replay, and MSCK-based
+  * the [[StateTables]] discipline: PARTITIONED BY batch + per-batch
+  * claims = byte-idempotent crash replay, and MSCK-based
   * re-adoption of state data across JVM restarts.
   */
 object CurationStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("text", StringType)))
 
   /** Gate-pinned defaults (t29): the t26 model shape with the
     * curation-balanced salt, the m10 LSH geometry, the t25 budget.
@@ -118,19 +112,10 @@ object CurationStream {
       budgetStateTable: String,
       outDir: String,
       checkpoint: String,
-      budget: Long,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, dedupStateTable, budgetStateTable, outDir, budget)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      budget: Long): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.sourcedDocs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, dedupStateTable, budgetStateTable, outDir, budget)
+    }
 
   /** One micro-batch: score quality, probe + claim dedup state over
     * the quality-passed docs, then admit survivors against the budget
@@ -149,7 +134,6 @@ object CurationStream {
       "CLUSTERED BY (v0) SORTED BY (v0) INTO 16 BUCKETS")
     StateTables.ensure(ss, budgetStateTable,
       "source STRING, seen_tokens BIGINT, batch BIGINT")
-    val numBands = NumHashes / RowsPerBand
 
     // Stage 1 — quality. localCheckpoint: feeds every later stage and
     // the drop file may be gone on a crash replay.
@@ -162,47 +146,10 @@ object CurationStream {
 
     // Stage 2 — near-dup over quality-passed docs (NearDupStream's
     // probe + claim, scoped to the quality-passed population).
-    val sig = MinHashLSH.signatures(qpass, "doc_id", "text", ShingleSize, NumHashes)
-    val bandCols = (0 until numBands).map { bIdx =>
-      struct(
-        lit(bIdx).as("band"),
-        col(s"sig_${bIdx * RowsPerBand}").as("v0"),
-        col(s"sig_${bIdx * RowsPerBand + 1}").as("v1"))
-    }
-    val banded = sig
-      .select(
-        col("doc_id"),
-        array((0 until NumHashes).map(i => col(s"sig_$i")): _*).as("sig"),
-        explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"),
-        col("b.v0").as("v0"), col("b.v1").as("v1"), col("sig"))
+    val banded = NearDupStream.bandedRows(qpass, NumHashes, RowsPerBand)
+    val dups = NearDupStream.earlierMates(banded, dedupStateTable, batchId, MinMatches)
       .localCheckpoint(true)
-    val prior = ss.table(dedupStateTable)
-      .where(col("batch") < lit(batchId))
-      .select(col("doc_id"), col("band"), col("v0"), col("v1"), col("sig"))
-    val earlier = prior.unionByName(banded)
-    val matchCount = (c1: Column, c2: Column) =>
-      aggregate(zip_with(c1, c2, (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, m) => acc + m)
-    val dups = banded.select(
-        col("doc_id").as("id_b"), col("band"), col("v0"), col("v1"),
-        col("sig").as("sig_b"))
-      .join(
-        earlier.select(col("doc_id").as("id_a"), col("band"), col("v0"),
-          col("v1"), col("sig").as("sig_a")),
-        Seq("band", "v0", "v1"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
-      .distinct()
-      .filter(matchCount(col("sig_a"), col("sig_b")) >= MinMatches)
-      .groupBy(col("id_b"))
-      .agg(min(col("id_a")).as("dup_of"))
-      .select(col("id_b").as("doc_id"), col("dup_of"))
-      .localCheckpoint(true)
-    banded.createOrReplaceTempView("__curation_dedup_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $dedupStateTable PARTITION (batch = $batchId)
-         |SELECT doc_id, band, v0, v1, sig FROM __curation_dedup_claim""".stripMargin)
+    StateTables.claim(dedupStateTable, batchId, banded)
 
     // Stage 3 — budget over survivors (BudgetStream's base + claim,
     // fed by stage-3 entrants only).
@@ -210,8 +157,7 @@ object CurationStream {
       .join(dups, Seq("doc_id"), "left_outer")
       .filter(col("dup_of").isNull)
       .select(col("doc_id"), col("source"), col("n_tokens"))
-    val budgetBase = ss.table(budgetStateTable)
-      .where(col("batch") < lit(batchId))
+    val budgetBase = StateTables.before(ss, budgetStateTable, batchId)
       .groupBy(col("source"))
       .agg(sum(col("seen_tokens")).as("base_tokens"))
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
@@ -221,12 +167,8 @@ object CurationStream {
       .withColumn("cum_tokens",
         (col("batch_cum") + coalesce(col("base_tokens"), lit(0L))).cast("long"))
       .select(col("doc_id"), col("cum_tokens"))
-    stage3.groupBy(col("source"))
-      .agg(sum(col("n_tokens")).cast("long").as("seen_tokens"))
-      .createOrReplaceTempView("__curation_budget_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $budgetStateTable PARTITION (batch = $batchId)
-         |SELECT source, seen_tokens FROM __curation_budget_claim""".stripMargin)
+    StateTables.claim(budgetStateTable, batchId, stage3.groupBy(col("source"))
+      .agg(sum(col("n_tokens")).cast("long").as("seen_tokens")))
 
     // One decision row per arriving doc.
     val decisions = scored

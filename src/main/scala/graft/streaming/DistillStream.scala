@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.QualityModel
 
@@ -35,10 +34,6 @@ import graft.text.QualityModel
   */
 object DistillStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
   /** The heuristic ±1 label the distillation learns (t40's teacher):
     * shared by admission-time accumulation and the batch references.
     */
@@ -50,7 +45,7 @@ object DistillStream {
   }
 
   /** Train generation `rebuildId` on a labelled corpus and freeze it
-    * into the state table (INSERT OVERWRITE its partition —
+    * into the state table (a claim of its partition —
     * idempotent refreeze). Returns the trained weights.
     */
   def retrainCompact(
@@ -62,11 +57,7 @@ object DistillStream {
       epochs: Int): Array[Long] = {
     ensureWeightsTable(spark, weightsTable)
     val w = QualityModel.train(labeled, "doc_id", "text", "y", numBuckets, epochs)
-    QualityModel.weightsTable(spark, w)
-      .createOrReplaceTempView("__distill_state_claim")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $weightsTable PARTITION (batch = $rebuildId)
-         |SELECT bucket, weight FROM __distill_state_claim""".stripMargin)
+    StateTables.claim(weightsTable, rebuildId, QualityModel.weightsTable(spark, w))
     w
   }
 
@@ -75,13 +66,11 @@ object DistillStream {
     */
   def loadWeights(spark: SparkSession, weightsTable: String,
                   numBuckets: Int): Array[Long] = {
-    val latest = spark.table(weightsTable)
-      .agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    require(latest >= 0L, "DistillStream: no frozen generation — run retrainCompact first")
+    val rows = StateTables.latest(spark.table(weightsTable))
+      .select(col("bucket").cast("long"), col("weight").cast("long")).collect()
+    require(rows.nonEmpty, "DistillStream: no frozen generation — run retrainCompact first")
     val w = Array.fill(numBuckets + 1)(0L)
-    spark.table(weightsTable).where(col("batch") === latest)
-      .select(col("bucket").cast("long"), col("weight").cast("long"))
-      .collect().foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
+    rows.foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
     w
   }
 
@@ -93,22 +82,13 @@ object DistillStream {
       arrivalsDir: String,
       outDir: String,
       checkpoint: String,
-      numBuckets: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, weightsTable, arrivalsDir, outDir, numBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      numBuckets: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, weightsTable, arrivalsDir, outDir, numBuckets)
+    }
 
   /** One micro-batch: score against the frozen generation, persist the
-    * decisions and the labelled arrivals (both INSERT OVERWRITE per
+    * decisions and the labelled arrivals (both overwritten per
     * batch — idempotent under a fixed generation).
     */
   def processBatch(

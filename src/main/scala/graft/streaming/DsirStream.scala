@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.NgramLm
 
@@ -42,7 +41,7 @@ import graft.text.NgramLm
   * scoring rides the micro-batch scan (the same fused ten-join plan
   * as t34 — a second scoring pass would be a second 100 TB read).
   * Budget state is ONE ROW PER BATCH (the batch's ratio-passing token
-  * total), partitioned by batch and claimed with INSERT OVERWRITE —
+  * total), partitioned by batch and claimed by [[StateTables.claim]] —
   * byte-idempotent crash replay, and the running cut inside a batch
   * is [[graft.operators.GlobalRank.withGlobalPrefixSum]] (a driver
   * finish under its bound, the two-pass over it: no single-partition
@@ -52,11 +51,6 @@ import graft.text.NgramLm
   * distinguishing target (0) from raw (1).
   */
 object DsirStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("text", StringType)))
 
   /** Train both LMs on the reference pool (target = `targetSource`
     * slice, raw = the whole pool) and freeze them into `lmTable` under
@@ -68,41 +62,15 @@ object DsirStream {
     ensureLmTable(spark, lmTable)
     val (lmT, lmR) =
       NgramLm.trainDual(pool, idCol, textCol, col(sourceCol) === targetSource)
-    lmRows(spark, lmT, 0).unionByName(lmRows(spark, lmR, 1))
-      .createOrReplaceTempView("__dsir_lm_freeze")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $lmTable PARTITION (batch = 0)
-         |SELECT lm, kind, t1, t2, t3, c FROM __dsir_lm_freeze""".stripMargin)
-  }
-
-  private def lmRows(spark: SparkSession, lm: NgramLm.Lm, tag: Int): DataFrame = {
-    val nullTok = lit(null).cast("string")
-    lm.uni.select(lit(tag).as("lm"), lit(1).as("kind"), col("tok").as("t1"),
-        nullTok.as("t2"), nullTok.as("t3"), col("c"))
-      .unionByName(lm.bi.select(lit(tag).as("lm"), lit(2).as("kind"), col("t1"),
-        col("t2"), nullTok.as("t3"), col("c")))
-      .unionByName(lm.tri.select(lit(tag).as("lm"), lit(3).as("kind"), col("t1"),
-        col("t2"), col("t3"), col("c")))
-      .unionByName(spark.range(1).select(lit(tag).as("lm"), lit(0).as("kind"),
-        lit(lm.nTokens.toString).as("t1"), lit(lm.vocab.toString).as("t2"),
-        nullTok.as("t3"), lit(0L).as("c")))
+    StateTables.claim(lmTable, 0L,
+      LmScoreStream.lmRows(spark, lmT).withColumn("lm", lit(0))
+        .unionByName(LmScoreStream.lmRows(spark, lmR).withColumn("lm", lit(1))))
   }
 
   /** Re-hydrate both frozen LMs: `(target, raw)`. */
   def loadLms(spark: SparkSession, lmTable: String): (NgramLm.Lm, NgramLm.Lm) = {
     ensureLmTable(spark, lmTable)
-    def one(tag: Int): NgramLm.Lm = {
-      val counts = spark.table(lmTable).where(col("lm") === tag)
-      val scalars = counts.where(col("kind") === 0)
-        .select(col("t1"), col("t2")).head()
-      NgramLm.Lm(
-        uni = counts.where(col("kind") === 1).select(col("t1").as("tok"), col("c")),
-        bi = counts.where(col("kind") === 2).select(col("t1"), col("t2"), col("c")),
-        tri = counts.where(col("kind") === 3)
-          .select(col("t1"), col("t2"), col("t3"), col("c")),
-        nTokens = scalars.getString(0).toLong,
-        vocab = scalars.getString(1).toLong)
-    }
+    def one(tag: Int) = LmScoreStream.lmOf(spark.table(lmTable).where(col("lm") === tag))
     (one(0), one(1))
   }
 
@@ -147,20 +115,11 @@ object DsirStream {
       outDir: String,
       checkpoint: String,
       minLogratioMicro: Long,
-      budgetToks: Long,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, lmTable, stateTable, outDir,
-          minLogratioMicro, budgetToks)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      budgetToks: Long): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.sourcedDocs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, lmTable, stateTable, outDir,
+        minLogratioMicro, budgetToks)
+    }
 
   /** One micro-batch: dual-score against the frozen LMs, ratio gate,
     * budget base from prior batches' state rows, within-batch running
@@ -181,18 +140,13 @@ object DsirStream {
     // the output write and the state claim
     val docs = batch.select(col("doc_id"), col("source"), col("text"))
       .localCheckpoint(true)
-    val baseToks = ss.table(stateTable)
-      .where(col("batch") < lit(batchId))
+    val baseToks = StateTables.before(ss, stateTable, batchId)
       .agg(coalesce(sum(col("seen_tokens")), lit(0L))).head().getLong(0)
     val out = batchSelection(docs, lmT, lmR, minLogratioMicro, budgetToks, baseToks)
       .localCheckpoint(true)
     out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    out.where(col("decision") =!= "reject_ratio")
-      .agg(coalesce(sum(col("n_toks")), lit(0L)).as("seen_tokens"))
-      .createOrReplaceTempView("__dsir_state_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT seen_tokens FROM __dsir_state_claim""".stripMargin)
+    StateTables.claim(stateTable, batchId, out.where(col("decision") =!= "reject_ratio")
+      .agg(coalesce(sum(col("n_toks")), lit(0L)).as("seen_tokens")))
   }
 
   /** Accumulated stream output over all batches. */

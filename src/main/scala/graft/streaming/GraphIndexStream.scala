@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.similarity.Ann
 
@@ -54,11 +53,6 @@ import graft.similarity.Ann
   * window exactly like the SA and ANN-index compactions.
   */
 object GraphIndexStream {
-
-  /** Arriving-embedding schema (extra columns ignored). */
-  val embSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType))))
 
   /** Graph search/insert parameters — one object so admission, serving
     * and the spec's references can't drift apart.
@@ -123,14 +117,8 @@ object GraphIndexStream {
   }
 
   /** Latest frozen generation id (−1 when no rebuild has run). */
-  def latestRebuild(spark: SparkSession, stateDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$stateDir/edges")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) -1L
-    else fs.listStatus(path).map(_.getPath.getName)
-      .collect { case s if s.startsWith("rebuild=") => s.stripPrefix("rebuild=").toLong }
-      .foldLeft(-1L)(math.max)
-  }
+  def latestRebuild(spark: SparkSession, stateDir: String): Long =
+    StateTables.latestRebuild(spark, s"$stateDir/edges")
 
   /** Start the admission stream over a JSONL drop dir. */
   def run(
@@ -138,19 +126,10 @@ object GraphIndexStream {
       dropDir: String,
       stateDir: String,
       checkpoint: String,
-      p: GraphParams,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateDir, p)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      p: GraphParams): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.embeddings, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateDir, p)
+    }
 
   /** One micro-batch: label the arrivals against the frozen centroids,
     * beam-insert them against the frozen graph, and overwrite this

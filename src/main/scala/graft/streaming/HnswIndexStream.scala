@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.similarity.Ann
 
@@ -59,10 +58,6 @@ import graft.similarity.Ann
   * plus one broadcast label argmax; nothing corpus-sized shuffles.
   */
 object HnswIndexStream {
-
-  val embSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType))))
 
   /** Ladder parameters — one object shared by build, admission,
     * serving and the spec, so the knobs cannot drift.
@@ -134,33 +129,18 @@ object HnswIndexStream {
       .write.mode("overwrite").parquet(s"$stateDir/cents/rebuild=$gen")
   }
 
-  def latestRebuild(spark: SparkSession, stateDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$stateDir/edges0")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) -1L
-    else fs.listStatus(path).map(_.getPath.getName)
-      .collect { case s if s.startsWith("rebuild=") => s.stripPrefix("rebuild=").toLong }
-      .foldLeft(-1L)(math.max)
-  }
+  def latestRebuild(spark: SparkSession, stateDir: String): Long =
+    StateTables.latestRebuild(spark, s"$stateDir/edges0")
 
   def run(
       spark: SparkSession,
       dropDir: String,
       stateDir: String,
       checkpoint: String,
-      p: LadderParams,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateDir, p)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      p: LadderParams): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.embeddings, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateDir, p)
+    }
 
   /** One micro-batch: clone-probe, label, level-assign, ladder-insert;
     * overwrite this batch's generation-scoped `arrivals/` and

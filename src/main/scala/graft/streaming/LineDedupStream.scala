@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.TextOps
 
@@ -46,14 +45,10 @@ import graft.text.TextOps
   * long line, h-BUCKETED (16 buckets, sorted — the SaDedupStream
   * discipline) so the tiny batch side repartitions to the bucket
   * count and the state never re-shuffles; generations are claimed
-  * with INSERT OVERWRITE and re-adopted via MSCK across JVMs
+  * by [[StateTables.claim]] and re-adopted via MSCK across JVMs
   * ([[StateTables]]).
   */
 object LineDedupStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   /** Distinct md5 digest of every kept long line — the frozen census. */
   def lineCensus(docs: DataFrame, idCol: String, textCol: String,
@@ -85,10 +80,7 @@ object LineDedupStream {
       spark.read.parquet(s"$cleanDir/rebuild=$rebuildId")
         .select(col("doc_id"), col("clean_text").as("text")),
       "doc_id", "text", minChars)
-    census.createOrReplaceTempView("__line_dedup_state_claim")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $rebuildId)
-         |SELECT h FROM __line_dedup_state_claim""".stripMargin)
+    StateTables.claim(stateTable, rebuildId, census)
   }
 
   /** Start the admission stream over a JSONL drop dir. */
@@ -98,19 +90,10 @@ object LineDedupStream {
       stateTable: String,
       outDir: String,
       checkpoint: String,
-      minChars: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir, minChars)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      minChars: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir, minChars)
+    }
 
   /** One micro-batch: split the arrivals into lines, anti-join the
     * long lines against the latest frozen census (bucket-local on the
@@ -130,10 +113,7 @@ object LineDedupStream {
     // line split and the reassembly join — freeze it once
     val docs = graft.operators.Checkpoints.eager(
       batch.select(col("doc_id"), col("text")))._1
-    val latest = ss.table(stateTable)
-      .agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    val state = ss.table(stateTable)
-      .where(col("batch") === latest).select(col("h"))
+    val state = StateTables.latest(ss.table(stateTable)).select(col("h"))
     val lines = TextOps.splitLines(docs, "doc_id", "text")
     val big = lines.filter(length(col("line")) >= minChars)
     val fresh = big.withColumn("h", md5(col("line")))

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.NgramLm
 
@@ -19,7 +18,7 @@ import graft.text.NgramLm
   * cross-multiplication trick) — so stream ≡ batch holds batch-wise
   * with no cross-arrival state at all. What IS stateful is the model:
   * the tagged (kind, t1, t2, t3, c) count table lives under the
-  * [[StateTables]] discipline (partition `batch=0`, INSERT OVERWRITE
+  * [[StateTables]] discipline (partition `batch=0`, a [[StateTables.claim]]
   * = idempotent refreeze, MSCK re-adoption), so a restarted JVM
   * re-adopts the frozen LM instead of silently scoring against an
   * empty model — the same over-admit hazard class the budget state
@@ -30,11 +29,6 @@ import graft.text.NgramLm
   */
 object LmScoreStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("text", StringType)))
-
   /** Train on the reference slice and freeze the tagged count table
     * plus the (nTokens, vocab) scalars into `lmTable` (kind 0 row).
     * Idempotent: refreezing overwrites the single `batch=0` claim.
@@ -42,7 +36,22 @@ object LmScoreStream {
   def freezeLm(spark: SparkSession, ref: DataFrame, idCol: String,
                textCol: String, lmTable: String): Unit = {
     ensureLmTable(spark, lmTable)
-    val lm = NgramLm.train(ref, idCol, textCol)
+    StateTables.claim(lmTable, 0L, lmRows(spark, NgramLm.train(ref, idCol, textCol)))
+  }
+
+  /** Re-hydrate the frozen LM (a restarted JVM re-adopts the table via
+    * [[StateTables.ensure]]'s MSCK path first).
+    */
+  def loadLm(spark: SparkSession, lmTable: String): NgramLm.Lm = {
+    ensureLmTable(spark, lmTable)
+    lmOf(spark.table(lmTable))
+  }
+
+  /** An LM as tagged `(kind, t1, t2, t3, c)` rows: kind 1–3 the n-gram
+    * counts, kind 0 the (nTokens, vocab) scalars. Shared with
+    * [[DsirStream]], which freezes two LMs side by side.
+    */
+  private[streaming] def lmRows(spark: SparkSession, lm: NgramLm.Lm): DataFrame = {
     val nullTok = lit(null).cast("string")
     lm.uni.select(lit(1).as("kind"), col("tok").as("t1"),
         nullTok.as("t2"), nullTok.as("t3"), col("c"))
@@ -53,18 +62,10 @@ object LmScoreStream {
       .unionByName(spark.range(1).select(lit(0).as("kind"),
         lit(lm.nTokens.toString).as("t1"), lit(lm.vocab.toString).as("t2"),
         nullTok.as("t3"), lit(0L).as("c")))
-      .createOrReplaceTempView("__lm_freeze")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $lmTable PARTITION (batch = 0)
-         |SELECT kind, t1, t2, t3, c FROM __lm_freeze""".stripMargin)
   }
 
-  /** Re-hydrate the frozen LM (a restarted JVM re-adopts the table via
-    * [[StateTables.ensure]]'s MSCK path first).
-    */
-  def loadLm(spark: SparkSession, lmTable: String): NgramLm.Lm = {
-    ensureLmTable(spark, lmTable)
-    val counts = spark.table(lmTable)
+  /** The LM that [[lmRows]] froze into `counts`. */
+  private[streaming] def lmOf(counts: DataFrame): NgramLm.Lm = {
     val scalars = counts.where(col("kind") === 0)
       .select(col("t1"), col("t2")).head()
     NgramLm.Lm(
@@ -97,22 +98,11 @@ object LmScoreStream {
       lmTable: String,
       outDir: String,
       checkpoint: String,
-      thresholdMicro: Long,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val lm = loadLm(ss, lmTable)
-        batchScores(batch, lm, thresholdMicro)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      thresholdMicro: Long): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.sourcedDocs, checkpoint) { (batch, batchId) =>
+      batchScores(batch, loadLm(batch.sparkSession, lmTable), thresholdMicro)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
 
   /** Accumulated stream output over all batches. */
   def results(spark: SparkSession, outDir: String): DataFrame =

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.MinHashLSH
 
@@ -32,19 +31,12 @@ import graft.dedup.MinHashLSH
   * b=4 — BUCKETED by band value so the per-batch probe join reads
   * state without re-shuffling it, and PARTITIONED BY batch so crash
   * replay is exact: a re-delivered batch re-reads only `batch < id`
-  * partitions and INSERT OVERWRITEs its own, making every batch
+  * partitions and overwrites its own claim, making every batch
   * byte-idempotent. Bucket-mate comparison stays bounded by bucket
   * population — the LSH guarantee — so per-batch work is
   * |batch| × mean-bucket-size, independent of corpus size.
   */
 object NearDupStream {
-
-  /** Minimal arriving-document schema (extra drop-file columns are
-    * ignored by the signature pipeline).
-    */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   /** Start the incremental near-dup stream over a JSONL drop dir. */
   def run(
@@ -53,22 +45,12 @@ object NearDupStream {
       stateTable: String,
       outDir: String,
       checkpoint: String,
-      maxFilesPerTrigger: Int = 1,
       numHashes: Int = 8,
       rowsPerBand: Int = 2,
       minMatches: Int = 4): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir,
-          numHashes, rowsPerBand, minMatches)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir, numHashes, rowsPerBand, minMatches)
+    }
 
   /** One micro-batch: signature + banded rows for the batch's docs,
     * probe state (earlier batches) and the batch itself (earlier ids)
@@ -85,21 +67,28 @@ object NearDupStream {
       numHashes: Int,
       rowsPerBand: Int,
       minMatches: Int): Unit = {
-    val ss = batch.sparkSession
-    ensureStateTable(ss, stateTable)
-    val numBands = numHashes / rowsPerBand
+    ensureStateTable(batch.sparkSession, stateTable)
+    val banded = bandedRows(batch, numHashes, rowsPerBand)
+    val flagged = earlierMates(banded, stateTable, batchId, minMatches)
+    StateTables.claim(stateTable, batchId, banded)
+    flagged.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+  }
 
-    // Banded rows for this batch — same signature pipeline as the
-    // batch gate. localCheckpoint: feeds the state write + two probe
-    // sides, and drop files may be gone on a later replay.
-    val sig = MinHashLSH.signatures(batch, "doc_id", "text", 3, numHashes)
-    val bandCols = (0 until numBands).map { bIdx =>
+  /** Banded rows `(doc_id, band, v0, v1, sig)` of `docs` — the same
+    * signature pipeline as the batch gate. localCheckpoint: they feed
+    * the state claim and both probe sides, and drop files may be gone
+    * on a later replay. Shared with [[CurationStream]].
+    */
+  private[streaming] def bandedRows(docs: DataFrame, numHashes: Int,
+                                    rowsPerBand: Int): DataFrame = {
+    val sig = MinHashLSH.signatures(docs, "doc_id", "text", 3, numHashes)
+    val bandCols = (0 until numHashes / rowsPerBand).map { bIdx =>
       struct(
         lit(bIdx).as("band"),
         col(s"sig_${bIdx * rowsPerBand}").as("v0"),
         col(s"sig_${bIdx * rowsPerBand + 1}").as("v1"))
     }
-    val banded = sig
+    sig
       .select(
         col("doc_id"),
         array((0 until numHashes).map(i => col(s"sig_$i")): _*).as("sig"),
@@ -107,20 +96,26 @@ object NearDupStream {
       .select(col("doc_id"), col("b.band").as("band"),
         col("b.v0").as("v0"), col("b.v1").as("v1"), col("sig"))
       .localCheckpoint(true)
+  }
 
-    val prior = ss.table(stateTable)
-      .where(col("batch") < lit(batchId))
+  /** `(doc_id, dup_of)` for every banded arrival with an earlier bucket
+    * mate sharing at least `minMatches` signature components; `dup_of`
+    * is the smallest such id. Earlier means all of history (the
+    * batches before `batchId` in `stateTable`) plus earlier ids within
+    * this batch: id-ordered arrival makes "earlier batch" ⊆ "smaller
+    * id", and the explicit id_a < id_b filter also covers the
+    * intra-batch side, so the union is exactly the batch gate's pair
+    * set. Shared with [[CurationStream]].
+    */
+  private[streaming] def earlierMates(banded: DataFrame, stateTable: String,
+                                      batchId: Long, minMatches: Int): DataFrame = {
+    val prior = StateTables.before(banded.sparkSession, stateTable, batchId)
       .select(col("doc_id"), col("band"), col("v0"), col("v1"), col("sig"))
-
-    // Earlier bucket mates: all of history, plus earlier ids within
-    // this batch (id-ordered arrival makes "earlier batch" ⊆ "smaller
-    // id"; the explicit id_a < id_b filter also covers the intra-batch
-    // side, so the union is exactly the batch gate's pair set).
     val earlier = prior.unionByName(banded)
     val matches = (c1: org.apache.spark.sql.Column, c2: org.apache.spark.sql.Column) =>
       aggregate(zip_with(c1, c2, (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, m) => acc + m)
-    val flagged = banded.select(
+    banded.select(
         col("doc_id").as("id_b"), col("band"), col("v0"), col("v1"),
         col("sig").as("sig_b"))
       .join(
@@ -134,12 +129,6 @@ object NearDupStream {
       .groupBy(col("id_b"))
       .agg(min(col("id_a")).as("dup_of"))
       .select(col("id_b").as("doc_id"), col("dup_of"))
-
-    banded.createOrReplaceTempView("__neardup_state_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT doc_id, band, v0, v1, sig FROM __neardup_state_claim""".stripMargin)
-    flagged.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
   }
 
   /** Accumulated stream output over all batches: (doc_id, dup_of). */

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.SuffixArray
 
@@ -47,15 +46,11 @@ import graft.text.SuffixArray
   * (16 buckets, sorted; the t22/SegmentDedupStream discipline): the
   * tiny batch side repartitions to the bucket count and the state
   * never re-shuffles. State is PARTITIONED BY rebuild generation and
-  * claimed with INSERT OVERWRITE — byte-idempotent replay, MSCK
+  * claimed by [[StateTables.claim]] — byte-idempotent replay, MSCK
   * re-adoption across JVMs (the [[StateTables]] discipline); admission
   * reads only the LATEST generation.
   */
 object SaDedupStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   /** md5 fingerprint of every `minLen`-codepoint window of every
     * document — `(h)` distinct. `sequence()` counts DOWN when
@@ -95,10 +90,7 @@ object SaDedupStream {
       spark.read.parquet(s"$cleanDir/rebuild=$rebuildId")
         .select(col("doc_id"), col("clean_text").as("text")),
       "doc_id", "text", minLen)
-    census.createOrReplaceTempView("__sa_dedup_state_claim")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $rebuildId)
-         |SELECT h FROM __sa_dedup_state_claim""".stripMargin)
+    StateTables.claim(stateTable, rebuildId, census)
   }
 
   /** Start the admission stream over a JSONL drop dir. */
@@ -108,19 +100,10 @@ object SaDedupStream {
       stateTable: String,
       outDir: String,
       checkpoint: String,
-      minLen: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir, minLen)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      minLen: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir, minLen)
+    }
 
   /** One micro-batch: fingerprint the arrivals' windows, semi-join the
     * latest frozen generation (bucket-local on the state side), merge
@@ -141,10 +124,7 @@ object SaDedupStream {
     // gram scan and the cut join — freeze it once (house discipline)
     val docs = graft.operators.Checkpoints.eager(
       batch.select(col("doc_id"), col("text")))._1
-    val latest = ss.table(stateTable)
-      .agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    val state = ss.table(stateTable)
-      .where(col("batch") === latest).select(col("h"))
+    val state = StateTables.latest(ss.table(stateTable)).select(col("h"))
     val matched = docs
       .filter(length(col("text")) >= minLen)
       .select(col("doc_id"),

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.{BpeTrainer, SuffixArray}
 
@@ -50,14 +49,10 @@ import graft.text.{BpeTrainer, SuffixArray}
   * repartitions to the bucket count, corpus-scale state never
   * re-shuffles); the rebuild is the batch SA build, amortized over its
   * window like every compaction here. State is PARTITIONED BY rebuild
-  * generation, INSERT OVERWRITE claims, MSCK re-adoption
+  * generation, claimed per rebuild, MSCK re-adoption
   * ([[StateTables]] discipline).
   */
 object SaTokenDedupStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   private val Sep = ""
 
@@ -107,16 +102,6 @@ object SaTokenDedupStream {
       .map { case (r, a, b, c) => BpeTrainer.Merge(r, a, b, c) }.toSeq
   }
 
-  /** Latest frozen generation id (−1 when no rebuild has run). */
-  def latestRebuild(spark: SparkSession, stateDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$stateDir/merges")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) -1L
-    else fs.listStatus(path).map(_.getPath.getName)
-      .collect { case s if s.startsWith("rebuild=") => s.stripPrefix("rebuild=").toLong }
-      .foldLeft(-1L)(math.max)
-  }
-
   /** REBUILD COMPACTION: retrain the tokenizer over the accumulated raw
     * corpus, run the batch token-space dedup, rewrite cleaned token
     * rows under `stateDir/clean/rebuild=<id>` and regenerate merges +
@@ -153,10 +138,7 @@ object SaTokenDedupStream {
     val census = windowCensus(
       spark.read.parquet(s"$stateDir/clean/rebuild=$rebuildId"),
       "doc_id", minTok)
-    census.createOrReplaceTempView("__sa_token_state_claim")
-    spark.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $rebuildId)
-         |SELECT h FROM __sa_token_state_claim""".stripMargin)
+    StateTables.claim(stateTable, rebuildId, census)
   }
 
   /** Frozen-merge encode to `(doc_id, pos, tok)` rows (pos 1-based,
@@ -178,19 +160,10 @@ object SaTokenDedupStream {
       stateDir: String,
       outDir: String,
       checkpoint: String,
-      minTok: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, stateDir, outDir, minTok)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      minTok: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, stateDir, outDir, minTok)
+    }
 
   /** One micro-batch: frozen-merge encode, fingerprint the arrival's
     * token windows, semi-join the latest frozen census (bucket-local on
@@ -209,16 +182,13 @@ object SaTokenDedupStream {
       minTok: Int): Unit = {
     val ss = batch.sparkSession
     ensureStateTable(ss, stateTable)
-    val gen = latestRebuild(ss, stateDir)
+    val gen = StateTables.latestRebuild(ss, s"$stateDir/merges")
     require(gen >= 0L,
       "SaTokenDedupStream: no frozen generation — run rebuildCompact first")
     val docs = graft.operators.Checkpoints.eager(
       batch.select(col("doc_id"), col("text")))._1
     val merges = loadMerges(ss, s"$stateDir/merges/rebuild=$gen")
-    val latest = ss.table(stateTable)
-      .agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    val state = ss.table(stateTable)
-      .where(col("batch") === latest).select(col("h"))
+    val state = StateTables.latest(ss.table(stateTable)).select(col("h"))
     val trows = graft.operators.Checkpoints.eager(
       tokenRows(ss, docs, merges))._1
     // arrival token positions are contiguous from the encode, so the

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** ONLINE weighted reservoir — the streaming twin of the r8 batch gate,
   * and the reason A-ES is THE weighted-sampling algorithm for streams:
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (`SampleStreamSpec` pins both, plus restart/replay).
   *
   * Scale shape: state is the reservoir itself — n rows per generation,
-  * PARTITIONED BY batch and claimed with INSERT OVERWRITE (the house
+  * PARTITIONED BY batch and claimed by [[StateTables.claim]] (the house
   * idempotence discipline: a crash-replayed batch reads only
   * generations < its id and overwrites its own claim byte-identically).
   * Priorities are never stored: they are a pure hash function of
@@ -25,10 +24,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object SampleStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
   /** Start the reservoir stream over a JSONL drop dir. */
   def run(
       spark: SparkSession,
@@ -36,19 +31,10 @@ object SampleStream {
       stateTable: String,
       checkpoint: String,
       salt: String,
-      n: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, salt, n)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      n: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, salt, n)
+    }
 
   /** One micro-batch: score the arrivals, union the latest reservoir
     * generation (< this batch id), keep the top n, claim the new
@@ -65,29 +51,20 @@ object SampleStream {
     val arrivals = batch.select(
       col("doc_id"),
       graft.functions.Exprs.tokenCount(col("text")).cast("long").as("n_tokens"))
-    val prior = ss.table(stateTable).where(col("batch") < lit(batchId))
-    val latest = prior.agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    val reservoir = prior.where(col("batch") === latest)
+    val reservoir = StateTables.latest(StateTables.before(ss, stateTable, batchId))
       .select(col("doc_id"), col("n_tokens"))
     // checkpoint severs the claim's plan from the state-table scan —
-    // INSERT OVERWRITE refuses a source that reads its own target
+    // a claim must not read its own target table
     // (n reservoir rows, the codebook class)
     val (claim, _) = graft.operators.Checkpoints.eager(
       graft.operators.Sampling.weightedSample(
         reservoir.unionByName(arrivals), "doc_id", "n_tokens", salt, n))
-    claim.createOrReplaceTempView("__sample_state_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT doc_id, n_tokens FROM __sample_state_claim""".stripMargin)
+    StateTables.claim(stateTable, batchId, claim)
   }
 
   /** The current reservoir (latest generation). */
-  def reservoir(spark: SparkSession, stateTable: String): DataFrame = {
-    val latest = spark.table(stateTable)
-      .agg(coalesce(max(col("batch")), lit(-1L))).head().getLong(0)
-    spark.table(stateTable).where(col("batch") === latest)
-      .select(col("doc_id"), col("n_tokens"))
-  }
+  def reservoir(spark: SparkSession, stateTable: String): DataFrame =
+    StateTables.latest(spark.table(stateTable)).select(col("doc_id"), col("n_tokens"))
 
   // StateTables.ensure, never a delete-and-recreate: with a
   // non-persistent metastore a restarted JVM that lost its catalog must

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.text.TextOps
 
@@ -25,19 +24,12 @@ import graft.text.TextOps
   * what makes crash replay exact: foreachBatch re-delivers a batch
   * after a failure, and a replayed batch id re-reads only state
   * partitions `batch < id` (partition-pruned — its own half-written
-  * partition is invisible to the computation) and then INSERT
-  * OVERWRITEs its own partition and output directory. Re-running any
+  * partition is invisible to the computation) and then overwrites its
+  * own claim and output directory. Re-running any
   * batch is therefore byte-identical — the same idempotence contract
   * as `StreamingIngest.toLakeMerged`.
   */
 object SegmentDedupStream {
-
-  /** Minimal arriving-document schema (doc_id + text is all segment
-    * dedup reads; extra columns in the drop files are ignored).
-    */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   /** Start the incremental dedup stream over a JSONL drop directory.
     * `stateTable` is created on first use (bucketed + batch-partitioned
@@ -49,19 +41,10 @@ object SegmentDedupStream {
       dropDir: String,
       stateTable: String,
       outDir: String,
-      checkpoint: String,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      checkpoint: String): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir)
+    }
 
   /** One micro-batch: derive segments with the SAME body as the t18
     * batch gate, anti-join against all earlier batches' keepers, claim
@@ -80,19 +63,12 @@ object SegmentDedupStream {
     // join, per-doc totals) and the source files may be gone on replay
     // of a later retry — freeze the batch once.
     val segs = TextOps.docSegments(batch).localCheckpoint(true)
-    val prior = ss.table(stateTable)
-      .where(col("batch") < lit(batchId))
-      .select(col("h"))
+    val prior = StateTables.before(ss, stateTable, batchId).select(col("h"))
     val newKeep = segs
       .join(prior, Seq("h"), "left_anti")
       .groupBy(col("h")).agg(min(col("occ")).as("keeper"))
       .localCheckpoint(true)
-    newKeep.createOrReplaceTempView("__seg_dedup_new_keep")
-    // Static-partition overwrite: replaying this batch rewrites exactly
-    // its own partition, never touching earlier state.
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT h, keeper FROM __seg_dedup_new_keep""".stripMargin)
+    StateTables.claim(stateTable, batchId, newKeep)
     // keeper is null for hashes claimed by an earlier batch — the
     // shared assembly body counts those occurrences as dropped.
     val out = TextOps.assembleSegmentDedup(

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING training-shard layout — the ingestion end of the t37
   * batch gate: curated documents arriving in micro-batches are DEALT
@@ -22,7 +21,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * micro-batch — no single-partition window) plus ONE broadcast base:
   * the global sequence number is `docs dealt in prior batches` +
   * `within-batch rank`, so state is ONE ROW PER BATCH (that batch's
-  * doc count), partitioned by batch and claimed with INSERT OVERWRITE
+  * doc count), partitioned by batch and claimed by [[StateTables.claim]]
   * — byte-idempotent crash replay, MSCK re-adoption across JVMs (the
   * [[StateTables]] discipline).
   *
@@ -34,11 +33,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * twin reproduces the offline shard deal exactly.
   */
 object ShardStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("text", StringType)))
 
   /** The one deal definition both twins answer: global 0-based
     * sequence by `doc_id` (arrival) order, `shard = seq % numShards`,
@@ -126,19 +120,10 @@ object ShardStream {
       stateTable: String,
       outDir: String,
       checkpoint: String,
-      numShards: Int,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dropDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stateTable, outDir, numShards)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      numShards: Int): StreamingQuery =
+    Drops.start(spark, dropDir, Drops.sourcedDocs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, stateTable, outDir, numShards)
+    }
 
   /** One micro-batch: sequence base from prior batches' state rows,
     * two-pass within-batch rank, deal, claim this batch's doc count.
@@ -155,16 +140,11 @@ object ShardStream {
     // the output write and the state claim
     val docs = batch.select(col("doc_id"), col("source"), col("text"))
       .localCheckpoint(true)
-    val baseSeq = ss.table(stateTable)
-      .where(col("batch") < lit(batchId))
+    val baseSeq = StateTables.before(ss, stateTable, batchId)
       .agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0)
     val (out, total) = deal(docs, numShards, baseSeq)
     out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    ss.range(1).select(lit(total).as("n_docs"))
-      .createOrReplaceTempView("__shard_state_claim")
-    ss.sql(
-      s"""INSERT OVERWRITE TABLE $stateTable PARTITION (batch = $batchId)
-         |SELECT n_docs FROM __shard_state_claim""".stripMargin)
+    StateTables.claim(stateTable, batchId, ss.range(1).select(lit(total).as("n_docs")))
   }
 
   /** Accumulated stream output over all batches. */

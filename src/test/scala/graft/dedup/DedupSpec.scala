@@ -242,6 +242,47 @@ class DedupSpec extends SparkSpec {
     assert(ok.toSeq === Seq(0L))
   }
 
+  test("Components: the contraction frees superseded rounds and keeps fresh size estimates") {
+    // One vertex set, two edge lists: a 4-vertex path (few rounds) and
+    // a path through all 512 vertices in shuffled order (at least six
+    // rounds). Neither the blocks kept alive after the call nor the
+    // result's size estimate may grow with the number of rounds.
+    val n = 512
+    val vertices = (0L until n.toLong).toDF("id")
+    val order = new scala.util.Random(7).shuffle((0L until n.toLong).toList)
+    val longPath = order.zip(order.tail)
+    val shortPath = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    intercept[IllegalStateException] {
+      Components.connectedComponentsWithin(vertices, "id", longPath.toDF("a", "b"),
+        "a", "b", maxIter = 5, driverMax = 0L)
+    }
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      (0L until n.toLong).map(v => v -> find(v)).toMap
+    }
+    def run(edges: Seq[(Long, Long)]) = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val df = Components.connectedComponentsWithin(vertices, "id", edges.toDF("a", "b"),
+        "a", "b", maxIter = 20, driverMax = 0L)
+      val alive = (sc.getPersistentRDDs.keySet -- before).size
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val labels = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels === unionFind(edges))
+      (alive, size)
+    }
+    val (shortAlive, shortSize) = run(shortPath)
+    val (longAlive, longSize) = run(longPath)
+    assert(longAlive <= shortAlive && shortAlive <= 1,
+      s"persisted RDDs left by the call: $shortAlive (short path), $longAlive (long path)")
+    assert(longSize === shortSize, "the size estimate grew with the rounds")
+  }
+
   test("Components: driver union-find path equals the distributed paths exactly") {
     val vertices = (0L to 9L).toDF("id")
     val pairs = Seq((1L, 0L), (1L, 2L), (3L, 2L), (5L, 6L), (8L, 7L), (9L, 7L))

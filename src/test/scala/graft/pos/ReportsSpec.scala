@@ -329,6 +329,20 @@ class ReportsSpec extends SparkSpec {
     assert(md.contains("| item0 | item1 | 1.00 | 25.00 |"), md)
   }
 
+  test("cumulative report: one 30-item receipt stops at MarketBasket's named bound") {
+    // Under 100 baskets every basket is frequent at the 1 % support, so
+    // each of the receipt's 2^30 item subsets is a frequent itemset.
+    val wide = Files.createTempDirectory("reports_basket").resolve("lake").toString
+    Lake.writeFull(frame(july ++ others ++ (0 until 30).map(i =>
+      line("r50", "2025-07-11 10:00:00", s"dish$i", 5.0))), wide)
+    val t0 = System.nanoTime()
+    val ex = intercept[IllegalStateException](Reports.cumulative(spark, wide))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(ex.getMessage.contains("MarketBasket") && ex.getMessage.contains("level") &&
+      ex.getMessage.contains((1 << 20).toString), ex.getMessage)
+    assert(secs < 60, s"took $secs s")
+  }
+
   test("empty lake and empty report month keep their pinned bytes") {
     val empty = Files.createTempDirectory("reports_empty").resolve("lake").toString
     Lake.writeFull(frame(Seq.empty), empty)

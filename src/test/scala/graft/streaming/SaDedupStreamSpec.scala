@@ -153,7 +153,7 @@ class SaDedupStreamSpec extends SparkSpec {
       .orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq
     // crash-replay the delivered batch: foreachBatch re-runs id 0
     SaDedupStream.processBatch(
-      spark.read.schema(SaDedupStream.docSchema).json(drop.toString),
+      spark.read.schema(Drops.docs).json(drop.toString),
       0L, state, out, L)
     val second = SaDedupStream.results(spark, out)
       .orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq

@@ -175,7 +175,7 @@ class SaTokenDedupStreamSpec extends SparkSpec {
     val first = SaTokenDedupStream.results(spark, out)
       .orderBy($"doc_id").as[(Long, Long, Long, String)].collect().toSeq
     SaTokenDedupStream.processBatch(
-      spark.read.schema(SaTokenDedupStream.docSchema).json(drop.toString),
+      spark.read.schema(Drops.docs).json(drop.toString),
       0L, state, stateDir, out, MinTok)
     val second = SaTokenDedupStream.results(spark, out)
       .orderBy($"doc_id").as[(Long, Long, Long, String)].collect().toSeq

@@ -168,6 +168,45 @@ class StreamingSpec extends SparkSpec {
     assert(out(1).getAs[Double]("revenue") === 60.0)
   }
 
+  test("windowed revenue drops rows behind the watermark and closes windows with the on-time rows") {
+    val dir = Files.createTempDirectory("stream_late")
+    val drop = dir.resolve("drop"); Files.createDirectories(drop)
+    val onTime = Seq(
+      Seq(receiptLine("r1", "2025-07-01T10:05:00Z", "Burger", 100.0),
+        receiptLine("r2", "2025-07-01T10:40:00Z", "Fries", 50.0),
+        receiptLine("r3", "2025-07-01T11:10:00Z", "Malteada", 60.0)),
+      // three days on: moves the one-day watermark past July 1st
+      Seq(receiptLine("r4", "2025-07-04T12:00:00Z", "Burger", 80.0)),
+      Seq(receiptLine("r5", "2025-07-04T13:30:00Z", "Fries", 40.0)))
+    // A batch drops rows behind the watermark the previous batch evicted
+    // with, which a file moves one batch after it lands: the late file
+    // comes two batches after the one that moved the watermark.
+    val late = Seq(receiptLine("r6", "2025-07-01T10:20:00Z", "Burger", 999.0))
+    val files = (onTime :+ late).zipWithIndex.map { case (lines, i) =>
+      val f = drop.resolve(s"b$i.jsonl")
+      Files.writeString(f, lines.mkString("", "\n", "\n"))
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(1000000L * (i + 1)))
+      f.toString
+    }
+    val curated = graft.pos.Transform.run(
+      StreamingIngest.rawStream(spark, drop.toString, maxFilesPerTrigger = 1))
+    val q = StreamingIngest.windowedRevenue(curated, "1 hour")
+      .writeStream.format("memory").queryName("wlate").outputMode("append")
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try assert(q.awaitTermination(120000), "stream did not finish within 120 s")
+    finally q.stop()
+    def windows(df: org.apache.spark.sql.DataFrame): Seq[(String, Double)] =
+      df.selectExpr("CAST(window.start AS STRING)", "revenue").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toSeq.sortBy(_._1)
+    val emitted = windows(spark.table("wlate"))
+    val batchOnTime = windows(StreamingIngest.windowedRevenue(graft.pos.Transform.run(
+      spark.read.schema(graft.pos.Schemas.rawReceipt).json(files.init: _*)), "1 hour"))
+    assert(emitted == Seq("2025-07-01 10:00:00" -> 150.0, "2025-07-01 11:00:00" -> 60.0))
+    assert(emitted.forall(batchOnTime.contains), s"$emitted vs $batchOnTime")
+  }
+
   test("S10: lake-scan watermark recovery finds max shifted_time of latest month") {
     import spark.implicits._
     import java.sql.Timestamp
