@@ -1,9 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, DriverBound}
 
 /** Connected components over a candidate-pair edge list — the step that
   * turns pairwise near-dup evidence (MinHash-LSH / SimHash pairs) into
@@ -11,8 +12,9 @@ import graft.operators.Checkpoints
   * component (component id = min doc id).
   *
   * Near-dup components are overwhelmingly tiny and shallow
-  * (pairs→triangles→small cliques), so a bounded edge list is labelled
-  * on the driver with union-find. Larger edge lists run the
+  * (pairs→triangles→small cliques), so an edge list that fits the
+  * [[graft.operators.DriverBound]] budget is labelled on the driver
+  * with union-find. Larger edge lists run the
   * large-star/small-star contraction (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SoCC '14): O(log n) rounds on
   * any graph, including deep components (long reply chains, web
@@ -23,56 +25,50 @@ import graft.operators.Checkpoints
   */
 object Components {
 
-  /** Edge sets at most this large are labelled ON THE DRIVER with one
-    * bounded collect + union-find (exactly the min-reachable-id labels
-    * the contraction converges to) instead of an iterated
-    * checkpoint-per-round loop — near-dup components are tiny, and the
-    * loop's wall at bench scale is pure per-round scheduler cost
-    * (optimization r17, guide §1.2/§8 "decide with small rows"). The
-    * bound caps driver memory at ~2 longs × this many rows.
+  /** Driver bytes per edge of the union-find path: the collected
+    * `(a, b)` row and, for each of its two vertices, a parent-map entry
+    * and a label row (48 B each).
     */
-  private val driverComponentsMax = 65536L
+  private[dedup] val edgeBytes: Long =
+    DriverBound.rowBytes(StructType(Seq(StructField("a", LongType), StructField("b", LongType)))) +
+      4L * 48L
 
-  /** Min-reachable-id labels `(__ccv, __cclabel)` of a BOUNDED edge
-    * list, union-find on the driver; None when the edge set exceeds
-    * `max`. Only edge-participating vertices appear; singletons label
-    * themselves downstream.
+  /** Min-reachable-id labels `(__ccv, __cclabel)` of collected edge
+    * rows, union-find on the driver. Only edge-participating vertices
+    * appear; singletons label themselves downstream.
     */
-  private def driverLabels(pairs: DataFrame, aCol: String, bCol: String,
-                           max: Long): Option[DataFrame] = {
-    // Null endpoints are dropped HERE, matching the contraction's
-    // self-loop filter (a null never compares unequal), so the driver
-    // twin must not NPE on one (or let it become a label).
-    graft.operators.Scans.collectAtMost(pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull), max).map { rows =>
-      val parent = scala.collection.mutable.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-        }
-        r
+  private def driverLabels(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
       }
-      rows.foreach { e =>
-        val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // union always attaches the LARGER root under the smaller, so
-      // find(v) IS the component's minimum id — no per-root min scan
-      // (the previous minOf pass was O(components × vertices): a
-      // multi-minute driver stall at the 65536-edge bound's worst case).
-      val verts = rows.flatMap(e => Seq(e.getLong(0), e.getLong(1))).distinct
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      broadcast(verts.toSeq.map(v => (v, find(v))).toDF("__ccv", "__cclabel"))
+      r
     }
+    rows.foreach { e =>
+      val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // union always attaches the LARGER root under the smaller, so
+    // find(v) IS the component's minimum id — no per-root min scan
+    val verts = rows.flatMap(e => Seq(e.getLong(0), e.getLong(1))).distinct
+    import spark.implicits._
+    broadcast(verts.toSeq.map(v => (v, find(v))).toDF("__ccv", "__cclabel"))
   }
 
   /** Label every vertex with the minimum vertex id reachable from it.
     * Output: `idCol` in its input type, `component` as long.
+    *
+    * An edge list whose [[edgeBytes]] fit the `Components`
+    * [[DriverBound]] budget is labelled ON THE DRIVER with one bounded
+    * collect + union-find (exactly the min-reachable-id labels the
+    * contraction converges to) instead of an iterated
+    * checkpoint-per-round loop — near-dup components are tiny, and the
+    * loop's wall at bench scale is pure per-round scheduler cost
+    * (optimization r17, guide §1.2/§8 "decide with small rows").
     *
     * @param vertices one row per vertex (singletons allowed — they keep
     *                 their own id as component)
@@ -86,23 +82,18 @@ object Components {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 20): DataFrame =
-    connectedComponentsWithin(vertices, idCol, pairs, aCol, bCol, maxIter,
-      driverComponentsMax)
-
-  /** [[connectedComponents]] with the driver bound passed in, so specs
-    * can run either path on the same input.
-    */
-  private[dedup] def connectedComponentsWithin(
-      vertices: DataFrame,
-      idCol: String,
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int,
-      driverMax: Long): DataFrame = {
-    val labels = driverLabels(pairs, aCol, bCol, driverMax)
-      .getOrElse(starLabels(pairs, aCol, bCol, maxIter))
+      maxIter: Int = 20): DataFrame = {
+    val spark = pairs.sparkSession
+    // Null endpoints are dropped HERE, matching the contraction's
+    // self-loop filter (a null never compares unequal), so the driver
+    // twin must not NPE on one (or let it become a label).
+    val labels = DriverBound("Components", spark) { sw =>
+      sw.collect(pairs
+        .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+        .filter(col("a").isNotNull && col("b").isNotNull), edgeBytes)
+        .map(driverLabels(spark, _))
+        .getOrElse(starLabels(pairs, aCol, bCol, maxIter))
+    }
     vertices
       .join(labels, col(idCol).cast("long") === col("__ccv"), "left")
       .select(col(idCol),

@@ -26,8 +26,9 @@ import scala.jdk.CollectionConverters._
   * Every shape is one aggregate over the same core: a rank is the
   * running count, a prefix sum the running sum, the exclusive prefix
   * max the running max one row short. The one-shot shapes (rank, NTILE,
-  * prefix sum) finish on the driver up to [[driverFinishMax]] rows and
-  * fall back to the two-pass at the session's shuffle width; the staged
+  * prefix sum) finish on the driver while their rows fit the
+  * `GlobalRank` [[DriverBound]] budget and fall back to the two-pass at
+  * the session's shuffle width; the staged
   * prefix sum and the prefix max always run the two-pass at the
   * caller's width.
   *
@@ -35,11 +36,6 @@ import scala.jdk.CollectionConverters._
   * within equal keys are partition-placement-dependent.
   */
 object GlobalRank {
-
-  /** Driver bound for the size-gated one-collect finish on the
-    * ONE-SHOT rank/NTILE/prefix-sum shapes (optimization r18).
-    */
-  private val driverFinishMax = 65536L
 
   /** The two-pass core. Pass 1: range-partition + sort on `ord`,
     * checkpoint the run, collect one `agg` row per partition, and
@@ -90,47 +86,54 @@ object GlobalRank {
       .drop("__pid", "__off"), prefix.last.getOrElse(0L), token, extraTotal)
   }
 
+  /** Driver bytes per row of the driver finish over `schema`: the
+    * collected row (with the value column), the output row built from
+    * it and the local relation's copy of that.
+    */
+  private[operators] def finishRowBytes(schema: StructType): Long =
+    3L * DriverBound.rowBytes(schema.add("__grk_v", LongType))
+
   /** The one-shot shapes: `outCol` is the running count in `ord` order
     * (the 1-based global rank, non-nullable) when `value` is None, else
     * the running sum of `value` (nullable: null until the first
     * non-null value, then the sum of non-nulls so far — the window
-    * form's semantics). Returns the frame and the row count. The driver
-    * bound is passed in so specs can run either finish on one input.
+    * form's semantics). Returns the frame and the row count.
     *
-    * Size-gated driver finish (optimization r18; guide §1.2/§8): the
-    * relation is materialized once with the value as a column — the
-    * staging write the two-pass pays anyway, and in the over-bound
-    * fallback the range SAMPLER then reads blocks instead of
-    * re-executing the whole upstream plan — and when the materialized
-    * count fits `driverMax`, the run is collected in `ord` order
-    * (TakeOrderedAndProject: per-partition top-k — no range sampler,
-    * no offsets pass, no window) and summed in one driver pass.
+    * The relation is materialized once with the value as a column (the
+    * two-pass's staging write, so its range sampler reads blocks), and
+    * when the rows' [[finishRowBytes]] fit the `GlobalRank`
+    * [[DriverBound]] the run is collected in `ord` order (per-partition
+    * top-k: no sampler, no offsets pass, no window) and summed on the
+    * driver (optimization r18).
     */
-  private[operators] def runningWithin(driverMax: Long, df: DataFrame, outCol: String,
-                                       value: Option[Column], ord: Seq[Column])
+  private def running(df: DataFrame, outCol: String, value: Option[Column], ord: Seq[Column])
       : (DataFrame, Long) = {
-    val (mat, token, n) =
-      Checkpoints.eagerCounted(df.withColumn("__grk_v", value.fold(lit(1L))(_.cast("long"))))
-    val out = if (n > driverMax) {
-      val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-      val v = col("__grk_v")
-      (if (value.isEmpty) twoPass(mat, outCol, nParts, count(v), ord,
-        merge = (off, p) => coalesce(off, lit(0L)) + p)
-      else twoPass(mat, outCol, nParts, sum(v), ord))._1.drop("__grk_v")
-    } else {
-      val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
-      val vi = mat.schema.fieldIndex("__grk_v")
-      var seen = false
-      var acc = 0L
-      val summed = rows.toSeq.map { r =>
-        if (!r.isNullAt(vi)) { acc += r.getLong(vi); seen = true }
-        Row.fromSeq(r.toSeq.patch(vi, Nil, 1) :+ (if (seen) java.lang.Long.valueOf(acc) else null))
+    val spark = df.sparkSession
+    DriverBound("GlobalRank", spark) { sw =>
+      val (mat, token, n) = sw.measure(
+        Checkpoints.eagerCounted(df.withColumn("__grk_v", value.fold(lit(1L))(_.cast("long")))))
+      val out = if (!sw.fits(n, n * finishRowBytes(df.schema))) {
+        val nParts = spark.sessionState.conf.numShufflePartitions
+        val v = col("__grk_v")
+        (if (value.isEmpty) twoPass(mat, outCol, nParts, count(v), ord,
+          merge = (off, p) => coalesce(off, lit(0L)) + p)
+        else twoPass(mat, outCol, nParts, sum(v), ord))._1.drop("__grk_v")
+      } else {
+        val rows = mat.orderBy(ord: _*).limit(math.max(n, 1L).toInt).collect()
+        val vi = mat.schema.fieldIndex("__grk_v")
+        var seen = false
+        var acc = 0L
+        val summed = rows.toSeq.map { r =>
+          if (!r.isNullAt(vi)) { acc += r.getLong(vi); seen = true }
+          val out = if (seen) java.lang.Long.valueOf(acc) else null
+          Row.fromSeq(r.toSeq.patch(vi, Nil, 1) :+ out)
+        }
+        spark.createDataFrame(summed.asJava,
+          StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = value.nonEmpty)))
       }
-      df.sparkSession.createDataFrame(summed.asJava,
-        StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = value.nonEmpty)))
+      token.free() // the two-pass run's own eager checkpoint stands
+      (out, n)
     }
-    token.free() // the two-pass run's own eager checkpoint stands
-    (out, n)
   }
 
   /** Add `rankCol` (1-based global rank under `ord`) to `df`, and
@@ -138,19 +141,14 @@ object GlobalRank {
     * like NTILE need it and should not pay another corpus action).
     */
   def withGlobalRank(df: DataFrame, rankCol: String, ord: Column*): (DataFrame, Long) =
-    runningWithin(driverFinishMax, df, rankCol, None, ord)
+    running(df, rankCol, None, ord)
 
   /** Add `ntileCol` — exactly SQL `NTILE(n) OVER (ORDER BY ord)` (the
     * first `total mod n` buckets get the extra row) — via the global
     * rank: no single-partition window. `ord` must be total.
     */
-  def withGlobalNtile(df: DataFrame, ntileCol: String, n: Int, ord: Column*): DataFrame =
-    ntileWithin(driverFinishMax, df, ntileCol, n, ord)
-
-  /** [[withGlobalNtile]] with the rank's driver bound passed in. */
-  private[operators] def ntileWithin(driverMax: Long, df: DataFrame, ntileCol: String,
-                                     n: Int, ord: Seq[Column]): DataFrame = {
-    val (ranked, total) = runningWithin(driverMax, df, "__grk", None, ord)
+  def withGlobalNtile(df: DataFrame, ntileCol: String, n: Int, ord: Column*): DataFrame = {
+    val (ranked, total) = running(df, "__grk", None, ord)
     val base = total / n
     val rem = total % n
     val cut = rem * (base + 1) // ranks <= cut fall in the wide buckets
@@ -171,7 +169,7 @@ object GlobalRank {
     */
   def withGlobalPrefixSum(df: DataFrame, sumCol: String, value: Column,
                           ord: Column*): DataFrame =
-    runningWithin(driverFinishMax, df, sumCol, Some(value), ord)._1
+    running(df, sumCol, Some(value), ord)._1
 
   /** [[withGlobalPrefixSum]] as the pure two-pass at `nParts` range
     * partitions, plus the total of the optional `extra` per-partition

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scan-parallelism guard for COMPUTE-AMPLIFICATION sites (optimization
   * r17; guide §2.5 input skew / §1.2 algorithm shape).
@@ -49,34 +49,11 @@ object Scans {
       BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
   } catch { case scala.util.control.NonFatal(_) => false })
 
-  /** Every row of `df` when it has at most `max` rows, else None: one
-    * `limit(max + 1)` job detects overflow without a count. The probe
-    * behind each driver-or-distributed switch; `max <= 0` answers None
-    * without running a job.
-    */
-  def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] =
-    if (max <= 0L) None
-    else {
-      val rows = df.limit(math.min(max + 1L, Int.MaxValue.toLong).toInt).collect()
-      if (rows.length > max) None else Some(rows)
-    }
-
-  /** Driver bytes a driver-path finish may hold: one eighth of
-    * `spark.driver.maxResultSize` (0 = unlimited), capped by the driver
-    * heap the collected data lives in. The bound the byte-budgeted
-    * switch of `SuffixArray.removeDuplicatedSpans` charges its estimated
-    * footprint against.
-    */
-  def driverBudget(spark: SparkSession): Long = {
-    val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    val heap = Runtime.getRuntime.maxMemory
-    (if (cap > 0L) math.min(cap, heap) else heap) / 8L
-  }
-
   /** Runs `body` with a setter for this thread's Spark job description,
     * then restores the caller's. Operators name their jobs through it
-    * (`<operator>: path=… bound=…`), so an event log ties each job to
-    * the operator and the path that launched it.
+    * (every [[DriverBound]] switch's `<operator>: path=… bound=…`), so
+    * an event log ties each job to the operator and the path that
+    * launched it.
     */
   def labelled[T](spark: SparkSession)(body: (String => Unit) => T): T = {
     val sc = spark.sparkContext

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
 
+import graft.operators.DriverBound
+
 /** P15/A12 — market-basket analysis (reference
   * `cumulative_report.py:122-160`): baskets per receipt → frequent
   * itemsets → association rules sorted by lift.
@@ -19,13 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructFiel
   *
   * Optimization r18 (guide §1.2/§8 "decide with small rows"): when the
   * item domain fits one Long bitmask AND the distinct basket-mask
-  * histogram fits a driver bound, the frequent-itemset lattice is solved
-  * on the driver from the collected `(mask, count)` histogram — a
+  * histogram fits the [[graft.operators.DriverBound]] budget, the
+  * frequent-itemset lattice is solved on the driver from the collected
+  * `(mask, count)` histogram — a
   * level-wise Apriori with anti-monotone pruning — instead of an MLlib
   * FPGrowth fit (measured 91 task-seconds on p15's SIX-item domain).
   * Frequent itemsets are a declarative set (freq ≥ ceil(minSupport·n)),
   * so the rule set is algorithm-independent; `MarketBasketSpec` pins the
-  * two paths equal and oversized domains/histograms keep FPGrowth.
+  * two paths equal, and oversized domains or histograms keep FPGrowth.
   */
 object MarketBasket {
 
@@ -43,13 +46,6 @@ object MarketBasket {
     * FPGrowth.
     */
   private val maskItemsMax = 48
-
-  /** Distinct-mask histograms over this many rows (collected to the
-    * driver: 16 bytes/row — the codebook-collect class) fall back to
-    * FPGrowth. At 100 TB a wide domain's histogram blows this probe and
-    * the distributed path runs untouched.
-    */
-  private val maskHistogramMax = 1 << 20
 
   /** Itemsets the driver Apriori may hold at once (frequent sets plus
     * the level being generated). One frequent basket of k items makes
@@ -89,55 +85,57 @@ object MarketBasket {
     * schema; unordered.
     */
   def rulesFromBaskets(b: DataFrame, minSupport: Double, minLift: Double): DataFrame =
-    rulesWithin(b, minSupport, minLift, maskItemsMax, maskHistogramMax)
-
-  /** [[rulesFromBaskets]] with the driver path's two bounds passed in,
-    * so specs can run either path on the same baskets.
-    */
-  private[pos] def rulesWithin(b: DataFrame, minSupport: Double, minLift: Double,
-                               itemsMax: Int, histogramMax: Int): DataFrame = {
-    val spark = b.sparkSession
-    // ONE bounded probe decides the path AND feeds it: the distinct
-    // sorted-itemset histogram (map-side-combinable count; a sorted
-    // array IS the set, so rows map 1:1 to bitmasks). The item domain
-    // is its driver-side union — no separate item pass. Over either
-    // bound, fall back to FPGrowth (the probe's one pass is the price
-    // of admission; the histogram shuffle is distinct-set-bounded).
-    val hist = graft.operators.Scans.collectAtMost(
-      b.select(sort_array(col("items")).as("key"))
-        .groupBy(col("key")).agg(count(lit(1)).as("cnt")), histogramMax)
-      .map(_.map(r => (r.getSeq[String](0), r.getLong(1))))
-      .getOrElse(Array.empty)
-    histogramRules(spark, hist, minSupport, minLift, itemsMax).getOrElse {
-      val fp = new FPGrowth()
-        .setItemsCol("items")
-        .setMinSupport(minSupport)
-        .setMinConfidence(0.0)
-      // NOTE: setNumPartitions was measured 3× SLOWER on this shape
-      // (b1 at sf1) — more partitions duplicate the conditional
-      // FP-trees; the default (input partitioning) is right here.
-      // fit scans twice (support count + tree build); cache across
-      // them, drop before returning (itemsets live in the model).
-      val bc = b.cache()
-      try {
-        fp.fit(bc).associationRules
-          .filter(col("lift") >= minLift)
-          .select(col("antecedent"), col("consequent"),
-            col("support"), col("confidence"), col("lift"))
-      } finally bc.unpersist()
+    DriverBound("MarketBasket.histogram", b.sparkSession) { sw =>
+      // ONE probe decides the path AND feeds it: the distinct sorted-
+      // itemset histogram (a sorted array IS the set, so rows map 1:1 to
+      // bitmasks; the item domain is their union). Over the budget or a
+      // bitmask's width, FPGrowth runs.
+      val hist = b.select(sort_array(col("items")).as("key"))
+        .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
+      sw.collect(hist, histogramRowBytes(hist.schema))
+        .map(_.map(r => (r.getSeq[String](0), r.getLong(1))))
+        .flatMap(histogramRules(b.sparkSession, _, minSupport, minLift))
+        .getOrElse {
+          sw.distributed()
+          fpGrowthRules(b, minSupport, minLift)
+        }
     }
+
+  /** Driver bytes per collected histogram row: the row, with its key
+    * array at Spark's one-element default, and its `(mask, count)`.
+    */
+  private[pos] def histogramRowBytes(schema: StructType): Long =
+    DriverBound.rowBytes(schema) + 48L
+
+  /** [[rulesFromBaskets]] by an MLlib FPGrowth fit. */
+  private def fpGrowthRules(b: DataFrame, minSupport: Double, minLift: Double): DataFrame = {
+    val fp = new FPGrowth()
+      .setItemsCol("items")
+      .setMinSupport(minSupport)
+      .setMinConfidence(0.0)
+    // NOTE: setNumPartitions was measured 3× SLOWER on this shape
+    // (b1 at sf1) — more partitions duplicate the conditional
+    // FP-trees; the default (input partitioning) is right here.
+    // fit scans twice (support count + tree build); cache across
+    // them, drop before returning (itemsets live in the model).
+    val bc = b.cache()
+    try {
+      fp.fit(bc).associationRules
+        .filter(col("lift") >= minLift)
+        .select(col("antecedent"), col("consequent"),
+          col("support"), col("confidence"), col("lift"))
+    } finally bc.unpersist()
   }
 
   /** Rules from a basket histogram (each distinct item set, once, with
     * the number of baskets holding exactly it) by [[driverRules]], or
     * None when the histogram is empty or its item domain is over
-    * `itemsMax`.
+    * [[maskItemsMax]].
     */
   private[pos] def histogramRules(spark: SparkSession, hist: Array[(Seq[String], Long)],
-                                  minSupport: Double, minLift: Double,
-                                  itemsMax: Int = maskItemsMax): Option[DataFrame] = {
+                                  minSupport: Double, minLift: Double): Option[DataFrame] = {
     val domain = hist.iterator.flatMap(_._1).toArray.distinct.sorted
-    if (domain.isEmpty || domain.length > itemsMax) None
+    if (domain.isEmpty || domain.length > maskItemsMax) None
     else {
       val bitOf = domain.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
       val masks = hist.map { case (key, cnt) =>

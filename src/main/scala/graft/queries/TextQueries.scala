@@ -614,11 +614,12 @@ object TextQueries {
     * results are bit-identical to per-gate recomputation and the
     * oracles still replay the full CTE chain from scratch. Plain driver
     * memory — survives Bench's inter-pass cache sweeps. Capped: if the
-    * span table exceeds 500k rows the memo stores a recompute marker
-    * instead (the duplicated-REGION relation is small by nature, but a
-    * pathological corpus shouldn't pin a giant frame on the driver).
+    * span table does not fit the `TextQueries.spanMemo`
+    * [[graft.operators.DriverBound]] budget the memo stores a recompute
+    * marker instead (the duplicated-REGION relation is small by nature,
+    * but a pathological corpus shouldn't pin a giant frame on the
+    * driver).
     */
-  private val spanMemoCap = 500000
   private val spanMemo = scala.collection.concurrent.TrieMap[
     String,
     Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])]]()
@@ -630,7 +631,9 @@ object TextQueries {
     // spans — the same staleness Bucketing.suffix exists to prevent.
     spanMemo.getOrElseUpdate(s"$d|${graft.operators.Bucketing.suffix(spark, d)}", {
       val df = spansDf(spark, d)
-      graft.operators.Scans.collectAtMost(df, spanMemoCap).map(rows => (df.schema, rows.toSeq))
+      graft.operators.DriverBound("TextQueries.spanMemo", spark)(
+        _.collect(df, graft.operators.DriverBound.rowBytes(df.schema))
+          .map(rows => (df.schema, rows.toSeq)))
     }) match {
       case Some((schema, rows)) =>
         import scala.jdk.CollectionConverters._

@@ -1,8 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.operators.DriverBound
 
 /** Approximate-nearest-neighbour search over an embedding column
   * (`ARRAY<FLOAT>`).
@@ -490,36 +492,6 @@ object Ann {
       idCol, vecCol, listCol, k, nprobe)
   }
 
-  /** GRAPH-BASED ANN serving — batched best-first (beam) search over a
-    * [[knnGraph]] edge table: the HNSW-family retrieval mode (its
-    * layer-0 search), the one ANN tier IVF probing doesn't cover. The
-    * directed kNN edges are first SYMMETRIZED (edges ∪ reversed,
-    * distinct — HNSW keeps bidirectional links for exactly this
-    * reason: a directed kNN graph strands queries whose true
-    * neighbours point AT the frontier but are pointed at by nothing
-    * near it; measured on the gate panel, symmetrizing alone lifted
-    * recall@5 from 0.04–0.10 to 0.18–0.22 before the degree/entry
-    * tuning). Per hop, every beam entry expands to its graph
-    * neighbours, the union of beam and neighbours is re-ranked by
-    * exact cosine against the query, and the best `beamWidth` survive;
-    * after `hops` hops the top `k` are returned as `(qid, rank, bid,
-    * cosine)`. Entry points are a caller-chosen id set — one per
-    * coarse list (e.g. `MIN(id) GROUP BY label`) spreads the starts
-    * across the space the way HNSW's upper layers do. Deterministic
-    * end-to-end (6-dp cosine + id tiebreak, the house ranking
-    * discipline), so the walk is oracle-able as unrolled SQL hops.
-    *
-    * Scale shape, per hop: candidates are `|queries| × beamWidth ×
-    * (degree + 1)` rows — independent of the corpus size — joined
-    * once against the graph on the beam's ids (the N·k edge table
-    * shuffles on its key; at serving volume the per-hop frontier is
-    * tiny and broadcastable by AQE) and once against the corpus for
-    * scoring vectors. The corpus is never scanned per query: each
-    * query touches `hops × beamWidth × degree` vectors, the graph
-    * search's whole point. Beam frames are checkpointed per hop and
-    * the predecessor freed (the iterated-join-loop discipline), so
-    * lineage stays one hop deep.
-    */
   /** Symmetrized edge set of a directed kNN graph: edges ∪ reversed,
     * distinct, as `(src, dst)` — the build-time artifact a graph-ANN
     * SERVER materializes once (HNSW keeps bidirectional links for the
@@ -535,34 +507,13 @@ object Ann {
       .distinct()
   }
 
-  /** Query batches at most this large run the driver-held frontier
-    * walk; larger batches (or non-integral id types) fall back to the
-    * distributed per-hop loop ([[beamSearchKnnDistributed]]) — the same
-    * bounded-probe discipline as `Components.driverComponentsMax` and
-    * `SuffixArray.driverRankMax`, so a corpus-sized query set degrades
-    * to distributed execution instead of OOMing the driver.
+  /** Driver bytes of a vector element in the walk's shard: the collected
+    * row's boxed float (24 B) and its double copy (8 B).
     */
-  private val driverQueryMax = 65536L
+  private[similarity] val VectorElemBytes = 32L
 
-  /** Corpora at most this many rows additionally serve the driver walk
-    * from an IN-MEMORY vector map (a graph-ANN index shard's working
-    * set): every hop becomes pure driver compute — zero Spark jobs —
-    * instead of two broadcast-join scan jobs. Bounds driver memory at
-    * ~(dim × 8 B) × this many vectors.
-    */
-  private val driverCorpusMax = 65536L
-
-  /** Edge tables at most this many DIRECTED rows join the in-memory
-    * shard (~16 B per edge, ×2 when symmetrized driver-side).
-    */
-  private val driverEdgeMax = 1048576L
-
-  /** The beam walk's three driver bounds; specs pass smaller ones to
-    * run the per-hop scan tier or the distributed loop on small input.
-    */
-  private[similarity] final case class WalkBounds(query: Long = driverQueryMax,
-                                                  corpus: Long = driverCorpusMax,
-                                                  edges: Long = driverEdgeMax)
+  /** Driver bytes of an edge's adjacency entry, per direction held. */
+  private[similarity] val AdjacencyEntryBytes = 72L
 
   /** The walk's exact score: double cosine (left-to-right fold — the
     * [[graft.functions.CosineSimilarity]] loop) rounded with Spark's
@@ -598,6 +549,26 @@ object Ann {
     case _ => null
   }
 
+  /** GRAPH-BASED ANN serving — batched best-first (beam) search over a
+    * [[knnGraph]] edge table, HNSW's layer-0 search. The directed kNN
+    * edges are SYMMETRIZED first (a directed kNN graph strands queries
+    * whose true neighbours point AT the frontier; symmetrizing alone
+    * lifted the gate panel's recall@5 from 0.04–0.10 to 0.18–0.22). Per
+    * hop, every beam entry expands to its neighbours, beam ∪ neighbours
+    * is re-ranked by exact cosine against the query and the best
+    * `beamWidth` survive; after `hops` hops the top `k` come back as
+    * `(qid, rank, bid, cosine)`. Entries are a caller-chosen id set (one
+    * per coarse list spreads the starts as HNSW's upper layers do).
+    * Deterministic (6-dp cosine + id tiebreak), so the walk is
+    * oracle-able as unrolled SQL hops.
+    *
+    * When the query batch, the corpus vectors and the edge table fit the
+    * `Ann.beamSearchKnn` [[DriverBound]] together, the three are
+    * collected and every hop is driver compute with zero Spark jobs — a
+    * graph-ANN index shard serving from RAM ([[walkShard]]). Otherwise,
+    * or when ids are not integral, [[beamSearchKnnDistributed]] runs;
+    * both give identical output (spec-pinned in BeamSearchSpec).
+    */
   def beamSearchKnn(
       graph: DataFrame,
       corpus: DataFrame,
@@ -610,25 +581,7 @@ object Ann {
       k: Int,
       presymmetrized: Boolean = false,
       entryPairs: DataFrame = null,
-      excludeSelf: Boolean = true): DataFrame =
-    beamSearchKnnWithin(graph, corpus, queries, idCol, vecCol, entries, beamWidth,
-      hops, k, presymmetrized, entryPairs, excludeSelf, WalkBounds())
-
-  /** [[beamSearchKnn]] with the walk's driver bounds passed in. */
-  private[similarity] def beamSearchKnnWithin(
-      graph: DataFrame,
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      entries: DataFrame,
-      beamWidth: Int,
-      hops: Int,
-      k: Int,
-      presymmetrized: Boolean,
-      entryPairs: DataFrame,
-      excludeSelf: Boolean,
-      bounds: WalkBounds): DataFrame = {
+      excludeSelf: Boolean = true): DataFrame = {
     require((entries != null) ^ (entryPairs != null),
       "beamSearchKnn: pass exactly one of entries (global start set) / " +
         "entryPairs (per-query seeds)")
@@ -636,157 +589,96 @@ object Ann {
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
     val qidType = queries.schema(idCol).dataType
     val bidType = corpus.schema(idCol).dataType
-    // The driver walk keys its caches on LONG ids: a non-integral id
-    // type (where the cast could silently null) routes to the
-    // distributed loop, which never casts.
+    // The driver walk keys its maps on LONG ids: a non-integral id type
+    // (where the cast could silently null) routes to the distributed
+    // loop, which never casts.
     val integralIds = Seq(qidType, bidType).forall {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    // Bounded probe of the query batch (one job): every driver-held
-    // structure is |queries|-proportional, so the batch size is the
-    // budget to guard.
-    val qProbe =
-      if (!integralIds) None
-      else graft.operators.Scans.collectAtMost(
-        queries.select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv")),
-        bounds.query)
-    if (qProbe.isEmpty)
-      return beamSearchKnnDistributed(graph, corpus, queries, idCol, vecCol,
-        entries, beamWidth, hops, k, presymmetrized, entryPairs, excludeSelf)
-    val qRows = qProbe.get
-    val vecElemType = corpus.schema(vecCol).dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+    DriverBound("Ann.beamSearchKnn", spark) { sw =>
+      val shard =
+        if (integralIds) driverShard(sw, graph, corpus, queries, idCol, vecCol, presymmetrized)
+        else { sw.distributed(); None }
+      shard.map { case (qRows, mem, adj) =>
+        walkShard(spark, qRows, mem, adj, entries, entryPairs, beamWidth, hops, k, excludeSelf)
+          .select(col("qid").cast(qidType).as("qid"), col("rank"),
+            col("bid").cast(bidType).as("bid"), col("cosine"))
+      }.getOrElse(beamSearchKnnDistributed(graph, corpus, queries, idCol, vecCol,
+        entries, beamWidth, hops, k, presymmetrized, entryPairs, excludeSelf))
+    }
+  }
+
+  /** The walk's shard — query rows `(qid, qv)`, corpus vectors and
+    * adjacency by id — when the three fit `sw`, each row at its schema's
+    * [[DriverBound.rowBytes]] plus [[VectorElemBytes]] per element of the
+    * batch's vector dimension (read from its first row) or
+    * [[AdjacencyEntryBytes]] per edge direction held. An empty batch
+    * holds nothing more: its walk has nothing to score.
+    */
+  private def driverShard(sw: DriverBound.Switch, graph: DataFrame, corpus: DataFrame,
+                          queries: DataFrame, idCol: String, vecCol: String,
+                          presymmetrized: Boolean)
+      : Option[(Array[Row], Map[Long, Array[Double]], Map[Long, Array[Long]])] = {
+    val q = queries.select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))
     val base = corpus.select(col(idCol).cast("long").as("bid"), col(vecCol).as("bv"))
     val fwd = graph.select(
       col("qid").cast("long").as("__src"), col("bid").cast("long").as("__dst"))
-    // Symmetrize ONCE and checkpoint: every hop re-reads the edge
-    // table, and an unmaterialized union+distinct would re-shuffle the
-    // N·k rows per hop. A production deployment materializes the
-    // symmetric edges at build time ([[symmetrize]] → parquet — the
-    // e21b serving path); `presymmetrized = true` declares the caller
-    // did exactly that, so the serving query pays NO corpus-sized
-    // shuffle at all — the edge table is consumed as stored.
-    // IN-MEMORY INDEX SHARD (optimization r18): when the corpus vectors
-    // and the edge table ALSO fit driver bounds (size-probed, like the
-    // query batch), hold both in memory — every hop is then pure driver
-    // compute, ZERO Spark jobs, which is exactly a production graph-ANN
-    // index shard serving from RAM. Scores use [[cosRound6]] —
-    // bit-identical to the round(cosine(...), 6) expression (same fold
-    // order, same HALF_UP rounding; spec-pinned in BeamSearchSpec).
-    // Oversized corpora/edge tables keep the r17 per-hop broadcast-join
-    // scan jobs below, bit-identical either way.
-    val memCorpus: Option[Map[Long, Array[Double]]] =
-      graft.operators.Scans.collectAtMost(base, bounds.corpus).map { rows =>
-        rows.iterator.flatMap { r =>
-          Option(vecToDouble(r.get(1))).map(v => r.getLong(0) -> v)
-        }.toMap
+    val dim = sw.measure(q.select(size(col("qv"))).head(1)).headOption
+      .filterNot(_.isNullAt(0)).fold(0L)(r => math.max(0, r.getInt(0)).toLong)
+    val vecBytes = dim * VectorElemBytes
+    val edgeBytes = DriverBound.rowBytes(fwd.schema) +
+      (if (presymmetrized) 1L else 2L) * AdjacencyEntryBytes
+    def held(df: DataFrame, bytesPerRow: Long, empty: Boolean) =
+      if (empty) Some(Array.empty[Row]) else sw.collect(df, bytesPerRow)
+    for {
+      qRows <- sw.collect(q, DriverBound.rowBytes(q.schema) + vecBytes)
+      cRows <- held(base, DriverBound.rowBytes(base.schema) + vecBytes, qRows.isEmpty)
+      eRows <- held(fwd, edgeBytes, qRows.isEmpty)
+    } yield {
+      val mem = cRows.iterator.flatMap { r =>
+        Option(vecToDouble(r.get(1))).map(v => r.getLong(0) -> v)
+      }.toMap
+      val set = scala.collection.mutable.HashSet[(Long, Long)]()
+      eRows.foreach { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        set += ((s, d))
+        if (!presymmetrized) set += ((d, s))
       }
-    val memAdj: Option[Map[Long, Array[Long]]] =
-      if (memCorpus.isEmpty) None
-      else graft.operators.Scans.collectAtMost(fwd, bounds.edges).map { rows =>
-        val set = scala.collection.mutable.HashSet[(Long, Long)]()
-        rows.foreach { r =>
-          val (s, d) = (r.getLong(0), r.getLong(1))
-          set += ((s, d))
-          if (!presymmetrized) set += ((d, s))
-        }
-        set.toArray.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
-      }
-    val (edges, edgeTok) =
-      if (memAdj.isDefined || presymmetrized)
-        (fwd, graft.operators.Checkpoints.none(fwd))
-      else graft.operators.Checkpoints.eager(
-        fwd.unionByName(fwd.select(col("__dst").as("__src"), col("__src").as("__dst")))
-          .distinct())
+      (qRows, mem, set.toArray.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) })
+    }
+  }
 
-    // THE FRONTIER LIVES ON THE DRIVER (optimization round 17; guide
-    // §1.2 "remove unnecessary passes" + §8 "decide with small rows").
-    // Everything driver-held here is QUERY-BATCH-sized and corpus-
-    // INDEPENDENT — |queries| vectors, |queries|·beam·(degree+1) scored
-    // pairs per hop — the same bounded class as a broadcast centroid
-    // table, never the corpus or the N·k edge table (those stay
-    // distributed and are only scanned against a broadcast of the
-    // frontier). The previous shape materialized every hop as an eager
-    // localCheckpoint + window re-rank: 4–6 scheduler round-trips per
-    // hop (AQE stage jobs, broadcast builds, checkpoint counts), which
-    // on the bench host costs ~0.1 s each while the data work is
-    // micro-seconds — e22b measured 159 jobs / 5.6 s wall for 1.6 s of
-    // executor time. This shape is 1–2 jobs per hop (neighbour fetch
-    // over the edge table, cosine scoring over the corpus — both
-    // pure broadcast-join scans, zero shuffle, no per-hop window), plus
-    // driver-side score/adjacency caches so a pair is never re-scored
-    // and a node's neighbours never re-fetched, and a provable early
-    // exit: scores are deterministic (6-dp round, id tiebreak), so a
-    // hop that leaves every query's beam unchanged fixes all later
-    // beams — remaining hops are skipped with bit-identical results.
-    // It is also how a production graph-ANN serving tier works: the
-    // coordinator holds per-query frontiers, index shards answer
-    // neighbour/score lookups.
+  /** The driver-held frontier walk over an in-memory shard: output
+    * `(qid, rank, bid, cosine)` with long ids.
+    */
+  private def walkShard(spark: SparkSession, qRows: Array[Row],
+                        memCorpus: Map[Long, Array[Double]], memAdj: Map[Long, Array[Long]],
+                        entries: DataFrame, entryPairs: DataFrame, beamWidth: Int,
+                        hops: Int, k: Int, excludeSelf: Boolean): DataFrame = {
+    // THE FRONTIER LIVES ON THE DRIVER (optimization rounds 17–18): a
+    // per-hop checkpoint + window re-rank cost 4–6 scheduler round-trips
+    // a hop (e22b: 159 jobs / 5.6 s wall for 1.6 s of executor time).
+    // A pair is never re-scored, and scores are deterministic
+    // ([[cosRound6]], id tiebreak), so a hop that leaves every beam
+    // unchanged fixes all later beams — the remaining hops are skipped.
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val qids: Array[Long] = qRows.map(_.getLong(0))
-    val qvec: Map[Long, Any] = qRows.map(r => r.getLong(0) -> r.get(1)).toMap
-    val pairSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("bid", LongType, nullable = false),
-      StructField("qv", ArrayType(vecElemType), nullable = true)))
-    // Deterministic pair scoring: one broadcast-join scan of the corpus
-    // per hop, exactly the expression the old shape evaluated
-    // (round(cosine(qv, bv), 6) — double precision, left-to-right), so
-    // every score is bit-identical to the previous implementation.
     val scoreCache = scala.collection.mutable.HashMap[(Long, Long), Double]()
-    // In-memory-shard query vectors (doubles) — built once when the
-    // corpus map is held; a null/absent vector is unscorable (dropped).
-    lazy val qvecD: Map[Long, Array[Double]] =
+    // a null/absent query vector is unscorable (dropped)
+    val qvecD: Map[Long, Array[Double]] =
       qRows.iterator.flatMap { r =>
         Option(vecToDouble(r.get(1))).map(v => r.getLong(0) -> v)
       }.toMap
-    def score(pairs: Seq[(Long, Long)]): Unit = {
-      // qvec.get: a seed pair whose qid has no query vector (entryPairs
-      // row outside the batch) is silently unscorable — the old shape's
-      // inner join against the query set dropped it; so does this.
-      val fresh = pairs.filterNot(scoreCache.contains)
-      if (fresh.isEmpty) return
-      memCorpus match {
-        case Some(mem) =>
-          fresh.foreach { case (q, b) =>
-            for (qv <- qvecD.get(q); bv <- mem.get(b))
-              scoreCache((q, b)) = cosRound6(qv, bv)
-          }
-        case None =>
-          val rows = fresh.flatMap { case (q, b) =>
-            qvec.get(q).map(v => Row(q, b, v)) }.asJava
-          val pdf = spark.createDataFrame(rows, pairSchema)
-          base.join(broadcast(pdf), Seq("bid"))
-            .select(col("qid"), col("bid"),
-              round(cosine(col("qv"), col("bv")), 6).as("cosine"))
-            .collect()
-            .foreach(r => scoreCache((r.getLong(0), r.getLong(1))) = r.getDouble(2))
+    def score(pairs: Seq[(Long, Long)]): Unit =
+      // qvecD.get: a seed pair whose qid has no query vector (entryPairs
+      // row outside the batch) is silently unscorable — the distributed
+      // loop's inner join against the query set drops it; so does this.
+      pairs.filterNot(scoreCache.contains).foreach { case (q, b) =>
+        for (qv <- qvecD.get(q); bv <- memCorpus.get(b))
+          scoreCache((q, b)) = cosRound6(qv, bv)
       }
-    }
-    // Adjacency fetch, cached per node: from the in-memory shard, or
-    // one broadcast-join scan of the (distributed) edge table per hop,
-    // restricted to ids not yet seen.
-    val adjCache = scala.collection.mutable.HashMap[Long, Array[Long]]()
-    def fetchAdj(ids: Seq[Long]): Unit = {
-      val fresh = ids.filterNot(adjCache.contains)
-      if (fresh.isEmpty) return
-      memAdj match {
-        case Some(adj) =>
-          fresh.foreach(s => adjCache(s) = adj.getOrElse(s, Array.empty[Long]))
-        case None =>
-          val idDf = spark.createDataFrame(
-            fresh.map(Row(_)).asJava,
-            StructType(Seq(StructField("__src", LongType, nullable = false))))
-          val got = edges.join(broadcast(idDf), Seq("__src"))
-            .select(col("__src"), col("__dst")).collect()
-            .groupBy(_.getLong(0))
-            .map { case (s, rs) => s -> rs.map(_.getLong(1)) }
-          fresh.foreach(s => adjCache(s) = got.getOrElse(s, Array.empty[Long]))
-      }
-    }
     // Beam ordering = the old window's (cosine desc, bid asc) with
     // Spark's double total order (NaN greatest, -0.0 < 0.0).
     val ord = Ordering.Tuple2(
@@ -803,15 +695,10 @@ object Ann {
     def noSelf(qid: Long, ids: Iterable[Long]): Iterable[Long] =
       if (excludeSelf) ids.filter(_ != qid) else ids
 
-    // Hop 0: every query starts at the entry ids (minus itself — a
-    // corpus query must not retrieve itself, e1's convention). Two
-    // seeding modes: GLOBAL entries (every query starts at the same
-    // id set — e21's flat convention) or PER-QUERY `entryPairs`
-    // (qid, bid) — the hierarchical mode, where a coarser layer's walk
-    // already picked starts near each query (e22; HNSW's layer
-    // descent). `excludeSelf = false` is the REPRESENTATIVE-walk mode
-    // (e22): clones are served from their representative by
-    // [[expandClones]], which applies self-exclusion at member level.
+    // Hop 0: every query starts at the GLOBAL entry ids (e21) or its
+    // PER-QUERY `entryPairs` (e22: a coarser layer's walk picked them),
+    // minus itself (e1's convention). `excludeSelf = false` is the
+    // representative walk: [[expandClones]] excludes self per member.
     val seeds: Map[Long, Seq[Long]] =
       if (entryPairs != null) {
         val ps = entryPairs.select(
@@ -830,9 +717,9 @@ object Ann {
     var hop = 0
     var converged = false
     while (hop < hops && !converged) {
-      fetchAdj(beam.valuesIterator.flatten.toSeq.distinct)
       val cand: Map[Long, Seq[Long]] = beam.map { case (q, bs) =>
-        q -> (noSelf(q, bs.iterator.flatMap(adjCache(_)).toSeq).toSeq ++ bs)
+        q -> (noSelf(q, bs.iterator.flatMap(memAdj.getOrElse(_, Array.empty[Long])).toSeq)
+          .toSeq ++ bs)
           .distinct
       }
       score(cand.toSeq.flatMap { case (q, bs) => bs.map(q -> _) })
@@ -845,7 +732,6 @@ object Ann {
       beam = next
       hop += 1
     }
-    edgeTok.free()
     val out = beam.toSeq.sortBy(_._1).flatMap { case (q, bs) =>
       bs.take(k).zipWithIndex.map { case (b, i) =>
         Row(q, (i + 1).toLong, b, scoreCache((q, b)))
@@ -858,33 +744,23 @@ object Ann {
         StructField("rank", LongType, nullable = false),
         StructField("bid", LongType, nullable = false),
         StructField("cosine", DoubleType, nullable = true))))
-      .select(col("qid").cast(qidType).as("qid"), col("rank"),
-        col("bid").cast(bidType).as("bid"), col("cosine"))
   }
 
   /** The distributed per-hop loop — [[beamSearchKnn]]'s fallback when
-    * the query batch exceeds [[driverQueryMax]] (or ids are not
+    * its shard does not fit the driver budget (or ids are not
     * integral): every hop is one broadcast-joined neighbour expansion
     * over the edge table plus one broadcast-joined re-rank over the
     * corpus, frontier checkpointed per hop. Identical output to the
-    * driver walk (same 6-dp cosine, same (cosine desc, bid) ranking —
-    * spec-pinned equality in BeamSearchSpec); the frontier here is
+    * driver walk (same 6-dp cosine, same (cosine desc, bid) ranking,
+    * an unscorable pair with a null vector dropped — spec-pinned
+    * equality in BeamSearchSpec); the frontier here is
     * |queries|·beam·(degree+1) rows and never lives on the driver, so
     * a corpus-sized query set runs at cluster scale.
     */
   private def beamSearchKnnDistributed(
-      graph: DataFrame,
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      entries: DataFrame,
-      beamWidth: Int,
-      hops: Int,
-      k: Int,
-      presymmetrized: Boolean,
-      entryPairs: DataFrame,
-      excludeSelf: Boolean): DataFrame = {
+      graph: DataFrame, corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      entries: DataFrame, beamWidth: Int, hops: Int, k: Int, presymmetrized: Boolean,
+      entryPairs: DataFrame, excludeSelf: Boolean): DataFrame = {
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
     val base = corpus.select(col(idCol).as("bid"), col(vecCol).as("bv"))
     val fwd = graph.select(col("qid").as("__src"), col("bid").as("__dst"))
@@ -899,6 +775,7 @@ object Ann {
       base.join(broadcast(cand.join(q, "qid")), Seq("bid"))
         .select(col("qid"), col("bid"),
           round(cosine(col("qv"), col("bv")), 6).as("cosine"))
+        .filter(col("cosine").isNotNull)
         .withColumn("__r", row_number().over(beamW))
         .filter(col("__r") <= beamWidth)
         .select(col("qid"), col("bid"), col("cosine"))
@@ -931,18 +808,6 @@ object Ann {
     */
   private[similarity] case class DiverseCand(
       rank: Long, bid: Long, cosine: Double, bv: Seq[Float])
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cos6(a: Seq[Float], b: Seq[Float]): Double = {
-    var dot = 0.0; var aa = 0.0; var bb = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; aa += x * x; bb += y * y; i += 1
-    }
-    round6(dot / (math.sqrt(aa) * math.sqrt(bb)))
-  }
 
   /** HNSW's select-neighbors heuristic (Malkov & Yashunin, Alg. 4) as
     * a deterministic per-node fold: walk the candidates in rank order
@@ -977,12 +842,14 @@ object Ann {
         col("cosine"), col("bv")))).as("cands"))
       .as[(Long, Seq[DiverseCand])]
       .flatMap { case (qid, cands) =>
-        val kept = scala.collection.mutable.ArrayBuffer[DiverseCand]()
+        val kept = scala.collection.mutable.ArrayBuffer[(DiverseCand, Array[Double])]()
         cands.iterator.takeWhile(_ => kept.size < keep).foreach { c =>
-          val q6 = round6(c.cosine)
-          if (kept.forall(s => cos6(c.bv, s.bv) < q6)) kept += c
+          val v = c.bv.iterator.map(_.toDouble).toArray
+          // c.cosine is already 6-dp. A zero vector's 0/0 is NaN here and
+          // in Spark's round alike, and NaN < x is false: dominated.
+          if (kept.forall { case (_, sv) => cosRound6(v, sv) < c.cosine }) kept += ((c, v))
         }
-        kept.zipWithIndex.map { case (c, i) =>
+        kept.zipWithIndex.map { case ((c, _), i) =>
           (qid, (i + 1).toLong, c.bid, c.cosine)
         }
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.{Checkpoints, GlobalRank, Scans}
+import graft.operators.{Checkpoints, DriverBound, GlobalRank}
 
 /** DISTRIBUTED SUFFIX ARRAY by prefix doubling — the data structure
   * behind exact-substring deduplication (Lee et al. 2022, "Deduplicating
@@ -46,6 +46,12 @@ import graft.operators.{Checkpoints, GlobalRank, Scans}
   * alone (one two-pass prefix sum over the distinct pair counts plus a
   * per-group min), never touching frozen rows.
   *
+  * Two [[graft.operators.DriverBound]] switches shorten the loop while
+  * their tables fit the driver budget: `SuffixArray.bigram` ranks the
+  * distinct bigrams on the driver and starts the doubling at m = 2, and
+  * `SuffixArray.rank` ranks a round's distinct pairs on the driver
+  * instead of the two-pass. Both charge [[rankedRowBytes]] a row.
+  *
   * Spark shape — this operator is WHY `operators/GlobalRank` exists:
   * every round is (a) one id-keyed lookup join (`gid + step`) of the
   * live rows against the full rank relation, (b) one map-side-
@@ -73,8 +79,8 @@ import graft.operators.{Checkpoints, GlobalRank, Scans}
   * DRIVER PATH of [[removeDuplicatedSpans]]: a corpus whose driver
   * footprint ([[driverFootprint]]: 20 bytes per position for five
   * primitive `int` arrays, plus 5 bytes per UTF-8 text byte for the
-  * collected and cleaned strings) fits one eighth of
-  * `spark.driver.maxResultSize` (capped by the driver heap) is collected
+  * collected and cleaned strings) fits the DriverBound budget (one eighth
+  * of `spark.driver.maxResultSize`, capped by the driver heap) is collected
   * once and deduped in memory — counting-sort prefix doubling, Kasai's
   * LCP, a sweep of both copies' covered intervals — instead of paying
   * several Spark jobs per doubling round and descent level. Same rows,
@@ -118,19 +124,12 @@ object SuffixArray {
   private[text] def derivedBuildParts(sessionParts: Int, total: Long): Int =
     math.max(sessionParts, math.min(2048L, total / 1000000L).toInt)
 
-  /** Rounds whose live population is at most this bound rank their
-    * distinct pairs ON THE DRIVER (one bounded collect — the same class
-    * as the alphabet table) instead of the two-pass range partition;
-    * the value bounds driver memory at ~3 longs × this many rows.
+  /** Driver bytes per collected `(r1, r2, c)` row of a ranked round or
+    * bigram table: the row, its sorted and ranked tuples (72 B + 88 B)
+    * and the broadcast row (48 B).
     */
-  private val driverRankMax = 65536L
-
-  /** The doubling loop's two driver bounds ([[driverRankMax]],
-    * [[bigramInitMax]]); specs pass smaller ones to run the
-    * distributed rank or the single-code init on small input.
-    */
-  private[text] final case class DriverBounds(rank: Long = driverRankMax,
-                                              bigramInit: Long = bigramInitMax)
+  private[text] def rankedRowBytes(schema: StructType): Long =
+    DriverBound.rowBytes(schema) + 208L
 
   /** `(doc_id, pos, code)` — 1-based CODEPOINT positions (never UTF-16
     * units: surrogate pairs are one position, matching DuckDB / SQL
@@ -223,32 +222,17 @@ object SuffixArray {
       counts.filter(_._2 > 1).map(_._2).sum)
   }
 
-  /** Distinct-BIGRAM sets at most this large rank the m = 2 level ON
-    * THE DRIVER (the same bounded class as the alphabet table),
-    * letting the doubling START at m = 2 and skip its most expensive
-    * round — round 1 runs over EVERY position, before freezing has
-    * anything to freeze.
+  /** Competition ranks at m = 2 from driver-ranked DISTINCT BIGRAMS
+    * (optimization r18): ordering positions by (code, next code,
+    * missing → −1) is EXACTLY round 1's pair order, so rank, group size
+    * and liveness equal round 1 run from the single-code init, for one
+    * shift join, one bigram count collected to the driver and one
+    * broadcast join back. Returns (init at m = 2, next live count,
+    * level-1 rank table from the same bigram rows, the shift-join
+    * checkpoint token the CALLER frees once its own checkpoint lands);
+    * None when the bigrams do not fit `sw` (the single-code init runs).
     */
-  private val bigramInitMax = 65536L
-
-  /** Competition ranks at m = 2, computed from driver-ranked DISTINCT
-    * BIGRAMS (optimization r18; guide §1.2 "remove unnecessary
-    * passes"): ordering positions by (code, next code, missing → −1)
-    * is EXACTLY the round-1 pair order (r1, r2, missing → −1) —
-    * single-code ranks are strictly monotone in the code and both
-    * missing sentinels sort below every real value — so rank, group
-    * size and liveness are bit-identical to running round 1 from the
-    * single-code init. One n-row shift join (the same class as one
-    * round's lookup join), one map-side-combinable bigram count
-    * bounded-collected to the driver, one broadcast join back —
-    * replacing round 1's pair checkpoint + two-pass rank + join-back.
-    * Returns (init at m = 2, next live count, level-1 rank table for
-    * retained-level builds — derived from the SAME bigram rows, no
-    * extra job, and the shift-join checkpoint token the CALLER frees
-    * once its own full-frame checkpoint lands); None when the distinct
-    * bigrams exceed `bigramMax` (fall back to the single-code init).
-    */
-  private def initialRanks2(addr: DataFrame, scaleUp: Boolean, bp: Int, bigramMax: Long)
+  private def initialRanks2(addr: DataFrame, scaleUp: Boolean, bp: Int, sw: DriverBound.Switch)
       : Option[(DataFrame, Long, DataFrame, Checkpoints.Token)] = {
     val spark = addr.sparkSession
     import spark.implicits._
@@ -263,8 +247,8 @@ object SuffixArray {
     // Checkpoint: consumed by the bigram count AND the rank join-back —
     // an unsevered lineage would run the shift join twice.
     val (pairs, tokP) = Checkpoints.eager(withNext, diskOnly = scaleUp)
-    val counts = graft.operators.Scans.collectAtMost(
-      pairs.groupBy(col("code"), col("code2")).agg(count(lit(1)).as("c")), bigramMax) match {
+    val bigrams = pairs.groupBy(col("code"), col("code2")).agg(count(lit(1)).as("c"))
+    val counts = sw.collect(bigrams, rankedRowBytes(bigrams.schema)) match {
       case Some(rows) => rows
       case None => tokP.free(); return None
     }
@@ -296,8 +280,7 @@ object SuffixArray {
     */
   private def doubling(addr: DataFrame, total: Long, maxM: Long,
                        maxRounds: Int, retainLevels: Boolean,
-                       levelStore: Option[String] = None,
-                       bounds: DriverBounds = DriverBounds())
+                       levelStore: Option[String] = None)
       : (DataFrame, Seq[(Long, DataFrame)]) = {
     val spark = addr.sparkSession
     val bp = derivedBuildParts(parts(addr), total)
@@ -310,22 +293,22 @@ object SuffixArray {
     // runs over EVERY position (optimization r18; see initialRanks2).
     // maxM == 1 callers need the single-code ranks as their RESULT, so
     // they keep the m = 1 init.
-    val big =
-      if (maxM >= 2L && maxRounds >= 1) initialRanks2(addr, scaleUp, bp, bounds.bigramInit)
-      else None
-    val (init, nActive0, lvl1Opt, tokInit) = big match {
-      case Some((i, a, l, t)) => (i, a, Some(l), t)
-      case None =>
-        val (i, a) = initialRanks(addr)
-        (i, a, None, Checkpoints.none(addr))
-    }
     // ONE checkpointed full frame per round — the lookup side and every
     // retained level stay single compact scans (a union-of-parts view
     // re-read K frames per join and measurably drowned the freezing
     // win); the freezing savings live in the PAIR/rank relations, which
     // carry only the live residue.
-    var (full, tokF) = Checkpoints.eager(init, diskOnly = scaleUp)
-    tokInit.free()
+    val (full0, tokF0, nActive0, lvl1Opt) = DriverBound("SuffixArray.bigram", spark) { sw =>
+      val (init, a0, lvl1, tokInit) =
+        (if (maxM >= 2L && maxRounds >= 1) initialRanks2(addr, scaleUp, bp, sw) else None)
+          .map { case (i, a, l, t) => (i, a, Option(l), t) }
+          .getOrElse { val (i, a) = initialRanks(addr); (i, a, None, Checkpoints.none(addr)) }
+      val (f, t) = Checkpoints.eager(init, diskOnly = scaleUp)
+      tokInit.free()
+      (f, t, a0, lvl1)
+    }
+    var full = full0
+    var tokF = tokF0
     var nActive = nActive0
     val levels = scala.collection.mutable.ArrayBuffer[(Long, DataFrame)]()
     // Retained levels are SEPARATE DISK_ONLY snapshots of (gid, rank):
@@ -390,79 +373,71 @@ object SuffixArray {
         .select(col("a.gid").as("gid"), col("a.rank").as("r1"),
           coalesce(col("b.rank"), lit(-1L)).as("r2")), diskOnly = scaleUp)
       val d = pairs.groupBy(col("r1"), col("r2")).agg(count(lit(1)).as("c"))
-      // Re-rank the distinct live pairs, SIZE-ADAPTIVELY (optimization
-      // r17, guide §1.2/§8 "decide with small rows"): a round whose
-      // DISTINCT-pair relation fits `bounds.rank` ranks it ON THE
-      // DRIVER — one |D|-row collect (the same bounded class as the
-      // alphabet table [[initialRanks]] already collects), exact
-      // integer arithmetic, broadcast back as a local relation —
-      // instead of paying the two-pass range partition's three actions
-      // (range-sampling job, staged-run checkpoint, offsets collect)
-      // per round. r18: the gate is a bounded `limit(max + 1)` PROBE of
-      // |D| itself rather than the conservative live-position count —
-      // text corpora have FAR fewer distinct pairs than live positions
-      // (500-doc sa2: rounds 2–3 carry >100k live positions but <20k
-      // distinct pairs), so early rounds take the cheap path too. The
-      // probe is skipped (straight to the two-pass) when the live count
-      // says |D| plausibly overflows anyway (> 64× the bound), so a
-      // 100 TB build's early rounds never pay a doomed probe; an
-      // overflowing probe costs one extra map-side-combined aggregation
-      // of the round's pairs. Both paths compute the identical
-      // competition ranks (spec-pinned equality in SuffixArraySpec).
-      val dProbe =
-        if (nActive > bounds.rank * 64L) None
-        else graft.operators.Scans.collectAtMost(d, bounds.rank)
-      val (rankedPairs, act, tokG) =
-        if (dProbe.isDefined) {
-          val rows = dProbe.get
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            .sortBy(t => (t._1, t._2))
-          var cum = 0L
-          var curR1 = Long.MinValue
-          var ming = 0L
-          var liveNext = 0L
-          val out = new Array[(Long, Long, Long, Long)](rows.length)
-          var i = 0
-          while (i < rows.length) {
-            val (r1, r2, c) = rows(i)
-            val gpair = cum + 1L
-            cum += c
-            if (r1 != curR1) { curR1 = r1; ming = gpair }
-            if (c > 1L) liveNext += c
-            out(i) = (r1, r2, r1 + gpair - ming, c)
-            i += 1
+      // Re-rank the distinct live pairs (optimization r17–r18): a round
+      // whose DISTINCT-pair relation |D| fits the `SuffixArray.rank`
+      // DriverBound ranks it ON THE DRIVER — one |D|-row collect, exact
+      // integer arithmetic, broadcast back — instead of the two-pass's
+      // three actions. The probe reads |D| itself, not the live count:
+      // text has far fewer distinct pairs than live positions (sa2:
+      // >100k live, <20k distinct). It is skipped when the live count
+      // says |D| plausibly overflows anyway (> 64× the rows the budget
+      // admits), so a 100 TB build's early rounds never pay a doomed
+      // probe. Both paths compute identical ranks (SuffixArraySpec).
+      val (nextFull, tokF2, tokG) = DriverBound("SuffixArray.rank", spark) { sw =>
+        val dProbe = sw.collect(d, rankedRowBytes(d.schema), expects = nActive / 64L)
+        val (rankedPairs, act, tokG) =
+          if (dProbe.isDefined) {
+            val rows = dProbe.get
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+              .sortBy(t => (t._1, t._2))
+            var cum = 0L
+            var curR1 = Long.MinValue
+            var ming = 0L
+            var liveNext = 0L
+            val out = new Array[(Long, Long, Long, Long)](rows.length)
+            var i = 0
+            while (i < rows.length) {
+              val (r1, r2, c) = rows(i)
+              val gpair = cum + 1L
+              cum += c
+              if (r1 != curR1) { curR1 = r1; ming = gpair }
+              if (c > 1L) liveNext += c
+              out(i) = (r1, r2, r1 + gpair - ming, c)
+              i += 1
+            }
+            import spark.implicits._
+            (broadcast(out.toSeq.toDF("r1", "r2", "nrank", "c")),
+              liveNext, Checkpoints.none(d))
+          } else {
+            // The prefix-sum's pass-1 collect also returns the next
+            // round's live population (previously a separate |D|-row
+            // action), and the ranked-pair relation is consumed exactly
+            // once (the join-back), so it needs no checkpoint of its own.
+            val (cum, act0, tok) = GlobalRank.withGlobalPrefixSumStaged(
+              d, "cum", col("c"), np,
+              Some(sum(when(col("c") > 1L, col("c")).otherwise(lit(0L)))),
+              col("r1"), col("r2"))
+            // gpair = competition rank of the pair's positions over the
+            // live rows; minG = the group's first such rank, so the
+            // group-relative offset (gpair - ming) added to the group's
+            // frozen base rank r1 is the exact new global rank.
+            val g = cum.withColumn("gpair", col("cum") - col("c") + 1L)
+            val minG = g.groupBy(col("r1")).agg(min(col("gpair")).as("ming"))
+            (g.join(minG, Seq("r1"))
+              .select(col("r1"), col("r2"),
+                (col("r1") + col("gpair") - col("ming")).as("nrank"), col("c")),
+              act0, tok)
           }
-          import spark.implicits._
-          (broadcast(out.toSeq.toDF("r1", "r2", "nrank", "c")),
-            liveNext, Checkpoints.none(d))
-        } else {
-          // The prefix-sum's pass-1 collect also returns the next
-          // round's live population (previously a separate |D|-row
-          // action), and the ranked-pair relation is consumed exactly
-          // once (the join-back), so it needs no checkpoint of its own.
-          val (cum, act0, tok) = GlobalRank.withGlobalPrefixSumStaged(
-            d, "cum", col("c"), np,
-            Some(sum(when(col("c") > 1L, col("c")).otherwise(lit(0L)))),
-            col("r1"), col("r2"))
-          // gpair = competition rank of the pair's positions over the
-          // live rows; minG = the group's first such rank, so the
-          // group-relative offset (gpair - ming) added to the group's
-          // frozen base rank r1 is the exact new global rank.
-          val g = cum.withColumn("gpair", col("cum") - col("c") + 1L)
-          val minG = g.groupBy(col("r1")).agg(min(col("gpair")).as("ming"))
-          (g.join(minG, Seq("r1"))
-            .select(col("r1"), col("r2"),
-              (col("r1") + col("gpair") - col("ming")).as("nrank"), col("c")),
-            act0, tok)
-        }
-      nActive = act
-      val pairsSide =
-        if (scaleUp) pairs.repartition(bp, col("r1"), col("r2")) else pairs
-      val assigned = pairsSide.join(rankedPairs, Seq("r1", "r2"))
-        .select(col("gid"), col("nrank").as("rank"),
-          (col("c") > 1L).as("live"), col("c").as("gsz"))
-      val (nextFull, tokF2) = Checkpoints.eager(
-        full.filter(!col("live")).unionByName(assigned), diskOnly = scaleUp)
+        nActive = act
+        val pairsSide =
+          if (scaleUp) pairs.repartition(bp, col("r1"), col("r2")) else pairs
+        val assigned = pairsSide.join(rankedPairs, Seq("r1", "r2"))
+          .select(col("gid"), col("nrank").as("rank"),
+            (col("c") > 1L).as("live"), col("c").as("gsz"))
+        val (nextFull, tokF2) = Checkpoints.eager(
+          full.filter(!col("live")).unionByName(assigned), diskOnly = scaleUp)
+        (nextFull, tokF2, tokG)
+      }
       // Free the round's scratch and the superseded full frame (levels
       // are independent snapshots, so this is safe either way).
       tokP.free(); tokG.free(); tokF.free()
@@ -483,22 +458,13 @@ object SuffixArray {
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
                  maxRounds: Int = 40, retainLevels: Boolean = false,
-                 levelStore: Option[String] = None): Index =
-    buildIndexWithin(docs, idCol, textCol, maxRounds, retainLevels, levelStore,
-      DriverBounds())
-
-  /** [[buildIndex]] with the doubling loop's driver bounds passed in. */
-  private[text] def buildIndexWithin(docs: DataFrame, idCol: String, textCol: String,
-                                     maxRounds: Int, retainLevels: Boolean,
-                                     levelStore: Option[String],
-                                     bounds: DriverBounds): Index = {
+                 levelStore: Option[String] = None): Index = {
     // cheap position-count estimate (codepoints + one SEP per doc)
     // BEFORE materializing the addressing, so the addressing itself can
     // be checkpointed at the derived width — the ×100 OOM was the
     // 32-way DESERIALIZED unroll of this very frame, ahead of any join
     val est = docs.agg(positionCount(textCol)).head().getLong(0)
-    buildIndexOfSize(docs, idCol, textCol, est, maxRounds, retainLevels, levelStore,
-      bounds)
+    buildIndexOfSize(docs, idCol, textCol, est, maxRounds, retainLevels, levelStore)
   }
 
   /** Codepoints plus one SEP per document: the corpus string's length. */
@@ -508,13 +474,12 @@ object SuffixArray {
   /** [[buildIndex]] past its size job, for callers that measured `est`. */
   private def buildIndexOfSize(docs: DataFrame, idCol: String, textCol: String,
                                est: Long, maxRounds: Int, retainLevels: Boolean,
-                               levelStore: Option[String],
-                               bounds: DriverBounds = DriverBounds()): Index = {
+                               levelStore: Option[String]): Index = {
     val (addr0, _, total) =
       checkpointAddr(addressed(docs, idCol, textCol), est)
     val addr = persistAddr(addr0, levelStore)
     val (full, levels) =
-      doubling(addr, total, Long.MaxValue, maxRounds, retainLevels, levelStore, bounds)
+      doubling(addr, total, Long.MaxValue, maxRounds, retainLevels, levelStore)
     Index(addr, full, levels, total, idCol, Sep.toLong, levelStore)
   }
 
@@ -795,19 +760,37 @@ object SuffixArray {
     *
     * One size job measures the corpus (positions and UTF-8 bytes). When
     * its [[driverFootprint]] — 20 bytes per position plus 5 per text
-    * byte — fits [[Scans.driverBudget]] (one eighth of
-    * `spark.driver.maxResultSize`, capped by the driver heap), the
-    * documents are collected once and deduped on the driver
-    * ([[driverRemoveSpans]]): bit-identical rows and schema from two
-    * Spark jobs. Above the bound the distributed build runs,
-    * reusing the measured size. Both jobs, and the distributed build,
-    * carry a job description naming this operator, the path, the
-    * measured bytes and the bound.
+    * byte — fits the `SuffixArray.removeDuplicatedSpans`
+    * [[DriverBound]] budget, the documents are collected once and
+    * deduped on the driver ([[driverRemoveSpans]]): bit-identical rows
+    * and schema from two Spark jobs. Above the bound the distributed
+    * build runs, reusing the measured size. Both jobs, and the
+    * distributed build, carry the switch's labels.
     */
   def removeDuplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                             minLen: Long, maxRounds: Int = 40): DataFrame =
-    removeDuplicatedSpansWithin(docs, idCol, textCol, minLen, maxRounds,
-      Scans.driverBudget(docs.sparkSession))._1
+    DriverBound("SuffixArray.removeDuplicatedSpans", docs.sparkSession) { sw =>
+      val size = sw.measure(docs.agg(positionCount(textCol),
+        coalesce(sum(octet_length(col(textCol)).cast("long")), lit(0L))).head())
+      val positions = size.getLong(0)
+      // The driver build runs to convergence; take it only where the
+      // doubling's round cap cannot stop the distributed build short.
+      val converges = maxRounds >= 62 || (1L << maxRounds) >= positions
+      val onDriver =
+        if (sw.fits(positions, driverFootprint(positions, size.getLong(1))) &&
+            positions < Int.MaxValue && converges)
+          driverRemoveSpans(docs, idCol, textCol, minLen)
+        else None
+      onDriver.getOrElse {
+        sw.distributed()
+        val ix = buildIndexOfSize(docs, idCol, textCol, positions, maxRounds,
+          retainLevels = true, levelStore = None)
+        removeSpansFromLcp(docs, idCol, textCol, lcpAdjacent(ix),
+          ix.addr.filter(col("code") =!= ix.sepCode)
+            .select(col(idCol), col("pos"), col("gid")),
+          minLen, rankParts(ix.addr, ix.total))
+      }
+    }
 
   /** Driver bytes per corpus position of [[driverRemoveSpans]]: at most
     * five `int` arrays live at once (codes, suffix array, ranks, scratch
@@ -822,41 +805,6 @@ object SuffixArray {
 
   private[text] def driverFootprint(positions: Long, textBytes: Long): Long =
     DriverBytesPerPosition * positions + DriverBytesPerTextByte * textBytes
-
-  /** [[removeDuplicatedSpans]] against an explicit byte `budget` — the
-    * seam specs use to force either path. Returns the result and the
-    * path that produced it (`"driver"` or `"distributed"`).
-    */
-  private[text] def removeDuplicatedSpansWithin(
-      docs: DataFrame, idCol: String, textCol: String, minLen: Long,
-      maxRounds: Int, budget: Long): (DataFrame, String) = {
-    val op = "SuffixArray.removeDuplicatedSpans"
-    Scans.labelled(docs.sparkSession) { describe =>
-      describe(s"$op: size job, bound=$budget B")
-      val size = docs.agg(positionCount(textCol),
-        coalesce(sum(octet_length(col(textCol)).cast("long")), lit(0L))).head()
-      val positions = size.getLong(0)
-      val bytes = driverFootprint(positions, size.getLong(1))
-      // The driver build runs to convergence; take it only where the
-      // doubling's round cap cannot stop the distributed build short.
-      val converges = maxRounds >= 62 || (1L << maxRounds) >= positions
-      def label(path: String): Unit = describe(s"$op: path=$path bytes=$bytes bound=$budget B")
-      val onDriver =
-        if (bytes <= budget && positions < Int.MaxValue && converges) {
-          label("driver")
-          driverRemoveSpans(docs, idCol, textCol, minLen)
-        } else None
-      onDriver.map(df => (df, "driver")).getOrElse {
-        label("distributed")
-        val ix = buildIndexOfSize(docs, idCol, textCol, positions, maxRounds,
-          retainLevels = true, levelStore = None)
-        (removeSpansFromLcp(docs, idCol, textCol, lcpAdjacent(ix),
-          ix.addr.filter(col("code") =!= ix.sepCode)
-            .select(col(idCol), col("pos"), col("gid")),
-          minLen, rankParts(ix.addr, ix.total)), "distributed")
-      }
-    }
-  }
 
   /** The in-memory twin of the distributed chain: collect `(id, text)`
     * once, lay out the SEP-joined codepoint string in id order (trailing

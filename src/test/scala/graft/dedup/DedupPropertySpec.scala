@@ -17,6 +17,13 @@ class DedupPropertySpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Components with the `Components` switch's byte budget at `budget`. */
+  private def ccWithin(vertices: org.apache.spark.sql.DataFrame, idCol: String,
+                       pairs: org.apache.spark.sql.DataFrame, aCol: String, bCol: String,
+                       maxIter: Int, budget: Long): org.apache.spark.sql.DataFrame =
+    graft.operators.DriverBound.withBudget("Components" -> budget)(
+      Components.connectedComponents(vertices, idCol, pairs, aCol, bCol, maxIter))
+
   test("Components property: equals union-find on random graphs") {
     val gen = for {
       n <- Gen.choose(2, 40)
@@ -35,11 +42,11 @@ class DedupPropertySpec extends SparkSpec {
       val expected = (0 until n.toInt).map(v => v.toLong -> find(v).toLong).toMap
       val vs = (0L until n).toDF("id")
       val es = if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else edges.toDF("a", "b")
-      // at most 60 edges: the default bound takes the driver path, a
-      // zero bound the distributed contraction
-      for ((bound, path) <- Seq((65536L, "driver"), (0L, "contraction"))) {
-        val got = Components.connectedComponentsWithin(vs, "id", es, "a", "b",
-          maxIter = 20, driverMax = bound)
+      // an unbounded budget takes the driver path, a negative one the
+      // distributed contraction
+      for ((bound, path) <- Seq((Long.MaxValue, "driver"), (-1L, "contraction"))) {
+        val got = ccWithin(vs, "id", es, "a", "b",
+          maxIter = 20, budget = bound)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got === expected, s"$path path diverged from union-find")
       }
@@ -110,10 +117,10 @@ class DedupPropertySpec extends SparkSpec {
   test("largeSmallStar: deep chain resolves (the case that costs label propagation)") {
     val n = 200
     val chain = (0L until n - 1).map(i => (i, i + 1))
-    for (bound <- Seq(65536L, 0L)) {
-      val got = Components.connectedComponentsWithin(
+    for (bound <- Seq(Long.MaxValue, -1L)) {
+      val got = ccWithin(
         (0L until n).toDF("id"), "id", chain.toDF("a", "b"), "a", "b",
-        maxIter = 30, driverMax = bound)
+        maxIter = 30, budget = bound)
         .collect().map(r => r.getLong(1)).distinct
       assert(got === Array(0L), s"one component rooted at 0 (driver bound $bound)")
     }

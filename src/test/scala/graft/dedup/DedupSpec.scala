@@ -12,6 +12,13 @@ class DedupSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Components with the `Components` switch's byte budget at `budget`. */
+  private def ccWithin(vertices: org.apache.spark.sql.DataFrame, idCol: String,
+                       pairs: org.apache.spark.sql.DataFrame, aCol: String, bCol: String,
+                       maxIter: Int, budget: Long): org.apache.spark.sql.DataFrame =
+    graft.operators.DriverBound.withBudget("Components" -> budget)(
+      Components.connectedComponents(vertices, idCol, pairs, aCol, bCol, maxIter))
+
   lazy val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog near the river bank", "s0"),
     (1L, "the quick brown fox jumps over the lazy dog near the river bend", "s0"), // near-dup of 0
@@ -226,14 +233,14 @@ class DedupSpec extends SparkSpec {
   test("Components: non-convergence fails loudly instead of returning wrong labels") {
     // A 6-deep chain cannot reach the contraction's fixpoint in one
     // round; unconverged labels would be split component ids. The loud
-    // error lives on the DISTRIBUTED path — force it with a zero driver
-    // bound (the driver union-find path always converges, by
+    // error lives on the DISTRIBUTED path — force it with a negative
+    // byte budget (the driver union-find path always converges, by
     // construction).
     val vertices = (0L to 6L).toDF("id")
     val chain = (0L until 6L).map(i => (i, i + 1)).toDF("a", "b")
     val ex = intercept[IllegalStateException] {
-      Components.connectedComponentsWithin(vertices, "id", chain, "a", "b",
-        maxIter = 1, driverMax = 0L)
+      ccWithin(vertices, "id", chain, "a", "b",
+        maxIter = 1, budget = -1L)
     }
     assert(ex.getMessage.contains("fixpoint"))
     // And the same graph converges fine with the default budget.
@@ -253,8 +260,8 @@ class DedupSpec extends SparkSpec {
     val longPath = order.zip(order.tail)
     val shortPath = Seq((0L, 1L), (1L, 2L), (2L, 3L))
     intercept[IllegalStateException] {
-      Components.connectedComponentsWithin(vertices, "id", longPath.toDF("a", "b"),
-        "a", "b", maxIter = 5, driverMax = 0L)
+      ccWithin(vertices, "id", longPath.toDF("a", "b"),
+        "a", "b", maxIter = 5, budget = -1L)
     }
     def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map[Long, Long]()
@@ -268,8 +275,8 @@ class DedupSpec extends SparkSpec {
     def run(edges: Seq[(Long, Long)]) = {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val df = Components.connectedComponentsWithin(vertices, "id", edges.toDF("a", "b"),
-        "a", "b", maxIter = 20, driverMax = 0L)
+      val df = ccWithin(vertices, "id", edges.toDF("a", "b"),
+        "a", "b", maxIter = 20, budget = -1L)
       val alive = (sc.getPersistentRDDs.keySet -- before).size
       val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val labels = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -288,8 +295,8 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 0L), (1L, 2L), (3L, 2L), (5L, 6L), (8L, 7L), (9L, 7L))
       .toDF("a", "b")
     val driver = Components.connectedComponents(vertices, "id", pairs, "a", "b")
-    val dist = Components.connectedComponentsWithin(vertices, "id", pairs, "a", "b",
-      maxIter = 20, driverMax = 0L)
+    val dist = ccWithin(vertices, "id", pairs, "a", "b",
+      maxIter = 20, budget = -1L)
     // same schema on both paths: the id column keeps its type, component is long
     assert(driver.schema === dist.schema)
     def labels(df: org.apache.spark.sql.DataFrame) =
@@ -302,20 +309,21 @@ class DedupSpec extends SparkSpec {
     val vertices = (0 to 11).toDF("id")
     val pairs = Seq((1, 0), (1, 2), (3, 2), (4, 3), (6, 5), (9, 8), (10, 9), (11, 8))
       .toDF("a", "b")
-    val edges = pairs.count()
+    // the byte budget that holds exactly the edge list
+    val at = pairs.count() * Components.edgeBytes
     def run(bound: Long) = {
-      val df = Components.connectedComponentsWithin(vertices, "id", pairs, "a", "b",
-        maxIter = 20, driverMax = bound)
+      val df = ccWithin(vertices, "id", pairs, "a", "b",
+        maxIter = 20, budget = bound)
       // only the contraction reads checkpointed rounds
       val contracted = df.queryExecution.analyzed.collect {
         case r: org.apache.spark.sql.execution.LogicalRDD => r
       }.nonEmpty
       (df.schema, df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap, contracted)
     }
-    val (atSchema, atBound, atContracted) = run(edges)
-    val (overSchema, overBound, overContracted) = run(edges - 1)
+    val (atSchema, atBound, atContracted) = run(at)
+    val (overSchema, overBound, overContracted) = run(at - 1)
     assert(!atContracted && overContracted,
-      "bound = edge count must take the driver path, one less the contraction")
+      "a budget at the edges' bytes must take the driver path, one byte less the contraction")
     assert(atBound === overBound)
     assert(atSchema === overSchema)
     assert(atSchema("id").dataType === org.apache.spark.sql.types.IntegerType)

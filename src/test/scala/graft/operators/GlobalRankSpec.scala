@@ -9,21 +9,32 @@ import org.apache.spark.sql.functions._
 /** Pins the global rank, NTILE and prefix sums ≡ the single-window
   * forms they replace — including with duplicate order keys (total
   * order via the id tie-break), skewed keys, more partitions than rows,
-  * empty and all-null inputs — on BOTH one-shot finishes: a driver
-  * bound of `Long.MaxValue` forces the driver finish, a bound of -1 the
-  * two-pass (which runs at the session's shuffle width). The real
-  * bound, 65,536 rows, is pinned through the public entries.
+  * empty and all-null inputs — on BOTH one-shot finishes: a
+  * `GlobalRank` byte budget of `Long.MaxValue` forces the driver finish,
+  * one of -1 the two-pass (which runs at the session's shuffle width).
+  * The switch itself is pinned at the byte bound through the public
+  * entries.
   */
 class GlobalRankSpec extends SparkSpec {
   import spark.implicits._
 
   private val finishes = Seq("driver" -> Long.MaxValue, "two-pass" -> -1L)
 
+  /** `body` with the `GlobalRank` switch's byte budget at `bound`. */
+  private def within[T](bound: Long)(body: => T): T =
+    DriverBound.withBudget("GlobalRank" -> bound)(body)
+
+  /** The byte budget that holds exactly `n` rows of `df`. */
+  private def rowsOf(n: Long, df: DataFrame): Long = n * GlobalRank.finishRowBytes(df.schema)
+
   private def rank(bound: Long, df: DataFrame, ord: Column*): DataFrame =
-    GlobalRank.runningWithin(bound, df, "rk", None, ord)._1
+    within(bound)(GlobalRank.withGlobalRank(df, "rk", ord: _*)._1)
+
+  private def bucket(bound: Long, df: DataFrame, n: Int, ord: Column*): DataFrame =
+    within(bound)(GlobalRank.withGlobalNtile(df, "b", n, ord: _*))
 
   private def prefixSum(bound: Long, df: DataFrame, value: Column, ord: Column*): DataFrame =
-    GlobalRank.runningWithin(bound, df, "cum", Some(value), ord)._1
+    within(bound)(GlobalRank.withGlobalPrefixSum(df, "cum", value, ord: _*))
 
   /** `(id, out)` pairs by id; a null `out` reads as None. */
   private def byId(df: DataFrame, out: String): Seq[(Long, Option[Long])] =
@@ -74,7 +85,7 @@ class GlobalRankSpec extends SparkSpec {
         val want = byId(df.withColumn("b", ntile(n).over(
           Window.orderBy(col("key"), col("id"))).cast("long")), "b")
         for ((finish, bound) <- finishes)
-          assert(byId(GlobalRank.ntileWithin(bound, df, "b", n, Seq(col("key"), col("id"))),
+          assert(byId(bucket(bound, df, n, col("key"), col("id")),
             "b") == want, s"$finish ntile($n) over $rows rows")
       }
     }
@@ -84,16 +95,16 @@ class GlobalRankSpec extends SparkSpec {
     val df = (1L to 400L)
       .map(i => (i, if (i % 5 == 0) s"k$i" else "hot", i % 11 + 1))
       .toDF("id", "key", "v")
-    // a driver bound at the row count takes the driver finish, one less
-    // the two-pass
+    // a byte budget at the rows' bytes takes the driver finish, one
+    // byte less the two-pass
     def rk(bound: Long) = byId(rank(bound, df, col("key"), col("id")), "rk")
-    def nt(bound: Long) =
-      byId(GlobalRank.ntileWithin(bound, df, "b", 7, Seq(col("key"), col("id"))), "b")
+    def nt(bound: Long) = byId(bucket(bound, df, 7, col("key"), col("id")), "b")
     def ps(bound: Long) = byId(prefixSum(bound, df, col("v"), col("key").desc, col("id")), "cum")
+    val at = rowsOf(400L, df)
     withShuffleWidth(13) {
-      assert(rk(400L) == rk(399L) && nt(400L) == nt(399L) && ps(400L) == ps(399L))
+      assert(rk(at) == rk(at - 1) && nt(at) == nt(at - 1) && ps(at) == ps(at - 1))
     }
-    assert(rk(400L) == byId(GlobalRank.withGlobalRank(df, "rk", col("key"), col("id"))._1, "rk"))
+    assert(rk(at) == byId(GlobalRank.withGlobalRank(df, "rk", col("key"), col("id"))._1, "rk"))
   }
 
   test("driver prefix sum keeps the window form's null semantics (null until first value)") {
@@ -102,9 +113,9 @@ class GlobalRankSpec extends SparkSpec {
       val want = byId(df.withColumn("cum", sum(col("v")).over(
         Window.orderBy(col("id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))), "cum")
-      val n = df.count()
-      assert(byId(prefixSum(n, df, col("v"), col("id")), "cum") == want, "driver finish")
-      assert(byId(prefixSum(n - 1, df, col("v"), col("id")), "cum") == want, "two-pass")
+      val at = rowsOf(df.count(), df)
+      assert(byId(prefixSum(at, df, col("v"), col("id")), "cum") == want, "driver finish")
+      assert(byId(prefixSum(at - 1, df, col("v"), col("id")), "cum") == want, "two-pass")
     }
     withShuffleWidth(4) {
       check(Seq[(Long, Option[Long])]((1L, None), (2L, None), (3L, Some(5L)), (4L, None),
@@ -142,8 +153,10 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
-  test("the public entries take the driver finish at 65,536 rows and the two-pass one over") {
-    for (n <- Seq(65536L, 65537L)) {
+  test("the public entries take the driver finish at the byte bound and the two-pass one over") {
+    // the budget that holds exactly 65,536 rows
+    val at = rowsOf(65536L, spark.range(1).select(col("id"), col("id").as("key")))
+    for (n <- Seq(65536L, 65537L)) within(at) {
       // 7919 is odd and prime, so `key` permutes 0 until n for both
       // sizes: the rank under (key) is key + 1, the prefix sum of key
       // is key (key + 1) / 2, and NTILE(3) puts the first ceil(n/3)
@@ -168,8 +181,8 @@ class GlobalRankSpec extends SparkSpec {
   test("empty input: rank, ntile and prefix sum return no rows and keep their schema") {
     val df = Seq.empty[(Long, Long)].toDF("id", "v")
     for ((finish, bound) <- finishes) {
-      val (ranked, total) = GlobalRank.runningWithin(bound, df, "rk", None, Seq(col("id")))
-      val nt = GlobalRank.ntileWithin(bound, df, "b", 3, Seq(col("id")))
+      val (ranked, total) = within(bound)(GlobalRank.withGlobalRank(df, "rk", col("id")))
+      val nt = bucket(bound, df, 3, col("id"))
       val ps = prefixSum(bound, df, col("v"), col("id"))
       assert(total == 0L && ranked.count() == 0L && nt.count() == 0L && ps.count() == 0L, finish)
       assert(ranked.schema == df.schema.add("rk", "long", nullable = false), finish)

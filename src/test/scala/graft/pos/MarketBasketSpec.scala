@@ -1,7 +1,9 @@
 package graft.pos
 
 import graft.SparkSpec
+import graft.operators.DriverBound
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Pins the r18 mask-histogram driver Apriori ≡ the MLlib FPGrowth
@@ -37,22 +39,55 @@ class MarketBasketSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._2)).toSeq
 
+  /** `body` with the histogram switch's byte budget at `budget`. */
+  private def within[T](budget: Long)(body: => T): T =
+    DriverBound.withBudget("MarketBasket.histogram" -> budget)(body)
+
+  /** The rules at a histogram byte `budget`, and whether the driver
+    * Apriori made them (its rules are a local relation).
+    */
+  private def rulesAt(b: DataFrame, budget: Long) = {
+    val df = within(budget)(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
+    (canon(df), df.queryExecution.analyzed.isInstanceOf[LocalRelation])
+  }
+
   test("driver mask-histogram Apriori equals FPGrowth rules exactly") {
     val b = MarketBasket.baskets(basketDf)
     val driver = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
     assert(driver.nonEmpty, "corpus must generate rules for the pin to bite")
     assert(driver.exists(_._1.contains(",")), "need a multi-item antecedent in play")
-    val fp = canon(MarketBasket.rulesWithin(b, minSupport = 0.02, minLift = 0.5,
-      itemsMax = 1, histogramMax = 1 << 20)) // force FPGrowth
+    val fp = canon(within(-1L)( // force FPGrowth
+      MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5)))
     assert(driver == fp)
   }
 
   test("histogram bound forces the FPGrowth fallback (results unchanged)") {
     val b = MarketBasket.baskets(basketDf)
-    val fb = canon(MarketBasket.rulesWithin(b, minSupport = 0.02, minLift = 0.5,
-      itemsMax = 48, histogramMax = 3)) // blow the probe
+    val histogram = b.select(sort_array(col("items")).as("key"))
+      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
+    val fb = canon(within(3L * MarketBasket.histogramRowBytes(histogram.schema))( // blow the probe
+      MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5)))
     val dr = canon(MarketBasket.rulesFromBaskets(b, minSupport = 0.02, minLift = 0.5))
     assert(fb == dr)
+  }
+
+  test("histogram switch at the byte bound: at it, one row over, empty and all-null baskets") {
+    val b = MarketBasket.baskets(basketDf)
+    val histogram = b.select(sort_array(col("items")).as("key"))
+      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
+    val at = histogram.count() * MarketBasket.histogramRowBytes(histogram.schema)
+    val (atRules, atDriver) = rulesAt(b, at)
+    val (overRules, overDriver) = rulesAt(b, at - 1L)
+    assert(atDriver, "a budget at the histogram's bytes must take the driver Apriori")
+    assert(!overDriver, "one histogram row over the budget must fall back to FPGrowth")
+    assert(atRules.nonEmpty && atRules == overRules)
+    // empty baskets, and baskets whose items are all null (collect_set
+    // leaves them empty): no rules on either path
+    val empty = MarketBasket.baskets(Seq.empty[(Long, String)].toDF("receipt_number", "item_name"))
+    val nulls = MarketBasket.baskets(
+      Seq((1L, null: String), (2L, null), (2L, null)).toDF("receipt_number", "item_name"))
+    for ((name, in) <- Seq("empty" -> empty, "all-null" -> nulls); budget <- Seq(Long.MaxValue, -1L))
+      assert(rulesAt(in, budget)._1.isEmpty, s"$name baskets at budget $budget")
   }
 
   test("rules: equal lifts order by antecedents then consequents on every run") {

@@ -1,6 +1,8 @@
 package graft.similarity
 
 import graft.SparkSpec
+import graft.operators.DriverBound
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** [[Ann.beamSearchKnn]] — graph-based ANN serving (HNSW layer-0
@@ -100,9 +102,13 @@ class BeamSearchSpec extends SparkSpec {
     assert(Ann.symmetrize(g).count() == sym.size.toLong, "duplicate edges survived")
   }
 
+  /** `body` with the walk's byte budget at `budget`. */
+  private def within[T](budget: Long)(body: => T): T =
+    DriverBound.withBudget("Ann.beamSearchKnn" -> budget)(body)
+
   test("driver-frontier walk equals the distributed fallback (both seeding modes)") {
-    // the r18 size guard: batches over the driver query bound route to
-    // the distributed per-hop loop — force each path on the
+    // the size guard: a shard over the driver budget routes to the
+    // distributed per-hop loop — force each path on the
     // SAME inputs and require identical output, entries and entryPairs
     // modes, excludeSelf both ways, dangling edges included
     val n = 24
@@ -113,22 +119,53 @@ class BeamSearchSpec extends SparkSpec {
     val g = chainEdges(n).unionByName(Seq((23L, 99L)).toDF("qid", "bid"))
     val pairs = Seq((0L, 23L), (1L, 11L), (2L, 23L), (2L, 11L),
       (7777L, 3L)).toDF("qid", "bid") // 7777 has no query vector: dropped
-    def run(excl: Boolean, perQuery: Boolean, bounds: Ann.WalkBounds) =
-      Ann.beamSearchKnnWithin(g, corpus, queries, "vec_id", "embedding",
+    def run(excl: Boolean, perQuery: Boolean, budget: Long) = within(budget) {
+      Ann.beamSearchKnn(g, corpus, queries, "vec_id", "embedding",
         entries = if (perQuery) null else Seq(23L, 11L).toDF("bid"),
         beamWidth = 4, hops = 6, k = 3, presymmetrized = false,
-        entryPairs = if (perQuery) pairs else null, excludeSelf = excl, bounds)
-        .orderBy($"qid", $"rank").collect().toSeq
+        entryPairs = if (perQuery) pairs else null, excludeSelf = excl)
+    }.orderBy($"qid", $"rank").collect().toSeq
     for (excl <- Seq(true, false); perQuery <- Seq(true, false)) {
-      val memShard = run(excl, perQuery, Ann.WalkBounds())
-      // per-hop broadcast-scan tier (corpus too big for the in-memory
-      // shard, query batch still driver-held)
-      val scanHops = run(excl, perQuery, Ann.WalkBounds(corpus = 0L))
-      // fully distributed tier (query batch too big for the driver)
-      val dist = run(excl, perQuery, Ann.WalkBounds(query = 0L))
-      assert(memShard == scanHops, s"mem vs scan: excl=$excl perQuery=$perQuery")
+      val memShard = run(excl, perQuery, Long.MaxValue)
+      // the distributed loop (the shard over the driver budget)
+      val dist = run(excl, perQuery, -1L)
       assert(memShard == dist, s"mem vs distributed: excl=$excl perQuery=$perQuery")
     }
+  }
+
+  test("walk switch at the byte bound: at it, one row over, empty and all-null vectors") {
+    val n = 24
+    val corpus = chain(n)
+    val queries = corpus.where($"vec_id" < 4L)
+    val g = chainEdges(n)
+    def walk(q: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame,
+             budget: Long) = {
+      val df = within(budget)(Ann.beamSearchKnn(g, c, q, "vec_id", "embedding",
+        entries = Seq(23L, 11L).toDF("bid"), beamWidth = 4, hops = 6, k = 3))
+      // the in-memory walk's rows are a local relation (under the id casts)
+      val onDriver = df.queryExecution.analyzed.collectFirst { case _: LocalRelation => true }
+        .isDefined
+      (df.orderBy($"qid", $"rank").collect().toSeq, onDriver)
+    }
+    // the charge: queries and corpus at their rows' bytes plus 2-dim
+    // vectors, edges at their rows' bytes plus both directions held
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      DriverBound.rowBytes(df.select($"vec_id".cast("long"), $"embedding").schema)
+    val vec = 2L * Ann.VectorElemBytes
+    val edgeRow = DriverBound.rowBytes(g.select($"qid".cast("long"), $"bid".cast("long")).schema)
+    val at = 4L * (rowsOf(queries) + vec) + n * (rowsOf(corpus) + vec) +
+      (n - 1L) * (edgeRow + 2L * Ann.AdjacencyEntryBytes)
+    val (atRows, atDriver) = walk(queries, corpus, at)
+    val (overRows, overDriver) = walk(queries, corpus, at - 1L)
+    assert(atDriver, "a budget at the shard's bytes must walk in memory")
+    assert(!overDriver, "one edge row over the budget must walk distributed")
+    assert(atRows.nonEmpty && atRows == overRows)
+    // an empty query batch retrieves nothing on either path
+    val none = queries.limit(0)
+    assert(walk(none, corpus, Long.MaxValue)._1.isEmpty && walk(none, corpus, -1L)._1.isEmpty)
+    // all-null query vectors are unscorable on either path
+    val nulls = queries.select($"vec_id", lit(null).cast("array<float>").as("embedding"))
+    assert(walk(nulls, corpus, Long.MaxValue)._1.isEmpty && walk(nulls, corpus, -1L)._1.isEmpty)
   }
 
   test("in-memory-shard serving walk runs ZERO Spark jobs per hop") {

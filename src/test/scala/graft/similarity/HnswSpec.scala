@@ -199,6 +199,22 @@ class HnswSpec extends SparkSpec {
       s"expected the nearest mate + the one undominated cross-cluster edge: $divDst")
   }
 
+  test("knnGraphDiverse finishes on a corpus holding an all-zero vector") {
+    // A zero vector's cosine is 0/0 = NaN, in Spark's round(cosine, 6)
+    // and in the selection fold alike; the fold must carry the NaN (a
+    // NaN never beats a kept neighbour) instead of failing to round it.
+    val corpus = ((0 until 8).map { i =>
+      val th = math.toRadians(20.0 * i)
+      (i.toLong, 0L, Seq(math.cos(th).toFloat, math.sin(th).toFloat))
+    } :+ ((99L, 0L, Seq(0f, 0f)))).toDF("vec_id", "label", "embedding")
+    val div = Ann.knnGraphDiverse(corpus, "vec_id", "embedding", "label",
+      kCand = 8, keep = 3, nprobe = 1).collect()
+    val byNode = div.groupBy(_.getAs[Long]("qid"))
+    assert(byNode.keySet == (0L until 8L).toSet + 99L, "every node keeps a neighbour")
+    // the zero vector scores NaN against everything: it keeps one edge
+    assert(byNode(99L).length == 1 && byNode(99L).forall(r => r.getAs[Double]("cosine").isNaN))
+  }
+
   test("EXACT clones cap the diverse degree at 1 — the representative layer's reason") {
     // With exact duplicates, the first kept clone sits AT the query's
     // position, so every other candidate ties (cos to the kept clone =

@@ -1,6 +1,8 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.operators.DriverBound
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Pins the prefix-doubling suffix array against a literal suffix sort
@@ -43,10 +45,9 @@ class SuffixArraySpec extends SparkSpec {
   private def spark2(docs: Seq[(Long, String)]) =
     sortedSa(SuffixArray.build(docs.toDF("doc_id", "text"), "doc_id", "text"))
 
-  /** [[spark2]] with the doubling loop's driver bounds passed in. */
-  private def spark2Within(docs: Seq[(Long, String)], bounds: SuffixArray.DriverBounds) =
-    sortedSa(SuffixArray.saOf(SuffixArray.buildIndexWithin(docs.toDF("doc_id", "text"),
-      "doc_id", "text", maxRounds = 40, retainLevels = false, levelStore = None, bounds)))
+  /** [[spark2]] with the doubling loop's switches at the given byte budgets. */
+  private def spark2At(docs: Seq[(Long, String)], budgets: (String, Long)*) =
+    DriverBound.withBudget(budgets: _*)(spark2(docs))
 
   private def sortedSa(sa: org.apache.spark.sql.DataFrame) =
     sa.orderBy($"doc_id", $"pos").as[(Long, Long, Long, Long)].collect().toSeq
@@ -168,8 +169,11 @@ class SuffixArraySpec extends SparkSpec {
     * and the path that ran.
     */
   private def cutAt(df: org.apache.spark.sql.DataFrame, L: Long, budget: Long) = {
-    val (out, path) = SuffixArray.removeDuplicatedSpansWithin(
-      df, "doc_id", "text", L, maxRounds = 40, budget = budget)
+    val out = DriverBound.withBudget("SuffixArray.removeDuplicatedSpans" -> budget)(
+      SuffixArray.removeDuplicatedSpans(df, "doc_id", "text", L))
+    // the driver path's rows are a local relation
+    val path =
+      if (out.queryExecution.analyzed.isInstanceOf[LocalRelation]) "driver" else "distributed"
     (out.orderBy($"doc_id").as[(Long, String, Long)].collect().toSeq, out.schema, path)
   }
 
@@ -267,7 +271,7 @@ class SuffixArraySpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.job.description") == "outer")
       val deadline = System.nanoTime() + 10000000000L
       def labelled = seen.toArray.map(_.toString)
-        .exists(_.startsWith("SuffixArray.removeDuplicatedSpans: path=driver bytes="))
+        .exists(_.startsWith("SuffixArray.removeDuplicatedSpans: path=driver rows="))
       while (!labelled && System.nanoTime() < deadline) Thread.sleep(50)
       assert(labelled, s"no driver-path job description among ${seen.toArray.toSeq}")
     } finally {
@@ -463,12 +467,12 @@ class SuffixArraySpec extends SparkSpec {
 
   test("driver-side pair ranking equals the distributed two-pass exactly") {
     // The doubling loop ranks small rounds' distinct pairs on the
-    // driver (r17 optimization); forcing the threshold to 0 keeps every
+    // driver (r17 optimization); a negative byte budget keeps every
     // round on the distributed two-pass — the ranks must be identical.
     val docs = Seq((0L, "banana bandana ana"), (1L, "banana bandana ana"),
       (2L, "cabana banana"), (3L, "tail piece"))
     val viaDriver = spark2(docs)
-    val viaTwoPass = spark2Within(docs, SuffixArray.DriverBounds(rank = 0L))
+    val viaTwoPass = spark2At(docs, "SuffixArray.rank" -> -1L)
     assert(viaDriver == viaTwoPass,
       "driver-rank path diverged from the distributed two-pass")
     assert(viaDriver == bruteSa(docs).sortBy(r => (r._1, r._2)))
@@ -476,24 +480,87 @@ class SuffixArraySpec extends SparkSpec {
 
   test("bigram init equals the single-code init exactly (build and LCP chain)") {
     // r18: the doubling starts at m = 2 from driver-ranked bigrams;
-    // forcing the bound to 0 keeps the single-code init + round 1 —
+    // a negative byte budget keeps the single-code init + round 1 —
     // ranks, retained levels (via the LCP chain) and spans must match.
     val docs = Seq((0L, "banana bandana ana"), (1L, "banana bandana ana"),
       (2L, "cabana banana"), (3L, "tail piece"))
-    def lcpChain(bounds: SuffixArray.DriverBounds): Seq[(Long, Long, Long, Long)] = {
+    def lcpChain(budgets: (String, Long)*): Seq[(Long, Long, Long, Long)] = {
       val df = docs.toDF("doc_id", "text")
-      val ix = SuffixArray.buildIndexWithin(df, "doc_id", "text", maxRounds = 40,
-        retainLevels = true, levelStore = None, bounds)
+      val ix = DriverBound.withBudget(budgets: _*)(
+        SuffixArray.buildIndex(df, "doc_id", "text", retainLevels = true))
       SuffixArray.lcpAdjacent(ix)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq.sortBy(_._1)
     }
-    val viaBigram = (spark2(docs), lcpChain(SuffixArray.DriverBounds()))
-    val single = SuffixArray.DriverBounds(bigramInit = 0L)
-    val viaSingle = (spark2Within(docs, single), lcpChain(single))
+    val viaBigram = (spark2(docs), lcpChain())
+    val single = "SuffixArray.bigram" -> -1L
+    val viaSingle = (spark2At(docs, single), lcpChain(single))
     assert(viaBigram == viaSingle,
       "bigram-init path diverged from the single-code init")
     assert(viaBigram._1 == bruteSa(docs).sortBy(r => (r._1, r._2)))
+  }
+
+  /** Decision labels (`<op>: path=…`) the `op` switch put on jobs while
+    * `body` ran.
+    */
+  private def decisions(op: String)(body: => Any): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(500) } // let queued listener events drain
+    finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray.map(_.toString).filter(_.startsWith(s"$op: path=")).distinct.toSeq
+  }
+
+  private val boundaryDocs = Seq((0L, "banana bandana ana"), (1L, "banana bandana ana"),
+    (2L, "cabana banana"), (3L, "tail piece"))
+
+  /** Empty and all-null text build to no text positions on either path. */
+  private def assertDegenerate(op: String): Unit =
+    for (budget <- Seq(Long.MaxValue, -1L)) {
+      assert(spark2At(Seq.empty, op -> budget).isEmpty, s"empty corpus at $budget")
+      assert(spark2At(Seq((0L, null: String), (1L, null)), op -> budget).isEmpty,
+        s"all-null corpus at $budget")
+    }
+
+  test("bigram init switch at the byte bound: at it, one row over, empty and all-null text") {
+    val op = "SuffixArray.bigram"
+    // the distinct (code, next code or -1) pairs of the SEP-joined corpus
+    val s = boundaryDocs.sortBy(_._1)
+      .flatMap { case (_, t) => t.codePoints().toArray.toSeq :+ SuffixArray.Sep }
+    val bigrams = s.indices.map(i => (s(i), if (i + 1 < s.length) s(i + 1) else -1)).distinct.size
+    val at = bigrams * SuffixArray.rankedRowBytes(org.apache.spark.sql.types.StructType(
+      Seq("code", "code2", "c").map(org.apache.spark.sql.types.StructField(_,
+        org.apache.spark.sql.types.LongType))))
+    var atSa, overSa = Seq.empty[(Long, Long, Long, Long)]
+    val atPaths = decisions(op) { atSa = spark2At(boundaryDocs, op -> at) }
+    val overPaths = decisions(op) { overSa = spark2At(boundaryDocs, op -> (at - 1L)) }
+    assert(atPaths === Seq(s"$op: path=driver rows=$bigrams bytes=$at bound=$at B"))
+    assert(overPaths.nonEmpty && overPaths.forall(_.contains("path=distributed")), overPaths)
+    assert(atSa == overSa)
+    assert(atSa == bruteSa(boundaryDocs).sortBy(r => (r._1, r._2)))
+    assertDegenerate(op)
+  }
+
+  test("rank switch at the byte bound: at it, one row over, empty and all-null text") {
+    val op = "SuffixArray.rank"
+    // the largest round's charge, read off an unbounded build's labels
+    val Charged = """.* bytes=(\d+) .*""".r
+    val at = decisions(op)(spark2At(boundaryDocs, op -> Long.MaxValue))
+      .collect { case Charged(b) => b.toLong }.max
+    var atSa, overSa = Seq.empty[(Long, Long, Long, Long)]
+    val atPaths = decisions(op) { atSa = spark2At(boundaryDocs, op -> at) }
+    val overPaths = decisions(op) { overSa = spark2At(boundaryDocs, op -> (at - 1L)) }
+    assert(atPaths.nonEmpty && atPaths.forall(_.contains("path=driver")), atPaths)
+    assert(atPaths.exists(_.contains(s" bytes=$at ")), atPaths)
+    assert(overPaths.exists(_.contains("path=distributed")), overPaths)
+    assert(atSa == overSa)
+    assert(atSa == bruteSa(boundaryDocs).sortBy(r => (r._1, r._2)))
+    assertDegenerate(op)
   }
 
   test("build parallelism derives from the measured position count") {
